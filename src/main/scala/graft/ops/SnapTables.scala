@@ -277,8 +277,11 @@ object SnapTables {
     * Missing-pointer handling: on HDFS the OVERWRITE-rename in
     * [[writePointer]] is atomic, so a published table's pointer is never
     * absent. On the LOCAL filesystem, however, `FileContext.rename(…,
-    * OVERWRITE)` bottoms out in delete-then-rename
-    * (RawLocalFs → FileSystem#rename default), leaving a microscopic
+    * OVERWRITE)` bottoms out in delete-then-rename: the session's `file:`
+    * delegate, [[graft.streaming.ForkFreeRawLocalFs]], keeps the stock
+    * `AbstractFileSystem#rename` (delete the destination, then
+    * `RawLocalFileSystem#rename`) and only changes how permissions are
+    * applied and links are read, leaving a microscopic
     * no-pointer window during a flip — so a miss is retried ONCE after a
     * short pause before concluding the table is unpublished. The retry
     * costs one 20 ms pause only on genuinely unpublished paths (each

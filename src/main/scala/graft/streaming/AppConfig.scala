@@ -33,12 +33,14 @@ final case class AppConfig(
     * credentials / path-style access (config-only — no S3 connectivity is
     * needed for local paths), streaming checkpoint default, UTC, and a sane
     * shuffle parallelism (the reference left Spark's 200 default untuned).
+    * `file:` paths go through the fork-free local filesystem ([[LocalFs]]).
     */
   def buildSession(): SparkSession = {
     var b = SparkSession.builder().appName(appName)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config(LocalFs.SessionConf)
     masterUrl.foreach(m => b = b.config("spark.master", m))
     awsEndpointUrl.foreach(e => b = b.config("spark.hadoop.fs.s3a.endpoint", e))
     awsAccessKeyId.foreach(k => b = b.config("spark.hadoop.fs.s3a.access.key", k))

@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for the whole (forked) test JVM — mirrors the
-  * production session shape: UTC, small shuffle parallelism, AQE defaults.
+  * production session shape: UTC, small shuffle parallelism, AQE defaults,
+  * and the fork-free local filesystem `AppConfig.buildSession()` installs.
   */
 object TestSpark {
   lazy val spark: SparkSession = {
@@ -12,6 +13,7 @@ object TestSpark {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config(graft.streaming.LocalFs.SessionConf)
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
