@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.ops.{AnnIndex, Similarity}
 
@@ -26,16 +25,7 @@ object AnnCellsProbe {
     // and skew any recorded scale-curve number
     require(reps >= 2, "AnnCellsProbe: reps must be >= 2 (run 1 is cold; " +
       "serve_warm_min is the min over runs 2..reps)")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(Sessions.envCpus())
 
     val emb = Tables.load(spark, sfDir, "embeddings").localCheckpoint()
     val n = emb.count()

@@ -67,16 +67,7 @@ object AnnRecallProbe {
     // and raising k here (16 → 64) must lift recall where raising nprobe
     // does not
     val pqK = if (args.length > 3) args(3).trim.toInt else 16
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(Sessions.envCpus())
 
     val emb = (if (sfDir.startsWith("--mog=")) {
       val Array(mn, mk, ms) = sfDir.stripPrefix("--mog=").split(",")

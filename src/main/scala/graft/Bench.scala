@@ -47,20 +47,6 @@ object Bench {
   final case class Res(name: String, family: String, cold: Double,
     warm: Double, ok: Boolean)
 
-  private def newSession(cpus: String): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    LogHygiene.quietBoundedWindowWarnings()
-    s
-  }
-
   /** One-time engine warm-up (JVM/JIT, codegen framework, parquet reader
     * and shuffle machinery init) so the first measured query of a session
     * is not charged for session startup.
@@ -199,8 +185,7 @@ object Bench {
       .map(_.stripPrefix("--rows=").toLong)
       .orElse(sys.env.get("SPARK_GRAFT_STREAM_ROWS").map(_.toLong))
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
+    val cpus = Sessions.envCpus()
 
     val byName = SparkEntry.catalogGroups.flatMap { case (fam, qs) =>
       qs.map(q => q.name -> fam)
@@ -213,14 +198,14 @@ object Bench {
         if (benched.isEmpty) Seq.empty[Res]
         else {
           SparkSession.getActiveSession.foreach(_.stop())
-          val spark = newSession(cpus)
+          val spark = Sessions.local(cpus)
           warmup(spark, sfDir)
           val rs = benched.map(q => runQuery(spark, q, fam, sfDir))
           spark.stop()
           rs
         }
       }
-      val streamSpark = newSession(cpus)
+      val streamSpark = Sessions.local(cpus)
       val streamingJson = streaming(streamSpark, sfDir, streamRows)
       streamSpark.stop()
       val out = perQueryJson(sfDir, results, streamingJson, mode = "isolated")
@@ -231,13 +216,13 @@ object Bench {
       return
     }
 
-    val spark = newSession(cpus)
+    val spark = Sessions.local(cpus)
     warmup(spark, sfDir)
     val results = SparkEntry.benchQueries.map(q =>
       runQuery(spark, q, byName.getOrElse(q.name, "?"), sfDir))
     // streaming measurement on a FRESH session — see the class doc
     spark.stop()
-    val streamSpark = newSession(cpus)
+    val streamSpark = Sessions.local(cpus)
     val streamingJson = streaming(streamSpark, sfDir, streamRows)
 
     val okRes = results.filter(_.ok)

@@ -27,22 +27,8 @@ object BenchStream {
     val rowsOverride = args.find(_.startsWith("--rows="))
       .map(_.stripPrefix("--rows=").toLong)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-
-    def newSession(): SparkSession = {
-      val s = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      s.sparkContext.setLogLevel("WARN")
-      s
-    }
-    var spark = newSession()
+    val cpus = Sessions.envCpus()
+    var spark = Sessions.local(cpus)
 
     val sf = "sf([0-9.]+)".r.findFirstMatchIn(sfDir).map(_.group(1).toDouble).getOrElse(0.1)
     val n = rowsOverride.getOrElse(math.max(10000L, (6000000 * sf).toLong))
@@ -75,7 +61,7 @@ object BenchStream {
     val w = drain(-1) // warm-up, same convention as Bench
     println(f"[benchstream] warmup: ${w._1}%.2f s windows=${w._2} heapAfterGc=${heapMb()} MB")
     val secs = (1 to runs).map { i =>
-      if (freshSession) { spark.stop(); spark = newSession() }
+      if (freshSession) { spark.stop(); spark = Sessions.local(cpus) }
       val (sec, windows) = drain(i)
       println(f"[benchstream] run$i: $sec%.2f s (${inputMb / sec}%.1f MB/s) windows=$windows heapAfterGc=${heapMb()} MB")
       sec

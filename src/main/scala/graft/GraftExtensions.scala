@@ -6,16 +6,11 @@ import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, ExpressionIn
 import org.apache.spark.sql.types.{DoubleType, IntegerType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Session extensions exposing the engine's native expressions to SQL users:
-  *
-  * {{{
-  * spark-submit --conf spark.sql.extensions=graft.GraftExtensions ...
-  * // or
-  * SparkSession.builder().withExtensions(new GraftExtensions()) ...
-  * }}}
-  *
-  * after which `hash60(col)`, `dot_product(a, b)`, `word_shingles(text, n)`
-  * and `token_fingerprint(text)` are available in Spark SQL. The
+/** Session extensions exposing the engine's native expressions to SQL users
+  * and adding the engine's optimizer rule. Every engine session loads them
+  * ([[Sessions.Pinned]] sets `spark.sql.extensions=graft.GraftExtensions`),
+  * so `hash60(col)`, `dot_product(a, b)`, `word_shingles(text, n)`,
+  * `token_fingerprint(text)` and the rest are available in Spark SQL. The
   * DataFrame-API operators do not require this — they build the expressions
   * directly (graft.ops.Hashing / Num / Text).
   */
@@ -35,9 +30,7 @@ object GraftExtensions {
       builder: Seq[Expression] => Expression) =
     (FunctionIdentifier(name), new ExpressionInfo(clazz.getName, name), builder)
 
-  /** All injected functions — also registrable directly on a live session's
-    * functionRegistry (how the test exercises them).
-    */
+  /** All injected functions. */
   val functionEntries: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
     graft.plans.Hash60.registryEntry,
     graft.plans.NfcNormalize.registryEntry,

@@ -1,13 +1,13 @@
 package graft
 
-/** Targeted log hygiene for the HARNESS mains (never the ops library — a
-  * library must not mutate global logging): the engine's bounded global
-  * windows (per-shuffle-partition offset tables, vocab-cap ranks, value-
-  * alphabet cumulatives — every one provably #partitions-/#vocab-/#bins-
-  * bounded, audited in SURVEY §7.6) each emit "WindowExec: No Partition
-  * Defined … serious performance degradation" on every execution, which
-  * put ~1,600 identical lines in every verify/bench log and buried real
-  * warnings (r17 verdict, cosmetic item).
+/** Targeted log hygiene, applied by [[Sessions]] to every session it builds
+  * (never by the ops library — a library must not mutate global logging):
+  * the engine's bounded global windows (per-shuffle-partition offset
+  * tables, vocab-cap ranks, value-alphabet cumulatives — every one provably
+  * #partitions-/#vocab-/#bins-bounded, audited in SURVEY §7.6) each emit
+  * "WindowExec: No Partition Defined … serious performance degradation" on
+  * every execution, which put ~1,600 identical lines in every verify/bench
+  * log and buried real warnings (r17 verdict, cosmetic item).
   *
   * Why not `partitionBy(lit(0))` on those windows instead: Spark 4's
   * `EliminateWindowPartitions` optimizer rule removes FOLDABLE partition

@@ -1,19 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Smoke main: runs the flagship entry() (the reference pipeline on generated
   * articles) and prints its row count + schema — the driver's rows>0 check.
   */
 object Probe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(4)
     val df = SparkEntry.entry(spark)
     df.printSchema()
     df.show(5, false)

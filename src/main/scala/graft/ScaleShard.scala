@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** One-off scale-curve shard generator: replicate the sf0.1
@@ -28,15 +27,8 @@ object ScaleShard {
     require(args.length >= 2, "usage: ScaleShard <srcSfDir> <outDir> [replicas=10]")
     val (src, out) = (args(0), args(1))
     val reps = if (args.length > 2) args(2).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Sessions.envCpus()
+    val spark = Sessions.local(cpus)
 
     val r = explode(sequence(lit(0), lit(reps - 1))).as("r")
 
@@ -62,7 +54,7 @@ object ScaleShard {
       .withColumn("n_chars", when(col("r") === 0, col("src_n_chars"))
         .otherwise(length(col("text")).cast("long")))
       .drop("r", "src_n_chars")
-    docs.repartition(cpus.toInt).write.mode("overwrite")
+    docs.repartition(cpus).write.mode("overwrite")
       .parquet(s"$out/documents.parquet")
 
     val emb = srcEmb
@@ -76,7 +68,7 @@ object ScaleShard {
               lit(1000)).cast("float") - lit(500.0f)) / lit(1000000.0f))
               .cast("float"))).as("embedding"),
         col("label"))
-    emb.repartition(cpus.toInt).write.mode("overwrite")
+    emb.repartition(cpus).write.mode("overwrite")
       .parquet(s"$out/embeddings.parquet")
 
     println(s"[scaleshard] wrote ${reps}x documents=" +

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Diagnostic timer: run one catalog query N times against a scale-factor
   * dir and print per-run wall times (same session shape and noop-sink
   * materialization as Bench). Usage:
@@ -14,17 +12,7 @@ object TimeQuery {
     val (name, sfDir) = (args(0), args(1))
     val reps = if (args.length > 2) args(2).toInt else 3
     require(reps >= 0, s"reps must be >= 0 (0 prints the plan), got $reps")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(Sessions.envCpus())
     val fn = SparkEntry.queries(name)
     if (reps == 0) { // reps=0: print the formatted physical plan instead
       fn(spark, sfDir).explain("formatted")

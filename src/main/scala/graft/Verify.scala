@@ -45,17 +45,8 @@ object Verify {
     val t0 = System.nanoTime()
     val (sfDir, outDir) = (args(0), args(1))
     val subset = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
     val par = sys.env.getOrElse("SPARK_GRAFT_VERIFY_PAR", "6").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    LogHygiene.quietBoundedWindowWarnings()
+    val spark = Sessions.local(Sessions.envCpus(8))
     new java.io.File(outDir).mkdirs()
     val work = new java.util.concurrent.ConcurrentLinkedQueue[
       (String, (SparkSession, String) => org.apache.spark.sql.DataFrame)]()

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Sessions
 import org.apache.spark.sql.SparkSession
 
 /** Environment-driven application config — parity with the reference's
@@ -29,30 +30,28 @@ final case class AppConfig(
   def resolvedOutputPath: Option[String] =
     outputPath.orElse(s3BucketName.map(b => s"s3a://$b/enriched_articles"))
 
-  /** Build a session with the reference's conf surface: S3A endpoint /
-    * credentials / path-style access (config-only — no S3 connectivity is
-    * needed for local paths), streaming checkpoint default, UTC, and a sane
-    * shuffle parallelism (the reference left Spark's 200 default untuned).
-    * `file:` paths go through the fork-free local filesystem ([[LocalFs]]).
+  /** The session's settings: [[graft.Sessions.Pinned]] plus the reference's
+    * conf surface — app name, S3A endpoint / credentials / path-style access
+    * (config-only — no S3 connectivity is needed for local paths) and the
+    * streaming checkpoint default.
     */
-  def buildSession(): SparkSession = {
-    var b = SparkSession.builder().appName(appName)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config(LocalFs.SessionConf)
-    masterUrl.foreach(m => b = b.config("spark.master", m))
-    awsEndpointUrl.foreach(e => b = b.config("spark.hadoop.fs.s3a.endpoint", e))
-    awsAccessKeyId.foreach(k => b = b.config("spark.hadoop.fs.s3a.access.key", k))
-    awsSecretAccessKey.foreach(s => b = b.config("spark.hadoop.fs.s3a.secret.key", s))
-    if (awsEndpointUrl.isDefined) {
-      b = b.config("spark.hadoop.fs.s3a.path.style.access", "true")
-        .config("spark.hadoop.fs.s3a.impl", "org.apache.hadoop.fs.s3a.S3AFileSystem")
-    }
-    checkpointLocation.foreach(c =>
-      b = b.config("spark.sql.streaming.checkpointLocation", c))
-    b.getOrCreate()
+  def settings: Map[String, String] = {
+    val s3a = "spark.hadoop.fs.s3a."
+    val endpoint = awsEndpointUrl.toSeq.flatMap(e => Seq(
+      s3a + "endpoint" -> e,
+      s3a + "path.style.access" -> "true",
+      s3a + "impl" -> "org.apache.hadoop.fs.s3a.S3AFileSystem"))
+    Sessions.Pinned ++ Map("spark.app.name" -> appName) ++ endpoint ++
+      awsAccessKeyId.map(s3a + "access.key" -> _) ++
+      awsSecretAccessKey.map(s3a + "secret.key" -> _) ++
+      checkpointLocation.map("spark.sql.streaming.checkpointLocation" -> _)
   }
+
+  /** Build the session on [[settings]], with a sane shuffle parallelism (the
+    * reference left Spark's 200 default untuned).
+    */
+  def buildSession(): SparkSession =
+    Sessions.build(masterUrl, shufflePartitions, settings)
 
   /** The Kinesis source described by this config (offline: documents the
     * wiring; a connector jar makes it live — see StreamSource.KinesisSource).

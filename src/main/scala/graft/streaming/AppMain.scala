@@ -26,7 +26,6 @@ object AppMain {
     val cfg = AppConfig.fromEnv()
     val env = sys.env
     val spark = cfg.buildSession()
-    spark.sparkContext.setLogLevel("WARN")
     val source: StreamSource = cfg.kinesisSource
       .filter(_ => StreamSource.kinesisConnectorAvailable)
       .getOrElse(StreamSource.FileEnvelopeSource(

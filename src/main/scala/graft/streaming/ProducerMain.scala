@@ -33,11 +33,9 @@ object ProducerMain {
     val marker = Paths.get(env.getOrElse("READY_MARKER", s"$envelopeDir/.ready"))
     val threshold =
       env.getOrElse("PUBLISH_THRESHOLD", Readiness.DefaultPublishThreshold.toString).toLong
-    val spark = SparkSession.builder()
-      .appName(env.getOrElse("SPARK_APP_NAME", "graft-producer"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // master from spark-submit; 200 is Spark's default shuffle parallelism
+    val spark = graft.Sessions.build(None, 200,
+      Map("spark.app.name" -> env.getOrElse("SPARK_APP_NAME", "graft-producer")))
     run(spark, envelopeDir, sizeMb, iterations, sleepSeconds, marker, threshold)
     spark.stop()
   }

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Shared-session cold-chain probe: run the given catalog queries ONCE each,
   * in order, inside one session (the Bench default-mode shape), printing
   * per-query cold seconds and the chain total. This is the measurement for
@@ -16,17 +14,7 @@ object ChainProbe {
     require(args.length >= 2, "usage: ChainProbe <sfDir> <query> [query ...]")
     val sfDir = args(0)
     val names = args.drop(1).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local(graft.Sessions.envCpus())
     // same engine warm-up as Bench: don't charge session init to query 1
     graft.Tables.load(spark, sfDir, "nation").groupBy("n_regionkey").count()
       .write.format("noop").mode("overwrite").save()

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.ops.{Hashing, MinHashIndex, Text}
@@ -14,12 +13,7 @@ import graft.ops.{Hashing, MinHashIndex, Text}
 object GateProbe {
   def main(args: Array[String]): Unit = {
     val (sfDir, docId) = (args(0), args(1).toLong)
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Sessions.local(8)
     val docs = Tables.load(spark, sfDir, "documents")
     val ref = docs.where(pmod(col("doc_id"), lit(2)) === 0)
       .select(col("doc_id"), col("text"))

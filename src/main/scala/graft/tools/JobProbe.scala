@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Diagnostic: run one catalog query (cold + one warm rep) and print every
   * Spark job the WARM run launches — wall time, stage count, task count —
@@ -14,17 +13,7 @@ object JobProbe {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: JobProbe <query> <sfDir>")
     val (name, sfDir) = (args(0), args(1))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local(graft.Sessions.envCpus())
     val fn = graft.SparkEntry.queries(name)
     // cold run unobserved (planning + codegen noise)
     fn(spark, sfDir).write.format("noop").mode("overwrite").save()

@@ -42,10 +42,6 @@ class BloomFilterSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("SQL registration: bloom_filter60 aggregates and probes via registered hash60") {
-    GraftExtensions.functionEntries.foreach { case (ident, info, builder) =>
-      if (!spark.sessionState.functionRegistry.functionExists(ident))
-        spark.sessionState.functionRegistry.registerFunction(ident, info, builder)
-    }
     import spark.implicits._
     Seq("a", "b", "c").toDF("k").createOrReplaceTempView("bloom_in")
     val arr = spark.sql(s"SELECT bloom_filter60(k, 256, 2) AS bf FROM bloom_in")

@@ -103,10 +103,6 @@ class CmsIndexSpec extends AnyFunSuite with SparkSpec {
     // (linear sums over a fixed hash family), so the SQL-registered
     // aggregate must produce the IDENTICAL depth×width arrays the durable
     // CmsIndex tables store — SQL users address the same table bytes.
-    GraftExtensions.functionEntries.foreach { case (ident, info, builder) =>
-      if (!spark.sessionState.functionRegistry.functionExists(ident))
-        spark.sessionState.functionRegistry.registerFunction(ident, info, builder)
-    }
     ev.createOrReplaceTempView("cms_ev")
     val sql = spark.sql(
       """SELECT event_type AS key, count_min_sketch60(u, 4, 256) AS sk

@@ -50,10 +50,6 @@ class Hash60ExpressionSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("SQL registration: every GraftExtensions function is callable from Spark SQL") {
-    // register the same entries the extensions inject at session build
-    GraftExtensions.functionEntries.foreach { case (id, info, builder) =>
-      spark.sessionState.functionRegistry.registerFunction(id, info, builder)
-    }
     val r = spark.sql(
       """SELECT hash60('hello world') AS h,
         |  dot_product(array(CAST(1.0 AS FLOAT), CAST(2.0 AS FLOAT)),

@@ -47,9 +47,6 @@ class NfcExpressionSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("SQL registration: nfc callable from Spark SQL") {
-    GraftExtensions.functionEntries.foreach { case (id, info, builder) =>
-      spark.sessionState.functionRegistry.registerFunction(id, info, builder)
-    }
     val r = spark.sql("SELECT nfc('a\u0301') AS n").head()
     assert(r.getString(0) == "\u00e1")
   }

@@ -137,10 +137,6 @@ class QuantileIndexSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("SQL registration: kll_sketch/kll_union/kll_quantile/kll_n == DataFrame API") {
-    GraftExtensions.functionEntries.foreach { case (ident, info, builder) =>
-      if (!spark.sessionState.functionRegistry.functionExists(ident))
-        spark.sessionState.functionRegistry.registerFunction(ident, info, builder)
-    }
     docs.createOrReplaceTempView("kll_docs")
     // kll_n and exact-mode estimates are deterministic, so SQL and the
     // DataFrame API must agree exactly (same aggregate, same bytes domain)

@@ -2,19 +2,12 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared local session for the whole (forked) test JVM — mirrors the
-  * production session shape: UTC, small shuffle parallelism, AQE defaults,
-  * and the fork-free local filesystem `AppConfig.buildSession()` installs.
+/** One shared local session for the whole (forked) test JVM, built by the
+  * engine's own [[Sessions]] factory on 4 cores.
   */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config(graft.streaming.LocalFs.SessionConf)
-      .getOrCreate()
+    val s = Sessions.local(4)
     s.sparkContext.setLogLevel("ERROR")
     s
   }

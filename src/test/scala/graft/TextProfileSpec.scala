@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalatest.funsuite.AnyFunSuite
@@ -96,15 +97,24 @@ class TextProfileSpec extends AnyFunSuite with SparkSpec {
 
   test("regexp_match_count: native == composed; null -> null") {
     import spark.implicits._
-    val inputs = genDocs :+ "a1!b2?c3" :+ "   " :+ "...---..."
-    val rows = inputs.toDF("t")
-      .select(Text.bpeishTokenCount(col("t")).as("n"),
-        Text.bpeishTokenCountComposed(col("t")).as("c"), col("t"))
-      .collect()
-    rows.foreach(r => assert(r.getInt(0) == r.getInt(1), s"mismatch for '${r.getString(2)}'"))
-    val nul = Seq[Option[String]](None).toDF("t")
-      .select(Text.bpeishTokenCount(col("t")), Text.bpeishTokenCountComposed(col("t"))).head()
-    assert(nul.isNullAt(0) && nul.isNullAt(1))
+    val inputs = (genDocs :+ "a1!b2?c3" :+ "   " :+ "...---...").map(Option(_)) :+ None
+    // parquet-backed, so neither side is constant-folded before the rule
+    val dir = tmpDir("regexp-count") + "/t"
+    inputs.toDF("t").write.parquet(dir)
+    def counts(count: Column => Column) = {
+      val df = spark.read.parquet(dir).select(col("t"), count(col("t")))
+      (df.as[(Option[String], Option[Int])].collect().toMap, df.queryExecution.optimizedPlan)
+    }
+    val (native, _) = counts(Text.bpeishTokenCount)
+    // the session's rule would turn the composed form into the native one,
+    // so it runs with the rule excluded: Spark's own regex stays the reference
+    val rule = graft.plans.GraftRewriteRule.ruleName
+    spark.conf.set("spark.sql.optimizer.excludedRules", rule)
+    val (composed, plan) = try counts(Text.bpeishTokenCountComposed)
+      finally spark.conf.unset("spark.sql.optimizer.excludedRules")
+    assert(!plan.toString.contains("regexp_match_count"), s"$rule must not run:\n$plan")
+    inputs.foreach(t => assert(native(t) == composed(t), s"mismatch for '$t'"))
+    assert(native(None).isEmpty && composed(None).isEmpty)
   }
 
   test("hashing embedding: partition-invariant, duplicate-consistent, fixed width") {
@@ -124,20 +134,19 @@ class TextProfileSpec extends AnyFunSuite with SparkSpec {
 
   test("rewrite rule: size(regexp_extract_all) and built-in regexp_count become RegexpMatchCount") {
     // parquet-backed input: a literal local relation would be constant-folded
-    // away before the rule could see the expression
+    // away before the rule could see the expression. The session's own
+    // optimizer runs the rule: Sessions loads GraftExtensions.
     val docs = Tables.load(spark, TestSpark.sf0001, "documents")
-    val df = docs.select(Text.bpeishTokenCountComposed(col("text")).as("n"))
-    val before = df.queryExecution.optimizedPlan
-    assert(!before.toString.contains("regexp_match_count"))
-    val after = graft.plans.GraftRewriteRule(before)
-    assert(after.toString.contains("regexp_match_count"),
-      s"composed form must rewrite to the native count:\n$after")
+    val composed = docs.select(Text.bpeishTokenCountComposed(col("text")).as("n"))
+      .queryExecution.optimizedPlan
+    assert(composed.toString.contains("regexp_match_count"),
+      s"composed form must rewrite to the native count:\n$composed")
 
     // Spark's built-in regexp_count is RuntimeReplaceable sugar for the same
     // composed form — after ReplaceExpressions it matches the rule too.
     val builtin = docs.selectExpr("regexp_count(text, '[a-z]+') AS n")
-    val after2 = graft.plans.GraftRewriteRule(builtin.queryExecution.optimizedPlan)
-    assert(after2.toString.contains("regexp_match_count"),
-      s"built-in regexp_count must rewrite:\n$after2")
+      .queryExecution.optimizedPlan
+    assert(builtin.toString.contains("regexp_match_count"),
+      s"built-in regexp_count must rewrite:\n$builtin")
   }
 }

@@ -86,10 +86,6 @@ class ThetaSketchSpec extends AnyFunSuite with SparkSpec {
     // (HLL needs no entry here: the durable HllIndex tables are served by
     // Spark's own hll_sketch_agg/hll_union_agg/hll_sketch_estimate, which
     // are already SQL functions; the moment tables are plain decimal SQL.)
-    GraftExtensions.functionEntries.foreach { case (ident, info, builder) =>
-      if (!spark.sessionState.functionRegistry.functionExists(ident))
-        spark.sessionState.functionRegistry.registerFunction(ident, info, builder)
-    }
     val ev = Tables.load(spark, TestSpark.sf0001, "events")
       .select(col("event_type"), col("user_id").as("u"))
     ev.createOrReplaceTempView("theta_ev")

@@ -13,6 +13,5 @@ for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
   ADD_OPENS+=" --add-opens java.base/$p=ALL-UNNAMED"
 done
 exec java $ADD_OPENS -Xmx"${SPARK_DRIVER_MEM:-8g}" \
-  -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -cp "target/scala-2.13/classes:/opt/spark/jars/*" \
   graft.tools.JobProbe "$Q" "$SF"
