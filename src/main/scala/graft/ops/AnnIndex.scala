@@ -171,9 +171,11 @@ object AnnIndex {
     * removed vids out of a fully-emptied cell. If the process crashes
     * between those two steps, re-run the SAME delete: the overwrite is
     * idempotent (survivors rewrite to identical content) and the re-run
-    * completes the directory drops.
+    * completes the directory drops. The last in-place publication verb in
+    * the engine: every other durable table deletes through [[SnapTables]]
+    * (this index's own snapshot twin is q413).
     */
-@deprecated("publish the table through SnapTables and delete via its generation-flip twin — the in-place overwrite invalidates concurrent serves (kept as q404-q411 oracle heritage)", "round 19")
+@deprecated("publish the table through SnapTables and delete via its generation-flip twin — the in-place overwrite invalidates concurrent serves (kept behind q398 and q403, which compose it with the batch_id-delta compaction)", "round 19")
   def deleteStored(spark: SparkSession, path: String, removedIds: DataFrame): Unit = {
     val codesPath = s"$path/codes"
     val codes = spark.read.parquet(codesPath)

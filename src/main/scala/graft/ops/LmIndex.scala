@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Persisted bigram-LM count tables — the q168/q175/q190 table-ification
@@ -78,89 +78,13 @@ object LmIndex {
     LmTables(uni, big)
   }
 
-  /** Word-hash partition fan-out of the stored tables. */
+  /** Word-hash partition fan-out of the stored tables: partitioned by the
+    * (leading-)word hash bucket, a retraction
+    * ([[SnapTables.decrementCounts]], q409/q427) rewrites only the buckets
+    * the removed docs' vocabulary occupies, never the whole
+    * vocabulary-scale file set.
+    */
   val DefaultWordBuckets = 64
-
-  /** Persist both tables under `path` (uni/, big/), partitioned by the
-    * (leading-)word hash bucket so a retraction rewrites only the buckets
-    * the removed docs' vocabulary occupies ([[deleteStored]]), never the
-    * whole vocabulary-scale file set.
-    */
-  def write(tbl: LmTables, path: String,
-      wordBuckets: Int = DefaultWordBuckets): Unit = {
-    // keyed repartition before each partitioned write: file count scales
-    // with the bucket fan-out, not fan-out × write tasks (guide §6)
-    tbl.uni
-      .withColumn("wb", pmod(Hashing.hash60(col("w")), lit(wordBuckets.toLong)).cast("int"))
-      .repartition(col("wb"))
-      .write.mode("overwrite").partitionBy("wb").parquet(s"$path/uni")
-    tbl.big
-      .withColumn("wb", pmod(Hashing.hash60(col("w1")), lit(wordBuckets.toLong)).cast("int"))
-      .repartition(col("wb"))
-      .write.mode("overwrite").partitionBy("wb").parquet(s"$path/big")
-  }
-
-  /** Load stored tables (scan-only lineage), projected back to the logical
-    * columns so a read table composes with [[append]]/[[retract]] exactly
-    * like a built one (the `wb` partition column stays a physical-layout
-    * concern; [[deleteStored]] reads it from the raw parquet itself).
-    */
-  def read(spark: SparkSession, path: String): LmTables =
-    LmTables(
-      spark.read.parquet(s"$path/uni").select(col("w"), col("c1")),
-      spark.read.parquet(s"$path/big").select(col("w1"), col("w2"), col("c2")))
-
-  /** [[retract]] made true in the STORED bytes: count the removed docs
-    * alone and SUBTRACT per key inside the stored parquet via
-    * [[StoredTables.decrementCounts]] — both tables are ADDITIVE (the
-    * [[append]] law run backwards), so the decremented storage equals a
-    * rebuild on the remaining corpus exactly, and every later
-    * [[score]]/[[read]] serves a model that never trained on the removed
-    * docs (q409 hash-proves it through the scoring surface). Only the `wb`
-    * buckets holding the removed docs' vocabulary rewrite; keys reaching
-    * zero drop; an over-retraction or a retraction of never-trained text
-    * fails loudly BEFORE mutating (the decrementCounts guards) — the
-    * double-submitted-batch safety an in-memory [[retract]] cannot give.
-    *
-    * Same serving-concurrency contract as [[AnnIndex.deleteStored]]. The
-    * decrement is NOT idempotent across the two tables, and for words
-    * shared with surviving documents a re-applied decrement lands SILENTLY
-    * (the guards catch only full-retraction and over-retraction shapes) —
-    * so a crash after the uni rewrite but before big is repaired by ONE
-    * guarded call to [[repairBig]] (which applies the BIG-side decrement
-    * alone); never by re-running the full delete, which would subtract uni
-    * twice.
-    */
-@deprecated("publish the table through SnapTables and delete via its generation-flip twin — the in-place overwrite invalidates concurrent serves (kept as q404-q411 oracle heritage)", "round 19")
-  def deleteStored(spark: SparkSession, path: String, removed: DataFrame,
-      id: Column, text: Column): Unit = {
-    val d = build(removed, id, text)
-    StoredTables.decrementCounts(spark, s"$path/uni", "wb", Seq("w"), "c1",
-      d.uni.withColumnRenamed("c1", "__dec"))
-    StoredTables.decrementCounts(spark, s"$path/big", "wb", Seq("w1", "w2"), "c2",
-      d.big.withColumnRenamed("c2", "__dec"))
-  }
-
-  /** Crash repair for [[deleteStored]]'s one partial state: the uni
-    * rewrite landed, the process died before the big rewrite. Recounts the
-    * removed docs' BIGRAM deltas and applies that half alone — the same
-    * idempotent-rebuild role [[WinnowIndex.rebuildDfTable]] and
-    * [[MinHashIndex.rebuildBucketDf]] play for their families, so the
-    * trickiest half-retracted repair is a guarded call, not a prose
-    * recipe. The [[StoredTables.decrementCounts]] guards still apply: if
-    * the big side was ALREADY decremented (i.e. the delete actually
-    * completed) the repair fails loudly on the first fully-retracted
-    * bigram key ("never counted") rather than silently double-subtracting
-    * — only bigrams every one of whose occurrences survives elsewhere in
-    * the corpus could slip that guard, the exact residual risk the
-    * deleteStored scaladoc documents for re-running ANY decrement.
-    */
-  def repairBig(spark: SparkSession, path: String, removed: DataFrame,
-      id: Column, text: Column): Unit = {
-    val d = build(removed, id, text)
-    StoredTables.decrementCounts(spark, s"$path/big", "wb", Seq("w1", "w2"), "c2",
-      d.big.withColumnRenamed("c2", "__dec"))
-  }
 
   /** Score documents from the STORED tables — [[Text.bigramLmScore]]'s
     * exact arithmetic through the shared [[Text.lmScoreFromCounts]] tree;

@@ -92,53 +92,32 @@ object ParaIndex {
   def read(spark: SparkSession, path: String): DataFrame =
     spark.read.parquet(path)
 
-  /** Storage-truth document removal for the ELECTED table — the one durable
-    * family where a bare key filter is NOT the survivors-rebuild semantics
-    * (the [[MinHashIndex.delete]] caveat made mechanical): a stored row is
-    * the corpus-wide FIRST occurrence of its paragraph, so dropping a
-    * removed winner's row would stop scrubbing a paragraph that surviving
+  /** Storage-truth document removal for the ELECTED table, published as a
+    * [[SnapTables]] generation flip — the one durable family where a bare
+    * key filter is NOT the survivors-rebuild semantics (the
+    * [[MinHashIndex.delete]] caveat made mechanical): a stored row is the
+    * corpus-wide FIRST occurrence of its paragraph, so dropping a removed
+    * winner's row would stop scrubbing a paragraph that surviving
     * documents still carry. Deletion therefore RE-ELECTS: for exactly the
     * hashes whose stored winner is a removed doc, the new winner is the
     * minimal (doc_id, pos) occurrence among `survivors` — the surviving
     * corpus, which the caller supplies because the table alone cannot know
     * the suppressed later occurrences. Hashes no survivor carries drop
     * entirely. The result equals a from-scratch [[build]] over `survivors`
-    * row for row (q407 hash-proves it): unaffected rows' winners are
+    * row for row (q407/q414 hash-prove it): unaffected rows' winners are
     * survivors, and removing docs cannot change a minimum it didn't hold.
     *
     * I/O shape: the stored table contributes its removed-winner rows (a
-    * doc_id semi-join) and rewrites only their `hb` partitions (the
-    * [[StoredTables.overwriteAffected]] recipe — emptied buckets drop,
-    * whole-table wipe fails first); the surviving corpus is re-hashed ONCE,
-    * filtered to the orphaned hashes BEFORE the election window, so the
-    * shuffle carries only the contested paragraphs' rows. Same
-    * serving-concurrency contract as [[AnnIndex.deleteStored]]; a crash
-    * mid-rewrite is repaired by re-running the SAME delete (the re-election
-    * is deterministic, the overwrite idempotent).
-    */
-@deprecated("publish the table through SnapTables and delete via its generation-flip twin — the in-place overwrite invalidates concurrent serves (kept as q404-q411 oracle heritage)", "round 19")
-  def deleteStored(
-      spark: SparkSession,
-      path: String,
-      removedIds: DataFrame,
-      survivors: DataFrame,
-      id: Column,
-      text: Column,
-      sep: String = "\n"): Unit =
-    reElect(spark.read.parquet(path), removedIds, survivors, id, text, sep)
-      .foreach { case (affected, rewritten) =>
-        StoredTables.overwriteAffected(spark, path, "hb", affected, rewritten)
-      }
-
-  /** [[deleteStored]] under the [[SnapTables]] snapshot layer: the same
-    * re-election over the surviving corpus, published as a generation flip
-    * instead of an in-place overwrite — q414 hash-proves it equals the
-    * survivors rebuild through the snapshot path, and readers resolved
-    * before the flip keep the pre-delete winners (the one elected-table
-    * case where that isolation is SEMANTICALLY visible: the old generation
-    * still scrubs the removed winners' paragraphs). Completes the verb
-    * matrix on snapshots: key-filter ([[SnapTables.deleteByKey]]),
-    * decrement ([[SnapTables.decrementCounts]]), re-election (here).
+    * doc_id semi-join) and rewrites only their `hb` partitions; the
+    * surviving corpus is re-hashed ONCE, filtered to the orphaned hashes
+    * BEFORE the election window, so the shuffle carries only the contested
+    * paragraphs' rows. Readers resolved before the flip keep the
+    * pre-delete winners (the one elected-table case where that isolation
+    * is SEMANTICALLY visible: the old generation still scrubs the removed
+    * winners' paragraphs). Completes the verb matrix on snapshots:
+    * key-filter ([[SnapTables.deleteByKey]]), decrement
+    * ([[SnapTables.decrementCounts]]), re-election (here). Returns the
+    * generation now serving (unchanged when no stored winner is removed).
     */
   def deleteSnapshot(
       spark: SparkSession,
@@ -150,24 +129,7 @@ object ParaIndex {
       sep: String = "\n"): Int = {
     val gen = SnapTables.currentGeneration(spark, path).getOrElse(
       throw new IllegalStateException(s"ParaIndex: $path has no published generation"))
-    reElect(SnapTables.resolve(spark, path, "hb"), removedIds, survivors,
-        id, text, sep)
-      .map { case (affected, rewritten) =>
-        SnapTables.rewritePartitions(spark, path, "hb", affected, rewritten)
-      }.getOrElse(gen)
-  }
-
-  /** The shared re-election core: None when no stored winner is removed,
-    * otherwise the affected `hb` set and those partitions' replacement rows
-    * (surviving old winners ∪ re-elected minima over `survivors`).
-    */
-  private def reElect(
-      tbl: DataFrame,
-      removedIds: DataFrame,
-      survivors: DataFrame,
-      id: Column,
-      text: Column,
-      sep: String): Option[(Seq[Int], DataFrame)] = {
+    val tbl = SnapTables.resolve(spark, path, "hb")
     val rm = removedIds.select(col("doc_id"))
     // one row per orphaned hash (the table holds one row per h), carrying
     // the hb its replacement must land back into — bucket-scheme-agnostic
@@ -175,7 +137,7 @@ object ParaIndex {
       .select(col("h"), col("hb")).localCheckpoint()
     val affected = orphaned.select(col("hb")).distinct()
       .collect().map(_.getInt(0)).sorted.toSeq
-    if (affected.isEmpty) return None
+    if (affected.isEmpty) return gen
     val contested = paraRows(survivors, id, text, sep)
       .select(Hashing.hash60(col("para")).as("h"), col("doc_id"), col("pos"))
       .join(orphaned.select(col("h")), Seq("h"), "left_semi")
@@ -195,7 +157,7 @@ object ParaIndex {
       .join(rm, Seq("doc_id"), "left_anti")
       .select(col("h"), col("doc_id"), col("pos"), col("hb"))
       .unionByName(reElected.select(col("h"), col("doc_id"), col("pos"), col("hb")))
-    Some((affected, rewritten))
+    SnapTables.rewritePartitions(spark, path, "hb", affected, rewritten)
   }
 
   /** Scrub an INGEST batch against the stored table — the serve path:

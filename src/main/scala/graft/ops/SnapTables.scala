@@ -18,13 +18,14 @@ import org.apache.spark.sql.functions._
 final class SnapConflict(msg: String, cause: Throwable = null)
     extends IllegalStateException(msg, cause)
 
-/** Snapshot-manifest storage for the durable index tables — the mechanical
-  * fix for the one contract every storage-truth rewrite in this repo
-  * carries as DOCUMENTATION ONLY ([[AnnIndex.deleteStored]],
-  * [[StoredTables]]: "do not serve while the rewrite runs"). An in-place
-  * dynamic partition overwrite deletes the files a concurrent reader's plan
-  * may already hold, so serving during maintenance is a race; here a
-  * rewrite never deletes anything a published generation references:
+/** Snapshot-manifest storage for the durable index tables — the one
+  * publication layer of every text-side index family, and the mechanical
+  * fix for the contract an in-place storage-truth rewrite carries as
+  * DOCUMENTATION ONLY ([[AnnIndex.deleteStored]]: "do not serve while the
+  * rewrite runs"). An in-place dynamic partition overwrite deletes the
+  * files a concurrent reader's plan may already hold, so serving during
+  * maintenance is a race; here a rewrite never deletes anything a
+  * published generation references:
   *
   *  - data files live in the ordinary `part=<v>/` directories (one shared
   *    pool; files are immutable once written);
@@ -35,10 +36,10 @@ final class SnapConflict(msg: String, cause: Throwable = null)
   *    [[graft.streaming.Pipelines]] ownership-marker pattern).
   *
   * A rewrite appends NEW files for the affected partitions only (bounded
-  * I/O — the [[StoredTables.overwriteAffected]] shape, without the
-  * delete), then publishes a new manifest that references the new files
-  * for affected partitions and the PRIOR generation's files everywhere
-  * else. Readers resolved before the flip keep serving the old
+  * I/O — the affected-partition shape of an in-place dynamic overwrite,
+  * without its delete), then publishes a new manifest that references the
+  * new files for affected partitions and the PRIOR generation's files
+  * everywhere else. Readers resolved before the flip keep serving the old
   * generation's (still present) files; readers resolved after see the new
   * ones; the flip itself is one atomic rename. Unreferenced files are
   * reclaimed later by [[expire]] — an explicitly separate step, so space
@@ -703,13 +704,16 @@ object SnapTables {
     } finally releaseGeneration(hfs, root, gen + 1)
   }
 
-  /** [[StoredTables.deleteByKey]] with snapshot publication instead of the
-    * in-place overwrite: the same bounded I/O shape (one semi-join to find
-    * affected partitions, one anti-join rewrite of exactly those), but a
-    * concurrent reader of the current generation is never invalidated —
-    * the serving-concurrency contract every in-place rewrite carries as
-    * documentation becomes a mechanical guarantee here. Returns the
-    * generation now serving (unchanged when no stored row matched).
+  /** Storage-truth key-filter delete for a PER-KEY-LOCAL table (every row
+    * derives from its own `keyCol` entity alone — the locality that makes
+    * append exact makes this delete exact): one semi-join finds the
+    * affected partitions, one anti-join rewrites exactly those, and the
+    * result publishes as a generation — a concurrent reader of the current
+    * generation is never invalidated. No broadcast hint on the removal set
+    * (the [[AnnIndex.deleteStored]] stance): a typical right-to-be-forgotten
+    * batch broadcasts under AQE on its own; a bulk purge must degrade to a
+    * shuffled join, not OOM. Returns the generation now serving (unchanged
+    * when no stored row matched).
     */
   def deleteByKey(spark: SparkSession, path: String, partCol: String,
       keyCol: String, removedKeys: DataFrame): Int = {
@@ -718,9 +722,7 @@ object SnapTables {
     // any other (the stale-plan guard)
     val base = currentGeneration(spark, path).getOrElse(
       throw new IllegalStateException(s"SnapTables: $path has no published generation"))
-    // the PLAN is [[StoredTables.deleteByKeyPlan]] verbatim — in-place and
-    // snapshot deletes may differ only in how they publish
-    StoredTables.deleteByKeyPlan(resolveAt(spark, path, partCol, base),
+    deleteByKeyPlan(resolveAt(spark, path, partCol, base),
         partCol, keyCol, removedKeys)
       .map { case (affected, survivors) =>
         rewritePartitions(spark, path, partCol, affected, survivors,
@@ -729,12 +731,17 @@ object SnapTables {
       .getOrElse(base)
   }
 
-  /** [[StoredTables.decrementCounts]] with snapshot publication: the same
-    * exact-subtraction semantics and guards (duplicate-key deltas
-    * pre-aggregate; unknown-key and over-retraction batches fail loudly
-    * BEFORE any file is written), but the decremented partitions publish
-    * as a new generation instead of overwriting in place — concurrent
-    * readers of the additive side table (serve-path df caps, bucket
+  /** Exact count RETRACTION on an additive side table (the q282
+    * NB-retract precedent): `deltas` carries per-key counts to subtract
+    * (column `__dec`); affected partitions rewrite with the decremented
+    * counts and rows reaching zero drop entirely (a bucket no surviving
+    * document occupies must not exist — its presence would shift serve-path
+    * guards). Because the side tables are ADDITIVE under append,
+    * subtraction of the removed docs' own contributions is exact — the
+    * maintained table equals a survivors-only recompute. Duplicate-key
+    * deltas pre-aggregate; unknown-key and over-retraction batches fail
+    * loudly BEFORE any file is written. The decremented partitions publish
+    * as a new generation — concurrent readers (serve-path df caps, bucket
     * guards) keep their statistics until they re-resolve. Returns the
     * generation now serving.
     */
@@ -742,17 +749,101 @@ object SnapTables {
       keyCols: Seq[String], countCol: String, deltas: DataFrame): Int = {
     val base = currentGeneration(spark, path).getOrElse(
       throw new IllegalStateException(s"SnapTables: $path has no published generation"))
-    // the PLAN (pre-aggregation, unknown-key and over-retraction guards) is
-    // [[StoredTables.decrementPlan]] verbatim — a guard fixed there is
-    // fixed for both publication paths; refused batches throw BEFORE any
-    // file is written, so the generation never advances
-    StoredTables.decrementPlan(resolveAt(spark, path, partCol, base), partCol,
+    // refused batches throw in the plan, BEFORE any file is written, so the
+    // generation never advances
+    decrementPlan(resolveAt(spark, path, partCol, base), partCol,
         keyCols, countCol, deltas, at = s"$path (generation $base)")
       .map { case (affected, survivors) =>
         rewritePartitions(spark, path, partCol, affected, survivors,
           plannedBase = Some(base))
       }
       .getOrElse(base)
+  }
+
+  /** The key-filter delete PLAN behind [[deleteByKey]] — one semi-join to
+    * find the affected partitions, one anti-join for their survivors. None
+    * when no stored row matches (the no-op case). The bounded driver
+    * transfer is the affected partition-value set, capped by the table's
+    * fan-out.
+    */
+  private def deleteByKeyPlan(
+      tbl: DataFrame,
+      partCol: String,
+      keyCol: String,
+      removedKeys: DataFrame): Option[(Seq[Int], DataFrame)] = {
+    val rm = removedKeys.select(col(keyCol))
+    val affected = tbl.join(rm, Seq(keyCol), "left_semi")
+      .select(col(partCol)).distinct()
+      .collect().map(_.getInt(0)).sorted.toSeq
+    if (affected.isEmpty) return None
+    Some((affected,
+      tbl.where(col(partCol).isin(affected: _*))
+        .join(rm, Seq(keyCol), "left_anti")))
+  }
+
+  /** The exact-subtraction PLAN with all three guards behind
+    * [[decrementCounts]]. None when no stored key matches after the guards
+    * pass (the no-op case); `at` names the table in guard messages.
+    */
+  private def decrementPlan(
+      tbl: DataFrame,
+      partCol: String,
+      keyCols: Seq[String],
+      countCol: String,
+      deltas: DataFrame,
+      at: String): Option[(Seq[Int], DataFrame)] = {
+    // normalize FIRST: duplicate key rows in `deltas` (two retraction rows
+    // for one key — a union of per-batch retractions) must subtract their
+    // SUM once; joined raw they would fan out the left join, duplicating
+    // each matched stored row with each copy decremented by only its own
+    // share. Checkpointed so the two validation actions and the rewrite
+    // never recompute the caller's lineage.
+    val dec = deltas.groupBy(keyCols.map(col): _*)
+      .agg(sum(col("__dec")).as("__dec")).localCheckpoint()
+    // ONE dec-keyed probe pass serves both guards that used to scan the
+    // table separately (anti-join unknown check + semi-join affected set):
+    // each retraction key's matched partitions, or a null marker when the
+    // key has no stored row. The probe is retraction-batch-sized (dec keys
+    // × their matched rows), checkpointed so the two reads below never
+    // rescan the table.
+    val probe = dec.select(keyCols.map(col): _*)
+      .join(tbl.select((keyCols :+ partCol).map(col): _*)
+          .withColumn("__hit", lit(true)),
+        keyCols, "left")
+      .localCheckpoint()
+    // a retraction keyed on something the table never counted is a caller
+    // bug (retracting never-ingested docs, or a DOUBLE-submitted retraction
+    // whose first pass already dropped the key at zero) — a silent no-op
+    // would leave the caller believing the retraction landed
+    val unknown = probe.where(col("__hit").isNull)
+      .select(keyCols.map(col): _*).limit(1).collect()
+    require(unknown.isEmpty,
+      s"decrementCounts: retraction key ${unknown.headOption.getOrElse("")} has no " +
+        s"row in the stored table at $at — retracting something never counted " +
+        "(or already retracted); refusing the whole batch")
+    val affected = probe.where(col("__hit").isNotNull)
+      .select(col(partCol)).distinct()
+      .collect().map(_.getInt(0)).sorted.toSeq
+    if (affected.isEmpty) return None
+    val cols = tbl.columns.toSeq
+    val decremented = tbl
+      .where(col(partCol).isin(affected: _*))
+      .join(dec, keyCols, "left")
+      .withColumn(countCol, col(countCol) - coalesce(col("__dec"), lit(0L)))
+      .localCheckpoint()
+    // over-retraction (__dec exceeding the stored count) must FAIL, not
+    // silently ride the `> 0` survivor filter into a full delete: on an
+    // additive side table that failure mode means a double-submitted
+    // retraction batch corrupts counts with no error. Keys retracting to
+    // exactly zero are the legitimate full-retraction case and drop below.
+    val over = decremented.where(col(countCol) < 0)
+      .select(keyCols.map(col): _*).limit(1).collect()
+    require(over.isEmpty,
+      s"decrementCounts: retraction of key ${over.headOption.getOrElse("")} exceeds " +
+        s"its stored count at $at (double-submitted retraction batch?); " +
+        "refusing the whole batch before mutating")
+    Some((affected,
+      decremented.where(col(countCol) > 0).select(cols.map(col): _*)))
   }
 
   /** Exact count INCREMENT on a snapshot-published additive side table —

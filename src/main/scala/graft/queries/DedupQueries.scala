@@ -1887,234 +1887,73 @@ object DedupQueries {
            |FROM linked GROUP BY 1""".stripMargin)),
 
     // Winnow-index STORED delete — q169/q174's serve with the %11 removal
-    // set REWRITTEN OUT of the stored bytes (the q398 discipline applied to
-    // the text side): the fingerprint table deletes by exact key filter,
-    // the df side table retracts by exact subtraction
-    // (WinnowIndex.deleteStored — both via the shared StoredTables recipe,
-    // affected hb buckets only), and the serve reads the REWRITTEN tables
-    // alone: stored-df cap included, every statistic is survivors-only.
-    // Oracle: the q169 chain over the kept corpus — hash-match proves the
-    // decremented storage is indistinguishable from an index that never saw
-    // the removed docs. StoredTablesSpec pins the byte-level properties
-    // (removed rows absent, unaffected partitions' files untouched,
-    // over-retraction fails loudly).
+    // set rewritten out of the stored bytes: the fingerprint table deletes
+    // by exact key filter, the df side table retracts by exact subtraction,
+    // and the serve reads the rewritten tables alone, stored-df cap
+    // included. Served through q412's snapshot delete. Oracle: the q169
+    // chain over the kept corpus — hash-match proves the decremented
+    // storage is indistinguishable from an index that never saw the
+    // removed docs.
     QueryDef(
       "q404_winnow_stored_delete",
-      (s, dir) => {
-        val p = winnowDeletedPath(s, dir)
-        val fp = graft.ops.WinnowIndex.read(s, s"$p/fp")
-        val stats = graft.ops.WinnowIndex.readDfTable(s, s"$p/df")
-        val docs = Tables.load(s, dir, "documents")
-        val probes = docs.where(pmod(col("doc_id"), lit(25)) === 0)
-          .select((col("doc_id") + lit(10000000L)).as("doc_id"),
-            concat_ws(" ", slice(Text.tokens(col("text")), 1, 30)).as("text"))
-        graft.ops.WinnowIndex.matches(fp, probes, col("doc_id"), col("text"),
-          k = 3, w = 4, threshold = 0.4, maxFpDf = Some(100),
-          storedDf = Some(stats))
-      },
-      Some(s"""WITH kept AS (
-           |  SELECT doc_id, text FROM documents WHERE doc_id % 11 <> 0),
-           |probes AS (
-           |  SELECT doc_id + 10000000 AS doc_id,
-           |    array_to_string(list_slice(string_split_regex(text, '\\s+'), 1, 30), ' ') AS text
-           |  FROM documents WHERE doc_id % 25 = 0),
-           |${duckWinnowCtes("kept", "i")},
-           |${duckWinnowCtes("probes", "p")},
-           |ifp0 AS (SELECT DISTINCT doc_id, h FROM iwfp),
-           |ifp AS (
-           |  SELECT doc_id, h FROM ifp0
-           |  WHERE h IN (SELECT h FROM ifp0 GROUP BY h HAVING COUNT(*) <= 100)),
-           |isz AS (SELECT doc_id, COUNT(*) AS nfp_doc FROM ifp GROUP BY 1),
-           |pfp AS (SELECT DISTINCT doc_id AS probe_id, h FROM pwfp),
-           |psz AS (SELECT probe_id, COUNT(*) AS nfp_probe FROM pfp GROUP BY 1),
-           |inter AS (
-           |  SELECT p.probe_id, i.doc_id, COUNT(*) AS inter
-           |  FROM pfp p JOIN ifp i ON p.h = i.h
-           |  GROUP BY 1, 2)
-           |SELECT probe_id, doc_id, inter, psz.nfp_probe, isz.nfp_doc,
-           |  CAST(inter AS DOUBLE) / least(psz.nfp_probe, isz.nfp_doc) AS overlap
-           |FROM inter
-           |JOIN psz USING (probe_id)
-           |JOIN isz USING (doc_id)
-           |WHERE CAST(inter AS DOUBLE) / least(psz.nfp_probe, isz.nfp_doc) >= 0.4""".stripMargin)),
+      winnowSnapDelete,
+      Some(winnowSnapOracle("WHERE doc_id % 11 <> 0"))),
 
     // Minhash-index STORED delete — q277's semantics made true in the
-    // BYTES: q277 anti-joins in-memory frames (the stored parquet still
-    // holds every removed doc's rows), this leg rewrites all THREE stored
-    // tables (sigs by db bucket, bands by sb bucket, bucket-df by exact
-    // decrement — MinHashIndex.deleteStored) and serves the q208 probe set
-    // from a RE-READ of the rewritten tables, mega-bucket guard fed from
-    // the DECREMENTED stored side table. Same survivors-only oracle as
-    // q277 — identical output through a storage path that actually forgot,
-    // guard statistics included.
+    // BYTES: all three stored tables (sigs, bands, bucket-df by exact
+    // decrement) drop the removed docs and the q208 probe set serves from
+    // the rewritten tables, mega-bucket guard fed from the decremented side
+    // table. Served through q421's snapshot delete. Same survivors-only
+    // oracle as q277.
     QueryDef(
       "q405_minhash_stored_delete",
-      (s, dir) => {
-        val p = minhashDeletedPath(s, dir)
-        val sigs = graft.ops.MinHashIndex.readSigs(s, p)
-        val bands = graft.ops.MinHashIndex.readBands(s, p)
-        val bdf = graft.ops.MinHashIndex.readBucketDf(s, p)
-        val docs = Tables.load(s, dir, "documents")
-        val probes = docs.where(pmod(col("doc_id"), lit(25)) === 0)
-          .select((col("doc_id") + lit(10000000L)).as("doc_id"),
-            concat(col("text"), lit(" zq1 zq2")).as("text"))
-        graft.ops.MinHashIndex.matches(bands, sigs, probes,
-          col("doc_id"), col("text"), n = 3, numHashes = 16, rowsPerBand = 4,
-          minEstimate = 0.75, maxBucket = Some(100),
-          storedBucketDf = Some(bdf))
-      },
-      Some(s"""WITH kept AS (
-           |  SELECT doc_id, text FROM documents WHERE doc_id % 11 <> 0),
-           |probes AS (
-           |  SELECT doc_id + 10000000 AS doc_id, text || ' zq1 zq2' AS text
-           |  FROM documents WHERE doc_id % 25 = 0),
-           |${duckMshChain("kept", "i")},
-           |${duckMshChain("probes", "p")},
-           |ok AS (
-           |  SELECT band, band_sig FROM ibands GROUP BY 1, 2
-           |  HAVING COUNT(*) <= 100),
-           |cand AS (
-           |  SELECT DISTINCT p.doc_id AS probe_id, i.doc_id AS doc_id
-           |  FROM pbands p
-           |  JOIN ibands i ON i.band = p.band AND i.band_sig = p.band_sig
-           |  JOIN ok ON ok.band = p.band AND ok.band_sig = p.band_sig)
-           |SELECT cand.probe_id, cand.doc_id,
-           |  CAST(SUM(CASE WHEN pm.mh = im.mh THEN 1 ELSE 0 END) AS BIGINT) AS n_agree,
-           |  COUNT(*) AS n_hashes,
-           |  CAST(SUM(CASE WHEN pm.mh = im.mh THEN 1 ELSE 0 END) AS DOUBLE) / COUNT(*) AS est_jaccard
-           |FROM cand
-           |JOIN pmh pm ON pm.doc_id = cand.probe_id
-           |JOIN imh im ON im.doc_id = cand.doc_id AND im.seed = pm.seed
-           |GROUP BY 1, 2
-           |HAVING CAST(SUM(CASE WHEN pm.mh = im.mh THEN 1 ELSE 0 END) AS DOUBLE) / COUNT(*) >= 0.75""".stripMargin)),
+      minhashSnapDelete,
+      Some(minhashSnapOracle(" WHERE doc_id % 11 <> 0"))),
 
     // Simhash-index STORED delete: the pigeonhole key table is strictly
-    // per-document, so SimHashIndex.deleteStored is an exact key filter
-    // rewritten into the stored kb buckets; the q213 probe set served from
-    // the re-read table must equal the quadratic Hamming join against the
-    // KEPT corpus alone (blocking recall stays exact — deletion cannot
-    // break the pigeonhole argument, it only shrinks the key table).
+    // per-document, so the delete is an exact key filter; the q213 probe
+    // set served from the rewritten table must equal the quadratic Hamming
+    // join against the KEPT corpus alone (deletion cannot break the
+    // pigeonhole argument, it only shrinks the key table). Served through
+    // q423's snapshot delete.
     QueryDef(
       "q406_simhash_stored_delete",
-      (s, dir) => {
-        val p = simhashDeletedPath(s, dir)
-        val keys = graft.ops.SimHashIndex.readKeys(s, p)
-        val docs = Tables.load(s, dir, "documents")
-        val probes = docs.where(pmod(col("doc_id"), lit(25)) === 0)
-          .select((col("doc_id") + lit(10000000L)).as("doc_id"),
-            concat(col("text"), lit(" zq1 zq2")).as("text"))
-        graft.ops.SimHashIndex.matches(keys, probes, col("doc_id"), col("text"),
-          maxHamming = 3, numBlocks = 6)
-      },
-      Some(s"""WITH kept AS (
-           |  SELECT doc_id, text FROM documents WHERE doc_id % 11 <> 0),
-           |probes AS (
-           |  SELECT doc_id + 10000000 AS doc_id, text || ' zq1 zq2' AS text
-           |  FROM documents WHERE doc_id % 25 = 0),
-           |${duckSimhashChain("kept", "c")},
-           |${duckSimhashChain("probes", "p")}
-           |SELECT p.doc_id AS probe_id, c.doc_id AS doc_id,
-           |  bit_count(xor(p.simhash, c.simhash)) AS hamming
-           |FROM psh p JOIN csh c
-           |  ON bit_count(xor(p.simhash, c.simhash)) <= 3""".stripMargin)),
+      simhashSnapDelete,
+      Some(simhashSnapOracle(" WHERE doc_id % 11 <> 0"))),
 
     // Para-index STORED delete — the RE-ELECTION family, the one durable
     // table where a bare key filter is NOT survivors semantics: a stored
     // row is the corpus-wide FIRST occurrence of its paragraph, so removing
     // a winner must re-elect the minimal surviving occurrence (or drop the
-    // hash if no survivor carries it — ParaIndex.deleteStored). The corpus
-    // is the q190 planted construction (every 10th doc carries its
-    // neighbor's text as a second paragraph), so removed %11 winners
-    // genuinely orphan paragraphs that surviving docs still hold. The query
-    // output is the REWRITTEN TABLE ITSELF; the oracle is a from-scratch
-    // first-occurrence election over the surviving corpus — hash-match
-    // proves re-election == rebuild ROW FOR ROW, the strongest form of the
-    // delete contract.
+    // hash if no survivor carries it). The corpus is the q190 planted
+    // construction (every 10th doc carries its neighbor's text as a second
+    // paragraph), so removed %11 winners genuinely orphan paragraphs that
+    // surviving docs still hold. The query output is the REWRITTEN TABLE
+    // ITSELF, served through q414's snapshot delete; the oracle is a
+    // from-scratch first-occurrence election over the surviving corpus —
+    // re-election == rebuild ROW FOR ROW.
     QueryDef(
       "q407_para_stored_delete",
-      (s, dir) => {
-        val p = paraDeletedPath(s, dir)
-        graft.ops.ParaIndex.read(s, p)
-          .select(col("h"), col("doc_id"), col("pos"))
-      },
-      Some(s"""WITH base AS (
-           |  SELECT d.doc_id,
-           |    CASE WHEN d.doc_id % 10 = 0 AND n.text IS NOT NULL
-           |         THEN d.text || chr(10) || n.text ELSE d.text END AS text
-           |  FROM documents d LEFT JOIN documents n ON n.doc_id = d.doc_id + 1
-           |  WHERE d.doc_id % 11 <> 0),
-           |px AS (
-           |  SELECT doc_id, t, unnest(range(1, len(t) + 1)) AS p
-           |  FROM (SELECT doc_id, string_split(text, chr(10)) AS t FROM base)),
-           |paras AS (
-           |  SELECT doc_id, CAST(p - 1 AS BIGINT) AS pos,
-           |    t[CAST(p AS INTEGER)] AS para
-           |  FROM px),
-           |ph AS (
-           |  SELECT doc_id, pos, ${Hashing.duckFoldHexCol("m")} AS h
-           |  FROM (SELECT doc_id, pos, md5(para) AS m FROM paras)),
-           |sel AS (
-           |  SELECT h, doc_id, pos,
-           |    row_number() OVER (PARTITION BY h ORDER BY doc_id, pos) AS rn
-           |  FROM ph)
-           |SELECT h, doc_id, pos FROM sel WHERE rn = 1""".stripMargin)),
+      paraSnapDelete,
+      Some(paraSurvivorsOracle)),
 
-    // SNAPSHOT-ISOLATED delete — q404's storage rewrite under the
-    // SnapTables manifest layer, the mechanical fix for the one contract
-    // every in-place rewrite carries as documentation ("do not serve
-    // during the rewrite"): the delete appends survivor files for the
+    // SNAPSHOT-ISOLATED delete — the winnow storage rewrite under the
+    // SnapTables manifest layer: the delete appends survivor files for the
     // affected hb buckets only and atomically flips a generation pointer;
     // the superseded files stay on disk, so a reader resolved BEFORE the
     // flip keeps serving the old generation (SnapTablesSpec pins that, the
     // crash-orphan invisibility, and expiry). BOTH winnow tables ride the
     // layer: the fingerprint table deletes by snapshot key-filter and the
     // additive df side table retracts by snapshot decrement
-    // (SnapTables.decrementCounts — same pre-aggregation/unknown-key/
-    // over-retraction guards as the in-place recipe, published as a
-    // generation). This query serves the q169 probe set from the
-    // POST-FLIP generations, df cap fed from the decremented side table;
-    // the oracle is the same survivors-only chain as q404 — snapshot
-    // publication must be invisible in the answers.
+    // (SnapTables.decrementCounts — pre-aggregation, unknown-key and
+    // over-retraction guards). This query serves the q169 probe set from
+    // the POST-FLIP generations, df cap fed from the decremented side
+    // table; the oracle is the same survivors-only chain as q404 —
+    // snapshot publication must be invisible in the answers.
     QueryDef(
       "q412_winnow_snapshot_delete",
-      (s, dir) => {
-        val p = winnowSnapshotPath(s, dir)
-        val fp = graft.ops.SnapTables.resolve(s, s"$p/fp", "hb")
-        val stats = graft.ops.SnapTables.resolve(s, s"$p/df", "hb")
-          .select(col("h"), col("df"))
-        val docs = Tables.load(s, dir, "documents")
-        val probes = docs.where(pmod(col("doc_id"), lit(25)) === 0)
-          .select((col("doc_id") + lit(10000000L)).as("doc_id"),
-            concat_ws(" ", slice(Text.tokens(col("text")), 1, 30)).as("text"))
-        graft.ops.WinnowIndex.matches(fp, probes, col("doc_id"), col("text"),
-          k = 3, w = 4, threshold = 0.4, maxFpDf = Some(100),
-          storedDf = Some(stats))
-      },
-      Some(s"""WITH kept AS (
-           |  SELECT doc_id, text FROM documents WHERE doc_id % 11 <> 0),
-           |probes AS (
-           |  SELECT doc_id + 10000000 AS doc_id,
-           |    array_to_string(list_slice(string_split_regex(text, '\\s+'), 1, 30), ' ') AS text
-           |  FROM documents WHERE doc_id % 25 = 0),
-           |${duckWinnowCtes("kept", "i")},
-           |${duckWinnowCtes("probes", "p")},
-           |ifp0 AS (SELECT DISTINCT doc_id, h FROM iwfp),
-           |ifp AS (
-           |  SELECT doc_id, h FROM ifp0
-           |  WHERE h IN (SELECT h FROM ifp0 GROUP BY h HAVING COUNT(*) <= 100)),
-           |isz AS (SELECT doc_id, COUNT(*) AS nfp_doc FROM ifp GROUP BY 1),
-           |pfp AS (SELECT DISTINCT doc_id AS probe_id, h FROM pwfp),
-           |psz AS (SELECT probe_id, COUNT(*) AS nfp_probe FROM pfp GROUP BY 1),
-           |inter AS (
-           |  SELECT p.probe_id, i.doc_id, COUNT(*) AS inter
-           |  FROM pfp p JOIN ifp i ON p.h = i.h
-           |  GROUP BY 1, 2)
-           |SELECT probe_id, doc_id, inter, psz.nfp_probe, isz.nfp_doc,
-           |  CAST(inter AS DOUBLE) / least(psz.nfp_probe, isz.nfp_doc) AS overlap
-           |FROM inter
-           |JOIN psz USING (probe_id)
-           |JOIN isz USING (doc_id)
-           |WHERE CAST(inter AS DOUBLE) / least(psz.nfp_probe, isz.nfp_doc) >= 0.4""".stripMargin)),
+      winnowSnapDelete,
+      Some(winnowSnapOracle("WHERE doc_id % 11 <> 0"))),
 
     // SNAPSHOT re-election — the third and last rewrite verb on the
     // snapshot layer (q412 proved key-filter, its df side decrement; this
@@ -2122,38 +1961,12 @@ object DedupQueries {
     // through SnapTables, ParaIndex.deleteSnapshot re-elects the removed
     // winners' paragraphs over the survivors and publishes the result as a
     // generation flip. Output is the POST-FLIP table itself; the oracle is
-    // q407's from-scratch survivors election VERBATIM — in-place overwrite
-    // and snapshot publication must produce byte-identical logical tables.
-    // The isolation here is semantically visible: a gen-0 reader still
+    // q407's from-scratch survivors election VERBATIM. The isolation here is semantically visible: a gen-0 reader still
     // scrubs the removed winners' paragraphs until it re-resolves.
     QueryDef(
       "q414_para_snapshot_delete",
-      (s, dir) => {
-        val p = paraSnapshotPath(s, dir)
-        graft.ops.SnapTables.resolve(s, p, "hb")
-          .select(col("h"), col("doc_id"), col("pos"))
-      },
-      Some(s"""WITH base AS (
-           |  SELECT d.doc_id,
-           |    CASE WHEN d.doc_id % 10 = 0 AND n.text IS NOT NULL
-           |         THEN d.text || chr(10) || n.text ELSE d.text END AS text
-           |  FROM documents d LEFT JOIN documents n ON n.doc_id = d.doc_id + 1
-           |  WHERE d.doc_id % 11 <> 0),
-           |px AS (
-           |  SELECT doc_id, t, unnest(range(1, len(t) + 1)) AS p
-           |  FROM (SELECT doc_id, string_split(text, chr(10)) AS t FROM base)),
-           |paras AS (
-           |  SELECT doc_id, CAST(p - 1 AS BIGINT) AS pos,
-           |    t[CAST(p AS INTEGER)] AS para
-           |  FROM px),
-           |ph AS (
-           |  SELECT doc_id, pos, ${Hashing.duckFoldHexCol("m")} AS h
-           |  FROM (SELECT doc_id, pos, md5(para) AS m FROM paras)),
-           |sel AS (
-           |  SELECT h, doc_id, pos,
-           |    row_number() OVER (PARTITION BY h ORDER BY doc_id, pos) AS rn
-           |  FROM ph)
-           |SELECT h, doc_id, pos FROM sel WHERE rn = 1""".stripMargin)),
+      paraSnapDelete,
+      Some(paraSurvivorsOracle)),
 
     // SNAPSHOT APPEND — the ingest verb that makes the manifest layer a
     // full lifecycle (q412/q413/q414 proved the three DELETE verbs): the
@@ -2255,17 +2068,16 @@ object DedupQueries {
       },
       Some(winnowSnapOracle("WHERE doc_id % 11 <> 0"))),
 
-    // MINHASH family on the SNAPSHOT layer (round 18 — q405's in-place
-    // rewrite carried the serve-during-rewrite caveat SnapTables exists to
-    // remove): all THREE stored tables ride the generation layer — sigs
-    // (db buckets) and bands (sb buckets) delete by snapshot key-filter,
-    // the additive bucket-df side table retracts by snapshot decrement —
-    // and the q405 probe set serves from the post-flip generations, guard
-    // fed from the decremented side table. Oracle: q405's survivors chain
-    // verbatim — generation publication must be invisible in the answers.
+    // MINHASH family on the SNAPSHOT layer: all THREE stored tables ride
+    // the generation layer — sigs (db buckets) and bands (sb buckets)
+    // delete by snapshot key-filter, the additive bucket-df side table
+    // retracts by snapshot decrement — and the q405 probe set serves from
+    // the post-flip generations, guard fed from the decremented side table.
+    // Oracle: q405's survivors chain verbatim — generation publication must
+    // be invisible in the answers.
     QueryDef(
       "q421_minhash_snapshot_delete",
-      (s, dir) => minhashSnapServe(s, dir, minhashSnapDelPath(s, dir)),
+      minhashSnapDelete,
       Some(minhashSnapOracle(" WHERE doc_id % 11 <> 0"))),
 
     // MINHASH snapshot APPEND — the ingest half: the 6/7 base publishes as
@@ -2284,13 +2096,12 @@ object DedupQueries {
 
     // SIMHASH key table on the snapshot layer: the pigeonhole combo-key
     // table is strictly per-document, so the snapshot delete is an exact
-    // key-filter published as a generation (q406's semantics with the
-    // concurrency caveat removed); the q406 probe set served from the
-    // post-flip generation must equal the quadratic Hamming join on the
+    // key-filter published as a generation; the q406 probe set served from
+    // the post-flip generation must equal the quadratic Hamming join on the
     // kept corpus.
     QueryDef(
       "q423_simhash_snapshot_delete",
-      (s, dir) => simhashSnapServe(s, dir, simhashSnapDelPath(s, dir)),
+      simhashSnapDelete,
       Some(simhashSnapOracle(" WHERE doc_id % 11 <> 0"))),
 
     // SIMHASH snapshot APPEND: 6/7 base publishes, the remainder's combo
@@ -2303,9 +2114,10 @@ object DedupQueries {
   )
 
   // ---------------------------------------------------------------------
-  // Snapshot-layer migrations for the minhash/simhash families (q421–q424):
-  // the same memoized-setup discipline as the stored-delete legs, with
-  // SnapTables generations replacing the in-place overwrite.
+  // Snapshot-layer setups for the minhash/simhash families (q405/q406,
+  // q421–q424): build once per (tag, sfdir) into a scratch path through
+  // SnapTables generations, serve scan-only afterwards (the
+  // SimilarityQueries.memoPath discipline).
   // ---------------------------------------------------------------------
 
   private val SigB = graft.ops.MinHashIndex.DefaultSigBuckets
@@ -2314,8 +2126,8 @@ object DedupQueries {
   private def mshSb = pmod(col("band_sig"), lit(SigB.toLong)).cast("int")
 
   /** Publish the three minhash snapshot tables from PREBUILT signature and
-    * band frames (the q421 leg passes the memoFrame masters shared with
-    * q405; the q422 leg builds its own 6/7-base frames).
+    * band frames (the q421 leg passes the full-corpus memoFrame builds;
+    * the q422 leg builds its own 6/7-base frames).
     */
   private def publishMinhashSnap(s: org.apache.spark.sql.SparkSession,
       p: String, sigs: org.apache.spark.sql.DataFrame,
@@ -2332,7 +2144,6 @@ object DedupQueries {
       dir: String): String =
     SimilarityQueries.memoPath("minhashsnapdel", dir) { p =>
       val docs = Tables.load(s, dir, "documents")
-      // shared master build with the q405 stored leg (memoFrame)
       publishMinhashSnap(s, p, minhashSigsFull(s, dir),
         minhashBandsFull(s, dir))
       val removed = docs.where(pmod(col("doc_id"), lit(11)) === 0)
@@ -2371,6 +2182,13 @@ object DedupQueries {
         graft.ops.MinHashIndex.bucketDfTable(dbands).withColumn("sb", mshSb))
       ()
     }
+
+  /** The q405/q421 serve: the q208 probe set against the %11-deleted
+    * snapshot tables.
+    */
+  private def minhashSnapDelete(s: org.apache.spark.sql.SparkSession,
+      dir: String): org.apache.spark.sql.DataFrame =
+    minhashSnapServe(s, dir, minhashSnapDelPath(s, dir))
 
   private def minhashSnapServe(s: org.apache.spark.sql.SparkSession,
       dir: String, p: String): org.apache.spark.sql.DataFrame = {
@@ -2422,9 +2240,9 @@ object DedupQueries {
       dir: String): String =
     SimilarityQueries.memoPath("simhashsnapdel", dir) { p =>
       val docs = Tables.load(s, dir, "documents")
-      // shared master build with the q406 stored leg (memoFrame)
       graft.ops.SnapTables.publishInitial(s, s"$p/keys", "kb",
-        graft.ops.SimHashIndex.keyTable(simhashFull(s, dir),
+        graft.ops.SimHashIndex.keyTable(
+          graft.ops.Dedup.simhash(docs, col("doc_id"), col("text")),
           maxHamming = 3, numBlocks = 6).withColumn("kb", simhashKb))
       graft.ops.SnapTables.deleteByKey(s, s"$p/keys", "kb", "doc_id",
         docs.where(pmod(col("doc_id"), lit(11)) === 0).select(col("doc_id")))
@@ -2449,6 +2267,13 @@ object DedupQueries {
           maxHamming = 3, numBlocks = 6).withColumn("kb", simhashKb))
       ()
     }
+
+  /** The q406/q423 serve: the q213 probe set against the %11-deleted
+    * snapshot key table.
+    */
+  private def simhashSnapDelete(s: org.apache.spark.sql.SparkSession,
+      dir: String): org.apache.spark.sql.DataFrame =
+    simhashSnapServe(s, dir, simhashSnapDelPath(s, dir))
 
   private def simhashSnapServe(s: org.apache.spark.sql.SparkSession,
       dir: String, p: String): org.apache.spark.sql.DataFrame = {
@@ -2475,18 +2300,18 @@ object DedupQueries {
        |  ON bit_count(xor(p.simhash, c.simhash)) <= 3""".stripMargin
 
   // ---------------------------------------------------------------------
-  // Memoized stored-index setups for the storage-truth delete legs
-  // (q404–q407): build the full index ONCE per (tag, sfdir) into a scratch
-  // path, rewrite the %11 removal set out of the stored bytes, serve
-  // scan-only afterwards — the SimilarityQueries.memoPath discipline
+  // Memoized snapshot setups for the winnow and para delete legs
+  // (q404/q412, q407/q414): publish the full index ONCE per (tag, sfdir)
+  // into a scratch path, delete the %11 removal set as a generation flip,
+  // serve scan-only afterwards — the SimilarityQueries.memoPath discipline
   // (deterministic setups make the memoization correctness-neutral).
   //
-  // SHARED BUILDS (round-19 optimization, guide §2.4): the stored-delete
-  // leg and its snapshot twin both start from the SAME full-corpus index
-  // frame, and the three winnow lifecycle legs all start from the same
-  // 6/7-base fingerprint frame — those frames materialize once per JVM via
-  // SimilarityQueries.memoFrame and every leg reads them back scan-only,
-  // instead of each leg re-tokenizing/re-hashing the corpus.
+  // SHARED BUILDS (guide §2.4): a frame that two publications read
+  // materializes once per JVM via SimilarityQueries.memoFrame and is read
+  // back scan-only — the full-corpus fingerprints (the winnow fp table and
+  // its df side table), the minhash signatures (the sigs table and the
+  // band table), and the 6/7-base fingerprints every winnow lifecycle leg
+  // publishes — instead of re-tokenizing/re-hashing the corpus per read.
   // ---------------------------------------------------------------------
 
   private def winnowFpFull(s: org.apache.spark.sql.SparkSession,
@@ -2494,12 +2319,6 @@ object DedupQueries {
     SimilarityQueries.memoFrame("winfpfull", dir, s) {
       graft.ops.Dedup.winnowFingerprints(Tables.load(s, dir, "documents"),
         col("doc_id"), col("text"), k = 3, w = 4)
-    }
-
-  private def winnowDfFull(s: org.apache.spark.sql.SparkSession,
-      dir: String): org.apache.spark.sql.DataFrame =
-    SimilarityQueries.memoFrame("windffull", dir, s) {
-      graft.ops.WinnowIndex.dfTable(winnowFpFull(s, dir))
     }
 
   private def minhashSigsFull(s: org.apache.spark.sql.SparkSession,
@@ -2515,60 +2334,15 @@ object DedupQueries {
       graft.ops.MinHashIndex.bandTable(minhashSigsFull(s, dir), 4)
     }
 
-  private def simhashFull(s: org.apache.spark.sql.SparkSession,
-      dir: String): org.apache.spark.sql.DataFrame =
-    SimilarityQueries.memoFrame("shfull", dir, s) {
-      graft.ops.Dedup.simhash(Tables.load(s, dir, "documents"),
-        col("doc_id"), col("text"))
-    }
-
-  private def winnowDeletedPath(s: org.apache.spark.sql.SparkSession,
-      dir: String): String =
-    SimilarityQueries.memoPath("winnowdel", dir) { p =>
-      val docs = Tables.load(s, dir, "documents")
-      val fp = winnowFpFull(s, dir)
-      graft.ops.WinnowIndex.write(fp, s"$p/fp")
-      graft.ops.WinnowIndex.writeDfTable(winnowDfFull(s, dir), s"$p/df")
-      val removed = docs.where(pmod(col("doc_id"), lit(11)) === 0)
-        .select(col("doc_id"))
-      graft.ops.WinnowIndex.deleteStored(s, s"$p/fp", removed,
-        dfPath = Some(s"$p/df"))
-    }
-
-  private def minhashDeletedPath(s: org.apache.spark.sql.SparkSession,
-      dir: String): String =
-    SimilarityQueries.memoPath("minhashdel", dir) { p =>
-      val docs = Tables.load(s, dir, "documents")
-      graft.ops.MinHashIndex.write(minhashSigsFull(s, dir), p,
-        rowsPerBand = 4, prebuiltBands = Some(minhashBandsFull(s, dir)))
-      graft.ops.MinHashIndex.writeBucketDf(minhashBandsFull(s, dir), p)
-      val removed = docs.where(pmod(col("doc_id"), lit(11)) === 0)
-        .select(col("doc_id"))
-      graft.ops.MinHashIndex.deleteStored(s, p, removed)
-    }
-
-  private def simhashDeletedPath(s: org.apache.spark.sql.SparkSession,
-      dir: String): String =
-    SimilarityQueries.memoPath("simhashdel", dir) { p =>
-      val docs = Tables.load(s, dir, "documents")
-      graft.ops.SimHashIndex.write(simhashFull(s, dir),
-        p, maxHamming = 3, numBlocks = 6)
-      val removed = docs.where(pmod(col("doc_id"), lit(11)) === 0)
-        .select(col("doc_id"))
-      graft.ops.SimHashIndex.deleteStored(s, p, removed)
-    }
-
   private def winnowSnapshotPath(s: org.apache.spark.sql.SparkSession,
       dir: String): String =
     SimilarityQueries.memoPath("winnowsnap", dir) { p =>
       val docs = Tables.load(s, dir, "documents")
-      val hbOf = (c: org.apache.spark.sql.Column) => pmod(c,
-        lit(graft.ops.WinnowIndex.DefaultHashBuckets.toLong)).cast("int")
-      // shared master build with the q404 stored leg (memoFrame)
       graft.ops.SnapTables.publishInitial(s, s"$p/fp", "hb",
-        winnowFpFull(s, dir).withColumn("hb", hbOf(col("h"))))
+        winnowFpFull(s, dir).withColumn("hb", winnowHb(col("h"))))
       graft.ops.SnapTables.publishInitial(s, s"$p/df", "hb",
-        winnowDfFull(s, dir).withColumn("hb", hbOf(col("h"))))
+        graft.ops.WinnowIndex.dfTable(winnowFpFull(s, dir))
+          .withColumn("hb", winnowHb(col("h"))))
       val removed = docs.where(pmod(col("doc_id"), lit(11)) === 0)
         .select(col("doc_id"))
       // decrement derives from the PRE-DELETE fp generation (the removed
@@ -2582,9 +2356,27 @@ object DedupQueries {
       ()
     }
 
-  /** The paragraph-planted corpus the two para legs (q407, q414) both
-    * index and delete from (every 10th doc carries its successor's text as
-    * a second paragraph).
+  /** The q404/q412 serve: the q169 probe set against the post-flip
+    * fingerprint generation, df cap fed from the decremented side table.
+    */
+  private def winnowSnapDelete(s: org.apache.spark.sql.SparkSession,
+      dir: String): org.apache.spark.sql.DataFrame = {
+    val p = winnowSnapshotPath(s, dir)
+    val fp = graft.ops.SnapTables.resolve(s, s"$p/fp", "hb")
+    val stats = graft.ops.SnapTables.resolve(s, s"$p/df", "hb")
+      .select(col("h"), col("df"))
+    val docs = Tables.load(s, dir, "documents")
+    val probes = docs.where(pmod(col("doc_id"), lit(25)) === 0)
+      .select((col("doc_id") + lit(10000000L)).as("doc_id"),
+        concat_ws(" ", slice(Text.tokens(col("text")), 1, 30)).as("text"))
+    graft.ops.WinnowIndex.matches(fp, probes, col("doc_id"), col("text"),
+      k = 3, w = 4, threshold = 0.4, maxFpDf = Some(100),
+      storedDf = Some(stats))
+  }
+
+  /** The paragraph-planted corpus the para delete legs (q407, q414) index
+    * and delete from (every 10th doc carries its successor's text as a
+    * second paragraph).
     */
   private def paraCorpus(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame = {
@@ -2599,23 +2391,14 @@ object DedupQueries {
           .otherwise(col("text")).as("text"))
   }
 
-  /** The full-corpus first-occurrence election table both para legs start
-    * from — one shared materialized build (memoFrame).
-    */
-  private def paraTblFull(s: org.apache.spark.sql.SparkSession,
-      dir: String): org.apache.spark.sql.DataFrame =
-    SimilarityQueries.memoFrame("parafull", dir, s) {
-      graft.ops.ParaIndex.build(paraCorpus(s, dir),
-        col("doc_id"), col("text"))
-    }
-
   private def paraSnapshotPath(s: org.apache.spark.sql.SparkSession,
       dir: String): String =
     SimilarityQueries.memoPath("parasnap", dir) { p =>
       val corpus = paraCorpus(s, dir)
       graft.ops.SnapTables.publishInitial(s, p, "hb",
-        paraTblFull(s, dir).withColumn("hb", pmod(col("h"),
-          lit(graft.ops.ParaIndex.DefaultHashBuckets.toLong)).cast("int")))
+        graft.ops.ParaIndex.build(corpus, col("doc_id"), col("text"))
+          .withColumn("hb", pmod(col("h"),
+            lit(graft.ops.ParaIndex.DefaultHashBuckets.toLong)).cast("int")))
       graft.ops.ParaIndex.deleteSnapshot(s, p,
         corpus.where(pmod(col("doc_id"), lit(11)) === 0).select(col("doc_id")),
         corpus.where(pmod(col("doc_id"), lit(11)) =!= 0),
@@ -2623,17 +2406,37 @@ object DedupQueries {
       ()
     }
 
-  private def paraDeletedPath(s: org.apache.spark.sql.SparkSession,
-      dir: String): String =
-    SimilarityQueries.memoPath("paradel", dir) { p =>
-      val corpus = paraCorpus(s, dir)
-      graft.ops.ParaIndex.write(paraTblFull(s, dir), p)
-      val removed = corpus.where(pmod(col("doc_id"), lit(11)) === 0)
-        .select(col("doc_id"))
-      val survivors = corpus.where(pmod(col("doc_id"), lit(11)) =!= 0)
-      graft.ops.ParaIndex.deleteStored(s, p, removed, survivors,
-        col("doc_id"), col("text"))
-    }
+  /** The q407/q414 oracle: a from-scratch first-occurrence election over
+    * the surviving (%11-removed) planted paragraph corpus.
+    */
+  private def paraSurvivorsOracle: String =
+    s"""WITH base AS (
+       |  SELECT d.doc_id,
+       |    CASE WHEN d.doc_id % 10 = 0 AND n.text IS NOT NULL
+       |         THEN d.text || chr(10) || n.text ELSE d.text END AS text
+       |  FROM documents d LEFT JOIN documents n ON n.doc_id = d.doc_id + 1
+       |  WHERE d.doc_id % 11 <> 0),
+       |px AS (
+       |  SELECT doc_id, t, unnest(range(1, len(t) + 1)) AS p
+       |  FROM (SELECT doc_id, string_split(text, chr(10)) AS t FROM base)),
+       |paras AS (
+       |  SELECT doc_id, CAST(p - 1 AS BIGINT) AS pos,
+       |    t[CAST(p AS INTEGER)] AS para
+       |  FROM px),
+       |ph AS (
+       |  SELECT doc_id, pos, ${Hashing.duckFoldHexCol("m")} AS h
+       |  FROM (SELECT doc_id, pos, md5(para) AS m FROM paras)),
+       |sel AS (
+       |  SELECT h, doc_id, pos,
+       |    row_number() OVER (PARTITION BY h ORDER BY doc_id, pos) AS rn
+       |  FROM ph)
+       |SELECT h, doc_id, pos FROM sel WHERE rn = 1""".stripMargin
+
+  /** The q407/q414 output: the post-flip re-elected table itself. */
+  private def paraSnapDelete(s: org.apache.spark.sql.SparkSession,
+      dir: String): org.apache.spark.sql.DataFrame =
+    graft.ops.SnapTables.resolve(s, paraSnapshotPath(s, dir), "hb")
+      .select(col("h"), col("doc_id"), col("pos"))
 
   /** The q415/q416/q417 lifecycle table: winnow fingerprints of the 6/7
     * base corpus published as gen 0, the 1/7 remainder APPENDED as gen 1

@@ -2809,10 +2809,10 @@ object SimilarityQueries {
     }
   }
 
-  /** Once-per-JVM memoized SHARED build frame: when two or more setup legs
-    * consume the SAME deterministic corpus-scale frame (the stored-delete
-    * and snapshot legs of one index family both start from the full-corpus
-    * index build), `build` materializes to scratch parquet on first access
+  /** Once-per-JVM memoized SHARED build frame: when a frame is read more
+    * than once by setup legs (the stored and snapshot BQ legs encode the
+    * same corpus; the winnow fingerprints feed both the fp table and its df
+    * side table), `build` materializes to scratch parquet on first access
     * and every consumer reads it back scan-only — the corpus is
     * tokenized/hashed once per JVM instead of once per leg (optimization
     * guide §2.4: remove duplicated passes), and the consumers' downstream

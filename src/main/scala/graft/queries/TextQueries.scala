@@ -2295,60 +2295,41 @@ object TextQueries {
     // BM25-index STORED delete — the right-to-be-forgotten path a
     // view-level filter cannot satisfy: both stored tables (postings by
     // token hash-bucket, doclens by doc-id bucket) are strictly
-    // per-document, so TextIndex.deleteStored rewrites the %11 removal set
-    // out of the stored bytes by exact key filter (the shared StoredTables
-    // recipe), and this serve reads the REWRITTEN tables alone. Serve-time
+    // per-document, so the %11 removal set leaves the stored bytes by exact
+    // key filter, and this serve reads the rewritten tables alone. Served
+    // through q425's snapshot delete. Serve-time
     // corpus statistics (N, total_dl, per-term df) all derive from the
     // stored tables, so the oracle is the q175/q91 chain over the KEPT
-    // corpus — hash-match proves the post-delete index scores exactly as
-    // one that never indexed the removed docs, statistics included.
+    // corpus — the post-delete index scores exactly as one that never
+    // indexed the removed docs, statistics included.
     QueryDef(
       "q408_bm25_stored_delete",
-      (s, dir) => {
-        val p = bm25DeletedPath(s, dir)
-        val idx = graft.ops.TextIndex.read(s, p)
-        graft.ops.TextIndex.searchBM25(idx, HybridTerms, k = 20)
-      },
-      Some(s"""WITH kept AS (
-           |  SELECT doc_id, text FROM documents WHERE doc_id % 11 <> 0),
-           |${duckBm25Ctes(HybridTerms, "kept")}
-           |SELECT doc_id, score, rank FROM bmranked WHERE rank <= 20""".stripMargin)),
+      bm25SnapDelete,
+      Some(bm25SurvivorsOracle)),
 
     // LM count-table STORED delete — q278's retraction made true in the
     // BYTES: the removed docs are counted alone and SUBTRACTED per key
-    // inside the stored parquet (LmIndex.deleteStored via
-    // StoredTables.decrementCounts — affected wb buckets only, zeroed keys
-    // drop, over-retraction and never-trained-text retraction fail loudly
-    // BEFORE mutating). Scoring every document from the re-read tables
-    // must equal a model trained on the filtered split — q278's oracle
-    // verbatim, through a storage path that actually forgot.
+    // inside the stored tables (affected wb buckets only, zeroed keys drop,
+    // over-retraction and never-trained-text retraction fail loudly before
+    // anything is written). Served through q427's snapshot delete. Scoring
+    // every document from the decremented tables must equal a model
+    // trained on the filtered split — q278's oracle verbatim.
     QueryDef(
       "q409_lm_stored_delete",
-      (s, dir) => {
-        val p = lmDeletedPath(s, dir)
-        val tbl = graft.ops.LmIndex.read(s, p)
-        val docs = Tables.load(s, dir, "documents")
-        graft.ops.LmIndex.score(tbl, docs, col("doc_id"), col("text"))
-      },
-      Some(s"""WITH ${duckLmScoreCtes(" AND doc_id % 11 <> 0")}
-           |SELECT doc_id, n_bigrams, nll, backoff_frac FROM lmscores""".stripMargin)),
+      lmSnapDelete,
+      Some(lmSurvivorsOracle)),
 
-    // BM25 index on the SNAPSHOT layer (round 18 — q408's in-place rewrite
-    // carried the serve-during-rewrite caveat SnapTables removes): postings
-    // (tb buckets) and doclens (db buckets) both ride the generation layer;
-    // the %11 removal deletes by snapshot key-filter in each, and the serve
-    // reads the post-flip generations — corpus statistics (N, total_dl,
-    // per-term df) derive from the resolved tables, so the post-delete
-    // index scores exactly as one that never indexed the removed docs.
+    // BM25 index on the SNAPSHOT layer: postings (tb buckets) and doclens
+    // (db buckets) both ride the generation layer; the %11 removal deletes
+    // by snapshot key-filter in each, and the serve reads the post-flip
+    // generations — corpus statistics (N, total_dl, per-term df) derive
+    // from the resolved tables, so the post-delete index scores exactly as
+    // one that never indexed the removed docs.
     // Oracle: q408's survivors chain verbatim.
     QueryDef(
       "q425_bm25_snapshot_delete",
-      (s, dir) => graft.ops.TextIndex.searchBM25(
-        bm25SnapIndex(s, bm25SnapDelPath(s, dir)), HybridTerms, k = 20),
-      Some(s"""WITH kept AS (
-           |  SELECT doc_id, text FROM documents WHERE doc_id % 11 <> 0),
-           |${duckBm25Ctes(HybridTerms, "kept")}
-           |SELECT doc_id, score, rank FROM bmranked WHERE rank <= 20""".stripMargin)),
+      bm25SnapDelete,
+      Some(bm25SurvivorsOracle)),
 
     // BM25 snapshot APPEND — the ingest half: 6/7 base publishes as gen 0
     // of both tables, the remainder lands as delta-only appends (new docs
@@ -2364,19 +2345,14 @@ object TextQueries {
 
     // LM count tables on the snapshot layer: the %11 retraction subtracts
     // the removed docs' own uni/bigram counts inside their wb buckets via
-    // SnapTables.decrementCounts (same pre-aggregation/unknown-key/
-    // over-retraction guards as the in-place q409, published as
-    // generations) — scoring from the post-flip tables equals a model
-    // trained on the filtered split. Oracle: q409's verbatim.
+    // SnapTables.decrementCounts (pre-aggregation, unknown-key and
+    // over-retraction guards, published as generations) — scoring from
+    // the post-flip tables equals a model trained on the filtered split.
+    // Oracle: q409's verbatim.
     QueryDef(
       "q427_lm_snapshot_delete",
-      (s, dir) => {
-        val tbl = lmSnapTables(s, lmSnapDelPath(s, dir))
-        graft.ops.LmIndex.score(tbl, Tables.load(s, dir, "documents"),
-          col("doc_id"), col("text"))
-      },
-      Some(s"""WITH ${duckLmScoreCtes(" AND doc_id % 11 <> 0")}
-           |SELECT doc_id, n_bigrams, nll, backoff_frac FROM lmscores""".stripMargin)),
+      lmSnapDelete,
+      Some(lmSurvivorsOracle)),
 
     // LM snapshot APPEND — counts are ADDITIVE, so the ingest verb is
     // SnapTables.mergeCounts (union + sum per key inside the delta's wb
@@ -2424,33 +2400,16 @@ object TextQueries {
   )
 
   // ---------------------------------------------------------------------
-  // Snapshot-layer migrations for the BM25 / LM / CMS families
-  // (q425–q430): memoized setups, SnapTables generations replacing the
-  // in-place overwrite.
+  // Snapshot-layer setups for the BM25 / LM / CMS families (q408/q409,
+  // q425–q430): build once per (tag, sfdir) into a scratch path through
+  // SnapTables generations, serve scan-only afterwards (the
+  // SimilarityQueries.memoPath discipline).
   // ---------------------------------------------------------------------
 
   private val TokB = graft.ops.TextIndex.DefaultTokenBuckets
 
   private def bm25Tb = pmod(Hashing.hash60(col("tok")), lit(TokB.toLong)).cast("int")
   private def bm25Db = pmod(col("doc_id"), lit(TokB.toLong)).cast("int")
-
-  /** The full-corpus BM25 index frames the q408 stored leg and the q425
-    * snapshot leg both publish — one shared materialized build (the
-    * memoFrame discipline: both tables to scratch parquet once, every leg
-    * reads them back scan-only instead of re-tokenizing the corpus).
-    */
-  private def bm25MasterFull(s: org.apache.spark.sql.SparkSession,
-      dir: String): graft.ops.Bm25Index = {
-    val p = SimilarityQueries.memoPath("bm25master", dir) { mp =>
-      val idx = graft.ops.TextIndex.build(Tables.load(s, dir, "documents"),
-        col("doc_id"), col("text"))
-      idx.postings.write.mode("overwrite").parquet(s"$mp/postings")
-      idx.doclens.write.mode("overwrite").parquet(s"$mp/doclens")
-    }
-    graft.ops.Bm25Index(
-      postings = s.read.parquet(s"$p/postings"),
-      doclens = s.read.parquet(s"$p/doclens"))
-  }
 
   private def publishBm25Snap(s: org.apache.spark.sql.SparkSession,
       p: String, idx: graft.ops.Bm25Index): Unit = {
@@ -2472,14 +2431,31 @@ object TextQueries {
       dir: String): String =
     SimilarityQueries.memoPath("bm25snapdel", dir) { p =>
       val docs = Tables.load(s, dir, "documents")
-      // shared master build with the q408 stored leg
-      publishBm25Snap(s, p, bm25MasterFull(s, dir))
+      publishBm25Snap(s, p,
+        graft.ops.TextIndex.build(docs, col("doc_id"), col("text")))
       val removed = docs.where(pmod(col("doc_id"), lit(11)) === 0)
         .select(col("doc_id"))
       graft.ops.SnapTables.deleteByKey(s, s"$p/postings", "tb", "doc_id", removed)
       graft.ops.SnapTables.deleteByKey(s, s"$p/doclens", "db", "doc_id", removed)
       ()
     }
+
+  /** The q408/q425 oracle: the q175/q91 BM25 chain over the kept
+    * (%11-removed) corpus.
+    */
+  private def bm25SurvivorsOracle: String =
+    s"""WITH kept AS (
+       |  SELECT doc_id, text FROM documents WHERE doc_id % 11 <> 0),
+       |${duckBm25Ctes(HybridTerms, "kept")}
+       |SELECT doc_id, score, rank FROM bmranked WHERE rank <= 20""".stripMargin
+
+  /** The q408/q425 serve: the hybrid terms' BM25 top-20 from the
+    * post-flip generations.
+    */
+  private def bm25SnapDelete(s: org.apache.spark.sql.SparkSession,
+      dir: String): org.apache.spark.sql.DataFrame =
+    graft.ops.TextIndex.searchBM25(
+      bm25SnapIndex(s, bm25SnapDelPath(s, dir)), HybridTerms, k = 20)
 
   private def bm25SnapAddPath(s: org.apache.spark.sql.SparkSession,
       dir: String): String =
@@ -2507,23 +2483,6 @@ object TextQueries {
     Tables.load(s, dir, "documents").where(pmod(Hashing.hash60(
       concat(lit("lm-"), col("doc_id").cast("string"))), lit(2L)) === 0)
 
-  /** The LM count tables trained on the shared half-split — the q409
-    * stored leg and the q427 snapshot leg both publish these exact frames;
-    * one shared materialized build (the memoFrame discipline).
-    */
-  private def lmMasterFull(s: org.apache.spark.sql.SparkSession,
-      dir: String): graft.ops.LmIndex.LmTables = {
-    val p = SimilarityQueries.memoPath("lmmaster", dir) { mp =>
-      val tbl = graft.ops.LmIndex.build(lmTrain(s, dir),
-        col("doc_id"), col("text"))
-      tbl.uni.write.mode("overwrite").parquet(s"$mp/uni")
-      tbl.big.write.mode("overwrite").parquet(s"$mp/big")
-    }
-    graft.ops.LmIndex.LmTables(
-      uni = s.read.parquet(s"$p/uni"),
-      big = s.read.parquet(s"$p/big"))
-  }
-
   private def publishLmSnap(s: org.apache.spark.sql.SparkSession,
       p: String, tbl: graft.ops.LmIndex.LmTables): Unit = {
     graft.ops.SnapTables.publishInitial(s, s"$p/uni", "wb",
@@ -2544,8 +2503,8 @@ object TextQueries {
       dir: String): String =
     SimilarityQueries.memoPath("lmsnapdel", dir) { p =>
       val train = lmTrain(s, dir)
-      // shared master build with the q409 stored leg
-      publishLmSnap(s, p, lmMasterFull(s, dir))
+      publishLmSnap(s, p,
+        graft.ops.LmIndex.build(train, col("doc_id"), col("text")))
       val d = graft.ops.LmIndex.build(
         train.where(pmod(col("doc_id"), lit(11)) === 0),
         col("doc_id"), col("text"))
@@ -2555,6 +2514,21 @@ object TextQueries {
         Seq("w1", "w2"), "c2", d.big.withColumnRenamed("c2", "__dec"))
       ()
     }
+
+  /** The q409/q427 oracle: q278's scoring chain, trained on the split
+    * without the removed docs.
+    */
+  private def lmSurvivorsOracle: String =
+    s"""WITH ${duckLmScoreCtes(" AND doc_id % 11 <> 0")}
+       |SELECT doc_id, n_bigrams, nll, backoff_frac FROM lmscores""".stripMargin
+
+  /** The q409/q427 serve: every document scored from the post-flip count
+    * tables.
+    */
+  private def lmSnapDelete(s: org.apache.spark.sql.SparkSession,
+      dir: String): org.apache.spark.sql.DataFrame =
+    graft.ops.LmIndex.score(lmSnapTables(s, lmSnapDelPath(s, dir)),
+      Tables.load(s, dir, "documents"), col("doc_id"), col("text"))
 
   private def lmSnapAddPath(s: org.apache.spark.sql.SparkSession,
       dir: String): String =
@@ -2624,34 +2598,6 @@ object TextQueries {
         coalesce(col("exact"), lit(0L)).as("exact"),
         (col("est") >= coalesce(col("exact"), lit(0L))).as("no_undercount"))
   }
-
-  // ---------------------------------------------------------------------
-  // Memoized stored-index setups for the storage-truth delete legs
-  // (q408/q409): build the full index ONCE per (tag, sfdir) into a scratch
-  // path, rewrite the %11 removal set out of the stored bytes, serve
-  // scan-only afterwards (the SimilarityQueries.memoPath discipline).
-  // ---------------------------------------------------------------------
-
-  private def bm25DeletedPath(s: org.apache.spark.sql.SparkSession,
-      dir: String): String =
-    SimilarityQueries.memoPath("bm25del", dir) { p =>
-      val docs = Tables.load(s, dir, "documents")
-      // shared master build with the q425 snapshot leg
-      graft.ops.TextIndex.write(bm25MasterFull(s, dir), p)
-      graft.ops.TextIndex.deleteStored(s, p,
-        docs.where(pmod(col("doc_id"), lit(11)) === 0).select(col("doc_id")))
-    }
-
-  private def lmDeletedPath(s: org.apache.spark.sql.SparkSession,
-      dir: String): String =
-    SimilarityQueries.memoPath("lmdel", dir) { p =>
-      val train = lmTrain(s, dir)
-      // shared master build with the q427 snapshot leg
-      graft.ops.LmIndex.write(lmMasterFull(s, dir), p)
-      val removed = train.where(pmod(col("doc_id"), lit(11)) === 0)
-      graft.ops.LmIndex.deleteStored(s, p, removed,
-        col("doc_id"), col("text"))
-    }
 
   // -------------------------------------------------------------------------
   // CJK planted fixtures (q159/q160): palette-built deterministic texts —

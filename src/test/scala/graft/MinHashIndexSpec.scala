@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.ops.{Dedup, MinHashIndex}
+import graft.ops.{Dedup, MinHashIndex, SnapTables}
 
 /** The durable minhash-table lifecycle: build == write+read, append ==
   * rebuild (per-doc locality makes it exact), the serve path over the
@@ -151,12 +151,26 @@ class MinHashIndexSpec extends AnyFunSuite with SparkSpec {
 
   test("deleteStored: sigs, bands AND bucket-df bytes equal a survivors-only recompute; re-run is a no-op") {
     val sigs = MinHashIndex.build(docs, col("doc_id"), col("text"), 3, 16)
+    val bands = MinHashIndex.bandTable(sigs, 4)
     val dir = tmpDir("minhash-del")
-    MinHashIndex.write(sigs, dir, rowsPerBand = 4)
-    MinHashIndex.writeBucketDf(MinHashIndex.bandTable(sigs, 4), dir)
+    val sigB = MinHashIndex.DefaultSigBuckets.toLong
+    val db = pmod(col("doc_id"), lit(sigB)).cast("int")
+    val sb = pmod(col("band_sig"), lit(sigB)).cast("int")
+    SnapTables.publishInitial(spark, s"$dir/sigs", "db", sigs.withColumn("db", db))
+    SnapTables.publishInitial(spark, s"$dir/bands", "sb", bands.withColumn("sb", sb))
+    SnapTables.publishInitial(spark, s"$dir/bucketdf", "sb",
+      MinHashIndex.bucketDfTable(bands).withColumn("sb", sb))
     val removed = docs.where(pmod(col("doc_id"), lit(11)) === 0)
       .select(col("doc_id"))
-    MinHashIndex.deleteStored(spark, dir, removed)
+    // the decrement is the removed docs' own band rows, aggregated — exact
+    // because every band row of a doc is that doc's alone
+    val dec = SnapTables.resolve(spark, s"$dir/bands", "sb")
+      .join(removed, Seq("doc_id"), "left_semi")
+      .groupBy(col("band"), col("band_sig")).agg(count(lit(1)).as("__dec"))
+    SnapTables.decrementCounts(spark, s"$dir/bucketdf", "sb",
+      Seq("band", "band_sig"), "df", dec)
+    SnapTables.deleteByKey(spark, s"$dir/bands", "sb", "doc_id", removed)
+    SnapTables.deleteByKey(spark, s"$dir/sigs", "db", "doc_id", removed)
     val survivors = docs.where(pmod(col("doc_id"), lit(11)) =!= 0)
     val sigsSurv = Dedup.minhashSignatures(survivors, col("doc_id"), col("text"), 3, 16)
     val bandsSurv = MinHashIndex.bandTable(sigsSurv, 4)
@@ -166,25 +180,20 @@ class MinHashIndexSpec extends AnyFunSuite with SparkSpec {
     def dfRows(t: DataFrame): Set[(Long, Long, Long)] =
       t.select(col("band").cast("long"), col("band_sig"), col("df").cast("long"))
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(sigRows(MinHashIndex.readSigs(spark, dir)) == sigRows(sigsSurv),
-      "stored signatures after delete must equal the never-saw-them rebuild")
-    assert(bandRows(MinHashIndex.readBands(spark, dir)) == bandRows(bandsSurv),
-      "stored bands after delete must equal the never-saw-them rebuild")
-    assert(dfRows(MinHashIndex.readBucketDf(spark, dir))
+    assert(sigRows(SnapTables.resolve(spark, s"$dir/sigs", "db")) == sigRows(sigsSurv),
+      "signatures after delete must equal the never-saw-them rebuild")
+    assert(bandRows(SnapTables.resolve(spark, s"$dir/bands", "sb")) == bandRows(bandsSurv),
+      "bands after delete must equal the never-saw-them rebuild")
+    assert(dfRows(SnapTables.resolve(spark, s"$dir/bucketdf", "sb"))
         == dfRows(MinHashIndex.bucketDfTable(bandsSurv)),
       "decremented bucket-df must equal the survivors-only recompute")
-    // the documented crash-recovery finishing path: re-running the key
-    // deletes alone (maintainBucketDf = false) on already-deleted keys is a
-    // clean no-op — nothing left to rewrite, storage unchanged
-    MinHashIndex.deleteStored(spark, dir, removed, maintainBucketDf = false)
-    assert(sigRows(MinHashIndex.readSigs(spark, dir)) == sigRows(sigsSurv))
-    assert(dfRows(MinHashIndex.readBucketDf(spark, dir))
-        == dfRows(MinHashIndex.bucketDfTable(bandsSurv)))
-    // the crash-recovery verb: a doubted df table rebuilds from the stored
-    // bands — idempotent, equal to the survivors recompute either way
-    MinHashIndex.rebuildBucketDf(spark, dir)
-    assert(dfRows(MinHashIndex.readBucketDf(spark, dir))
-        == dfRows(MinHashIndex.bucketDfTable(bandsSurv)),
-      "rebuilt bucket-df must equal the survivors-only recompute")
+    // re-running the key deletes on already-deleted keys is a clean no-op:
+    // nothing left to rewrite, the generation does not advance
+    Seq(s"$dir/bands" -> "sb", s"$dir/sigs" -> "db").foreach { case (t, pc) =>
+      val gen = SnapTables.currentGeneration(spark, t)
+      assert(Some(SnapTables.deleteByKey(spark, t, pc, "doc_id", removed)) == gen)
+    }
+    assertForgottenAfterExpire(s"$dir/sigs", "db", removed)
+    assertForgottenAfterExpire(s"$dir/bands", "sb", removed)
   }
 }

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.ops.ParaIndex
+import graft.ops.{ParaIndex, SnapTables}
 
 /** The durable paragraph-hash-table lifecycle: build == write+read, append
   * == rebuild under the id-ordering contract, and the stored-table scrub
@@ -76,19 +76,23 @@ class ParaIndexSpec extends AnyFunSuite with SparkSpec {
       s"table side must be scan-only; found $splits split() calls:\n$plan")
   }
 
+  private def publishCorpus(dir: String): Unit =
+    SnapTables.publishInitial(spark, dir, "hb",
+      ParaIndex.build(corpus, col("id"), col("text"))
+        .withColumn("hb", pmod(col("h"),
+          lit(ParaIndex.DefaultHashBuckets.toLong)).cast("int")))
+
   test("deleteStored: re-election == survivors rebuild row for row; survivor-less hashes drop") {
     import spark.implicits._
     val dir = tmpDir("para-del")
-    ParaIndex.write(ParaIndex.build(corpus, col("id"), col("text")), dir)
+    publishCorpus(dir)
     // remove docs 1 and 3: doc 1 WON "alpha one" (doc 4 still carries it)
     // and "shared footer" (doc 2 still carries it) — both must re-elect;
     // doc 3's "gamma three" has no surviving carrier — its hash must drop
     val removed = Seq(1L, 3L).toDF("doc_id")
     val survivors = corpus.where(!col("id").isin(1L, 3L))
-    ParaIndex.deleteStored(spark, dir, removed, survivors, col("id"), col("text"))
-    val stored = ParaIndex.read(spark, dir)
-    assert(stored.where(col("doc_id").isin(1L, 3L)).count() == 0L,
-      "removed winners must leave the stored bytes")
+    ParaIndex.deleteSnapshot(spark, dir, removed, survivors, col("id"), col("text"))
+    val stored = SnapTables.resolve(spark, dir, "hb")
     assert(rows(stored)
         == rows(ParaIndex.firstOccurrences(survivors, col("id"), col("text"))),
       "re-elected table must equal a from-scratch election over the survivors")
@@ -97,18 +101,19 @@ class ParaIndexSpec extends AnyFunSuite with SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(byDoc.contains((4L, 0L)), "'alpha one' must re-elect to doc 4")
     assert(byDoc.contains((2L, 1L)), "'shared footer' must re-elect to doc 2 pos 1")
+    assertForgottenAfterExpire(dir, "hb", removed)
   }
 
   test("deleteStored: a survivors frame that still contains the removed docs cannot re-elect them") {
     import spark.implicits._
     val dir = tmpDir("para-del-guard")
-    ParaIndex.write(ParaIndex.build(corpus, col("id"), col("text")), dir)
+    publishCorpus(dir)
     val removed = Seq(1L, 3L).toDF("doc_id")
     // the natural caller slip: passing the FULL corpus as survivors — a
     // removed doc would win back its own orphaned hashes (doc 1 is the
     // minimal occurrence of 'alpha one'), resurrecting the purged rows
-    ParaIndex.deleteStored(spark, dir, removed, corpus, col("id"), col("text"))
-    val stored = ParaIndex.read(spark, dir)
+    ParaIndex.deleteSnapshot(spark, dir, removed, corpus, col("id"), col("text"))
+    val stored = SnapTables.resolve(spark, dir, "hb")
     assert(stored.where(col("doc_id").isin(1L, 3L)).count() == 0L,
       "removed docs must be excluded from re-election candidacy outright")
     assert(rows(stored) == rows(ParaIndex.firstOccurrences(
@@ -118,12 +123,8 @@ class ParaIndexSpec extends AnyFunSuite with SparkSpec {
 
   test("deleteSnapshot: re-election publishes as a generation; a pre-flip scrubber keeps the old winners") {
     import spark.implicits._
-    import graft.ops.SnapTables
     val dir = tmpDir("para-snap-del")
-    SnapTables.publishInitial(spark, dir, "hb",
-      ParaIndex.build(corpus, col("id"), col("text"))
-        .withColumn("hb", pmod(col("h"),
-          lit(ParaIndex.DefaultHashBuckets.toLong)).cast("int")))
+    publishCorpus(dir)
     // a scrubber resolved BEFORE the delete — its electorate is gen 0
     val preFlip = SnapTables.resolve(spark, dir, "hb")
     val removed = Seq(1L, 3L).toDF("doc_id")
@@ -131,7 +132,7 @@ class ParaIndexSpec extends AnyFunSuite with SparkSpec {
     val gen = ParaIndex.deleteSnapshot(spark, dir, removed, survivors,
       col("id"), col("text"))
     assert(gen == 1)
-    // post-flip: equals the from-scratch survivors election, like deleteStored
+    // post-flip: equals the from-scratch survivors election
     assert(rows(SnapTables.resolve(spark, dir, "hb"))
         == rows(ParaIndex.firstOccurrences(survivors, col("id"), col("text"))))
     // the isolation is SEMANTICALLY visible on an elected table: the

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.ops.{Dedup, SimHashIndex}
+import graft.ops.{Dedup, SimHashIndex, SnapTables}
 
 /** The durable simhash-table lifecycle: build == write+read, append ==
   * rebuild (per-doc majority vote), the serve path over the stored key
@@ -92,22 +92,23 @@ class SimHashIndexSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("deleteStored: removed docs' key rows leave the stored bytes; serve == never-indexed rebuild") {
-    val dir = tmpDir("simhash-del")
-    SimHashIndex.write(SimHashIndex.build(docs, col("doc_id"), col("text")),
-      dir, maxHamming = 3, numBlocks = 6)
+    val dir = tmpDir("simhash-del") + "/keys"
+    SnapTables.publishInitial(spark, dir, "kb",
+      SimHashIndex.keyTable(SimHashIndex.build(docs, col("doc_id"), col("text")),
+        maxHamming = 3, numBlocks = 6)
+        .withColumn("kb", pmod(col("blk_val"),
+          lit(SimHashIndex.DefaultKeyBuckets.toLong)).cast("int")))
     val removedIds = docs.where(pmod(col("doc_id"), lit(11)) === 0)
       .select(col("doc_id"))
-    SimHashIndex.deleteStored(spark, dir, removedIds)
-    val stored = SimHashIndex.readKeys(spark, dir)
-    // byte-level: no removed doc's pigeonhole rows remain anywhere
-    assert(stored.join(removedIds, Seq("doc_id"), "left_semi").count() == 0L,
-      "removed docs must leave the stored key bytes")
+    SnapTables.deleteByKey(spark, dir, "kb", "doc_id", removedIds)
     // serve-level: match set equals an index built on the survivors alone
     val survivors = docs.where(pmod(col("doc_id"), lit(11)) =!= 0)
     val rebuilt = SimHashIndex.keyTable(
       SimHashIndex.build(survivors, col("doc_id"), col("text")),
       maxHamming = 3, numBlocks = 6)
-    assert(serveRows(stored) == serveRows(rebuilt),
+    assert(serveRows(SnapTables.resolve(spark, dir, "kb")) == serveRows(rebuilt),
       "post-delete serve must be indistinguishable from never having indexed them")
+    // byte-level: no removed doc's pigeonhole rows remain anywhere
+    assertForgottenAfterExpire(dir, "kb", removedIds)
   }
 }

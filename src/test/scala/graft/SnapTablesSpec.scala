@@ -104,8 +104,11 @@ class SnapTablesSpec extends AnyFunSuite with SparkSpec {
     val counts = (1L to 12L).map(k => (k, 10L, (k % 3).toInt)).toDF("key", "n", "pb")
     SnapTables.publishInitial(spark, dir, "pb", counts)
     val inFlight = SnapTables.resolve(spark, dir, "pb")
-    // retract 4 from keys 1..3, all 10 from key 4 (legitimate full retraction)
-    val deltas = Seq((1L, 4L), (2L, 4L), (3L, 4L), (4L, 10L)).toDF("key", "__dec")
+    // retract 4 from keys 1..3, all 10 from key 4 (legitimate full
+    // retraction), and 3 + 4 from key 5 in two rows — duplicate-key deltas
+    // must subtract their SUM once, not fan out the join into two rows
+    val deltas = Seq((1L, 4L), (2L, 4L), (3L, 4L), (4L, 10L), (5L, 3L), (5L, 4L))
+      .toDF("key", "__dec")
     val gen = SnapTables.decrementCounts(spark, dir, "pb", Seq("key"), "n", deltas)
     assert(gen == 1)
     def counted(df: DataFrame): Map[Long, Long] =
@@ -114,11 +117,14 @@ class SnapTablesSpec extends AnyFunSuite with SparkSpec {
     val now = counted(SnapTables.resolve(spark, dir, "pb"))
     assert(now(1L) == 6L && now(2L) == 6L && now(3L) == 6L)
     assert(!now.contains(4L), "a key retracted to zero must drop")
-    assert((5L to 12L).forall(k => now(k) == 10L))
+    assert(now(5L) == 3L, "duplicate delta keys must sum to one exact decrement")
+    assert(SnapTables.resolve(spark, dir, "pb").where(col("key") === 5L).count() == 1L,
+      "duplicate delta keys must not duplicate the stored row")
+    assert((6L to 12L).forall(k => now(k) == 10L))
     // the pre-flip reader still serves the UN-decremented statistics
     assert(counted(inFlight) == (1L to 12L).map(_ -> 10L).toMap,
       "a reader resolved before the decrement must keep its generation's counts")
-    // the in-place recipe's guards carry over: over-retraction refuses
+    // over-retraction refuses
     val over = intercept[IllegalArgumentException] {
       SnapTables.decrementCounts(spark, dir, "pb", Seq("key"), "n",
         Seq((5L, 11L)).toDF("key", "__dec"))

@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.scalatest.Assertions.assert
 
 /** One shared local session for the whole (forked) test JVM, built by the
   * engine's own [[Sessions]] factory on 4 cores.
@@ -21,4 +22,19 @@ trait SparkSpec {
 
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** The right-to-be-forgotten check on a snapshot table after a delete:
+    * the superseded generation's files still hold removed doc_ids (so the
+    * check is not vacuous), and after `SnapTables.expire(keepGens = 1)` no
+    * parquet file under `path` holds one — a raw directory read, not a
+    * manifest resolve, so it sees exactly the bytes storage keeps.
+    */
+  def assertForgottenAfterExpire(path: String, partCol: String,
+      removed: DataFrame): Unit = {
+    def held = spark.read.parquet(path)
+      .join(removed.select("doc_id"), Seq("doc_id"), "left_semi").count()
+    assert(held > 0, s"the superseded generation at $path must still hold removed rows")
+    graft.ops.SnapTables.expire(spark, path, partCol, keepGens = 1)
+    assert(held == 0, s"removed doc_ids must leave every parquet file under $path")
+  }
 }

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.ops.{Text, TextIndex}
+import graft.ops.{SnapTables, Text, TextIndex}
 
 /** The persisted BM25 index lifecycle: serve == the in-query scan exactly,
   * append == rebuild at the postings level, write+read round-trips, and
@@ -140,21 +140,30 @@ class TextIndexSpec extends AnyFunSuite with SparkSpec {
 
   test("deleteStored: removed docs leave BOTH stored tables' bytes; serve == never-indexed rebuild") {
     val dir = tmpDir("bm25-del")
-    TextIndex.write(TextIndex.build(docs, col("doc_id"), col("text")), dir)
+    val idx = TextIndex.build(docs, col("doc_id"), col("text"))
+    val tokB = TextIndex.DefaultTokenBuckets.toLong
+    SnapTables.publishInitial(spark, s"$dir/postings", "tb", idx.postings
+      .withColumn("tb", pmod(graft.ops.Hashing.hash60(col("tok")), lit(tokB)).cast("int")))
+    SnapTables.publishInitial(spark, s"$dir/doclens", "db", idx.doclens
+      .withColumn("db", pmod(col("doc_id"), lit(tokB)).cast("int")))
     val removedIds = docs.where(pmod(col("doc_id"), lit(11)) === 0)
       .select(col("doc_id"))
-    TextIndex.deleteStored(spark, dir, removedIds)
-    // byte-level: neither stored table retains a removed doc's rows
-    for (tbl <- Seq("postings", "doclens"))
-      assert(spark.read.parquet(s"$dir/$tbl")
-          .join(removedIds, Seq("doc_id"), "left_semi").count() == 0L,
-        s"removed docs must leave the stored $tbl bytes")
+    SnapTables.deleteByKey(spark, s"$dir/postings", "tb", "doc_id", removedIds)
+    SnapTables.deleteByKey(spark, s"$dir/doclens", "db", "doc_id", removedIds)
     // serve-level: scores (N, avgdl, df all derive from the stored tables)
     // equal an index that never saw the removed docs
+    val served = graft.ops.Bm25Index(
+      postings = SnapTables.resolve(spark, s"$dir/postings", "tb")
+        .select(col("tok"), col("doc_id"), col("tf")),
+      doclens = SnapTables.resolve(spark, s"$dir/doclens", "db")
+        .select(col("doc_id"), col("dl")))
     val survivors = docs.where(pmod(col("doc_id"), lit(11)) =!= 0)
-    assert(ranked(TextIndex.searchBM25(TextIndex.read(spark, dir), terms, k = 10))
+    assert(ranked(TextIndex.searchBM25(served, terms, k = 10))
         == ranked(TextIndex.searchBM25(
           TextIndex.build(survivors, col("doc_id"), col("text")), terms, k = 10)),
       "post-delete serve must be indistinguishable from never having indexed them")
+    // byte-level: neither stored table retains a removed doc's rows
+    assertForgottenAfterExpire(s"$dir/postings", "tb", removedIds)
+    assertForgottenAfterExpire(s"$dir/doclens", "db", removedIds)
   }
 }

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.ops.{Dedup, WinnowIndex}
+import graft.ops.{Dedup, SnapTables, WinnowIndex}
 
 /** The durable winnow-fingerprint-table lifecycle: build == write+read,
   * append == rebuild (per-doc locality makes it exact), and the serve path
@@ -87,54 +87,34 @@ class WinnowIndexSpec extends AnyFunSuite with SparkSpec {
 
   test("deleteStored: fingerprint bytes AND the stored df table equal a survivors-only recompute") {
     val fp = WinnowIndex.build(docs, col("doc_id"), col("text"), k = 3, w = 4)
-    val fpDir = tmpDir("winnow-del-fp")
-    val dfDir = tmpDir("winnow-del-df")
-    WinnowIndex.write(fp, fpDir)
-    WinnowIndex.writeDfTable(WinnowIndex.dfTable(fp), dfDir)
+    val dir = tmpDir("winnow-del")
+    val hb = pmod(col("h"), lit(WinnowIndex.DefaultHashBuckets.toLong)).cast("int")
+    SnapTables.publishInitial(spark, s"$dir/fp", "hb", fp.withColumn("hb", hb))
+    SnapTables.publishInitial(spark, s"$dir/df", "hb",
+      WinnowIndex.dfTable(fp).withColumn("hb", hb))
     val removed = docs.where(pmod(col("doc_id"), lit(11)) === 0)
       .select(col("doc_id"))
-    WinnowIndex.deleteStored(spark, fpDir, removed, dfPath = Some(dfDir))
+    // the df decrement is the removed docs' own distinct-(doc, h) rows,
+    // read from the pre-delete fingerprint generation
+    val dec = SnapTables.resolve(spark, s"$dir/fp", "hb")
+      .join(removed, Seq("doc_id"), "left_semi")
+      .select(col("doc_id"), col("h")).distinct()
+      .groupBy(col("h")).agg(count(lit(1)).as("__dec"))
+    SnapTables.decrementCounts(spark, s"$dir/df", "hb", Seq("h"), "df", dec)
+    SnapTables.deleteByKey(spark, s"$dir/fp", "hb", "doc_id", removed)
     val survivors = docs.where(pmod(col("doc_id"), lit(11)) =!= 0)
     val fpSurv = Dedup.winnowFingerprints(survivors, col("doc_id"), col("text"),
       k = 3, w = 4)
-    // fingerprint table: the re-read BYTES are exactly the survivors' rows
-    assert(fpRows(WinnowIndex.read(spark, fpDir)) == fpRows(fpSurv),
-      "stored fingerprints after delete must equal the never-saw-them rebuild")
+    assert(fpRows(SnapTables.resolve(spark, s"$dir/fp", "hb")) == fpRows(fpSurv),
+      "fingerprints after delete must equal the never-saw-them rebuild")
     // df side table: the exact decrement equals a from-scratch recompute,
     // with zero-reaching hashes DROPPED (not kept at 0)
     def dfRows(t: DataFrame): Set[(Long, Long)] =
       t.select(col("h"), col("df").cast("long"))
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(dfRows(WinnowIndex.readDfTable(spark, dfDir))
+    assert(dfRows(SnapTables.resolve(spark, s"$dir/df", "hb"))
         == dfRows(WinnowIndex.dfTable(fpSurv)),
       "decremented df table must equal the survivors-only recompute")
-  }
-
-  test("rebuildDfTable: the crash-recovery verb recomputes the df bytes from the stored fingerprints") {
-    val fp = WinnowIndex.build(docs, col("doc_id"), col("text"), k = 3, w = 4)
-    val fpDir = tmpDir("winnow-rec-fp")
-    val dfDir = tmpDir("winnow-rec-df")
-    WinnowIndex.write(fp, fpDir)
-    WinnowIndex.writeDfTable(WinnowIndex.dfTable(fp), dfDir)
-    val removed = docs.where(pmod(col("doc_id"), lit(11)) === 0)
-      .select(col("doc_id"))
-    // the documented crash repair: the df decrement's fate is UNKNOWN (here:
-    // it never ran), so finish the idempotent key deletes WITHOUT the df leg…
-    WinnowIndex.deleteStored(spark, fpDir, removed, dfPath = None)
-    // …then rebuild the side table from the surviving stored fingerprints
-    WinnowIndex.rebuildDfTable(spark, fpDir, dfDir)
-    val fpSurv = Dedup.winnowFingerprints(
-      docs.where(pmod(col("doc_id"), lit(11)) =!= 0),
-      col("doc_id"), col("text"), k = 3, w = 4)
-    def dfRows(t: DataFrame): Set[(Long, Long)] =
-      t.select(col("h"), col("df").cast("long"))
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(dfRows(WinnowIndex.readDfTable(spark, dfDir))
-        == dfRows(WinnowIndex.dfTable(fpSurv)),
-      "rebuilt df table must equal the survivors-only recompute")
-    // and the verb is idempotent — a doubted repair can simply run again
-    WinnowIndex.rebuildDfTable(spark, fpDir, dfDir)
-    assert(dfRows(WinnowIndex.readDfTable(spark, dfDir))
-        == dfRows(WinnowIndex.dfTable(fpSurv)))
+    assertForgottenAfterExpire(s"$dir/fp", "hb", removed)
   }
 }
