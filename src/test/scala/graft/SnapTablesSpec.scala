@@ -104,11 +104,8 @@ class SnapTablesSpec extends AnyFunSuite with SparkSpec {
     val counts = (1L to 12L).map(k => (k, 10L, (k % 3).toInt)).toDF("key", "n", "pb")
     SnapTables.publishInitial(spark, dir, "pb", counts)
     val inFlight = SnapTables.resolve(spark, dir, "pb")
-    // retract 4 from keys 1..3, all 10 from key 4 (legitimate full
-    // retraction), and 3 + 4 from key 5 in two rows — duplicate-key deltas
-    // must subtract their SUM once, not fan out the join into two rows
-    val deltas = Seq((1L, 4L), (2L, 4L), (3L, 4L), (4L, 10L), (5L, 3L), (5L, 4L))
-      .toDF("key", "__dec")
+    // retract 4 from keys 1..3, all 10 from key 4 (legitimate full retraction)
+    val deltas = Seq((1L, 4L), (2L, 4L), (3L, 4L), (4L, 10L)).toDF("key", "__dec")
     val gen = SnapTables.decrementCounts(spark, dir, "pb", Seq("key"), "n", deltas)
     assert(gen == 1)
     def counted(df: DataFrame): Map[Long, Long] =
@@ -117,10 +114,7 @@ class SnapTablesSpec extends AnyFunSuite with SparkSpec {
     val now = counted(SnapTables.resolve(spark, dir, "pb"))
     assert(now(1L) == 6L && now(2L) == 6L && now(3L) == 6L)
     assert(!now.contains(4L), "a key retracted to zero must drop")
-    assert(now(5L) == 3L, "duplicate delta keys must sum to one exact decrement")
-    assert(SnapTables.resolve(spark, dir, "pb").where(col("key") === 5L).count() == 1L,
-      "duplicate delta keys must not duplicate the stored row")
-    assert((6L to 12L).forall(k => now(k) == 10L))
+    assert((5L to 12L).forall(k => now(k) == 10L))
     // the pre-flip reader still serves the UN-decremented statistics
     assert(counted(inFlight) == (1L to 12L).map(_ -> 10L).toMap,
       "a reader resolved before the decrement must keep its generation's counts")
@@ -139,6 +133,21 @@ class SnapTablesSpec extends AnyFunSuite with SparkSpec {
     assert(unk.getMessage.contains("never counted"))
     assert(SnapTables.currentGeneration(spark, dir).contains(1),
       "refused batches must not advance the generation")
+  }
+
+  test("decrementCounts: duplicate-key deltas pre-aggregate (sum once) instead of fanning out the join") {
+    import spark.implicits._
+    val dir = tmpDir("snap-dupdec")
+    val counts = (1L to 6L).map(k => (k, k * 10L, (k % 2).toInt)).toDF("key", "n", "pb")
+    SnapTables.publishInitial(spark, dir, "pb", counts)
+    // two retraction rows for key 4 (n 40): -10 and -15 must subtract 25
+    // ONCE, leaving one row at 15 — not two duplicated rows at 30 and 25
+    val deltas = Seq((4L, 10L), (4L, 15L)).toDF("key", "__dec")
+    SnapTables.decrementCounts(spark, dir, "pb", Seq("key"), "n", deltas)
+    val rows = SnapTables.resolve(spark, dir, "pb").where(col("key") === 4L)
+      .select(col("n")).collect().map(_.getLong(0)).toSeq
+    assert(rows == Seq(15L),
+      s"duplicate delta keys must sum to one exact decrement, got $rows")
   }
 
   test("a crash between manifest write and pointer flip is repaired by re-running the publish") {
