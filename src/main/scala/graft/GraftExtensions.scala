@@ -17,9 +17,11 @@ import org.apache.spark.unsafe.types.UTF8String
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     GraftExtensions.functionEntries.foreach(ext.injectFunction)
-    // Optimizer rewrite: size(regexp_extract_all(x, lit, 0)) — and therefore
-    // Spark's RuntimeReplaceable regexp_count — becomes the allocation-free
-    // native RegexpMatchCount (see graft.plans.GraftRewriteRule).
+    // Optimizer rewrites (see graft.plans.GraftRewriteRule):
+    // size(regexp_extract_all(x, lit, 0)) — and therefore Spark's
+    // RuntimeReplaceable regexp_count — becomes the allocation-free native
+    // RegexpMatchCount, and the word count size(split(x, '\s+', -1)) becomes
+    // the regex-free native WhitespaceRunCount.
     ext.injectOptimizerRule(_ => graft.plans.GraftRewriteRule)
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Path}
+import java.nio.file.{Files, LinkOption, Path}
 
 /** JVM-wide managed scratch root for queries that materialize sink/source
   * round trips or stored index tables inside their own plan (q328 CSV/JSON,
@@ -29,7 +29,8 @@ object Scratch {
   // leftovers that defeat the whole point of the managed root
   private def deleteRec(p: Path): Unit =
     try {
-      if (Files.isDirectory(p)) {
+      // a symlink is deleted, never followed: its target may lie outside
+      if (Files.isDirectory(p, LinkOption.NOFOLLOW_LINKS)) {
         val children = Files.list(p)
         try children.forEach(c => deleteRec(c))
         finally children.close()

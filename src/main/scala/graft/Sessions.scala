@@ -10,11 +10,19 @@ object Sessions {
   /** What every engine session pins: UTC, nanosecond parquet timestamps
     * readable as longs (see `Tables.load`), no UI, the fork-free local
     * filesystem and the engine's own SQL functions and optimizer rule.
+    *
+    * Artifact isolation is off. With it on (Spark 4's default), every clone
+    * of a session, which each streaming query runs on, gets its own
+    * classloader, and Spark's codegen cache is keyed by classloader: each
+    * query compiled the same generated classes again and ran them cold
+    * through the JIT. The engine adds no session artifacts (jars, files),
+    * so isolation guards nothing here; this is Spark 3.5's behaviour.
     */
   val Pinned: Map[String, String] = Map(
     "spark.sql.session.timeZone" -> "UTC",
     "spark.sql.legacy.parquet.nanosAsLong" -> "true",
     "spark.ui.enabled" -> "false",
+    "spark.sql.artifact.isolation.enabled" -> "false",
     "spark.sql.extensions" -> classOf[GraftExtensions].getName) ++
     streaming.LocalFs.SessionConf
 

@@ -118,6 +118,10 @@ object ParaIndex {
     * key-filter ([[SnapTables.deleteByKey]]), decrement
     * ([[SnapTables.decrementCounts]]), re-election (here). Returns the
     * generation now serving (unchanged when no stored winner is removed).
+    *
+    * The plan reads the generation current at the call and publishes only
+    * onto it: a writer that published in between makes this call throw
+    * [[SnapConflict]] instead of being silently undone.
     */
   def deleteSnapshot(
       spark: SparkSession,
@@ -129,7 +133,7 @@ object ParaIndex {
       sep: String = "\n"): Int = {
     val gen = SnapTables.currentGeneration(spark, path).getOrElse(
       throw new IllegalStateException(s"ParaIndex: $path has no published generation"))
-    val tbl = SnapTables.resolve(spark, path, "hb")
+    val tbl = SnapTables.resolveAt(spark, path, "hb", gen)
     val rm = removedIds.select(col("doc_id"))
     // one row per orphaned hash (the table holds one row per h), carrying
     // the hb its replacement must land back into — bucket-scheme-agnostic
@@ -157,7 +161,8 @@ object ParaIndex {
       .join(rm, Seq("doc_id"), "left_anti")
       .select(col("h"), col("doc_id"), col("pos"), col("hb"))
       .unionByName(reElected.select(col("h"), col("doc_id"), col("pos"), col("hb")))
-    SnapTables.rewritePartitions(spark, path, "hb", affected, rewritten)
+    SnapTables.rewritePartitions(spark, path, "hb", affected, rewritten,
+      plannedBase = Some(gen))
   }
 
   /** Scrub an INGEST batch against the stored table — the serve path:

@@ -26,6 +26,10 @@ object Text {
     */
   val WhitespaceRegex = "\\s+"
 
+  /** The tokens themselves run through Spark's regex split: a caller that
+    * keeps the array pays for it. A caller that only takes its `size` does
+    * not (see [[wordCount]]).
+    */
   def tokens(text: Column): Column = split(text, WhitespaceRegex)
 
   /** Unicode NFC (canonical composition) normalization — native codegen
@@ -39,7 +43,12 @@ object Text {
       graft.plans.NfcNormalize(
         org.apache.spark.sql.graftbridge.ColumnBridge.expression(text.cast("string"))))
 
-  /** Word count = token count (`process_articles.py:75`). */
+  /** Word count = token count (`process_articles.py:75`). Written as the
+    * reference writes it; the session's `GraftRewriteRule` turns
+    * `size(split(text, '\s+', -1))` into the native
+    * `graft.plans.WhitespaceRunCount`, which counts whitespace runs on the
+    * UTF-8 bytes without the regex or the array.
+    */
   def wordCount(text: Column): Column = size(tokens(text))
 
   // -------------------------------------------------------------------------

@@ -35,7 +35,7 @@ class HistIndexSpec extends AnyFunSuite with SparkSpec {
 
   test("disk roundtrip: stored counters answer identically") {
     val (lo, hi) = HistIndex.domain(li, col("x"))
-    val dir = java.nio.file.Files.createTempDirectory("histidx").toString
+    val dir = tmpDir("histidx")
     val built = HistIndex.build(li, col("rf"), col("x"), lo, hi, Bins)
     HistIndex.write(built, dir)
     assert(counters(HistIndex.read(spark, dir)) == counters(built))

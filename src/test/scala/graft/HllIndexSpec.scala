@@ -47,7 +47,7 @@ class HllIndexSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("disk roundtrip: stored sketches answer identically") {
-    val dir = java.nio.file.Files.createTempDirectory("hllidx").toString
+    val dir = tmpDir("hllidx")
     val built = HllIndex.build(rows, col("key"), col("item"))
     HllIndex.write(built, dir)
     val stored = HllIndex.read(spark, dir)

@@ -71,7 +71,7 @@ class LocalFsForkSpec extends AnyFunSuite with SparkSpec {
     assume(!NativeCodeLoader.isNativeCodeLoaded, "libhadoop is loaded: the stock chmod does not fork")
     val stock = new RawLocalFileSystem
     stock.initialize(URI.create("file:///"), new org.apache.hadoop.conf.Configuration())
-    val f = Files.createTempFile("localfs-control", ".txt")
+    val f = Files.createTempFile(java.nio.file.Paths.get(tmpDir("localfs-control")), "f", ".txt")
     val events = processStarts(stock.setPermission(new Path(f.toUri), new FsPermission(0x1a4.toShort)))
     assert(events.exists(fromShell), describe(events))
   }

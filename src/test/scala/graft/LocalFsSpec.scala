@@ -28,7 +28,7 @@ class LocalFsSpec extends AnyFunSuite {
   private lazy val stock = initialized(new RawLocalFileSystem)
   private lazy val forkFree = initialized(new ForkFreeRawLocalFileSystem)
 
-  private def tmp(prefix: String): NioPath = Files.createTempDirectory(prefix)
+  private def tmp(prefix: String): NioPath = java.nio.file.Paths.get(Scratch.dir(prefix))
   private def hpath(p: NioPath): Path = new Path(p.toUri)
   private def unixMode(p: NioPath): Int = Files.getAttribute(p, "unix:mode").asInstanceOf[Int] & 0xfff
 

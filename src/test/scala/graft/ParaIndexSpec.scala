@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.ops.{ParaIndex, SnapTables}
+import graft.ops.{ParaIndex, SnapConflict, SnapTables}
 
 /** The durable paragraph-hash-table lifecycle: build == write+read, append
   * == rebuild under the id-ordering contract, and the stored-table scrub
@@ -76,11 +76,11 @@ class ParaIndexSpec extends AnyFunSuite with SparkSpec {
       s"table side must be scan-only; found $splits split() calls:\n$plan")
   }
 
-  private def publishCorpus(dir: String): Unit =
+  private def publishCorpus(dir: String,
+      buckets: Int = ParaIndex.DefaultHashBuckets): Unit =
     SnapTables.publishInitial(spark, dir, "hb",
       ParaIndex.build(corpus, col("id"), col("text"))
-        .withColumn("hb", pmod(col("h"),
-          lit(ParaIndex.DefaultHashBuckets.toLong)).cast("int")))
+        .withColumn("hb", pmod(col("h"), lit(buckets.toLong)).cast("int")))
 
   test("deleteStored: re-election == survivors rebuild row for row; survivor-less hashes drop") {
     import spark.implicits._
@@ -146,4 +146,54 @@ class ParaIndexSpec extends AnyFunSuite with SparkSpec {
     assert(kept(SnapTables.resolve(spark, dir, "hb")) == 2L,
       "gen-1 scrubber must keep it (no survivor carries that paragraph)")
   }
+
+  test("deleteSnapshot: a writer that publishes while another plans makes the planner throw, not undo it") {
+    import spark.implicits._
+    import ParaIndexSpec._
+    val dir = tmpDir("para-race")
+    // one bucket: both deletes rewrite the same partition, so a stale plan
+    // published over the first writer would visibly undo its delete
+    publishCorpus(dir, buckets = 1)
+    val base = SnapTables.currentGeneration(spark, dir).get
+    gates = new Gates
+    // the removal sets are read only after a writer has read its generation:
+    // writer 2 signals there, then waits until writer 1 has published;
+    // writer 1 waits for that signal before it plans at all
+    val gated = udf((doc: Long) => { gates.pass(doc); true })
+    val errs = new java.util.concurrent.ConcurrentHashMap[Long, Throwable]()
+    val threads = Seq(1L, 2L).map { doc =>
+      val t = new Thread(() => {
+        org.apache.spark.sql.SparkSession.setActiveSession(spark)
+        try ParaIndex.deleteSnapshot(spark, dir,
+            Seq(doc).toDF("doc_id").where(gated(col("doc_id"))),
+            corpus.where(col("id") =!= doc), col("id"), col("text"))
+        catch { case e: Throwable => errs.put(doc, e) }
+        finally if (doc == 1L) gates.firstPublished.countDown()
+        ()
+      }, s"para-writer-$doc")
+      t.start(); t
+    }
+    threads.foreach(_.join())
+    assert(!errs.containsKey(1L), s"the first writer must publish: ${errs.get(1L)}")
+    assert(errs.get(2L).isInstanceOf[SnapConflict],
+      s"the writer whose plan went stale must throw SnapConflict, got ${errs.get(2L)}")
+    assert(SnapTables.currentGeneration(spark, dir).contains(base + 1))
+    assert(rows(SnapTables.resolve(spark, dir, "hb")) == rows(ParaIndex.firstOccurrences(
+        corpus.where(col("id") =!= 1L), col("id"), col("text"))),
+      "the table must serve exactly the first writer's delete")
+  }
+}
+
+object ParaIndexSpec {
+  /** Orders the two writers of the race test; UDFs reach it through this
+    * object, not a serialized copy.
+    */
+  final class Gates {
+    val secondPlanning, firstPublished = new java.util.concurrent.CountDownLatch(1)
+    def pass(doc: Long): Unit = {
+      val wait = if (doc == 1L) secondPlanning else { secondPlanning.countDown(); firstPublished }
+      assert(wait.await(2, java.util.concurrent.TimeUnit.MINUTES), s"writer $doc timed out")
+    }
+  }
+  @volatile var gates: Gates = _
 }

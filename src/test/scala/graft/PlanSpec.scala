@@ -159,7 +159,7 @@ class PlanSpec extends AnyFunSuite with SparkSpec {
   test("partitioned layout: a partition-column filter prunes directories at planning time") {
     import graft.ops.Layout
     val docs = Tables.load(spark, sf, "documents")
-    val dir = java.nio.file.Files.createTempDirectory("graft-partlayout").toString
+    val dir = tmpDir("graft-partlayout")
     Layout.writePartitioned(docs, dir, "lang")
     val read = spark.read.parquet(dir).where(col("lang") === "en")
       .select(col("doc_id"), col("n_chars"))
@@ -397,7 +397,7 @@ class PlanSpec extends AnyFunSuite with SparkSpec {
     assert(masses.size >= (total.toDouble / (target + maxDoc)).ceil.toInt,
       "mass-bounded shards cannot be fewer than total/(target + maxDoc)")
     // writer round-trip: dynamic partition dirs per shard
-    val dir = java.nio.file.Files.createTempDirectory("graft-shards").toString
+    val dir = tmpDir("graft-shards")
     Layout.writeBalancedShards(docs, dir, "id", col("n_tok"), target)
     val back = spark.read.parquet(dir)
     assert(back.count() == 64 &&

@@ -80,7 +80,7 @@ class QuantileIndexSpec extends AnyFunSuite with SparkSpec {
 
   test("disk roundtrip preserves the stored bytes, hence every estimate") {
     val tbl = QuantileIndex.build(docs, col("source"), col("n_chars"), K)
-    val dir = java.nio.file.Files.createTempDirectory("kll-tbl").toString
+    val dir = tmpDir("kll-tbl")
     QuantileIndex.write(tbl, dir)
     val back = QuantileIndex.read(spark, dir)
     val qs = Seq(0.5, 0.9, 0.99)

@@ -33,7 +33,7 @@ class ReadinessSpec extends AnyFunSuite {
   }
 
   test("marker appears only when healthy, atomically, and is idempotent") {
-    val dir = java.nio.file.Files.createTempDirectory("readiness")
+    val dir = java.nio.file.Paths.get(Scratch.dir("readiness"))
     val marker = dir.resolve("ready")
     assert(!Readiness.writeMarker(marker,
       Status(bucketCreated = true, streamCreated = true, published = 99)))

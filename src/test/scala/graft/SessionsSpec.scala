@@ -29,6 +29,10 @@ class SessionsSpec extends AnyFunSuite {
     assert(plain("spark.sql.session.timeZone") == "UTC")
     assert(plain("spark.sql.legacy.parquet.nanosAsLong") == "true")
     assert(plain("spark.ui.enabled") == "false")
+    // generated code outlives a query only without per-clone classloaders
+    // (CodegenReuseSpec measures it)
+    assert(Sessions.Pinned("spark.sql.artifact.isolation.enabled") == "false")
+    assert(plain("spark.sql.artifact.isolation.enabled") == "false")
     assert(LocalFs.SessionConf.forall { case (k, v) => plain.get(k).contains(v) })
     assert(!plain.keys.exists(_.contains("s3a")))
 

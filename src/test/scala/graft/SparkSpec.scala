@@ -20,8 +20,10 @@ object TestSpark {
 trait SparkSpec {
   lazy val spark: SparkSession = TestSpark.spark
 
-  def tmpDir(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+  /** A fresh directory under the JVM's one scratch root, which is deleted
+    * when the test JVM exits ([[Scratch]]).
+    */
+  def tmpDir(prefix: String): String = Scratch.dir(prefix)
 
   /** The right-to-be-forgotten check on a snapshot table after a delete:
     * the superseded generation's files still hold removed doc_ids (so the

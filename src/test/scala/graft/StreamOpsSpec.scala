@@ -1187,7 +1187,7 @@ class StreamOpsSpec extends AnyFunSuite with SparkSpec {
     // statistics (p50 = 50, p90 = 90) — pinnable equality, no tolerance.
     val ref = (1 to 100).map(i => (if (i % 2 == 0) "a" else "b", i.toDouble))
       .toDF("source", "len")
-    val dir = java.nio.file.Files.createTempDirectory("kll-gate").toString
+    val dir = tmpDir("kll-gate")
     QuantileIndex.write(
       QuantileIndex.build(ref, col("source"), col("len"), 256), dir)
     val tbl = QuantileIndex.read(spark, dir)

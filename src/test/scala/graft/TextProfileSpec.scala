@@ -117,6 +117,79 @@ class TextProfileSpec extends AnyFunSuite with SparkSpec {
     assert(native(None).isEmpty && composed(None).isEmpty)
   }
 
+  /** `f` of the parquet-backed bytes `b` read as a string (so no side is
+    * constant-folded before the rule), keyed by row id, with the optimized
+    * plan; `rewrite = false` runs with GraftRewriteRule excluded.
+    */
+  private def perRow(dir: String, f: Column => Column, rewrite: Boolean = true) = {
+    val rule = graft.plans.GraftRewriteRule.ruleName
+    if (!rewrite) spark.conf.set("spark.sql.optimizer.excludedRules", rule)
+    try {
+      val df = spark.read.parquet(dir).select(col("id"), f(col("b").cast("string")))
+      val got = df.collect().map(r => r.getLong(0) -> (if (r.isNullAt(1)) None else Some(r.getInt(1)))).toMap
+      (got, df.queryExecution.optimizedPlan.toString)
+    } finally if (!rewrite) spark.conf.unset("spark.sql.optimizer.excludedRules")
+  }
+
+  /** Texts as raw UTF-8 bytes, so malformed sequences are kept as they are. */
+  private def writeTexts(name: String, texts: Seq[Option[Array[Byte]]]): String = {
+    import spark.implicits._
+    val dir = tmpDir(name) + "/t"
+    texts.zipWithIndex.map { case (b, i) => (i.toLong, b) }.toDF("id", "b").write.parquet(dir)
+    dir
+  }
+
+  test("word count: native whitespace-run count == size(split(\\s+, -1)) on edge, malformed and generated texts") {
+    def utf8(t: String) = Some(t.getBytes("UTF-8"))
+    val edges = Seq("", " ", "a", " a", "a ", "  a  b  ", " \t\n\u000B\f\r ",
+      "a\tb\nc\u000Bd\fe\rf", "\u000B", "a\u000B\u000Bb",
+      // not Java's \s: no-break space, em space, NEL, line separator
+      "\u00A0", "a\u00A0b", "a\u2003b", "\u2003 \u2003", "a\u0085b", "a\u2028b",
+      "中文 字\t😀 x").map(utf8)
+    val malformed = Seq(
+      Array(0xC3, 0x20, 0x41), Array(0xE2, 0x80), Array(0xFF, 0x09, 0xFE),
+      Array(0x80, 0x20, 0x80, 0x20), Array(0xF0, 0x9F, 0x98, 0x0B, 0x61),
+      Array(0xED, 0xA0, 0x80, 0x20)).map(b => Some(b.map(_.toByte)))
+    val char = Gen.frequency(
+      4 -> Gen.oneOf(' ', '\t', '\n', '\u000B', '\f', '\r'),
+      6 -> Gen.alphaNumChar,
+      2 -> Gen.oneOf('\u00A0', '\u2003', '\u0085', '\u3000', 'é', '中'))
+    val generated = Gen.listOfN(300, Gen.listOf(char).map(_.mkString)).sample.get.map(utf8)
+    val randomBytes = Gen.listOfN(200, Gen.listOf(Gen.frequency(
+      3 -> Gen.oneOf(0x20, 0x09, 0x0B, 0x0D), 5 -> Gen.choose(0, 255))))
+      .sample.get.map(bs => Some(bs.map(_.toByte).toArray))
+    val texts = edges ++ malformed ++ genDocs.map(utf8) ++ generated ++ randomBytes :+ None
+    val dir = writeTexts("word-count", texts)
+    val (native, nativePlan) = perRow(dir, Text.wordCount)
+    val (composed, composedPlan) = perRow(dir, Text.wordCount, rewrite = false)
+    assert(nativePlan.contains("whitespace_run_count"), s"the rule must fire:\n$nativePlan")
+    assert(!composedPlan.contains("whitespace_run_count"), s"the rule must not run:\n$composedPlan")
+    texts.indices.foreach { i =>
+      assert(native(i.toLong) == composed(i.toLong),
+        s"mismatch for bytes ${texts(i).map(_.map(b => f"${b & 0xff}%02x").mkString(" "))}")
+    }
+    assert(native(texts.size - 1L).isEmpty, "null text -> null count")
+    assert(native(0L).contains(1) && native(4L).contains(2) && native(5L).contains(4))
+  }
+
+  test("word count rewrite: legacy size, '\\s', limit != -1 and collated text are left alone") {
+    import org.apache.spark.sql.catalyst.expressions.{Literal, Size, StringSplit}
+    import org.apache.spark.sql.graftbridge.ColumnBridge
+    val dir = writeTexts("word-count-guards",
+      Seq(Some(" a  b ".getBytes("UTF-8")), Some(Array[Byte]()), None))
+    def fires(f: Column => Column) = perRow(dir, f)._2.contains("whitespace_run_count")
+    assert(fires(t => size(split(t, "\\s+"))), "control: the reference's form is rewritten")
+    val untouched = Seq[(String, Column => Column)](
+      "pattern \\s" -> (t => size(split(t, "\\s"))),
+      "limit 2" -> (t => size(split(t, "\\s+", 2))),
+      "limit 0" -> (t => size(split(t, "\\s+", 0))),
+      "legacy size" -> (t => ColumnBridge.column(Size(StringSplit(ColumnBridge.expression(t),
+        Literal("\\s+"), Literal(-1)), legacySizeOfNull = true))),
+      // a non-default collation that `split` accepts
+      "UTF8_LCASE" -> (t => size(split(collate(t, "UTF8_LCASE"), "\\s+"))))
+    untouched.foreach { case (name, f) => assert(!fires(f), s"$name must not be rewritten") }
+  }
+
   test("hashing embedding: partition-invariant, duplicate-consistent, fixed width") {
     import spark.implicits._
     val docs = Seq((1L, "a b c a"), (2L, "a b c a"), (3L, "x y zz"), (4L, ""))
