@@ -112,12 +112,12 @@ object AnnIndex {
     * UPSERT at read: the stored side is anti-joined by the delta's vids
     * before the union, so a RE-ingested vector (present in both stored base
     * and delta — possibly in a different cell after an embedding update)
-    * serves exactly once, from its delta row — [[compact]]'s upsert
-    * semantics applied at serve time, closing the window between re-ingest
-    * and the next compaction. The delta is the small side (one ingest
-    * cycle), so the anti join broadcasts under AQE; for a fresh-ids-only
-    * delta the anti join removes nothing and the result is the plain union
-    * (q394's append == re-encode hash proof is unchanged).
+    * serves exactly once, from its delta row, and the stored ∪ delta serve
+    * (q400) is correct with no fold step in between. The delta is the
+    * small side (one ingest cycle), so the anti join broadcasts under AQE;
+    * for a fresh-ids-only delta the anti join removes nothing and the
+    * result is the plain union (q394's append == re-encode hash proof is
+    * unchanged).
     */
   def append(idx: IvfPqIndex, newCodes: DataFrame): IvfPqIndex =
     idx.copy(codes = idx.codes
@@ -135,239 +135,14 @@ object AnnIndex {
     * contribution — same caveat class as [[ParaIndex]]'s election tables;
     * removing the training influence entirely means a retrain ([[build]]).
     * Scale shape: an id-only anti join against the posting lists (the
-    * removed-id set broadcasts in the common case).
+    * removed-id set broadcasts in the common case). This filters the
+    * in-memory frame only; the delete that is true in the stored bytes is
+    * [[SnapTables.deleteByKey]] on the snapshot-published codes table
+    * (q398/q413, and q403 after a streamed ingest).
     */
   def delete(idx: IvfPqIndex, removedIds: DataFrame): IvfPqIndex =
     idx.copy(codes = idx.codes
       .join(removedIds.select(col("vid")), Seq("vid"), "left_anti"))
-
-  /** [[delete]] made true in the STORED bytes — the right-to-be-forgotten
-    * path a view-filter cannot satisfy: [[delete]] anti-joins the in-memory
-    * frame, but the parquet under `path/codes` still holds every removed
-    * vector's rows until they are rewritten out. This rewrites ONLY the
-    * cluster partitions that actually contain a removed vector (dynamic
-    * partition overwrite — the same idempotence recipe as the streaming
-    * maintenance delta), so the I/O is bounded by the affected cells, not
-    * the corpus: at 100 TB an index with thousands of cells rewrites the
-    * handful holding the removal set and never touches the rest.
-    *
-    * Two bounded driver transfers, both capped by the coarse cell count
-    * (model-scale, the k-rows doctrine): the affected-cluster set and the
-    * survivor-cluster set. The second exists because dynamic overwrite only
-    * replaces partitions PRESENT in the write — a cell whose every vector
-    * was removed emits no rows and would silently keep its stale directory;
-    * those directories are dropped explicitly.
-    *
-    * Model tables stay frozen on disk (same caveat as [[delete]]: removing
-    * the training influence means a retrain). q398 hash-proves the re-read
-    * post-delete serve against a survivors-only relational replay;
-    * AnnIndexSpec asserts the removed vids are gone from the stored parquet
-    * itself and that unaffected partitions keep their original files.
-    *
-    * Serving-concurrency contract (same stance as [[compact]]): do NOT
-    * serve from the index while the rewrite runs — a concurrent reader can
-    * fail mid-scan as affected-partition files are replaced, and between
-    * the overwrite and the explicit emptied-cell drops it can still read
-    * removed vids out of a fully-emptied cell. If the process crashes
-    * between those two steps, re-run the SAME delete: the overwrite is
-    * idempotent (survivors rewrite to identical content) and the re-run
-    * completes the directory drops. The last in-place publication verb in
-    * the engine: every other durable table deletes through [[SnapTables]]
-    * (this index's own snapshot twin is q413).
-    */
-@deprecated("publish the table through SnapTables and delete via its generation-flip twin — the in-place overwrite invalidates concurrent serves (kept behind q398 and q403, which compose it with the batch_id-delta compaction)", "round 19")
-  def deleteStored(spark: SparkSession, path: String, removedIds: DataFrame): Unit = {
-    val codesPath = s"$path/codes"
-    val codes = spark.read.parquet(codesPath)
-    // no broadcast HINT on the removal set: a typical right-to-be-forgotten
-    // batch is small and AQE broadcasts it on its own, but a bulk purge
-    // (court order over a whole source) must degrade to a shuffled
-    // semi/anti join instead of OOMing a forced broadcast
-    val rm = removedIds.select(col("vid"))
-    val affected = codes.join(rm, Seq("vid"), "left_semi")
-      .select(col("cluster")).distinct()
-      .collect().map(_.getInt(0)).sorted.toSeq
-    if (affected.isEmpty) return
-    // survivors of ONLY the affected cells, materialized BEFORE the
-    // overwrite: Spark (correctly) refuses to overwrite a path its plan is
-    // still reading, and the checkpoint also bounds the rewrite read to the
-    // affected partitions (partition pruning on the isin filter)
-    val survivors = codes
-      .where(col("cluster").isin(affected: _*))
-      .join(rm, Seq("vid"), "left_anti")
-      .select(col("vid"), col("codes"), col("cluster"))
-      .localCheckpoint()
-    val still = survivors.select(col("cluster")).distinct()
-      .collect().map(_.getInt(0)).toSet
-    val hp = new org.apache.hadoop.fs.Path(codesPath)
-    val fs = hp.getFileSystem(spark.sessionState.newHadoopConf())
-    // fail BEFORE mutating if the removal would empty the whole index: zero
-    // surviving cells means zero parquet files under codes/, which the next
-    // read rejects with an opaque schema-inference error far from the cause
-    val existing = fs.listStatus(hp).map(_.getPath.getName)
-      .filter(_.startsWith("cluster="))
-      .map(_.stripPrefix("cluster=").toInt).toSet
-    require((existing -- (affected.toSet -- still)).nonEmpty,
-      "deleteStored: the removal set covers every indexed vector — an empty " +
-        "index has no readable codes table; drop the index directory instead")
-    survivors.repartition(col("cluster")) // whole-cell files, not × tasks
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("cluster").parquet(codesPath)
-    affected.filterNot(still).foreach { c =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$codesPath/cluster=$c"), true)
-    }
-  }
-
-  /** Fold a streaming-maintenance delta (batch_id-partitioned encode output,
-    * [[graft.streaming.Pipelines.annIndexMaintenance]]) into the stored
-    * cluster-partitioned posting lists, then consume the delta directory.
-    *
-    * Why this exists: the maintenance stream accretes one `batch_id`
-    * partition per micro-batch — at production cadence that is thousands of
-    * small files OUTSIDE the cluster-partitioned layout, so a serve over
-    * `stored ∪ delta` loses partition pruning on the delta side (every probe
-    * reads every batch file). Compaction restores the invariant the serve
-    * path's dynamic partition pruning rests on: one directory per cluster,
-    * no batch_id residue (q399 hash-proves the compacted serve; PlanSpec
-    * pins its DPP).
-    *
-    * Upsert semantics, ACROSS cells: a vid present in both sides takes the
-    * delta's row, including when the updated embedding assigned to a
-    * different cluster (the stale old-cluster row is rewritten away), so
-    * re-running compact over a replayed delta cannot duplicate posting
-    * rows and a re-encoded vector never serves twice. The rewrite touches
-    * only the cluster partitions that received delta rows or held a stale
-    * row of a delta vid (bounded by the cell count — the [[deleteStored]]
-    * shape).
-    * Run it between stream runs, not concurrently with one: a live stream
-    * writing new batch partitions while the delta directory is being
-    * consumed would lose them. That contract is MECHANICAL where the delta
-    * carries the maintenance stream's ownership marker: the marker records
-    * the owning checkpoint, and compact refuses to fold any batch_id
-    * partition the checkpoint's commit log has not recorded as committed —
-    * a stream that died mid-batch (partial partition on disk, batch not in
-    * `commits/`) fails HERE instead of being folded, deleted, and then
-    * replayed into a fresh delta by checkpoint recovery (which would serve
-    * the overlap twice until the next compact).
-    */
-  def compact(spark: SparkSession, indexPath: String, deltaPath: String): Unit = {
-    val codesPath = s"$indexPath/codes"
-    val dp = new org.apache.hadoop.fs.Path(deltaPath)
-    val fs = dp.getFileSystem(spark.sessionState.newHadoopConf())
-    // fail fast with the state's NAME, not an opaque downstream read error
-    // (a raw parquet read of a missing dir says "path not found"; of a
-    // marker-only dir, "unable to infer schema" — both far from the cause)
-    require(fs.exists(dp),
-      s"compact: deltaPath $deltaPath does not exist — already consumed by a " +
-        "previous compact, or the maintenance stream never ran")
-    val batchDirs = fs.listStatus(dp).map(_.getPath.getName)
-      .filter(_.startsWith("batch_id="))
-    if (batchDirs.isEmpty) {
-      // marker-only / empty dir: the stream stamped ownership (or a manual
-      // mkdir happened) but no batch partition ever landed — nothing to
-      // fold; consume the residue so the next stream starts clean
-      fs.delete(dp, true)
-      return
-    }
-    // clean-shutdown contract, enforced: a stream-owned delta folds only
-    // batches its checkpoint committed
-    val marker = new org.apache.hadoop.fs.Path(dp, "_graft_delta_owner")
-    if (fs.exists(marker)) {
-      val in = fs.open(marker)
-      val owner = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      require(owner.nonEmpty,
-        s"compact: deltaPath $deltaPath carries a truncated ownership marker " +
-          "(crash during the marker write) — re-run the maintenance stream to " +
-          "restore it, or delete _graft_delta_owner to fold the delta unverified")
-      // resolve the commit log on the OWNER path's filesystem, not the
-      // delta's: a delta on s3a owned by a checkpoint on hdfs/file would
-      // otherwise query the wrong store and see every batch as uncommitted
-      val commitsDir = new org.apache.hadoop.fs.Path(
-        new org.apache.hadoop.fs.Path(owner), "commits")
-      val cfs = commitsDir.getFileSystem(spark.sessionState.newHadoopConf())
-      val committed: Set[Long] =
-        if (cfs.exists(commitsDir))
-          cfs.listStatus(commitsDir).map(_.getPath.getName)
-            .filter(n => n.nonEmpty && n.forall(_.isDigit)).map(_.toLong).toSet
-        else Set.empty
-      // Spark purges commit-log entries beyond minBatchesToRetain (default
-      // 100), so a long-accreting delta can hold batch partitions OLDER
-      // than the oldest retained commit. Those necessarily committed:
-      // batches run in order and batch b+1 cannot start before b commits,
-      // so any on-disk batch below min(retained) — i.e. below a LATER
-      // retained commit — finished cleanly. Treat ids under the purge
-      // floor as committed instead of falsely flagging a mid-batch death
-      // the stream could never repair (committed batches never replay).
-      val purgeFloor = if (committed.nonEmpty) committed.min else Long.MaxValue
-      val uncommitted = batchDirs.map(_.stripPrefix("batch_id=").toLong)
-        .filter(b => b >= purgeFloor || committed.isEmpty)
-        .filterNot(committed).sorted
-      require(uncommitted.isEmpty,
-        s"compact: deltaPath $deltaPath holds batch partition(s) " +
-          s"${uncommitted.mkString("batch_id=", ", batch_id=", "")} not recorded " +
-          s"as committed by owning checkpoint $owner — the stream died mid-batch; " +
-          "resume it (the replay overwrites the partial partition) and re-compact " +
-          "after a clean shutdown, or delete the delta's _graft_delta_owner " +
-          "marker to fold it unverified (last resort)")
-    }
-    // sever lineage from the delta files before they are deleted below.
-    // One row per vid, LATEST batch wins: a vid re-ingested across two
-    // micro-batches of one stream run occupies two batch_id partitions, and
-    // folding both would leave it serving twice (possibly from two cells) —
-    // the same-cell case a batch's self-overwrite handles, made true across
-    // batches. Ties are impossible (a batch overwrites itself, one encode
-    // row per vid per batch).
-    val deltaRaw = spark.read.parquet(deltaPath)
-    val deltaB =
-      if (deltaRaw.columns.contains("batch_id")) deltaRaw
-      else deltaRaw.withColumn("batch_id", lit(0L))
-    val wLatest = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("vid")).orderBy(col("batch_id").desc)
-    val delta = deltaB
-      .withColumn("__rn", row_number().over(wLatest))
-      .where(col("__rn") === 1)
-      .select(col("vid"), col("cluster"), col("codes"))
-      .localCheckpoint()
-    // affected = cells receiving delta rows UNION cells holding a STALE row
-    // of a delta vid. The second leg makes the upsert true across cells: a
-    // re-ingested vector whose updated embedding assigns to a DIFFERENT
-    // cluster must have its old-cluster row rewritten away, or the index
-    // would serve the same vid twice (once stale). One vid-semi-join scan
-    // over the stored codes (ints only), still bounded by the cell count.
-    val storedAll = spark.read.parquet(codesPath)
-    val affected = delta.select(col("cluster"))
-      .unionByName(storedAll
-        .join(delta.select(col("vid")), Seq("vid"), "left_semi")
-        .select(col("cluster")))
-      .distinct()
-      .collect().map(_.getInt(0)).sorted.toSeq
-    if (affected.nonEmpty) {
-      val stored = storedAll
-        .where(col("cluster").isin(affected: _*))
-        .select(col("vid"), col("cluster"), col("codes"))
-      val merged = stored
-        .join(delta.select(col("vid")), Seq("vid"), "left_anti")
-        .unionByName(delta)
-        .select(col("vid"), col("codes"), col("cluster"))
-        .localCheckpoint()
-      merged.repartition(col("cluster")) // whole-cell files, not × tasks
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("cluster").parquet(codesPath)
-      // a cell whose ONLY rows were stale cross-cluster residents emits no
-      // rows in the rewrite — drop its directory, the deleteStored rule
-      val still = merged.select(col("cluster")).distinct()
-        .collect().map(_.getInt(0)).toSet
-      val hp = new org.apache.hadoop.fs.Path(codesPath)
-      val cfs = hp.getFileSystem(spark.sessionState.newHadoopConf())
-      affected.filterNot(still).foreach { c =>
-        cfs.delete(new org.apache.hadoop.fs.Path(s"$codesPath/cluster=$c"), true)
-      }
-    }
-    fs.delete(dp, true)
-  }
 
   /** Per-vector PQ quantization error from the STORED tables — the DECODE
     * direction no other query exercises (search evaluates distances in code

@@ -108,7 +108,9 @@ object BinaryQuant {
 
   /** Persist the frozen model + bucketed code index under `path` — the
     * durable form of the q227 funnel's index side (the AnnIndex.write
-    * discipline applied to the 16-byte representation):
+    * discipline applied to the 16-byte representation), over prebuilt
+    * thresholds and [[indexRows]] output (q410 passes its shared
+    * full-corpus build):
     *
     *  - `path/thr`: the ONE-ROW thresholds frame — the frozen model. Like
     *    the PQ codebooks it is bounded by dimensionality, not corpus size;
@@ -121,19 +123,9 @@ object BinaryQuant {
     * for exactly `screenR` rows per query at rerank, fetched from the
     * source table ([[serveStored]]'s `vectors` argument) — duplicating a
     * 100 TB float column into the index would defeat the representation.
-    */
-  def write(df: DataFrame, id: Column, vec: Column, path: String,
-      numPlanes: Int, numDims: Int = Dims): Unit = {
-    require(numDims == Dims, s"packer is $Dims-dim, got $numDims")
-    val thr = thresholds(df, vec).localCheckpoint()
-    writeFrames(thr, indexRows(df, id, vec, thr, numPlanes, numDims), path)
-  }
-
-  /** [[write]]'s layout over PREBUILT frames — for callers that already
-    * hold the thresholds and [[indexRows]] output (e.g. a materialized
-    * shared build feeding both the in-place and snapshot publication
-    * legs); the two entry points share this seam so the on-disk layout
-    * cannot drift between them.
+    * A table that must change after publication (delete, frozen-model
+    * append) publishes `path/index` through [[SnapTables]] instead and
+    * serves via [[serveFrames]] (q432/q433).
     */
   def writeFrames(thr: DataFrame, rows: DataFrame, path: String): Unit = {
     thr.write.mode("overwrite").parquet(s"$path/thr")
@@ -143,9 +135,10 @@ object BinaryQuant {
   }
 
   /** The stored-index row shape — (vid, bucket, lo, hi, bb) against a
-    * (frozen) thresholds frame. One definition shared by [[write]],
-    * [[appendStored]] and the snapshot publishers (q432/q433), so the
-    * code/bucket arithmetic cannot drift between publication paths.
+    * (frozen) thresholds frame. One definition shared by [[writeFrames]]
+    * and the snapshot publishers (q432/q433, whose append encodes the
+    * delta against the re-read stored model), so the code/bucket
+    * arithmetic cannot drift between publication paths.
     */
   def indexRows(df: DataFrame, id: Column, vec: Column, thr: DataFrame,
       numPlanes: Int, numDims: Int = Dims): DataFrame = {
@@ -163,37 +156,6 @@ object BinaryQuant {
       path: String): DataFrame =
     spark.read.parquet(s"$path/thr")
 
-  /** Load the stored code index (scan-only lineage), projected to the
-    * logical columns; [[serveStored]] reads the raw parquet itself to keep
-    * the `bb` partition column visible to pruning.
-    */
-  def readIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String): DataFrame =
-    spark.read.parquet(s"$path/index")
-      .select(col("vid"), col("bucket"), col("lo"), col("hi"))
-
-  /** Frozen-model delta append INTO the stored index bytes: the delta
-    * encodes per row against the STORED thresholds (re-read, never
-    * retrained — the q246/q394 frozen-model law) and its code rows land in
-    * their `bb` partitions via an append-mode write. Because the encode is
-    * strictly per-row once the model is frozen, the appended storage equals
-    * coding the union in one pass ROW FOR ROW — q411 hash-proves it through
-    * the full serve funnel. Append-only contract ([[MinHashIndex.append]]
-    * stance): re-appending an already-indexed vid duplicates it — that is
-    * the caller's bug, and the repair is [[AnnIndex]]-style delete+append.
-    */
-  def appendStored(spark: org.apache.spark.sql.SparkSession, path: String,
-      delta: DataFrame, id: Column, vec: Column,
-      numPlanes: Int, numDims: Int = Dims): Unit = {
-    require(numDims == Dims, s"packer is $Dims-dim, got $numDims")
-    // plain scan, no checkpoint: the 1-row model is read once, and writing
-    // under path/index never touches path/thr
-    val thr = readThresholds(spark, path)
-    indexRows(delta, id, vec, thr, numPlanes, numDims)
-      .repartition(col("bb")) // file count scales with fan-out, not × tasks
-      .write.mode("append").partitionBy("bb").parquet(s"$path/index")
-  }
-
   /** The [[lshHammingRerankTopK]] funnel served FROM the stored tables —
     * the production read side: probes arrive as raw vectors, encode per row
     * against the stored thresholds (broadcast one-row model) and bucket
@@ -202,8 +164,8 @@ object BinaryQuant {
     * partitions prune against the probe buckets); raw vectors are fetched
     * from the SOURCE table `vectors` for exactly the screen survivors. The
     * probe side broadcasts (an ingest batch / review set — the q169/q208
-    * serve stance; the q410/q411 catalog legs drive the whole corpus
-    * through it only because their oracle is the q227 all-pairs funnel).
+    * serve stance; the q410 catalog leg drives the whole corpus through
+    * it only because its oracle is the q227 all-pairs funnel).
     */
   def serveStored(
       spark: org.apache.spark.sql.SparkSession,
@@ -228,8 +190,8 @@ object BinaryQuant {
   }
 
   /** [[serveStored]] over ALREADY-RESOLVED frames — the seam the snapshot
-    * legs (q432/q433) serve through: `index` is any (vid, bucket, lo, hi,
-    * bb) frame (a raw directory read, or a [[SnapTables.resolve]]d
+    * legs (q411/q432/q433) serve through: `index` is any
+    * (vid, bucket, lo, hi, bb) frame (a raw directory read, or a [[SnapTables.resolve]]d
     * manifest file list, which keeps `bb` because resolve sets basePath),
     * `thr` the one-row frozen model. Same funnel, same plan shape —
     * where the rows come from must not change what serves.

@@ -59,13 +59,6 @@ object CmsIndex {
           .as("sk"))
       .where(exists(col("sk"), x => x > 0L))
 
-  /** Persist the sketch table. No partitioning: rows are one fixed
-    * depth×width array per key — the table is #keys rows regardless of
-    * corpus size (that is the point of the sketch).
-    */
-  def write(sk: DataFrame, path: String): Unit =
-    sk.write.mode("overwrite").parquet(path)
-
   /** Key-hash partition fan-out for the SNAPSHOT-published sketch table:
     * small (the table is #keys rows), but [[SnapTables]] verbs rewrite and
     * prune at partition grain, so even a modest fan-out bounds a
@@ -131,10 +124,6 @@ object CmsIndex {
       merge(cur, d).withColumn("kb", kbOf(keyBuckets)),
       plannedBase = Some(base))
   }
-
-  /** Load a stored sketch table (scan-only lineage). */
-  def read(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
 
   /** Point estimates for `probes` against every stored key group: the
     * q103 estimate surface ((key, probe, est)) from stored counters alone —

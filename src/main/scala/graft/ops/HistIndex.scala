@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** A persisted equi-width histogram table — the durable quantile-serving
@@ -62,12 +62,6 @@ object HistIndex {
       .groupBy(col("key"), col("bin"))
       .agg(sum(col("cnt")).as("cnt"))
   }
-
-  def write(h: DataFrame, path: String): Unit =
-    h.write.mode("overwrite").parquet(path)
-
-  def read(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
 
   /** Quantile estimates from stored counters alone: for each requested q,
     * the UPPER EDGE of the first bin whose cumulative count reaches

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** A persisted HyperLogLog sketch table — the durable distinct-count
@@ -44,16 +44,6 @@ object HllIndex {
       .groupBy(col("key"))
       .agg(hll_union_agg(col("sk")).as("sk"), sum(col("n_rows")).as("n_rows"))
   }
-
-  /** Persist the sketch table (#keys rows of fixed-size binary state — no
-    * partitioning needed; that is the point of the sketch).
-    */
-  def write(sk: DataFrame, path: String): Unit =
-    sk.write.mode("overwrite").parquet(path)
-
-  /** Load a stored sketch table (scan-only lineage). */
-  def read(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
 
   /** Per-key estimates plus the all-keys union row, from stored sketches
     * alone. Output: (scope, est, n_rows).

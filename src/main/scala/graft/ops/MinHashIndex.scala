@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** A persisted MinHash/LSH signature table — the durable twin of
@@ -19,13 +19,14 @@ import org.apache.spark.sql.functions._
   * serve-path mega-bucket guard consumes is ADDITIVE under append (new docs
   * carry new doc_ids), so it too maintains without a corpus rescan — q209.
   *
-  * On-disk layout: `path/sigs` rows (doc_id, seed, mh) partitioned by
+  * On-disk layout (published through [[SnapTables]], as the catalog's
+  * q421/q422 tables are): `path/sigs` rows (doc_id, seed, mh) partitioned by
   * `db = doc_id mod sigBuckets`; `path/bands` rows (doc_id, band, band_sig)
   * partitioned by `sb = band_sig mod sigBuckets`. The serve path broadcasts
   * probe bands into the (sb, band, band_sig) join, so a selective probe set
   * dynamic-partition-prunes the band-table scan to the buckets its
   * signatures actually hash into — the AnnIndex posting-list discipline
-  * (`ops/AnnIndex.scala:115-123`); the candidate join against `sigs`
+  * ([[AnnIndex.write]]); the candidate join against `sigs`
   * likewise carries the `db` key for pruning.
   */
 object MinHashIndex {
@@ -72,34 +73,6 @@ object MinHashIndex {
     */
   def delete(tbl: DataFrame, removedIds: DataFrame): DataFrame =
     tbl.join(removedIds.select(col("doc_id")), Seq("doc_id"), "left_anti")
-
-  /** Persist signatures + bands under `path`, each partitioned for
-    * serve-side pruning. `prebuiltBands` lets a caller that already holds
-    * the band table (e.g. a materialized shared build) skip the in-write
-    * derivation; it must equal `bandTable(sigs, rowsPerBand)`.
-    */
-  def write(sigs: DataFrame, path: String, rowsPerBand: Int,
-      sigBuckets: Int = DefaultSigBuckets,
-      prebuiltBands: Option[DataFrame] = None): Unit = {
-    // keyed repartition before each partitioned write: file count scales
-    // with the bucket fan-out, not fan-out × write tasks (guide §6)
-    sigs
-      .withColumn("db", pmod(col("doc_id"), lit(sigBuckets.toLong)).cast("int"))
-      .repartition(col("db"))
-      .write.mode("overwrite").partitionBy("db").parquet(s"$path/sigs")
-    prebuiltBands.getOrElse(bandTable(sigs, rowsPerBand))
-      .withColumn("sb", pmod(col("band_sig"), lit(sigBuckets.toLong)).cast("int"))
-      .repartition(col("sb"))
-      .write.mode("overwrite").partitionBy("sb").parquet(s"$path/bands")
-  }
-
-  /** Load the stored signature table (scan-only lineage). */
-  def readSigs(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(s"$path/sigs")
-
-  /** Load the stored band table (scan-only lineage). */
-  def readBands(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(s"$path/bands")
 
   /** Bucket-size side table over a band frame: (band, band_sig, df) with
     * df = number of documents hashing into the bucket — the statistic the

@@ -28,9 +28,10 @@ import org.apache.spark.sql.functions._
   * q124 stance, documented); the scrub error direction is cutting a novel
   * paragraph, never keeping a duplicate.
   *
-  * On-disk layout: partitioned by `hb = h mod hashBuckets` (the
-  * [[WinnowIndex]] / AnnIndex posting-list discipline), so a selective
-  * probe set prunes the table scan to the buckets its hashes touch.
+  * On-disk layout (published through [[SnapTables]]): partitioned by
+  * `hb = h mod hashBuckets` (the [[WinnowIndex]] / AnnIndex posting-list
+  * discipline), so a selective probe set prunes the table scan to the
+  * buckets its hashes touch.
   */
 object ParaIndex {
 
@@ -80,17 +81,6 @@ object ParaIndex {
     tbl.unionByName(
       firstOccurrences(delta, id, text, sep)
         .join(tbl.select(col("h")), Seq("h"), "left_anti"))
-
-  /** Persist partitioned by the h-bucket. */
-  def write(tbl: DataFrame, path: String,
-      hashBuckets: Int = DefaultHashBuckets): Unit =
-    tbl.withColumn("hb", pmod(col("h"), lit(hashBuckets.toLong)).cast("int"))
-      .repartition(col("hb")) // file count scales with fan-out, not × tasks
-      .write.mode("overwrite").partitionBy("hb").parquet(path)
-
-  /** Load a stored table (scan-only lineage). */
-  def read(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
 
   /** Storage-truth document removal for the ELECTED table, published as a
     * [[SnapTables]] generation flip — the one durable family where a bare

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** A persisted SimHash fingerprint table — the durable twin of
@@ -17,8 +17,9 @@ import org.apache.spark.sql.functions._
   * equals a from-scratch rebuild of the union, row for row — q212
   * hash-proves this cross-engine.
   *
-  * On-disk layout: `path/keys` rows (blk, blk_val, doc_id, simhash)
-  * partitioned by `kb = blk_val mod keyBuckets` — the stored simhash rides
+  * On-disk layout (published through [[SnapTables]]): `path/keys` rows
+  * (blk, blk_val, doc_id, simhash) partitioned by
+  * `kb = blk_val mod keyBuckets` — the stored simhash rides
   * IN the key rows so the serve path's Hamming verification needs no
   * second join. The serve path broadcasts probe keys into the
   * (kb, blk, blk_val) join, so a small ingest batch dynamic-partition-
@@ -56,20 +57,6 @@ object SimHashIndex {
           .as("bk"))
       .select(col("bk.blk").as("blk"), col("bk.blk_val").as("blk_val"),
         col("doc_id"), col("simhash"))
-
-  /** Persist the blocked key table under `path`, partitioned for
-    * serve-side pruning.
-    */
-  def write(hashes: DataFrame, path: String, maxHamming: Int, numBlocks: Int,
-      keyBuckets: Int = DefaultKeyBuckets): Unit =
-    keyTable(hashes, maxHamming, numBlocks)
-      .withColumn("kb", pmod(col("blk_val"), lit(keyBuckets.toLong)).cast("int"))
-      .repartition(col("kb")) // file count scales with fan-out, not × tasks
-      .write.mode("overwrite").partitionBy("kb").parquet(s"$path/keys")
-
-  /** Load the stored key table (scan-only lineage). */
-  def readKeys(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(s"$path/keys")
 
   /** Match a probe document batch against the STORED key table — the serve
     * path of a Hamming-distance ingest gate. Probes are fingerprinted with

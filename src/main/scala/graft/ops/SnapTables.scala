@@ -19,13 +19,14 @@ final class SnapConflict(msg: String, cause: Throwable = null)
     extends IllegalStateException(msg, cause)
 
 /** Snapshot-manifest storage for the durable index tables — the one
-  * publication layer of every text-side index family, and the mechanical
-  * fix for the contract an in-place storage-truth rewrite carries as
-  * DOCUMENTATION ONLY ([[AnnIndex.deleteStored]]: "do not serve while the
-  * rewrite runs"). An in-place dynamic partition overwrite deletes the
-  * files a concurrent reader's plan may already hold, so serving during
-  * maintenance is a race; here a rewrite never deletes anything a
-  * published generation references:
+  * publication layer of every index family that changes after its first
+  * publish (the text families, the IVF-PQ codes, the binary-quant code
+  * index), and the mechanical fix for the contract an in-place
+  * storage-truth rewrite can only carry as documentation ("do not serve
+  * while the rewrite runs"). An in-place dynamic partition overwrite
+  * deletes the files a concurrent reader's plan may already hold, so
+  * serving during maintenance is a race; here a rewrite never deletes
+  * anything a published generation references:
   *
   *  - data files live in the ordinary `part=<v>/` directories (one shared
   *    pool; files are immutable once written);
@@ -709,11 +710,10 @@ object SnapTables {
     * append exact makes this delete exact): one semi-join finds the
     * affected partitions, one anti-join rewrites exactly those, and the
     * result publishes as a generation — a concurrent reader of the current
-    * generation is never invalidated. No broadcast hint on the removal set
-    * (the [[AnnIndex.deleteStored]] stance): a typical right-to-be-forgotten
-    * batch broadcasts under AQE on its own; a bulk purge must degrade to a
-    * shuffled join, not OOM. Returns the generation now serving (unchanged
-    * when no stored row matched).
+    * generation is never invalidated. No broadcast hint on the removal set:
+    * a typical right-to-be-forgotten batch broadcasts under AQE on its own;
+    * a bulk purge must degrade to a shuffled join, not OOM. Returns the
+    * generation now serving (unchanged when no stored row matched).
     */
   def deleteByKey(spark: SparkSession, path: String, partCol: String,
       keyCol: String, removedKeys: DataFrame): Int = {

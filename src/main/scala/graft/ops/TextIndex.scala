@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** A persisted BM25 postings index — the durable twin of [[Text.bm25TopK]]
@@ -60,41 +60,6 @@ object TextIndex {
       postings = idx.postings.unionByName(d.postings),
       doclens = idx.doclens.unionByName(d.doclens))
   }
-
-  /** Persist the index; postings partitioned by the token hash-bucket,
-    * doclens by the doc-id bucket — the second partitioning exists for the
-    * DELETE path ([[SnapTables.deleteByKey]], q408/q425): a removal set
-    * touches only its docs' `db` directories, so the length table rewrites
-    * a bounded partition subset instead of the whole (corpus-cardinality)
-    * file set.
-    */
-  def write(idx: Bm25Index, path: String,
-      tokenBuckets: Int = DefaultTokenBuckets): Unit = {
-    // keyed repartition before the partitioned write (the SnapTables
-    // publishInitial discipline): each task holds whole buckets, so the
-    // file count scales with the bucket fan-out instead of fan-out × write
-    // tasks. At volume the bucket count is the file-size dial.
-    idx.postings
-      .withColumn("tb", pmod(Hashing.hash60(col("tok")), lit(tokenBuckets.toLong)).cast("int"))
-      .repartition(col("tb"))
-      .write.mode("overwrite").partitionBy("tb").parquet(s"$path/postings")
-    idx.doclens
-      .withColumn("db", pmod(col("doc_id"), lit(tokenBuckets.toLong)).cast("int"))
-      .repartition(col("db"))
-      .write.mode("overwrite").partitionBy("db").parquet(s"$path/doclens")
-  }
-
-  /** Load a stored index (scan-only lineage). Projected back to the logical
-    * columns so a read index composes with [[append]]'s unions exactly like
-    * a built one (the stored partition columns stay physical-layout
-    * concerns).
-    */
-  def read(spark: SparkSession, path: String): Bm25Index =
-    Bm25Index(
-      postings = spark.read.parquet(s"$path/postings")
-        .select(col("tok"), col("doc_id"), col("tf")),
-      doclens = spark.read.parquet(s"$path/doclens")
-        .select(col("doc_id"), col("dl")))
 
   /** BM25 top-k from the STORED tables alone: postings filtered to the
     * query terms (the filter rides to the scan; on a written index the

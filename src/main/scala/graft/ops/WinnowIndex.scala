@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** A persisted winnowing fingerprint table — the durable twin of
@@ -16,11 +16,12 @@ import org.apache.spark.sql.functions._
   * appending equals a from-scratch rebuild of the union, row for row —
   * q168 hash-proves this cross-engine (the q158 discipline).
   *
-  * On-disk layout: rows are partitioned by `hb = h mod hashBuckets`. The
+  * On-disk layout (published through [[SnapTables]], as the catalog's
+  * q412–q419 tables are): rows partitioned by `hb = h mod hashBuckets`. The
   * serve path joins probe fingerprints to the table on (hb, h) with the
   * probe side broadcast, so a selective probe set dynamic-partition-prunes
   * the table scan to the buckets its hashes actually touch — the AnnIndex
-  * posting-list discipline (`AnnIndex.write`, `ops/AnnIndex.scala:115-123`).
+  * posting-list discipline ([[AnnIndex.write]]).
   */
 object WinnowIndex {
 
@@ -45,17 +46,6 @@ object WinnowIndex {
   def append(fp: DataFrame, delta: DataFrame, id: Column, text: Column,
       k: Int, w: Int): DataFrame =
     fp.unionByName(Dedup.winnowFingerprints(delta, id, text, k, w))
-
-  /** Persist the fingerprint table partitioned by the h-bucket. */
-  def write(fp: DataFrame, path: String,
-      hashBuckets: Int = DefaultHashBuckets): Unit =
-    fp.withColumn("hb", pmod(col("h"), lit(hashBuckets.toLong)).cast("int"))
-      .repartition(col("hb")) // file count scales with fan-out, not × tasks
-      .write.mode("overwrite").partitionBy("hb").parquet(path)
-
-  /** Load a stored fingerprint table (scan-only lineage). */
-  def read(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
 
   /** Document-frequency side table over the stored fingerprints:
     * (h, df) with df = number of documents carrying hash h. This is the

@@ -2173,8 +2173,9 @@ object PipelineQueries {
     // batch against the FROZEN stored base model into batch_id-partitioned
     // delta parquet. The query then serves top-k over stored base ∪ re-read
     // streamed delta. Oracle: base-trained full-candidate serve — the SAME
-    // SQL as q399's compacted serve, which is the invariant: the streaming
-    // transport changes where the codes live, never what serves.
+    // SQL as q399/q420's streamed snapshot serve, which is the invariant:
+    // the streaming transport changes where the codes live, never what
+    // serves.
     QueryDef(
       "q400_ann_stream_union_serve",
       (s, dir) => {
@@ -2192,27 +2193,22 @@ object PipelineQueries {
 
     // LIFECYCLE CAPSTONE — the whole operational story of a production
     // vector index composed into ONE stored artifact and certified by ONE
-    // hash: train-once on the 6/7 base (frozen model), ingest the 1/7 delta
-    // through the ACTUAL maintenance stream (≥2 micro-batches, batch_id
-    // partitions), COMPACT the delta into the cluster layout (no batch_id
-    // residue), REWRITE the %11 right-to-be-forgotten set out of the stored
-    // bytes, and serve top-k scan-only from what remains. Each leg is
-    // individually hash-proved (q394/q400 ingest, q399 compact, q398
-    // delete, q393 serve); what this row adds is their COMPOSITION — the
-    // oracle (base-trained model, survivors-only candidates over the full
-    // corpus) would catch any interaction bug between legs: a compaction
-    // that resurrects a deleted vector, a delete that drops a streamed one,
-    // a batch partition the compact missed. The serve plan keeps the q393
-    // production shape (PlanSpec: scan-only + probed-cell DPP).
+    // hash: train-once on the 6/7 base (frozen model) and publish its codes
+    // as a snapshot, ingest the 1/7 delta through an ACTUAL stream (≥2
+    // micro-batches, one generation each), COMPACT the per-batch files,
+    // DELETE the %11 right-to-be-forgotten set as a generation flip, and
+    // serve top-k scan-only from what remains. Each leg is individually
+    // hash-proved (q420 ingest + compaction, q413 delete, q393 serve); what
+    // this row adds is their COMPOSITION — the oracle (base-trained model,
+    // survivors-only candidates over the full corpus) would catch any
+    // interaction bug between legs: a compaction that resurrects a deleted
+    // vector, a delete that drops a streamed one, a batch the compaction
+    // missed. The serve plan keeps the q393 production shape (PlanSpec:
+    // scan-only + probed-cell DPP).
     QueryDef(
       "q403_ann_lifecycle_e2e",
-      (s, dir) => {
-        val emb = Tables.load(s, dir, "embeddings")
-        val idx = graft.ops.AnnIndex.read(s, lifecycleIndexPath(s, dir))
-        val queries = emb.where(pmod(col("vec_id"), lit(10)) === 0)
-        graft.ops.AnnIndex.search(queries, col("vec_id"), col("embedding"), 3,
-          idx, nprobe = 2)
-      },
+      (s, dir) => SimilarityQueries.annSnapServe(s, dir,
+        lifecycleIndexPath(s, dir)),
       Some(SimilarityQueries.duckSqrtnServeOracle(
         candFilter = "\n    AND b.vec_id % 11 <> 0", trainOnBase = true))),
 
@@ -2540,64 +2536,49 @@ object PipelineQueries {
        |WHERE NOT EXISTS (SELECT 1 FROM phit h WHERE h.doc_id = d.doc_id)""".stripMargin
   }
 
-  /** Once-per-JVM streamed codes delta per sfDir: the 1/7 split written to a
-    * scratch parquet dir (2 files), streamed back one file per micro-batch
-    * through [[graft.streaming.Pipelines.annIndexMaintenance]] against the
-    * frozen q394 base model, landing batch_id-partitioned posting rows at
-    * the returned path. Deterministic (frozen model, per-row encode), so the
+  /** Once-per-JVM streamed codes delta per sfDir: the 1/7 split staged as
+    * a 2-file scratch parquet source, streamed back one file per
+    * micro-batch (AvailableNow ⇒ ≥2 real batches) through
+    * [[graft.streaming.Pipelines.annIndexMaintenance]] against the frozen
+    * q394 base model, landing batch_id-partitioned posting rows at the
+    * returned path. Deterministic (frozen model, per-row encode), so the
     * memoization is correctness-neutral; warm runs of q400 measure the
     * union-serve read side, the production shape.
     */
   private def streamedDeltaPath(s: org.apache.spark.sql.SparkSession,
       dir: String): String =
-    SimilarityQueries.memoPath("streamdelta", dir)(streamDeltaInto(s, dir, _))
+    SimilarityQueries.memoPath("streamdelta", dir) { deltaPath =>
+      val idx = graft.ops.AnnIndex.read(s,
+        SimilarityQueries.sqrtnBaseIndexPath(s, dir))
+      val srcDir = graft.Scratch.dir("graft-ann-stream-src")
+      Tables.load(s, dir, "embeddings")
+        .where(pmod(col("vec_id"), lit(7)) === 0)
+        .select(col("vec_id"), col("embedding"))
+        .repartition(2).write.mode("overwrite").parquet(srcDir)
+      val stream = s.readStream
+        .schema("vec_id BIGINT, embedding ARRAY<FLOAT>")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(srcDir)
+      graft.streaming.Pipelines.annIndexMaintenance(stream,
+        col("vec_id"), col("embedding"), idx, deltaPath,
+        checkpointPath = graft.Scratch.dir("graft-ann-stream-ckpt"),
+        trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .awaitTermination()
+    }
 
-  /** Run the ACTUAL maintenance stream once: the 1/7 split staged as a
-    * 2-file scratch parquet source, streamed back one file per micro-batch
-    * (AvailableNow ⇒ ≥2 real batches) through
-    * [[graft.streaming.Pipelines.annIndexMaintenance]] against the frozen
-    * q394 base model, landing batch_id-partitioned posting rows at
-    * `deltaPath`. Shared by the union-serve leg (q400, which READS the
-    * accreted delta) and the lifecycle capstone (q403, which COMPACTS it).
-    */
-  private def streamDeltaInto(s: org.apache.spark.sql.SparkSession,
-      dir: String, deltaPath: String): Unit = {
-    val idx = graft.ops.AnnIndex.read(s,
-      SimilarityQueries.sqrtnBaseIndexPath(s, dir))
-    val srcDir = graft.Scratch.dir("graft-ann-stream-src")
-    Tables.load(s, dir, "embeddings")
-      .where(pmod(col("vec_id"), lit(7)) === 0)
-      .select(col("vec_id"), col("embedding"))
-      .repartition(2).write.mode("overwrite").parquet(srcDir)
-    val stream = s.readStream
-      .schema("vec_id BIGINT, embedding ARRAY<FLOAT>")
-      .option("maxFilesPerTrigger", 1)
-      .parquet(srcDir)
-    val q = graft.streaming.Pipelines.annIndexMaintenance(stream,
-      col("vec_id"), col("embedding"), idx, deltaPath,
-      checkpointPath = graft.Scratch.dir("graft-ann-stream-ckpt"),
-      trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow())
-    q.awaitTermination()
-  }
-
-  /** The q403 stored index: the WHOLE lifecycle composed — a fresh clone of
-    * the frozen 6/7 base model, the 1/7 delta ingested through the actual
-    * maintenance stream, the batch_id delta COMPACTED into the cluster
-    * layout, then the %11 removal set REWRITTEN out of storage. Every leg
-    * is individually hash-proved (q394/q400, q399, q398); this path is
-    * their composition, so q403's single hash certifies the interactions.
+  /** The q403 snapshot index: the WHOLE lifecycle composed — q420's
+    * streamed snapshot (frozen 6/7 base model, base codes as gen 0, the 1/7
+    * delta streamed in as one generation per micro-batch, then compacted),
+    * and the %11 removal set deleted from it as one more generation.
     */
   private def lifecycleIndexPath(s: org.apache.spark.sql.SparkSession,
       dir: String): String =
     SimilarityQueries.memoPath("lifecycle", dir) { p =>
-      graft.ops.AnnIndex.write(
-        graft.ops.AnnIndex.read(s, SimilarityQueries.sqrtnBaseIndexPath(s, dir)), p)
-      val deltaDir = graft.Scratch.dir("graft-ann-lifecycle-delta")
-      streamDeltaInto(s, dir, deltaDir)
-      graft.ops.AnnIndex.compact(s, p, deltaDir)
-      val removed = Tables.load(s, dir, "embeddings")
-        .where(pmod(col("vec_id"), lit(11)) === 0)
-        .select(col("vec_id").as("vid"))
-      graft.ops.AnnIndex.deleteStored(s, p, removed)
+      SimilarityQueries.publishStreamedAnnSnap(s, dir, p)
+      graft.ops.SnapTables.deleteByKey(s, s"$p/codes", "cluster", "vid",
+        Tables.load(s, dir, "embeddings")
+          .where(pmod(col("vec_id"), lit(11)) === 0)
+          .select(col("vec_id").as("vid")))
+      ()
     }
 }

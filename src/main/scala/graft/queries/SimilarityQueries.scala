@@ -1857,19 +1857,14 @@ object SimilarityQueries {
     // append==rebuild law proved THROUGH STORAGE and the full serve funnel
     // (the q394 discipline): thresholds train on the 6/7 base and persist
     // frozen; the 1/7 delta encodes per row against the RE-READ stored
-    // model and its code rows land in their bucket partitions via
-    // append-mode write; the funnel over the appended bytes must equal the
-    // oracle's one-pass base-trained coding of the union — including every
-    // Hamming screen and rerank decision downstream of the codes.
+    // model and its code rows land in their bucket partitions; the funnel
+    // over the appended table must equal the oracle's one-pass base-trained
+    // coding of the union — including every Hamming screen and rerank
+    // decision downstream of the codes. Served through q433's snapshot
+    // append, the one append path the index keeps.
     QueryDef(
       "q411_bq_persisted_append_serve",
-      (s, dir) => {
-        val emb = Tables.load(s, dir, "embeddings")
-        graft.ops.BinaryQuant.serveStored(s, bqAppendedIndexPath(s, dir),
-          emb, col("vec_id"), col("embedding"),
-          emb, col("vec_id"), col("embedding"),
-          k = 5, screenR = 20, numPlanes = 8)
-      },
+      bqSnapAppend,
       Some(duckBqFunnelOracle(
         "(SELECT * FROM embeddings WHERE vec_id % 7 <> 0) bqb"))),
 
@@ -1897,25 +1892,16 @@ object SimilarityQueries {
       },
       Some(duckBqFunnelOracle(nbFilter = " WHERE vec_id % 11 <> 0"))),
 
-    // BINARY-QUANT snapshot APPEND — q411's frozen-model append published
+    // BINARY-QUANT snapshot APPEND — the frozen-model append published
     // as a generation: thresholds train on the 6/7 base and persist; the
     // delta encodes per row against the RE-READ stored model and lands
     // delta-only in its bb buckets via SnapTables.appendPartitions. The
     // funnel over the appended generation must equal the oracle's one-pass
-    // base-trained coding of the union (q246's law, third publication
-    // path).
+    // base-trained coding of the union (q246's law through storage; q411
+    // runs this same function).
     QueryDef(
       "q433_bq_snapshot_append",
-      (s, dir) => {
-        val emb = Tables.load(s, dir, "embeddings")
-        val p = bqSnapAddPath(s, dir)
-        graft.ops.BinaryQuant.serveFrames(s,
-          graft.ops.BinaryQuant.readThresholds(s, p),
-          graft.ops.SnapTables.resolve(s, s"$p/index", "bb"),
-          emb, col("vec_id"), col("embedding"),
-          emb, col("vec_id"), col("embedding"),
-          k = 5, screenR = 20, numPlanes = 8)
-      },
+      bqSnapAppend,
       Some(duckBqFunnelOracle(
         "(SELECT * FROM embeddings WHERE vec_id % 7 <> 0) bqb"))),
 
@@ -2505,27 +2491,19 @@ object SimilarityQueries {
     // STORED delete — q396's semantics made true in the BYTES: q396
     // anti-joins the in-memory codes frame (the stored parquet still holds
     // every removed vector's rows — a right-to-be-forgotten deployment
-    // cannot stop there), this leg clones the stored index, REWRITES the
-    // affected cluster partitions via dynamic partition overwrite
-    // (AnnIndex.deleteStored — I/O bounded by the cells holding removals,
-    // never the corpus), and the query serves from a RE-READ of the
-    // rewritten tables alone: scan-only plan, ranks re-closed over the
-    // survivors. Same survivors-only oracle as q396 — identical output
-    // through a storage path that actually forgot. AnnIndexSpec additionally
-    // asserts the removed vids are absent from the re-read parquet itself
-    // and unaffected partitions keep their original files.
+    // cannot stop there); this leg rewrites the cluster partitions holding
+    // removals (I/O bounded by those cells, never the corpus) and serves
+    // from the rewritten tables alone: scan-only plan, ranks re-closed over
+    // the survivors. Served through q413's snapshot delete. Same
+    // survivors-only oracle as q396. AnnIndexSpec additionally asserts the
+    // removed vids leave every parquet file once the old generation
+    // expires, and unaffected partitions keep their original files.
     QueryDef(
       "q398_ivfpq_stored_delete",
-      (s, dir) => {
-        val emb = Tables.load(s, dir, "embeddings")
-        val idx = graft.ops.AnnIndex.read(s, deletedIndexPath(s, dir))
-        val queries = emb.where(pmod(col("vec_id"), lit(10)) === 0)
-        graft.ops.AnnIndex.search(queries, col("vec_id"), col("embedding"), 3,
-          idx, nprobe = 2)
-      },
+      annSnapDelete,
       Some(duckSqrtnServeOracle("\n    AND b.vec_id % 11 <> 0"))),
 
-    // SNAPSHOT-isolated ANN delete — q398's storage rewrite under the
+    // SNAPSHOT-isolated ANN delete — the storage-truth delete under the
     // SnapTables manifest layer, carrying the FLAGSHIP family's posting
     // lists into the serve-during-rewrite guarantee: the delete appends
     // survivor files for the affected cluster partitions only and
@@ -2537,23 +2515,11 @@ object SimilarityQueries {
     // rewrite publishes must be invisible in WHAT serves.
     QueryDef(
       "q413_ivfpq_snapshot_delete",
-      (s, dir) => {
-        val p = snapshotIndexPath(s, dir)
-        val idx = graft.ops.IvfPqIndex(
-          centroids = s.read.parquet(s"$p/centroids"),
-          codebooks = s.read.parquet(s"$p/codebooks"),
-          codes = graft.ops.SnapTables.resolve(s, s"$p/codes", "cluster")
-            .select(col("vid"), col("cluster"), col("codes")),
-          dims = 64, m = 8, codewords = 16)
-        val emb = Tables.load(s, dir, "embeddings")
-        val queries = emb.where(pmod(col("vec_id"), lit(10)) === 0)
-        graft.ops.AnnIndex.search(queries, col("vec_id"), col("embedding"), 3,
-          idx, nprobe = 2)
-      },
+      annSnapDelete,
       Some(duckSqrtnServeOracle("\n    AND b.vec_id % 11 <> 0"))),
 
     // SNAPSHOT STREAMED INGEST for the flagship family — the architectural
-    // alternative to the batch_id-delta + compact loop (q400/q399): each
+    // alternative to q400's stored ∪ batch_id-delta serve: each
     // micro-batch's frozen-model encode publishes DIRECTLY into the
     // cluster-partitioned codes snapshot as one atomic generation
     // (Pipelines.snapshotIngest → SnapTables.appendBatch), so the serve is
@@ -2563,54 +2529,35 @@ object SimilarityQueries {
     // the per-batch file accretion afterwards as a content-invariant
     // generation), and a reader holds its generation through every batch.
     // Exactly-once rides the manifest's #batch high-water mark
-    // (SnapTablesSpec). Oracle: q399's base-trained full-candidate chain —
+    // (SnapTablesSpec). Oracle: the base-trained full-candidate chain —
     // streamed snapshot ingest must equal the batch rebuild through the
     // whole probe + LUT + ADC funnel.
     QueryDef(
       "q420_ann_snapshot_stream_ingest",
-      (s, dir) => {
-        val p = annStreamSnapPath(s, dir)
-        val idx = graft.ops.IvfPqIndex(
-          centroids = s.read.parquet(s"$p/centroids"),
-          codebooks = s.read.parquet(s"$p/codebooks"),
-          codes = graft.ops.SnapTables.resolve(s, s"$p/codes", "cluster")
-            .select(col("vid"), col("cluster"), col("codes")),
-          dims = 64, m = 8, codewords = 16)
-        val emb = Tables.load(s, dir, "embeddings")
-        val queries = emb.where(pmod(col("vec_id"), lit(10)) === 0)
-        graft.ops.AnnIndex.search(queries, col("vec_id"), col("embedding"), 3,
-          idx, nprobe = 2)
-      },
+      annStreamSnapServe,
       Some(duckSqrtnServeOracle(trainOnBase = true))),
 
-    // COMPACTED serve — the streaming-maintenance follow-through: the
-    // maintenance loop accretes one batch_id partition per micro-batch
-    // OUTSIDE the cluster layout, so probes lose partition pruning on the
-    // delta side; AnnIndex.compact folds the delta into the
-    // cluster-partitioned posting lists (upsert, affected cells only,
-    // delta consumed) and the serve regains the q393 scan-only + DPP shape
-    // over the WHOLE corpus (PlanSpec pins it). Model trained on the 6/7
-    // base (q394's split); delta = the 1/7 ingest, encoded frozen, landed
-    // as two batch partitions, compacted. Oracle: the q391 serve chain with
-    // base-trained model over full candidates — identical to q400's, which
-    // is the point: compacted storage and stored∪delta must serve the same
-    // answers.
+    // COMPACTED serve — the streaming-maintenance follow-through: a
+    // streamed ingest accretes small per-batch files, and the compacted
+    // table must serve the q393 scan-only + DPP shape over the WHOLE corpus
+    // (PlanSpec pins it). Model trained on the 6/7 base (q394's split);
+    // delta = the 1/7 ingest, encoded frozen over two micro-batches, then
+    // compacted. Served through q420's streamed snapshot ingest, which
+    // compacts with SnapTables.compactPartitions. Oracle: the q391 serve
+    // chain with base-trained model over full candidates — identical to
+    // q400's, which is the point: compacted storage and stored ∪ delta
+    // must serve the same answers.
     QueryDef(
       "q399_ivfpq_compacted_serve",
-      (s, dir) => {
-        val emb = Tables.load(s, dir, "embeddings")
-        val idx = graft.ops.AnnIndex.read(s, compactedIndexPath(s, dir))
-        val queries = emb.where(pmod(col("vec_id"), lit(10)) === 0)
-        graft.ops.AnnIndex.search(queries, col("vec_id"), col("embedding"), 3,
-          idx, nprobe = 2)
-      },
+      annStreamSnapServe,
       Some(duckSqrtnServeOracle(trainOnBase = true))),
 
     // RETRAIN TRIGGER — the operational decision q397's metric exists for:
     // under a FROZEN base-trained model (6/7 split), drifted ingest encodes
     // with growing reconstruction error; this audits the compacted index
-    // (base + frozen-encoded delta in one stored table), splits the
-    // per-vector errors into base/delta cohorts, and emits per-cohort
+    // (base + frozen-encoded delta in one stored table — q420's streamed
+    // snapshot, the table q399 serves), splits the per-vector errors into
+    // base/delta cohorts, and emits per-cohort
     // coverage (n_indexed vs n_audited — the audit silently EXCLUDES
     // corrupt-coded vectors, so shrinkage is itself a signal) plus exact
     // nearest-rank p50/p90 error quantiles (the q153 recipe per cohort) and
@@ -2623,7 +2570,7 @@ object SimilarityQueries {
       (s, dir) => {
         val W = org.apache.spark.sql.expressions.Window
         val emb = Tables.load(s, dir, "embeddings")
-        val idx = graft.ops.AnnIndex.read(s, compactedIndexPath(s, dir))
+        val idx = annSnapIndex(s, annStreamSnapPath(s, dir))
         val cohortOf = (vid: org.apache.spark.sql.Column) =>
           when(pmod(vid, lit(7)) === 0, lit("delta")).otherwise(lit("base"))
         val ranked = graft.ops.AnnIndex
@@ -2793,7 +2740,7 @@ object SimilarityQueries {
     val cur = persistedIdxPaths.get(key)
     if (cur != null) return cur
     // setup runs under a PER-KEY monitor, NOT map-level computeIfAbsent:
-    // setups nest (deleted→full, compacted/lifecycle→base index), and
+    // setups nest (annsnap→full, annstreamsnap/lifecycle→base index), and
     // ConcurrentHashMap.computeIfAbsent forbids recursive updates of the
     // same map (IllegalStateException when the nested key lands in the
     // in-progress bin). The per-key lock keeps Verify's parallel workers
@@ -2831,9 +2778,9 @@ object SimilarityQueries {
       build: => graft.ops.IvfPqIndex): String =
     memoPath(tag, dir)(p => graft.ops.AnnIndex.write(build, p))
 
-  // Shared BQ master builds (memoFrame): the stored and snapshot legs of
-  // each BQ lifecycle encode the same corpus against the same frozen
-  // thresholds — encode once per JVM, publish twice.
+  // Shared BQ master build (memoFrame): the stored serve (q410) and the
+  // snapshot delete (q432) encode the same corpus against the same
+  // full-corpus thresholds — encode once per JVM, publish twice.
 
   private def bqThrFull(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
@@ -2849,23 +2796,6 @@ object SimilarityQueries {
         col("vec_id"), col("embedding"), bqThrFull(s, dir), numPlanes = 8)
     }
 
-  private def bqThrBase(s: org.apache.spark.sql.SparkSession,
-      dir: String): org.apache.spark.sql.DataFrame =
-    memoFrame("bqthrbase", dir, s) {
-      graft.ops.BinaryQuant.thresholds(
-        Tables.load(s, dir, "embeddings")
-          .where(pmod(col("vec_id"), lit(7)) =!= 0), col("embedding"))
-    }
-
-  private def bqRowsBase(s: org.apache.spark.sql.SparkSession,
-      dir: String): org.apache.spark.sql.DataFrame =
-    memoFrame("bqrowsbase", dir, s) {
-      graft.ops.BinaryQuant.indexRows(
-        Tables.load(s, dir, "embeddings")
-          .where(pmod(col("vec_id"), lit(7)) =!= 0),
-        col("vec_id"), col("embedding"), bqThrBase(s, dir), numPlanes = 8)
-    }
-
   /** The q410 stored BQ index: full-corpus thresholds + codes at q227's
     * sizing (numPlanes = 8), persisted — from the shared master build.
     */
@@ -2874,21 +2804,6 @@ object SimilarityQueries {
     memoPath("bqfull", dir) { p =>
       graft.ops.BinaryQuant.writeFrames(bqThrFull(s, dir),
         bqRowsFull(s, dir), p)
-    }
-
-  /** The q411 stored BQ index: thresholds trained on the 6/7 base and
-    * frozen; the 1/7 delta encoded against the RE-READ stored model and
-    * appended into the stored bucket partitions.
-    */
-  private def bqAppendedIndexPath(s: org.apache.spark.sql.SparkSession,
-      dir: String): String =
-    memoPath("bqappend", dir) { p =>
-      val emb = Tables.load(s, dir, "embeddings")
-      graft.ops.BinaryQuant.writeFrames(bqThrBase(s, dir),
-        bqRowsBase(s, dir), p)
-      graft.ops.BinaryQuant.appendStored(s, p,
-        emb.where(pmod(col("vec_id"), lit(7)) === 0),
-        col("vec_id"), col("embedding"), numPlanes = 8)
     }
 
   /** q432: full-corpus BQ index published through SnapTables, %11 removal
@@ -2909,23 +2824,39 @@ object SimilarityQueries {
       ()
     }
 
-  /** q433: base-trained frozen model, base index published as gen 0, the
-    * delta encoded against the RE-READ stored model and appended as gen 1.
+  /** q411/q433: thresholds trained on the 6/7 base and stored frozen; the
+    * base index, coded against the RE-READ stored model, published as
+    * gen 0, and the 1/7 delta coded the same way and appended as gen 1.
     */
   private def bqSnapAddPath(s: org.apache.spark.sql.SparkSession,
       dir: String): String =
     memoPath("bqsnapadd", dir) { p =>
       val emb = Tables.load(s, dir, "embeddings")
-      bqThrBase(s, dir).write.mode("overwrite").parquet(s"$p/thr")
+      val isDelta = pmod(col("vec_id"), lit(7)) === 0
+      graft.ops.BinaryQuant.thresholds(emb.where(!isDelta), col("embedding"))
+        .write.mode("overwrite").parquet(s"$p/thr")
+      def rows(part: org.apache.spark.sql.DataFrame) =
+        graft.ops.BinaryQuant.indexRows(part, col("vec_id"), col("embedding"),
+          graft.ops.BinaryQuant.readThresholds(s, p), numPlanes = 8)
       graft.ops.SnapTables.publishInitial(s, s"$p/index", "bb",
-        bqRowsBase(s, dir))
+        rows(emb.where(!isDelta)))
       graft.ops.SnapTables.appendPartitions(s, s"$p/index", "bb",
-        graft.ops.BinaryQuant.indexRows(
-          emb.where(pmod(col("vec_id"), lit(7)) === 0),
-          col("vec_id"), col("embedding"),
-          graft.ops.BinaryQuant.readThresholds(s, p), numPlanes = 8))
+        rows(emb.where(isDelta)))
       ()
     }
+
+  /** The q227 funnel served from the q433 snapshot (q411 and q433). */
+  private def bqSnapAppend(s: org.apache.spark.sql.SparkSession,
+      dir: String): org.apache.spark.sql.DataFrame = {
+    val emb = Tables.load(s, dir, "embeddings")
+    val p = bqSnapAddPath(s, dir)
+    graft.ops.BinaryQuant.serveFrames(s,
+      graft.ops.BinaryQuant.readThresholds(s, p),
+      graft.ops.SnapTables.resolve(s, s"$p/index", "bb"),
+      emb, col("vec_id"), col("embedding"),
+      emb, col("vec_id"), col("embedding"),
+      k = 5, screenR = 20, numPlanes = 8)
+  }
 
   /** The full-corpus √N-cell (k=22, iters=2) coarse quantizer the q393 and
     * q435 persisted indexes both train — byte-identical between them (same
@@ -2980,26 +2911,10 @@ object SimilarityQueries {
         coarse, dims = 64, m = 8, k = 16, iters = 1)
     }
 
-  /** The q398 stored index: a fresh clone of [[sqrtnIndexPath]]'s tables
-    * (the shared memoized index must stay intact for q393/q396/q397) with
-    * the %11 removal set REWRITTEN OUT of the cloned storage — affected
-    * cluster partitions only, via [[graft.ops.AnnIndex.deleteStored]].
-    */
-  private def deletedIndexPath(s: org.apache.spark.sql.SparkSession,
-      dir: String): String =
-    memoPath("deleted", dir) { p =>
-      graft.ops.AnnIndex.write(
-        graft.ops.AnnIndex.read(s, sqrtnIndexPath(s, dir)), p)
-      val removed = Tables.load(s, dir, "embeddings")
-        .where(pmod(col("vec_id"), lit(11)) === 0)
-        .select(col("vec_id").as("vid"))
-      graft.ops.AnnIndex.deleteStored(s, p, removed)
-    }
-
-  /** The q413 snapshot index: the q391 model tables copied as-is (immutable
-    * under delete), the codes table PUBLISHED through the [[graft.ops.SnapTables]]
-    * manifest layer, and the %11 removal rewritten as a snapshot-isolated
-    * generation flip instead of an in-place overwrite.
+  /** The q398/q413 snapshot index: the q391 model tables copied as-is
+    * (immutable under delete), the codes table PUBLISHED through the
+    * [[graft.ops.SnapTables]] manifest layer, and the %11 removal rewritten
+    * as a snapshot-isolated generation flip.
     */
   private def snapshotIndexPath(s: org.apache.spark.sql.SparkSession,
       dir: String): String =
@@ -3015,64 +2930,77 @@ object SimilarityQueries {
       ()
     }
 
-  /** The q420 snapshot index: the FROZEN 6/7-trained model tables cloned
-    * as-is, the base codes published as gen 0 of a cluster-partitioned
-    * snapshot, the 1/7 delta streamed through
-    * [[graft.streaming.Pipelines.snapshotIngest]] (2 source files → 2 real
-    * micro-batches, each encoded frozen inside `foreachBatch` and published
-    * as one generation), then the per-batch file accretion folded by
-    * [[graft.ops.SnapTables.compactPartitions]].
-    */
+  /** The q399/q401/q420 snapshot index. */
   private def annStreamSnapPath(s: org.apache.spark.sql.SparkSession,
       dir: String): String =
-    memoPath("annstreamsnap", dir) { p =>
-      val base = graft.ops.AnnIndex.read(s, sqrtnBaseIndexPath(s, dir))
-      base.centroids.write.mode("overwrite").parquet(s"$p/centroids")
-      base.codebooks.write.mode("overwrite").parquet(s"$p/codebooks")
-      graft.ops.SnapTables.publishInitial(s, s"$p/codes", "cluster", base.codes)
-      val srcDir = graft.Scratch.dir("graft-ann-snap-src")
-      Tables.load(s, dir, "embeddings")
-        .where(pmod(col("vec_id"), lit(7)) === 0)
-        .select(col("vec_id"), col("embedding"))
-        .repartition(2).write.mode("overwrite").parquet(srcDir)
-      // the model rides FROZEN in the foreachBatch closure (the
-      // annIndexMaintenance stance — a mid-stream retrain is structurally
-      // impossible); codes=null: encode never touches them
-      val frozen = base.copy(codes = null)
-      graft.streaming.Pipelines.snapshotIngest(
-        s.readStream.schema("vec_id BIGINT, embedding ARRAY<FLOAT>")
-          .option("maxFilesPerTrigger", 1).parquet(srcDir),
-        s"$p/codes", "cluster",
-        checkpointPath = graft.Scratch.dir("graft-ann-snap-ckpt"),
-        xform = b => graft.ops.AnnIndex.encode(b, col("vec_id"),
-          col("embedding"), frozen))
-        .awaitTermination()
-      graft.ops.SnapTables.compactPartitions(s, s"$p/codes", "cluster")
-      ()
-    }
+    memoPath("annstreamsnap", dir)(publishStreamedAnnSnap(s, dir, _))
 
-  /** The q399/q401 stored index: a fresh clone of the q394 base index
-    * (6/7-trained frozen model; [[sqrtnBaseIndexPath]] itself must stay
-    * intact for q394), the 1/7 delta encoded frozen and landed as TWO
-    * batch_id partitions (the maintenance stream's on-disk accretion
-    * shape), then folded into the cluster layout via
-    * [[graft.ops.AnnIndex.compact]] — one directory per cluster, no
-    * batch_id residue, delta consumed.
+  /** Publish the streamed-ingest ANN snapshot under `p`: the FROZEN
+    * 6/7-trained model tables cloned as-is, the base codes published as
+    * gen 0 of a cluster-partitioned snapshot, the 1/7 delta streamed
+    * through [[graft.streaming.Pipelines.snapshotIngest]] (2 source files →
+    * 2 real micro-batches, each encoded frozen inside `foreachBatch` and
+    * published as one generation), then the per-batch file accretion
+    * folded by [[graft.ops.SnapTables.compactPartitions]]. Shared by q420's
+    * table and the q403 lifecycle table, which deletes on top of it.
     */
-  private def compactedIndexPath(s: org.apache.spark.sql.SparkSession,
-      dir: String): String =
-    memoPath("compacted", dir) { p =>
-      val base = graft.ops.AnnIndex.read(s, sqrtnBaseIndexPath(s, dir))
-      graft.ops.AnnIndex.write(base, p)
-      val emb = Tables.load(s, dir, "embeddings")
-      val delta = emb.where(pmod(col("vec_id"), lit(7)) === 0)
-      val deltaDir = graft.Scratch.dir("graft-ivfpq-delta")
-      graft.ops.AnnIndex.encode(delta, col("vec_id"), col("embedding"), base)
-        .withColumn("batch_id", pmod(col("vid"), lit(2)).cast("long"))
-        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id").parquet(deltaDir)
-      graft.ops.AnnIndex.compact(s, p, deltaDir)
-    }
+  private[queries] def publishStreamedAnnSnap(
+      s: org.apache.spark.sql.SparkSession, dir: String, p: String): Unit = {
+    val base = graft.ops.AnnIndex.read(s, sqrtnBaseIndexPath(s, dir))
+    base.centroids.write.mode("overwrite").parquet(s"$p/centroids")
+    base.codebooks.write.mode("overwrite").parquet(s"$p/codebooks")
+    graft.ops.SnapTables.publishInitial(s, s"$p/codes", "cluster", base.codes)
+    val srcDir = graft.Scratch.dir("graft-ann-snap-src")
+    Tables.load(s, dir, "embeddings")
+      .where(pmod(col("vec_id"), lit(7)) === 0)
+      .select(col("vec_id"), col("embedding"))
+      .repartition(2).write.mode("overwrite").parquet(srcDir)
+    // the model rides FROZEN in the foreachBatch closure (the
+    // annIndexMaintenance stance — a mid-stream retrain is structurally
+    // impossible); codes=null: encode never touches them
+    val frozen = base.copy(codes = null)
+    graft.streaming.Pipelines.snapshotIngest(
+      s.readStream.schema("vec_id BIGINT, embedding ARRAY<FLOAT>")
+        .option("maxFilesPerTrigger", 1).parquet(srcDir),
+      s"$p/codes", "cluster",
+      checkpointPath = graft.Scratch.dir("graft-ann-snap-ckpt"),
+      xform = b => graft.ops.AnnIndex.encode(b, col("vec_id"),
+        col("embedding"), frozen))
+      .awaitTermination()
+    graft.ops.SnapTables.compactPartitions(s, s"$p/codes", "cluster")
+  }
+
+  /** An [[graft.ops.IvfPqIndex]] over a snapshot-published index at `p`:
+    * the model tables as plain parquet (immutable), the codes as the
+    * current generation of the cluster-partitioned snapshot.
+    */
+  private def annSnapIndex(s: org.apache.spark.sql.SparkSession,
+      p: String): graft.ops.IvfPqIndex =
+    graft.ops.IvfPqIndex(
+      centroids = s.read.parquet(s"$p/centroids"),
+      codebooks = s.read.parquet(s"$p/codebooks"),
+      codes = graft.ops.SnapTables.resolve(s, s"$p/codes", "cluster")
+        .select(col("vid"), col("cluster"), col("codes")),
+      dims = 64, m = 8, codewords = 16)
+
+  /** The √N serve (every 10th vector probes for its top-3 at nprobe = 2)
+    * over the snapshot-published index at `p`.
+    */
+  private[queries] def annSnapServe(s: org.apache.spark.sql.SparkSession,
+      dir: String, p: String): org.apache.spark.sql.DataFrame = {
+    val emb = Tables.load(s, dir, "embeddings")
+    val queries = emb.where(pmod(col("vec_id"), lit(10)) === 0)
+    graft.ops.AnnIndex.search(queries, col("vec_id"), col("embedding"), 3,
+      annSnapIndex(s, p), nprobe = 2)
+  }
+
+  private def annSnapDelete(s: org.apache.spark.sql.SparkSession,
+      dir: String): org.apache.spark.sql.DataFrame =
+    annSnapServe(s, dir, snapshotIndexPath(s, dir))
+
+  private def annStreamSnapServe(s: org.apache.spark.sql.SparkSession,
+      dir: String): org.apache.spark.sql.DataFrame =
+    annSnapServe(s, dir, annStreamSnapPath(s, dir))
 
   /** The shared q391/q393/q396 oracle: unrolled k=22/2-iteration k-means
     * coarse quantizer, residual PQ, probe + LUT + ADC chain — identical

@@ -117,10 +117,11 @@ object Pipelines {
     * Operational contract: `deltaPath` and `checkpointPath` are created and
     * cleared TOGETHER (a fresh checkpoint over a deltaPath holding other
     * batches' partitions fails fast at batch 0 — see the in-batch guard);
-    * and the delta accretes one batch_id partition per micro-batch, so fold
-    * it into the cluster layout periodically with
-    * [[graft.ops.AnnIndex.compact]] (between stream runs) to keep the
-    * serve path's partition pruning (q399/q400).
+    * and the delta accretes one batch_id partition per micro-batch outside
+    * the cluster layout, so its side of the union serve (q400) gets no
+    * partition pruning. A table that must stay cluster-pruned as it grows
+    * ingests through [[snapshotIngest]] instead (q420), whose per-batch
+    * files [[graft.ops.SnapTables.compactPartitions]] folds.
     */
   def annIndexMaintenance(
       vectors: DataFrame,
@@ -137,19 +138,18 @@ object Pipelines {
       .trigger(trigger)
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         // The ownership marker is maintained on EVERY batch, not only batch
-        // 0: compact consumes the delta directory WITH its marker, so when
-        // the stream resumes after a compaction (batchId > 0) the rebuilt
-        // delta would otherwise carry no ownership and compact's commit-log
-        // verification — the guard against folding a mid-batch death's
-        // partial partition — would silently never apply again after the
-        // first compact cycle. Any batch that finds the marker absent (or
-        // empty: crash between create and close under the old non-atomic
-        // write) re-stamps it.
+        // 0: whatever consumes the delta (a fold into the stored table, or
+        // a clear) removes the directory WITH its marker, so when the
+        // stream resumes afterwards (batchId > 0) the rebuilt delta would
+        // otherwise carry no ownership, and the foreign-checkpoint guard
+        // below would silently never apply again. Any batch that finds the
+        // marker absent (or empty: crash between create and close under
+        // the old non-atomic write) re-stamps it.
         //
         // deltaPath and checkpointPath must still be created/cleared
         // TOGETHER: a fresh checkpoint (first batch ever) over a deltaPath
         // that already holds a previous stream's partitions would silently
-        // union — or dynamically overwrite — that stream's un-compacted
+        // union — or dynamically overwrite — that stream's un-consumed
         // rows. A replay of THIS stream's batch 0 (crash before the commit)
         // must still pass, and batchId alone cannot tell the two apart, so
         // the marker (`_`-prefixed: invisible to parquet readers) records
@@ -157,7 +157,7 @@ object Pipelines {
         // delta, fail (any batch). No marker but batch_id residue at batch
         // 0 ⇒ unowned leftovers (including a lone batch_id=0 from a
         // one-batch stream), fail; at batch > 0 residue is THIS stream's
-        // own accretion (or a post-compact rebuild), so only the re-stamp
+        // own accretion (or a rebuild after a consume), so only the re-stamp
         // applies.
         {
           val dp = new org.apache.hadoop.fs.Path(deltaPath)
@@ -213,7 +213,7 @@ object Pipelines {
     * a half-written batch: they serve generation N until N+1's pointer
     * rename lands, and a reader mid-plan keeps its own generation (the
     * serve-during-ingest guarantee [[annIndexMaintenance]]'s batch_id-delta
-    * layout only gets after a compact). Exactly-once comes from the
+    * layout cannot give). Exactly-once comes from the
     * manifest's `#batch` high-water mark: the one crash window the
     * checkpoint alone cannot close (publication flipped, checkpoint commit
     * log not yet written) replays into a recognized no-op.

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.ops.{AnnIndex, IvfPqIndex, Similarity}
+import graft.ops.{AnnIndex, IvfPqIndex, Similarity, SnapTables}
 
 /** The persisted-index lifecycle: build == write+read, append == rebuild
   * encode, and the stored-table serve path returns exactly what the
@@ -91,8 +91,8 @@ class AnnIndexSpec extends AnyFunSuite with SparkSpec {
   }
 
   /** Per-cluster partition directories and their (non-marker) file names
-    * under a stored codes table — the storage-truth witness the
-    * deleteStored/compact specs assert against.
+    * under a stored codes table — the storage-truth witness the delete
+    * specs assert against.
     */
   private def clusterFiles(codesDir: String): Map[String, Set[String]] = {
     import scala.jdk.CollectionConverters._
@@ -109,155 +109,78 @@ class AnnIndexSpec extends AnyFunSuite with SparkSpec {
       .toMap
   }
 
+  /** The codes table of `idx` published as a cluster-partitioned snapshot
+    * (the q398/q413 layout); returns the table path.
+    */
+  private def publishCodes(idx: IvfPqIndex, prefix: String): String = {
+    val codes = tmpDir(prefix) + "/codes"
+    SnapTables.publishInitial(spark, codes, "cluster", idx.codes)
+    codes
+  }
+
+  private def served(codes: String): DataFrame =
+    SnapTables.resolve(spark, codes, "cluster")
+      .select(col("vid"), col("cluster"), col("codes"))
+
   test("deleteStored: removed vids are gone from the stored BYTES; unaffected partitions keep their original files") {
     val idx = buildOn(emb)
-    val dir = tmpDir("ann-del-stored")
-    AnnIndex.write(idx, dir)
+    val codes = publishCodes(idx, "ann-del-stored")
     val removed = emb.where(pmod(col("vec_id"), lit(11)) === 0)
       .select(col("vec_id").as("vid"))
     val removedIds = removed.collect().map(_.getLong(0)).toSet
     assert(removedIds.nonEmpty)
-    val affected = spark.read.parquet(s"$dir/codes")
-      .join(removed, Seq("vid"), "left_semi")
+    val affected = idx.codes.join(removed, Seq("vid"), "left_semi")
       .select(col("cluster")).distinct().collect().map(_.getInt(0)).toSet
-    val before = clusterFiles(s"$dir/codes")
-    AnnIndex.deleteStored(spark, dir, removed)
-    val after = clusterFiles(s"$dir/codes")
-    // the deletion is true in storage: a raw re-read of the parquet holds
-    // no removed vid (this is what q396's view-filter delete cannot claim)
-    val reread = spark.read.parquet(s"$dir/codes")
-    assert(reread.join(removed, Seq("vid"), "left_semi").isEmpty,
-      "removed vids must be absent from the re-read stored parquet itself")
+    val before = clusterFiles(codes)
+    SnapTables.deleteByKey(spark, codes, "cluster", "vid", removed)
     // survivors byte-identical to the original posting lists minus removals
-    assert(codeRows(reread.select(col("vid"), col("cluster"), col("codes"))) ==
+    assert(codeRows(served(codes)) ==
       codeRows(idx.codes).filterNot { case (vid, _) => removedIds.contains(vid) })
+    // the current generation serves what q396's in-memory delete serves
+    val queries = emb.where(pmod(col("vec_id"), lit(10)) === 0)
+    assert(searchRows(idx.copy(codes = served(codes)), queries) ==
+      searchRows(AnnIndex.delete(idx, removed), queries))
+    // the deletion is true in storage once the old generation expires: no
+    // parquet file under the table holds a removed vid (this is what q396's
+    // view-filter delete cannot claim)
+    assertForgottenAfterExpire(codes, "cluster", removed, keyCol = "vid")
     // the rewrite touched ONLY the affected cells — every unaffected
     // partition keeps its original files (the bounded-I/O claim at scale)
+    val after = clusterFiles(codes)
     for ((d, fs) <- before if !affected.contains(d.stripPrefix("cluster=").toInt))
       assert(after.get(d).contains(fs),
         s"unaffected partition $d must keep its original files")
-    // re-read serve == the in-memory delete's serve (q396's semantics)
-    val queries = emb.where(pmod(col("vec_id"), lit(10)) === 0)
-    assert(searchRows(AnnIndex.read(spark, dir), queries) ==
-      searchRows(AnnIndex.delete(idx, removed), queries))
   }
 
   test("deleteStored: a fully-emptied cell's directory is dropped (dynamic overwrite alone would keep it stale)") {
     val idx = buildOn(emb)
-    val dir = tmpDir("ann-del-empty")
-    AnnIndex.write(idx, dir)
-    // remove EVERY vector of one cell: the survivors write emits no rows for
-    // it, so only the explicit directory drop keeps storage truthful
+    val codes = publishCodes(idx, "ann-del-empty")
+    // remove EVERY vector of one cell: the new generation lists no files
+    // for it, and expire then drops its directory
     val victim = idx.codes.select(col("cluster")).orderBy(col("cluster")).head().getInt(0)
     val removed = idx.codes.where(col("cluster") === victim).select(col("vid"))
     val nRemoved = removed.count()
-    AnnIndex.deleteStored(spark, dir, removed)
+    val gen = SnapTables.deleteByKey(spark, codes, "cluster", "vid", removed)
+    assert(!SnapTables.manifestEntries(spark, codes, gen).contains(victim),
+      "the emptied cell must vanish from the new generation")
+    assert(served(codes).where(col("cluster") === victim).isEmpty)
+    assert(served(codes).count() == idx.codes.count() - nRemoved)
+    SnapTables.expire(spark, codes, "cluster", keepGens = 1)
     assert(!java.nio.file.Files.exists(
-      java.nio.file.Paths.get(s"$dir/codes/cluster=$victim")),
+      java.nio.file.Paths.get(s"$codes/cluster=$victim")),
       "the emptied cell's partition directory must be gone")
-    val reread = spark.read.parquet(s"$dir/codes")
-    assert(reread.where(col("cluster") === victim).isEmpty)
-    assert(reread.count() == idx.codes.count() - nRemoved)
-  }
-
-  test("compact: batch_id delta folds into the cluster layout — no residue, delta consumed, serve unchanged") {
-    val base = emb.where(pmod(col("vec_id"), lit(7)) =!= 0)
-    val idx = buildOn(base)
-    val dir = tmpDir("ann-compact")
-    AnnIndex.write(idx, dir)
-    val stored = AnnIndex.read(spark, dir)
-    val deltaDir = tmpDir("ann-compact-delta") + "/delta"
-    val deltaCodes = AnnIndex.encode(emb.where(pmod(col("vec_id"), lit(7)) === 0),
-      col("vec_id"), col("embedding"), stored).localCheckpoint()
-    deltaCodes.withColumn("batch_id", pmod(col("vid"), lit(2)).cast("long"))
-      .write.mode("overwrite").partitionBy("batch_id").parquet(deltaDir)
-    val queries = emb.where(pmod(col("vec_id"), lit(10)) === 0)
-    val unionServe = searchRows(
-      AnnIndex.append(stored, deltaCodes), queries)
-    AnnIndex.compact(spark, dir, deltaDir)
-    // the delta directory is consumed; the codes table is one directory per
-    // cluster with zero batch_id residue — the layout the serve path's
-    // partition pruning rests on
-    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(deltaDir)),
-      "compact must consume the delta directory")
-    assert(clusterFiles(s"$dir/codes").nonEmpty)
-    import scala.jdk.CollectionConverters._
-    val residue = java.nio.file.Files.walk(java.nio.file.Paths.get(s"$dir/codes"))
-      .iterator().asScala.map(_.getFileName.toString)
-      .filter(_.startsWith("batch_id=")).toSeq
-    assert(residue.isEmpty, s"no batch_id residue under codes/: $residue")
-    // content: base ∪ delta exactly once; serve identical to stored ∪ delta
-    val compacted = AnnIndex.read(spark, dir)
-    assert(codeRows(compacted.codes) ==
-      codeRows(idx.codes) ++ codeRows(deltaCodes))
-    assert(compacted.codes.count() == idx.codes.count() + deltaCodes.count())
-    assert(searchRows(compacted, queries) == unionServe,
-      "compacted storage and stored ∪ delta must serve the same answers")
-  }
-
-  test("compact: cross-cell upsert — a re-encoded vid's stale old-cell row is rewritten away") {
-    import spark.implicits._
-    val idx = buildOn(emb)
-    val dir = tmpDir("ann-compact-xcell")
-    AnnIndex.write(idx, dir)
-    // craft a delta that MOVES one vid to a different cell (the re-ingest
-    // shape: an updated embedding assigns elsewhere under the same model)
-    val row = AnnIndex.read(spark, dir).codes.orderBy(col("vid")).head()
-    val vid = row.getLong(0)
-    val oldCluster = row.getInt(1)
-    val clusters = idx.codes.select(col("cluster")).distinct()
-      .collect().map(_.getInt(0)).toSet
-    val newCluster = (clusters - oldCluster).min
-    val deltaDir = tmpDir("ann-xcell-delta") + "/delta"
-    Seq((vid, newCluster, row.getSeq[Int](2)))
-      .toDF("vid", "cluster", "codes")
-      .withColumn("batch_id", org.apache.spark.sql.functions.lit(0L))
-      .write.mode("overwrite").partitionBy("batch_id").parquet(deltaDir)
-    AnnIndex.compact(spark, dir, deltaDir)
-    val re = spark.read.parquet(s"$dir/codes")
-    val mine = re.where(col("vid") === vid).collect()
-    assert(mine.length == 1,
-      s"the re-encoded vid must appear exactly once, got ${mine.length} rows")
-    assert(mine.head.getAs[Int]("cluster") == newCluster,
-      "the surviving row must be the delta's (new cell), not the stale one")
-    assert(re.count() == idx.codes.count(), "total rows unchanged by a move")
   }
 
   test("deleteStored: a removal covering the whole index fails fast, storage untouched") {
     val idx = buildOn(emb)
-    val dir = tmpDir("ann-del-all")
-    AnnIndex.write(idx, dir)
-    val all = idx.codes.select(col("vid"))
+    val codes = publishCodes(idx, "ann-del-all")
     intercept[IllegalArgumentException] {
-      AnnIndex.deleteStored(spark, dir, all)
+      SnapTables.deleteByKey(spark, codes, "cluster", "vid",
+        idx.codes.select(col("vid")))
     }
-    // the refusal happened BEFORE any mutation: the table still reads whole
-    assert(AnnIndex.read(spark, dir).codes.count() == idx.codes.count())
-  }
-
-  test("compact: upsert — a replayed delta cannot duplicate posting rows") {
-    val base = emb.where(pmod(col("vec_id"), lit(7)) =!= 0)
-    val idx = buildOn(base)
-    val dir = tmpDir("ann-compact-replay")
-    AnnIndex.write(idx, dir)
-    val stored = AnnIndex.read(spark, dir)
-    val deltaCodes = AnnIndex.encode(emb.where(pmod(col("vec_id"), lit(7)) === 0),
-      col("vec_id"), col("embedding"), stored).localCheckpoint()
-    def writeDelta(p: String): Unit = deltaCodes
-      .withColumn("batch_id", lit(0L))
-      .write.mode("overwrite").partitionBy("batch_id").parquet(p)
-    val d1 = tmpDir("ann-replay-d1") + "/delta"
-    writeDelta(d1)
-    AnnIndex.compact(spark, dir, d1)
-    val once = codeRows(AnnIndex.read(spark, dir).codes)
-    // the same delta arrives again (a replayed stream / double compaction)
-    val d2 = tmpDir("ann-replay-d2") + "/delta"
-    writeDelta(d2)
-    AnnIndex.compact(spark, dir, d2)
-    val twice = AnnIndex.read(spark, dir)
-    assert(codeRows(twice.codes) == once,
-      "re-compacting a replayed delta must be a no-op on content")
-    assert(twice.codes.count() == once.size.toLong, "no duplicate posting rows")
+    // the refusal happened BEFORE any publication: the table still reads whole
+    assert(SnapTables.currentGeneration(spark, codes).contains(0))
+    assert(served(codes).count() == idx.codes.count())
   }
 
   test("append: a re-encoded vid present in stored AND delta serves once, from the delta row") {
@@ -278,82 +201,6 @@ class AnnIndexSpec extends AnyFunSuite with SparkSpec {
       "the serving row must be the delta's (new cell), not the stale stored one")
     assert(served.codes.count() == idx.codes.count(),
       "total serve rows unchanged by a re-encode")
-  }
-
-  test("compact: a vid re-ingested across two micro-batches keeps only the LATEST batch's row") {
-    import spark.implicits._
-    val idx = buildOn(emb)
-    val dir = tmpDir("ann-compact-twobatch")
-    AnnIndex.write(idx, dir)
-    val maxVid = idx.codes.agg(max(col("vid"))).head().getLong(0)
-    val freshVid = maxVid + 1
-    val clusters = idx.codes.select(col("cluster")).distinct()
-      .collect().map(_.getInt(0)).toSet.toSeq.sorted
-    val (cA, cB) = (clusters.head, clusters(1))
-    val codesArr = idx.codes.orderBy(col("vid")).head().getSeq[Int](2)
-    // batch 0 lands the vid in cell A; batch 1 re-ingests it into cell B —
-    // the one-stream-run double-ingest ADVICE scenario
-    val deltaDir = tmpDir("ann-twobatch-delta") + "/delta"
-    Seq((freshVid, cA, codesArr, 0L), (freshVid, cB, codesArr, 1L))
-      .toDF("vid", "cluster", "codes", "batch_id")
-      .write.mode("overwrite").partitionBy("batch_id").parquet(deltaDir)
-    AnnIndex.compact(spark, dir, deltaDir)
-    val mine = spark.read.parquet(s"$dir/codes")
-      .where(col("vid") === freshVid).collect()
-    assert(mine.length == 1,
-      s"a twice-ingested vid must survive compaction exactly once, got ${mine.length} rows")
-    assert(mine.head.getAs[Int]("cluster") == cB,
-      "the surviving row must be the LATEST batch's (cell B)")
-  }
-
-  test("compact: a batch partition the checkpoint never committed fails fast, nothing consumed") {
-    val idx = buildOn(emb)
-    val dir = tmpDir("ann-compact-uncommitted")
-    AnnIndex.write(idx, dir)
-    val before = codeRows(AnnIndex.read(spark, dir).codes)
-    // stage a stream-owned delta: batches 0 and 1 on disk, but the owning
-    // checkpoint's commit log only records batch 0 — the mid-batch-death shape
-    val deltaDir = tmpDir("ann-uncommitted-delta") + "/delta"
-    val ckptDir = tmpDir("ann-uncommitted-ckpt")
-    idx.codes.limit(2).withColumn("batch_id", lit(0L))
-      .write.mode("overwrite").partitionBy("batch_id").parquet(deltaDir)
-    idx.codes.limit(1).withColumn("batch_id", lit(1L))
-      .write.mode("append").partitionBy("batch_id").parquet(deltaDir)
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$ckptDir/commits"))
-    java.nio.file.Files.write(java.nio.file.Paths.get(s"$ckptDir/commits/0"),
-      "v1".getBytes("UTF-8"))
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(s"$deltaDir/_graft_delta_owner"),
-      ckptDir.getBytes("UTF-8"))
-    val e = intercept[IllegalArgumentException] {
-      AnnIndex.compact(spark, dir, deltaDir)
-    }
-    assert(e.getMessage.contains("batch_id=1"), s"the guard must NAME the uncommitted batch: ${e.getMessage}")
-    assert(java.nio.file.Files.exists(java.nio.file.Paths.get(deltaDir)),
-      "a refused compact must not consume the delta")
-    assert(codeRows(AnnIndex.read(spark, dir).codes) == before,
-      "a refused compact must not touch the stored codes")
-  }
-
-  test("compact: marker-only delta dir is consumed as an empty fold; missing dir fails with a named state") {
-    val idx = buildOn(emb)
-    val dir = tmpDir("ann-compact-markeronly")
-    AnnIndex.write(idx, dir)
-    val before = codeRows(AnnIndex.read(spark, dir).codes)
-    val deltaDir = tmpDir("ann-markeronly-delta") + "/delta"
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(deltaDir))
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(s"$deltaDir/_graft_delta_owner"),
-      "/some/ckpt".getBytes("UTF-8"))
-    AnnIndex.compact(spark, dir, deltaDir) // no-op fold, not a schema-inference crash
-    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(deltaDir)),
-      "the marker-only residue must be consumed")
-    assert(codeRows(AnnIndex.read(spark, dir).codes) == before)
-    // double compact: the consumed path now fails with the state's name
-    val e = intercept[IllegalArgumentException] {
-      AnnIndex.compact(spark, dir, deltaDir)
-    }
-    assert(e.getMessage.contains("already consumed"), e.getMessage)
   }
 
   test("reconstructionAudit: coverage shrinkage is returned, not left to caller discipline") {
@@ -394,56 +241,5 @@ class AnnIndexSpec extends AnyFunSuite with SparkSpec {
     assert(audited.count() == base.count() - 1)
     assert(audited.where(col("vid") === badVid).isEmpty,
       "the corrupt-coded vector must vanish from the audit, not read as near-zero error")
-  }
-
-  test("compact: batch ids below the commit-log purge floor count as committed (minBatchesToRetain)") {
-    val idx = buildOn(emb)
-    val dir = tmpDir("ann-compact-purged")
-    AnnIndex.write(idx, dir)
-    val rows = idx.codes.limit(4).collect().toSeq
-    // delta holds batches 0..3, but the checkpoint's commits/ was purged
-    // down to {2, 3} (Spark retains only minBatchesToRetain entries):
-    // batches 0 and 1 are BELOW the retained floor and necessarily
-    // committed (batch 2 could not have run otherwise) — compact must fold,
-    // not falsely flag a mid-batch death the stream can never repair
-    val deltaDir = tmpDir("ann-purged-delta") + "/delta"
-    val ckptDir = tmpDir("ann-purged-ckpt")
-    rows.indices.foreach { i =>
-      idx.codes.where(col("vid") === rows(i).getLong(0))
-        .withColumn("batch_id", lit(i.toLong))
-        .write.mode("append").partitionBy("batch_id").parquet(deltaDir)
-    }
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$ckptDir/commits"))
-    Seq("2", "3").foreach { b =>
-      java.nio.file.Files.write(java.nio.file.Paths.get(s"$ckptDir/commits/$b"),
-        "v1".getBytes("UTF-8"))
-    }
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(s"$deltaDir/_graft_delta_owner"),
-      ckptDir.getBytes("UTF-8"))
-    AnnIndex.compact(spark, dir, deltaDir) // must not throw
-    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(deltaDir)),
-      "the verified delta must be consumed")
-    // while a batch ABOVE the floor that is genuinely missing still fails
-    val delta2 = tmpDir("ann-purged-delta2") + "/delta"
-    val ckpt2 = tmpDir("ann-purged-ckpt2")
-    idx.codes.limit(1).withColumn("batch_id", lit(2L))
-      .write.mode("overwrite").partitionBy("batch_id").parquet(delta2)
-    idx.codes.limit(1).withColumn("batch_id", lit(4L))
-      .write.mode("append").partitionBy("batch_id").parquet(delta2)
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$ckpt2/commits"))
-    Seq("2", "3").foreach { b =>
-      java.nio.file.Files.write(java.nio.file.Paths.get(s"$ckpt2/commits/$b"),
-        "v1".getBytes("UTF-8"))
-    }
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(s"$delta2/_graft_delta_owner"),
-      ckpt2.getBytes("UTF-8"))
-    val e = intercept[IllegalArgumentException] {
-      AnnIndex.compact(spark, dir, delta2)
-    }
-    assert(e.getMessage.contains("batch_id=4"), e.getMessage)
-    assert(e.getMessage.contains("_graft_delta_owner"),
-      s"the error must name the marker-deletion escape hatch: ${e.getMessage}")
   }
 }

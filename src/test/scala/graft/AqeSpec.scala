@@ -83,9 +83,16 @@ class AqeSpec extends AnyFunSuite with SparkSpec {
     val docs = Tables.load(spark, sf, "documents")
     val idx = graft.ops.TextIndex.build(docs, col("doc_id"), col("text"))
     val dir = tmpDir("aqe-bm25-idx")
-    graft.ops.TextIndex.write(idx, dir)
+    val tokB = graft.ops.TextIndex.DefaultTokenBuckets.toLong
+    val stored = graft.ops.Bm25Index(
+      postings = publishAndResolve(s"$dir/postings", "tb", idx.postings.withColumn(
+        "tb", pmod(graft.ops.Hashing.hash60(col("tok")), lit(tokB)).cast("int")))
+        .select(col("tok"), col("doc_id"), col("tf")),
+      doclens = publishAndResolve(s"$dir/doclens", "db", idx.doclens.withColumn(
+        "db", pmod(col("doc_id"), lit(tokB)).cast("int")))
+        .select(col("doc_id"), col("dl")))
     val served = graft.ops.TextIndex.searchBM25(
-      graft.ops.TextIndex.read(spark, dir), Seq("join", "scan", "merge"), k = 10)
+      stored, Seq("join", "scan", "merge"), k = 10)
     val p = finalPlan(served)
     assert(p.contains("PushedFilters: [In(tok"),
       s"term filter must still push into the postings scan after AQE:\n$p")
@@ -97,13 +104,13 @@ class AqeSpec extends AnyFunSuite with SparkSpec {
   test("winnow serve: the broadcast probe join survives AQE; table side stays scan-only") {
     val docs = Tables.load(spark, sf, "documents")
     val fp = graft.ops.WinnowIndex.build(docs, col("doc_id"), col("text"), k = 3, w = 4)
-    val dir = tmpDir("aqe-fp-idx")
-    graft.ops.WinnowIndex.write(fp, dir)
+    val stored = publishAndResolve(tmpDir("aqe-fp-idx"), "hb", fp.withColumn("hb",
+      pmod(col("h"), lit(graft.ops.WinnowIndex.DefaultHashBuckets.toLong)).cast("int")))
     val probes = docs.where(pmod(col("doc_id"), lit(25)) === 0)
       .select((col("doc_id") + lit(10000000L)).as("doc_id"),
         concat_ws(" ", slice(graft.ops.Text.tokens(col("text")), 1, 30)).as("text"))
     val served = graft.ops.WinnowIndex.matches(
-      graft.ops.WinnowIndex.read(spark, dir), probes, col("doc_id"), col("text"),
+      stored, probes, col("doc_id"), col("text"),
       k = 3, w = 4, threshold = 0.4, maxFpDf = Some(100))
     val p = finalPlan(served)
     assert(p.contains("BroadcastHashJoin"),
@@ -134,13 +141,17 @@ class AqeSpec extends AnyFunSuite with SparkSpec {
     val docs = Tables.load(spark, sf, "documents")
     val sigs = graft.ops.MinHashIndex.build(docs, col("doc_id"), col("text"), 3, 16)
     val dir = tmpDir("aqe-mh-idx")
-    graft.ops.MinHashIndex.write(sigs, dir, rowsPerBand = 4)
+    val sigB = graft.ops.MinHashIndex.DefaultSigBuckets.toLong
+    val storedSigs = publishAndResolve(s"$dir/sigs", "db",
+      sigs.withColumn("db", pmod(col("doc_id"), lit(sigB)).cast("int")))
+    val storedBands = publishAndResolve(s"$dir/bands", "sb",
+      graft.ops.MinHashIndex.bandTable(sigs, 4)
+        .withColumn("sb", pmod(col("band_sig"), lit(sigB)).cast("int")))
     val probes = docs.where(pmod(col("doc_id"), lit(25)) === 0)
       .select((col("doc_id") + lit(10000000L)).as("doc_id"),
         concat(col("text"), lit(" zq1 zq2")).as("text"))
     val served = graft.ops.MinHashIndex.matches(
-      graft.ops.MinHashIndex.readBands(spark, dir),
-      graft.ops.MinHashIndex.readSigs(spark, dir),
+      storedBands, storedSigs,
       probes, col("doc_id"), col("text"), n = 3, numHashes = 16,
       rowsPerBand = 4, minEstimate = 0.75, maxBucket = Some(100))
     val p = finalPlan(served)
@@ -167,13 +178,15 @@ class AqeSpec extends AnyFunSuite with SparkSpec {
   test("simhash serve-from-keys: probe key join stays broadcast after AQE; no corpus tokenization") {
     val docs = Tables.load(spark, sf, "documents")
     val hashes = graft.ops.SimHashIndex.build(docs, col("doc_id"), col("text"))
-    val dir = tmpDir("aqe-sh-idx")
-    graft.ops.SimHashIndex.write(hashes, dir, maxHamming = 3, numBlocks = 6)
+    val stored = publishAndResolve(tmpDir("aqe-sh-idx"), "kb",
+      graft.ops.SimHashIndex.keyTable(hashes, maxHamming = 3, numBlocks = 6)
+        .withColumn("kb", pmod(col("blk_val"),
+          lit(graft.ops.SimHashIndex.DefaultKeyBuckets.toLong)).cast("int")))
     val probes = docs.where(pmod(col("doc_id"), lit(25)) === 0)
       .select((col("doc_id") + lit(10000000L)).as("doc_id"),
         concat(col("text"), lit(" zq1 zq2")).as("text"))
     val served = graft.ops.SimHashIndex.matches(
-      graft.ops.SimHashIndex.readKeys(spark, dir), probes,
+      stored, probes,
       col("doc_id"), col("text"), maxHamming = 3, numBlocks = 6)
     val p = finalPlan(served)
     assert(p.contains("BroadcastHashJoin"),

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.ops.BinaryQuant
+import graft.ops.{BinaryQuant, SnapTables}
 
 /** Binary-quantization invariants that the q226/q227 oracles can't pin on
   * their own: the packed-word representation must agree with an independent
@@ -125,7 +125,9 @@ class BinaryQuantSpec extends AnyFunSuite with SparkSpec {
 
   test("write + serveStored == the in-plan funnel row for row; index layout is bucket-partitioned") {
     val dir = tmpDir("bqidx")
-    BinaryQuant.write(emb, col("vec_id"), col("embedding"), dir, numPlanes = 8)
+    BinaryQuant.writeFrames(thr,
+      BinaryQuant.indexRows(emb, col("vec_id"), col("embedding"), thr,
+        numPlanes = 8), dir)
     val live = BinaryQuant.lshHammingRerankTopK(emb, col("vec_id"),
       col("embedding"), k = 5, screenR = 20, numPlanes = 8, numDims = 64)
     val served = BinaryQuant.serveStored(spark, dir,
@@ -142,39 +144,26 @@ class BinaryQuantSpec extends AnyFunSuite with SparkSpec {
     assert(BinaryQuant.readThresholds(spark, dir).count() == 1L)
   }
 
-  test("writeFrames over prebuilt thr/rows == write building them itself (shared-build seam)") {
-    val dirA = tmpDir("bqidx-direct")
-    val dirB = tmpDir("bqidx-frames")
-    BinaryQuant.write(emb, col("vec_id"), col("embedding"), dirA, numPlanes = 8)
-    val thrB = BinaryQuant.thresholds(emb, col("embedding")).localCheckpoint()
-    BinaryQuant.writeFrames(thrB,
-      BinaryQuant.indexRows(emb, col("vec_id"), col("embedding"), thrB,
-        numPlanes = 8), dirB)
-    def idxRows(d: String): Set[(Long, Long, Long, Long)] =
-      spark.read.parquet(s"$d/index")
-        .select(col("vid").cast("long"), col("bucket").cast("long"),
-          col("lo"), col("hi"))
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-          r.getLong(3))).toSet
-    assert(idxRows(dirB) == idxRows(dirA),
-      "prebuilt-frame publication must store the exact rows write() stores")
-    assert(BinaryQuant.readThresholds(spark, dirB).count() == 1L)
-  }
-
   test("appendStored: frozen-model delta append == one-pass base-trained coding of the union") {
     val base = emb.where(pmod(col("vec_id"), lit(7)) =!= 0)
     val delta = emb.where(pmod(col("vec_id"), lit(7)) === 0)
-    // appended storage
-    val dirA = tmpDir("bqappend")
-    BinaryQuant.write(base, col("vec_id"), col("embedding"), dirA, numPlanes = 8)
-    val thrBefore = BinaryQuant.readThresholds(spark, dirA).collect()
-    BinaryQuant.appendStored(spark, dirA, delta, col("vec_id"),
-      col("embedding"), numPlanes = 8)
+    // the q411/q433 path: base-trained thresholds stored frozen, base and
+    // delta each coded against the RE-READ stored model, the delta landing
+    // as an appended snapshot generation
+    val dir = tmpDir("bqappend")
+    BinaryQuant.thresholds(base, col("embedding"))
+      .write.mode("overwrite").parquet(s"$dir/thr")
+    val thrBefore = BinaryQuant.readThresholds(spark, dir).collect()
+    def rows(part: org.apache.spark.sql.DataFrame) =
+      BinaryQuant.indexRows(part, col("vec_id"), col("embedding"),
+        BinaryQuant.readThresholds(spark, dir), numPlanes = 8)
+    SnapTables.publishInitial(spark, s"$dir/index", "bb", rows(base))
+    SnapTables.appendPartitions(spark, s"$dir/index", "bb", rows(delta))
     // one-pass union coding under the SAME frozen (base-trained) model:
     // encode everything against the stored base thresholds
-    val thrB = BinaryQuant.readThresholds(spark, dirA).localCheckpoint()
+    val thrB = BinaryQuant.readThresholds(spark, dir).localCheckpoint()
     val onePass = BinaryQuant.encode(emb, col("vec_id"), col("embedding"), thrB)
-    val appended = BinaryQuant.readIndex(spark, dirA)
+    val appended = SnapTables.resolve(spark, s"$dir/index", "bb")
       .select(col("vid"), col("lo"), col("hi"))
     assert(appended.count() == emb.count(),
       "every vector must serve exactly once after the append")
@@ -182,7 +171,7 @@ class BinaryQuantSpec extends AnyFunSuite with SparkSpec {
         && onePass.exceptAll(appended).isEmpty,
       "appended code rows must equal the one-pass frozen-model coding")
     // the append must not have retrained the stored model
-    assert(BinaryQuant.readThresholds(spark, dirA).collect()
+    assert(BinaryQuant.readThresholds(spark, dir).collect()
       .sameElements(thrBefore), "append must never touch the frozen model")
   }
 }

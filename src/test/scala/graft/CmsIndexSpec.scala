@@ -84,8 +84,8 @@ class CmsIndexSpec extends AnyFunSuite with SparkSpec {
   test("write + read roundtrip; stored-table estimates never undercount the exact counts") {
     val sk = CmsIndex.build(ev, col("event_type"), col("u"), 4, 256)
     val dir = tmpDir("cms-tbl")
-    CmsIndex.write(sk, dir)
-    val stored = CmsIndex.read(spark, dir)
+    CmsIndex.publishSnapshot(spark, dir, sk)
+    val stored = CmsIndex.readSnapshot(spark, dir)
     assert(counters(stored) == counters(sk))
     val probes = Seq("1", "5", "17", "42", "99")
     val est = CmsIndex.estimates(stored, probes, 4, 256)

@@ -33,37 +33,29 @@ class MinHashIndexSpec extends AnyFunSuite with SparkSpec {
         col("n_agree"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
 
+  private val sigB = MinHashIndex.DefaultSigBuckets.toLong
+  private def db = pmod(col("doc_id"), lit(sigB)).cast("int")
+  private def sb = pmod(col("band_sig"), lit(sigB)).cast("int")
+
+  /** Publish signatures and bands in the catalog's snapshot layout
+    * (q421/q422: sigs by `db`, bands by `sb`) and read both back.
+    */
+  private def publishSigsBands(sigs: DataFrame, bands: DataFrame,
+      dir: String): (DataFrame, DataFrame) =
+    (publishAndResolve(s"$dir/sigs", "db", sigs.withColumn("db", db)),
+      publishAndResolve(s"$dir/bands", "sb", bands.withColumn("sb", sb)))
+
   test("write + read roundtrip: stored sigs/bands and serve results match the built frames") {
     val sigs = MinHashIndex.build(docs, col("doc_id"), col("text"), 3, 16)
     val bands = MinHashIndex.bandTable(sigs, 4)
-    val dir = tmpDir("minhash-idx")
-    MinHashIndex.write(sigs, dir, rowsPerBand = 4)
-    val storedSigs = MinHashIndex.readSigs(spark, dir)
-    val storedBands = MinHashIndex.readBands(spark, dir)
+    val (storedSigs, storedBands) =
+      publishSigsBands(sigs, bands, tmpDir("minhash-idx"))
     assert(storedSigs.columns.contains("db") && storedBands.columns.contains("sb"),
       "stored tables carry their partition columns")
     assert(sigRows(storedSigs) == sigRows(sigs))
     assert(storedBands.count() == bands.count())
     assert(serveRows(storedBands, storedSigs) == serveRows(bands, sigs),
       "serving from the read-back tables must equal serving from the built frames")
-  }
-
-  test("write with prebuiltBands == write deriving bands itself (shared-build seam)") {
-    val sigs = MinHashIndex.build(docs, col("doc_id"), col("text"), 3, 16)
-    val bands = MinHashIndex.bandTable(sigs, 4).localCheckpoint()
-    val dirA = tmpDir("minhash-idx-derived")
-    val dirB = tmpDir("minhash-idx-prebuilt")
-    MinHashIndex.write(sigs, dirA, rowsPerBand = 4)
-    MinHashIndex.write(sigs, dirB, rowsPerBand = 4, prebuiltBands = Some(bands))
-    def bandRows(d: DataFrame): Set[(Long, Long, Long)] =
-      d.select(col("doc_id").cast("long"), col("band").cast("long"),
-        col("band_sig")).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(sigRows(MinHashIndex.readSigs(spark, dirB)) ==
-      sigRows(MinHashIndex.readSigs(spark, dirA)))
-    assert(bandRows(MinHashIndex.readBands(spark, dirB)) ==
-      bandRows(MinHashIndex.readBands(spark, dirA)),
-      "a prebuilt band frame must land byte-for-row identical to the in-write derivation")
   }
 
   test("append == full rebuild (signatures are per-document)") {
@@ -131,10 +123,9 @@ class MinHashIndexSpec extends AnyFunSuite with SparkSpec {
 
   test("serve plan over the stored tables carries no tokenization or hashing") {
     val sigs = MinHashIndex.build(docs, col("doc_id"), col("text"), 3, 16)
-    val dir = tmpDir("mh-table-plan")
-    MinHashIndex.write(sigs, dir, rowsPerBand = 4)
-    val served = MinHashIndex.matches(
-      MinHashIndex.readBands(spark, dir), MinHashIndex.readSigs(spark, dir),
+    val (storedSigs, storedBands) = publishSigsBands(sigs,
+      MinHashIndex.bandTable(sigs, 4), tmpDir("mh-table-plan"))
+    val served = MinHashIndex.matches(storedBands, storedSigs,
       probesOf(docs), col("doc_id"), col("text"),
       n = 3, numHashes = 16, rowsPerBand = 4, minEstimate = 0.75,
       maxBucket = Some(100))
@@ -153,11 +144,7 @@ class MinHashIndexSpec extends AnyFunSuite with SparkSpec {
     val sigs = MinHashIndex.build(docs, col("doc_id"), col("text"), 3, 16)
     val bands = MinHashIndex.bandTable(sigs, 4)
     val dir = tmpDir("minhash-del")
-    val sigB = MinHashIndex.DefaultSigBuckets.toLong
-    val db = pmod(col("doc_id"), lit(sigB)).cast("int")
-    val sb = pmod(col("band_sig"), lit(sigB)).cast("int")
-    SnapTables.publishInitial(spark, s"$dir/sigs", "db", sigs.withColumn("db", db))
-    SnapTables.publishInitial(spark, s"$dir/bands", "sb", bands.withColumn("sb", sb))
+    publishSigsBands(sigs, bands, dir)
     SnapTables.publishInitial(spark, s"$dir/bucketdf", "sb",
       MinHashIndex.bucketDfTable(bands).withColumn("sb", sb))
     val removed = docs.where(pmod(col("doc_id"), lit(11)) === 0)

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ops.{ParaIndex, SnapConflict, SnapTables}
 
-/** The durable paragraph-hash-table lifecycle: build == write+read, append
+/** The durable paragraph-hash-table lifecycle: build == publish+resolve, append
   * == rebuild under the id-ordering contract, and the stored-table scrub
   * reproduces the in-memory scrub while keeping the table side scan-only.
   */
@@ -25,11 +25,20 @@ class ParaIndexSpec extends AnyFunSuite with SparkSpec {
     ).toDF("id", "text")
   }
 
+  /** The corpus' table published in the catalog's snapshot layout
+    * (q414: partitioned by `hb`).
+    */
+  private def publishCorpus(dir: String,
+      buckets: Int = ParaIndex.DefaultHashBuckets): Unit =
+    SnapTables.publishInitial(spark, dir, "hb",
+      ParaIndex.build(corpus, col("id"), col("text"))
+        .withColumn("hb", pmod(col("h"), lit(buckets.toLong)).cast("int")))
+
   test("write + read roundtrip preserves rows; stored table carries its partition column") {
     val tbl = ParaIndex.build(corpus, col("id"), col("text"))
     val dir = tmpDir("para-idx")
-    ParaIndex.write(tbl, dir)
-    val stored = ParaIndex.read(spark, dir)
+    publishCorpus(dir)
+    val stored = SnapTables.resolve(spark, dir, "hb")
     assert(stored.columns.contains("hb"))
     assert(rows(stored) == rows(tbl))
   }
@@ -52,8 +61,8 @@ class ParaIndexSpec extends AnyFunSuite with SparkSpec {
     import spark.implicits._
     val tbl = ParaIndex.build(corpus, col("id"), col("text"))
     val dir = tmpDir("para-idx-serve")
-    ParaIndex.write(tbl, dir)
-    val stored = ParaIndex.read(spark, dir)
+    publishCorpus(dir)
+    val stored = SnapTables.resolve(spark, dir, "hb")
     val batch = Seq(
       (100L, "shared footer\nfresh paragraph\nbatch shared"),
       (101L, "batch shared\nalso fresh")
@@ -75,12 +84,6 @@ class ParaIndexSpec extends AnyFunSuite with SparkSpec {
     assert(splits <= 2, // batch paragraphs + batch n_paras projection only
       s"table side must be scan-only; found $splits split() calls:\n$plan")
   }
-
-  private def publishCorpus(dir: String,
-      buckets: Int = ParaIndex.DefaultHashBuckets): Unit =
-    SnapTables.publishInitial(spark, dir, "hb",
-      ParaIndex.build(corpus, col("id"), col("text"))
-        .withColumn("hb", pmod(col("h"), lit(buckets.toLong)).cast("int")))
 
   test("deleteStored: re-election == survivors rebuild row for row; survivor-less hashes drop") {
     import spark.implicits._

@@ -245,11 +245,12 @@ class PlanSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("q398/q399 stored-lifecycle serves: scan-only plans with probed-cell partition pruning") {
-    // q398 serves a storage-rewritten (deleteStored) clone; q399 serves the
-    // compacted base+delta table. Both must keep the q393 production shape:
-    // parquet scans + ADC chain, zero training/encode lineage, and DPP on
-    // the cluster-partitioned codes — the compaction query exists precisely
-    // to RESTORE that pruning (a batch_id-partitioned delta side has none).
+    // q398 serves the snapshot delete's generation (q413's table); q399
+    // serves the compacted base+delta table (q420's streamed snapshot); q403
+    // composes both. All must keep the q393 production shape: parquet scans
+    // + ADC chain, zero training/encode lineage, and DPP on the
+    // cluster-partitioned codes — the compaction exists precisely to keep
+    // that pruning (a batch_id-partitioned delta side has none).
     for (q <- Seq("q398_ivfpq_stored_delete", "q399_ivfpq_compacted_serve",
         "q403_ann_lifecycle_e2e",
         // the snapshot-published codes table (explicit manifest file list +

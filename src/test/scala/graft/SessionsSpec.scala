@@ -23,6 +23,15 @@ class SessionsSpec extends AnyFunSuite {
     assert(sites == Seq("src/main/scala/graft/Sessions.scala" -> 1))
   }
 
+  test("no deprecation annotation under src/main: a superseded path is deleted, not kept beside its replacement") {
+    val mark = Regex.quote("@" + "deprecated").r
+    val sites = Files.walk(Paths.get("src/main")).iterator.asScala
+      .filter(_.toString.endsWith(".scala"))
+      .map(p => p.toString -> mark.findAllIn(Files.readString(p)).size)
+      .filter(_._2 > 0).toSeq
+    assert(sites.isEmpty, s"deprecated definitions remain: $sites")
+  }
+
   test("AppConfig's settings carry the pinned ones; S3A keys only with an endpoint") {
     val plain = AppConfig.fromEnv(Map.empty).settings
     assert(plain("spark.sql.extensions") == classOf[GraftExtensions].getName)

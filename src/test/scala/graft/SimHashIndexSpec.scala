@@ -33,12 +33,22 @@ class SimHashIndexSpec extends AnyFunSuite with SparkSpec {
         col("hamming").cast("int"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
 
+  /** The key table of `hashes` published in the catalog's snapshot layout
+    * (q423/q424: partitioned by `kb`); returns the table path.
+    */
+  private def publishKeys(hashes: DataFrame, dir: String): String = {
+    SnapTables.publishInitial(spark, dir, "kb",
+      SimHashIndex.keyTable(hashes, maxHamming = 3, numBlocks = 6)
+        .withColumn("kb", pmod(col("blk_val"),
+          lit(SimHashIndex.DefaultKeyBuckets.toLong)).cast("int")))
+    dir
+  }
+
   test("write + read roundtrip: stored keys and serve results match the built table") {
     val hashes = SimHashIndex.build(docs, col("doc_id"), col("text"))
     val keys = SimHashIndex.keyTable(hashes, maxHamming = 3, numBlocks = 6)
-    val dir = tmpDir("simhash-idx")
-    SimHashIndex.write(hashes, dir, maxHamming = 3, numBlocks = 6)
-    val stored = SimHashIndex.readKeys(spark, dir)
+    val stored = SnapTables.resolve(spark,
+      publishKeys(hashes, tmpDir("simhash-idx") + "/keys"), "kb")
     assert(stored.columns.contains("kb"), "stored table carries its partition column")
     assert(stored.count() == keys.count())
     assert(serveRows(stored) == serveRows(keys),
@@ -73,9 +83,9 @@ class SimHashIndexSpec extends AnyFunSuite with SparkSpec {
 
   test("serve plan over the stored table carries no tokenization of the corpus") {
     val hashes = SimHashIndex.build(docs, col("doc_id"), col("text"))
-    val dir = tmpDir("sh-table-plan")
-    SimHashIndex.write(hashes, dir, maxHamming = 3, numBlocks = 6)
-    val served = SimHashIndex.matches(SimHashIndex.readKeys(spark, dir),
+    val stored = SnapTables.resolve(spark,
+      publishKeys(hashes, tmpDir("sh-table-plan") + "/keys"), "kb")
+    val served = SimHashIndex.matches(stored,
       probesOf(docs), col("doc_id"), col("text"), maxHamming = 3, numBlocks = 6)
     val plan = served.queryExecution.executedPlan.toString()
     // the probe side fingerprints per-row (simhash60 IS in the plan); the
@@ -92,12 +102,8 @@ class SimHashIndexSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("deleteStored: removed docs' key rows leave the stored bytes; serve == never-indexed rebuild") {
-    val dir = tmpDir("simhash-del") + "/keys"
-    SnapTables.publishInitial(spark, dir, "kb",
-      SimHashIndex.keyTable(SimHashIndex.build(docs, col("doc_id"), col("text")),
-        maxHamming = 3, numBlocks = 6)
-        .withColumn("kb", pmod(col("blk_val"),
-          lit(SimHashIndex.DefaultKeyBuckets.toLong)).cast("int")))
+    val dir = publishKeys(SimHashIndex.build(docs, col("doc_id"), col("text")),
+      tmpDir("simhash-del") + "/keys")
     val removedIds = docs.where(pmod(col("doc_id"), lit(11)) === 0)
       .select(col("doc_id"))
     SnapTables.deleteByKey(spark, dir, "kb", "doc_id", removedIds)

@@ -25,18 +25,27 @@ trait SparkSpec {
     */
   def tmpDir(prefix: String): String = Scratch.dir(prefix)
 
+  /** Publish `df` as a [[graft.ops.SnapTables]] table partitioned by
+    * `partCol` (the layout the catalog's stored-index serves read) and
+    * resolve its current generation.
+    */
+  def publishAndResolve(path: String, partCol: String, df: DataFrame): DataFrame = {
+    graft.ops.SnapTables.publishInitial(spark, path, partCol, df)
+    graft.ops.SnapTables.resolve(spark, path, partCol)
+  }
+
   /** The right-to-be-forgotten check on a snapshot table after a delete:
-    * the superseded generation's files still hold removed doc_ids (so the
+    * the superseded generation's files still hold removed keys (so the
     * check is not vacuous), and after `SnapTables.expire(keepGens = 1)` no
     * parquet file under `path` holds one — a raw directory read, not a
     * manifest resolve, so it sees exactly the bytes storage keeps.
     */
   def assertForgottenAfterExpire(path: String, partCol: String,
-      removed: DataFrame): Unit = {
+      removed: DataFrame, keyCol: String = "doc_id"): Unit = {
     def held = spark.read.parquet(path)
-      .join(removed.select("doc_id"), Seq("doc_id"), "left_semi").count()
+      .join(removed.select(keyCol), Seq(keyCol), "left_semi").count()
     assert(held > 0, s"the superseded generation at $path must still hold removed rows")
     graft.ops.SnapTables.expire(spark, path, partCol, keepGens = 1)
-    assert(held == 0, s"removed doc_ids must leave every parquet file under $path")
+    assert(held == 0, s"removed ${keyCol}s must leave every parquet file under $path")
   }
 }

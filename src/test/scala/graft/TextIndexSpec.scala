@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.ops.{SnapTables, Text, TextIndex}
 
 /** The persisted BM25 index lifecycle: serve == the in-query scan exactly,
-  * append == rebuild at the postings level, write+read round-trips, and
+  * append == rebuild at the postings level, publish+resolve round-trips, and
   * the stored-index serve plan contains no tokenization.
   */
 class TextIndexSpec extends AnyFunSuite with SparkSpec {
@@ -24,6 +24,25 @@ class TextIndexSpec extends AnyFunSuite with SparkSpec {
   private def postingRows(idx: graft.ops.Bm25Index): Set[(String, Long, Long)] =
     idx.postings.select(col("tok"), col("doc_id").cast("long"), col("tf"))
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
+
+  /** Publish both index tables in the catalog's snapshot layout (q408,
+    * q425/q426: postings by `tb`, doclens by `db`) under `dir`.
+    */
+  private def publishIdx(idx: graft.ops.Bm25Index, dir: String): Unit = {
+    val tokB = TextIndex.DefaultTokenBuckets.toLong
+    SnapTables.publishInitial(spark, s"$dir/postings", "tb", idx.postings
+      .withColumn("tb", pmod(graft.ops.Hashing.hash60(col("tok")), lit(tokB)).cast("int")))
+    SnapTables.publishInitial(spark, s"$dir/doclens", "db", idx.doclens
+      .withColumn("db", pmod(col("doc_id"), lit(tokB)).cast("int")))
+  }
+
+  /** The index as the current generations of `dir`'s tables serve it. */
+  private def resolveIdx(dir: String): graft.ops.Bm25Index =
+    graft.ops.Bm25Index(
+      postings = SnapTables.resolve(spark, s"$dir/postings", "tb")
+        .select(col("tok"), col("doc_id"), col("tf")),
+      doclens = SnapTables.resolve(spark, s"$dir/doclens", "db")
+        .select(col("doc_id"), col("dl")))
 
   test("stored-index serve == in-query bm25TopK, bit for bit") {
     val idx = TextIndex.build(docs, col("doc_id"), col("text"))
@@ -46,8 +65,8 @@ class TextIndexSpec extends AnyFunSuite with SparkSpec {
   test("write + read roundtrip serves identical results; serve plan has no tokenization") {
     val idx = TextIndex.build(docs, col("doc_id"), col("text"))
     val dir = tmpDir("bm25-idx")
-    TextIndex.write(idx, dir)
-    val stored = TextIndex.read(spark, dir)
+    publishIdx(idx, dir)
+    val stored = resolveIdx(dir)
     assert(ranked(TextIndex.searchBM25(stored, terms, k = 10))
       == ranked(TextIndex.searchBM25(idx, terms, k = 10)))
     val plan = TextIndex.searchBM25(stored, terms, k = 10)
@@ -95,9 +114,9 @@ class TextIndexSpec extends AnyFunSuite with SparkSpec {
     // disk roundtrip: write both tables, serve from the read-back frames —
     // the search plan must tokenize nothing (corpus text stays at build)
     val dir = tmpDir("hybrid-idx")
-    TextIndex.write(idx, dir)
+    publishIdx(idx, dir)
     vecs.write.mode("overwrite").parquet(s"$dir/vectors")
-    val served = TextIndex.hybridFromTables(TextIndex.read(spark, dir),
+    val served = TextIndex.hybridFromTables(resolveIdx(dir),
       spark.read.parquet(s"$dir/vectors"), terms, dims = 32, k = 20)
     assert(fused(served) == fused(inQuery))
     val plan = served.queryExecution.executedPlan.toString()
@@ -113,9 +132,9 @@ class TextIndexSpec extends AnyFunSuite with SparkSpec {
     val vecs = graft.ops.Text.hashingTrickEmbedding(
       docs, col("doc_id"), col("text"), 32).localCheckpoint()
     val dir = tmpDir("batch-serve-idx")
-    TextIndex.write(idx, dir)
+    publishIdx(idx, dir)
     vecs.write.mode("overwrite").parquet(s"$dir/vectors")
-    val storedIdx = TextIndex.read(spark, dir)
+    val storedIdx = resolveIdx(dir)
     val storedVecs = spark.read.parquet(s"$dir/vectors")
     def bmRows(df: org.apache.spark.sql.DataFrame) =
       df.select(col("qid"), col("doc_id").cast("long"), col("rank").cast("int"))
@@ -140,23 +159,14 @@ class TextIndexSpec extends AnyFunSuite with SparkSpec {
 
   test("deleteStored: removed docs leave BOTH stored tables' bytes; serve == never-indexed rebuild") {
     val dir = tmpDir("bm25-del")
-    val idx = TextIndex.build(docs, col("doc_id"), col("text"))
-    val tokB = TextIndex.DefaultTokenBuckets.toLong
-    SnapTables.publishInitial(spark, s"$dir/postings", "tb", idx.postings
-      .withColumn("tb", pmod(graft.ops.Hashing.hash60(col("tok")), lit(tokB)).cast("int")))
-    SnapTables.publishInitial(spark, s"$dir/doclens", "db", idx.doclens
-      .withColumn("db", pmod(col("doc_id"), lit(tokB)).cast("int")))
+    publishIdx(TextIndex.build(docs, col("doc_id"), col("text")), dir)
     val removedIds = docs.where(pmod(col("doc_id"), lit(11)) === 0)
       .select(col("doc_id"))
     SnapTables.deleteByKey(spark, s"$dir/postings", "tb", "doc_id", removedIds)
     SnapTables.deleteByKey(spark, s"$dir/doclens", "db", "doc_id", removedIds)
     // serve-level: scores (N, avgdl, df all derive from the stored tables)
     // equal an index that never saw the removed docs
-    val served = graft.ops.Bm25Index(
-      postings = SnapTables.resolve(spark, s"$dir/postings", "tb")
-        .select(col("tok"), col("doc_id"), col("tf")),
-      doclens = SnapTables.resolve(spark, s"$dir/doclens", "db")
-        .select(col("doc_id"), col("dl")))
+    val served = resolveIdx(dir)
     val survivors = docs.where(pmod(col("doc_id"), lit(11)) =!= 0)
     assert(ranked(TextIndex.searchBM25(served, terms, k = 10))
         == ranked(TextIndex.searchBM25(

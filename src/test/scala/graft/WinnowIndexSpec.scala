@@ -31,11 +31,15 @@ class WinnowIndexSpec extends AnyFunSuite with SparkSpec {
       .select(col("probe_id").cast("long"), col("doc_id").cast("long"), col("inter"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
 
+  private def hb = pmod(col("h"), lit(WinnowIndex.DefaultHashBuckets.toLong)).cast("int")
+
+  /** `fp` in the catalog's snapshot layout (q412–q419), read back. */
+  private def publishFp(fp: DataFrame, dir: String): DataFrame =
+    publishAndResolve(s"$dir/fp", "hb", fp.withColumn("hb", hb))
+
   test("write + read roundtrip: stored rows and serve results match the built table") {
     val fp = WinnowIndex.build(docs, col("doc_id"), col("text"), k = 3, w = 4)
-    val dir = tmpDir("winnow-idx")
-    WinnowIndex.write(fp, dir)
-    val stored = WinnowIndex.read(spark, dir)
+    val stored = publishFp(fp, tmpDir("winnow-idx"))
     assert(stored.columns.contains("hb"), "stored table carries its partition column")
     assert(fpRows(stored) == fpRows(fp), "stored fingerprints must match the built table")
     assert(matchRows(stored) == matchRows(fp),
@@ -69,9 +73,7 @@ class WinnowIndexSpec extends AnyFunSuite with SparkSpec {
   test("serve plan over the stored table carries no tokenization or hashing") {
     val fp = WinnowIndex.build(docs, col("doc_id"), col("text"), k = 3, w = 4)
     // prefix must not collide with the forbidden plan tokens below
-    val dir = tmpDir("fp-table-plan")
-    WinnowIndex.write(fp, dir)
-    val stored = WinnowIndex.read(spark, dir)
+    val stored = publishFp(fp, tmpDir("fp-table-plan"))
     val served = WinnowIndex.matches(stored, probesOf(docs), col("doc_id"), col("text"),
       k = 3, w = 4, threshold = 0.4, maxFpDf = Some(100))
     val plan = served.queryExecution.executedPlan.toString()
@@ -88,8 +90,7 @@ class WinnowIndexSpec extends AnyFunSuite with SparkSpec {
   test("deleteStored: fingerprint bytes AND the stored df table equal a survivors-only recompute") {
     val fp = WinnowIndex.build(docs, col("doc_id"), col("text"), k = 3, w = 4)
     val dir = tmpDir("winnow-del")
-    val hb = pmod(col("h"), lit(WinnowIndex.DefaultHashBuckets.toLong)).cast("int")
-    SnapTables.publishInitial(spark, s"$dir/fp", "hb", fp.withColumn("hb", hb))
+    publishFp(fp, dir)
     SnapTables.publishInitial(spark, s"$dir/df", "hb",
       WinnowIndex.dfTable(fp).withColumn("hb", hb))
     val removed = docs.where(pmod(col("doc_id"), lit(11)) === 0)
