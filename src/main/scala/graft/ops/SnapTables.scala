@@ -1,8 +1,13 @@
 package graft.ops
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.HadoopFsRelation
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 /** A publication lost to concurrency under the single-writer protocol:
   * another writer holds (or just released) the claim, or the pointer
@@ -79,9 +84,12 @@ final class SnapConflict(msg: String, cause: Throwable = null)
   * Scale shape: a manifest holds one entry per (partition, file) — for the
   * 64-bucket index families that is tens of entries, KBs of text; at
   * thousands of partitions it is still MBs read once per serve session.
-  * The resolved DataFrame is a plain parquet scan over an explicit file
-  * list with `basePath` set, so partition-column pruning and column
-  * pruning behave exactly as on a directory scan.
+  * A serve plans from the manifest alone: the resolved DataFrame is a
+  * parquet `HadoopFsRelation` over a [[ManifestFileIndex]] built from one
+  * driver-side `getFileStatus` per listed file and the Spark schema in one
+  * footer. It runs no schema-inference or listing job, however many files
+  * the generation holds, and partition-column pruning (DPP included) and
+  * column pruning behave exactly as on a directory scan.
   *
   * Partition columns are INT-valued (every durable table here partitions
   * by an int hash bucket / cluster id); a non-int partition column fails
@@ -451,10 +459,7 @@ object SnapTables {
     val expected = newFiles.toSeq
       .flatMap { case (v, ns) => ns.map(v -> _) }.toSet
     if (expected.isEmpty) return Map.empty
-    val paths = newFiles.toSeq.flatMap { case (v, ns) =>
-      ns.map(n => s"$path/$partCol=$v/$n")
-    }
-    spark.read.option("basePath", path).parquet(paths: _*)
+    frameOf(spark, path, partCol, newFiles, s"the new files of $path")
       .groupBy(input_file_name().as("__zf"))
       .agg(min(col(statsCol).cast("long")).as("__mn"),
         max(col(statsCol).cast("long")).as("__mx"))
@@ -497,10 +502,11 @@ object SnapTables {
         s"SnapTables: $path already holds partition directories but no " +
           "generation pointer — clear the directory before publishInitial")
       // one shuffle keyed on the partition column bounds the file count at
-      // ~one per partition (AQE coalesces small ones): resolve() plans over
-      // an EXPLICIT path list, so a 32-task × 64-partition fan-out write
-      // would hand every later serve thousands of paths to plan (measured
-      // +2.5 s warm on the winnow serve) and bloat every manifest
+      // ~one per partition (AQE coalesces small ones): resolve() stats every
+      // manifest file and the scan opens each one, so a 32-task ×
+      // 64-partition fan-out write would hand every later serve thousands
+      // of files (measured +2.5 s warm on the winnow serve) and bloat every
+      // manifest
       df.repartition(col(partCol))
         .write.mode("append").partitionBy(partCol).parquet(path)
       val written = listPartitionFiles(hfs, root, partCol)
@@ -511,14 +517,67 @@ object SnapTables {
     } finally releaseGeneration(hfs, root, 0)
   }
 
-  /** The table as the CURRENT generation serves it: a plain parquet scan
-    * over exactly the manifest's files (`basePath` keeps the partition
-    * column). Files a later rewrite adds are invisible to this frame, and
-    * files it supersedes stay on disk until [[expire]] — so a plan
+  /** The frame over exactly `files` (partition value → file names under
+    * `path`), planned from that list alone: one `getFileStatus` per file
+    * and one footer read, both on the driver, feed a [[ManifestFileIndex]]
+    * behind a parquet `HadoopFsRelation`. Nothing is listed and no Spark
+    * job runs; partition filters (DPP's included) prune inside the index.
+    * The data schema is the one Spark wrote into the first file's footer,
+    * made nullable as a file-source read makes it, with the INT partition
+    * column last. A file that is gone fails here, naming `what`.
+    */
+  private def frameOf(spark: SparkSession, path: String, partCol: String,
+      files: Map[Int, Seq[String]], what: String): DataFrame = {
+    val hfs = fs(spark, path)
+    val root = hfs.makeQualified(new Path(path))
+    val statuses = files.filter(_._2.nonEmpty).map { case (v, names) =>
+      v -> names.sorted.map { n =>
+        val p = new Path(root, s"$partCol=$v/$n")
+        try hfs.getFileStatus(p)
+        catch { case e: java.io.FileNotFoundException =>
+          throw new IllegalStateException(s"SnapTables: $what references " +
+            s"$p, which is gone (reclaimed by expire?) — only retained " +
+            "generations resolve", e)
+        }
+      }.toArray
+    }
+    val index = new ManifestFileIndex(root, partCol, statuses)
+    val first = statuses.minBy(_._1)._2.head
+    spark.baseRelationToDataFrame(HadoopFsRelation(index, index.partitionSchema,
+      footerSchema(hfs, first), None, new ParquetFileFormat, Map.empty)(spark))
+  }
+
+  /** The Spark schema recorded in one parquet footer (the row-metadata key
+    * every Spark parquet write sets), nullable throughout.
+    */
+  private def footerSchema(hfs: FileSystem, file: FileStatus): StructType = {
+    val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(file, hfs.getConf))
+    val json = try reader.getFooter.getFileMetaData.getKeyValueMetaData
+        .get("org.apache.spark.sql.parquet.row.metadata")
+      finally reader.close()
+    require(json != null,
+      s"SnapTables: ${file.getPath} carries no Spark schema — not written by Spark")
+    def nullable(t: DataType): DataType = t match {
+      case s: StructType => StructType(s.fields.map(f =>
+        f.copy(dataType = nullable(f.dataType), nullable = true)))
+      case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+      case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType),
+        valueContainsNull = true)
+      case other => other
+    }
+    nullable(DataType.fromJson(json)).asInstanceOf[StructType]
+  }
+
+  /** The table as the CURRENT generation serves it: a parquet scan over
+    * exactly the manifest's files, planned from the manifest alone (see
+    * `frameOf`). Files a later rewrite adds are invisible to this frame,
+    * and files it supersedes stay on disk until [[expire]] — so a plan
     * resolved here keeps returning this generation's rows even while a
     * rewrite publishes the next one. Junk files in the partition
     * directories (a crashed writer's orphans) are equally invisible:
-    * readers trust manifests, never directory listings.
+    * readers trust manifests, never directory listings. Two resolves of
+    * one generation are the same relation (exchange reuse and the cache
+    * manager see one table); two generations are not.
     */
   def resolve(spark: SparkSession, path: String, partCol: String): DataFrame = {
     val gen = currentGeneration(spark, path).getOrElse(
@@ -526,14 +585,17 @@ object SnapTables {
     resolveAt(spark, path, partCol, gen)
   }
 
-  /** Time-travel read of a specific retained generation. */
+  /** Time-travel read of a specific retained generation, planned like
+    * [[resolve]] with no Spark job. An expired generation fails here: a
+    * dropped manifest as "missing manifest", a reclaimed file naming the
+    * generation and the table.
+    */
   def resolveAt(spark: SparkSession, path: String, partCol: String,
       gen: Int): DataFrame = {
-    val hfs = fs(spark, path)
-    val files = readManifest(hfs, new Path(path), gen).toSeq
-      .flatMap { case (v, names) => names.map(n => s"$path/$partCol=$v/$n") }
-    require(files.nonEmpty, s"SnapTables: generation $gen of $path is empty")
-    spark.read.option("basePath", path).parquet(files: _*)
+    val files = readManifest(fs(spark, path), new Path(path), gen)
+    require(files.values.exists(_.nonEmpty),
+      s"SnapTables: generation $gen of $path is empty")
+    frameOf(spark, path, partCol, files, s"generation $gen of $path")
   }
 
   /** The file names generation `gen` would SCAN for keys in [lo, hi] —
@@ -554,28 +616,28 @@ object SnapTables {
   }
 
   /** [[resolve]] restricted to key range [lo, hi] of the table's stats
-    * column: plans over only the files whose zones overlap the range — a
-    * point lookup on a many-file partition reads fewer FILES, not just
-    * fewer partitions. Returns a SUPERSET of the matching rows (surviving
-    * files hold other keys too; the caller applies its row predicate as
-    * usual — same contract as partition pruning). A range excluding every
-    * file yields an empty frame with the table's schema.
+    * column: the manifest index over only the files whose zones overlap
+    * the range ([[zoneFiles]]' kept map) — a point lookup on a many-file
+    * partition reads fewer FILES, not just fewer partitions. Returns a
+    * SUPERSET of the matching rows (surviving files hold other keys too;
+    * the caller applies its row predicate as usual — same contract as
+    * partition pruning). A range excluding every file yields an empty
+    * frame with the table's schema.
     */
   def resolveRange(spark: SparkSession, path: String, partCol: String,
       lo: Long, hi: Long): DataFrame = {
     val gen = currentGeneration(spark, path).getOrElse(
       throw new IllegalStateException(s"SnapTables: $path has no published generation"))
-    val kept = zoneFiles(spark, path, partCol, gen, lo, hi).toSeq
-      .flatMap { case (v, names) => names.map(n => s"$path/$partCol=$v/$n") }
+    val kept = zoneFiles(spark, path, partCol, gen, lo, hi)
     if (kept.isEmpty) resolveAt(spark, path, partCol, gen).where(lit(false))
-    else spark.read.option("basePath", path).parquet(kept: _*)
+    else frameOf(spark, path, partCol, kept, s"generation $gen of $path")
   }
 
   /** Incremental (CDC-style) read: the rows ADDED between `fromGen`
     * (exclusive) and `toGen` (inclusive), planned purely from manifests —
-    * the files `toGen` references that `fromGen` does not, read as one
-    * explicit-list parquet scan. This is Iceberg's append-only incremental
-    * scan re-derived: it is SOUND only over a chain of pure append
+    * the manifest index over the files `toGen` references that `fromGen`
+    * does not, job-free like [[resolve]]. This is Iceberg's append-only
+    * incremental scan re-derived: it is SOUND only over a chain of pure append
     * publications, so the verb walks every adjacent manifest pair in the
     * range and REFUSES loudly if any step dropped or replaced a file (a
     * delete-rewrite, compaction, or rollback in the range means "files new
@@ -612,10 +674,10 @@ object SnapTables {
           "instead)")
       prevSet = curSet
     }
-    val added = (prevSet -- fromSet)
-      .toSeq.map { case (v, n) => s"$path/$partCol=$v/$n" }.sorted
+    val added = (prevSet -- fromSet).groupMap(_._1)(_._2).map { case (v, ns) => v -> ns.toSeq }
     if (added.isEmpty) resolveAt(spark, path, partCol, toGen).where(lit(false))
-    else spark.read.option("basePath", path).parquet(added: _*)
+    else frameOf(spark, path, partCol, added,
+      s"generations ($fromGen, $toGen] of $path")
   }
 
   /** Bounded-I/O partition rewrite with snapshot-isolated publication: the

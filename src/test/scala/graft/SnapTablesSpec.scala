@@ -1,7 +1,12 @@
 package graft
 
+import org.apache.hadoop.fs.Path
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
+import org.scalatest.{Outcome, OutcomeOf, Succeeded}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ops.SnapTables
 
@@ -13,6 +18,69 @@ import graft.ops.SnapTables
   * expiry reclaims exactly the unreferenced files.
   */
 class SnapTablesSpec extends AnyFunSuite with SparkSpec {
+
+  /** Every directory the running test made, so the schema parity pin below
+    * can revisit the tables among them.
+    */
+  private val dirs = collection.mutable.ArrayBuffer.empty[String]
+
+  override def tmpDir(prefix: String): String = {
+    val d = super.tmpDir(prefix)
+    dirs.synchronized(dirs += d)
+    d
+  }
+
+  /** Schema parity pin, run after every passing test: for each table the
+    * test published, the resolved frame's schema (names, types,
+    * nullability, order, partition column last) equals what Spark's own
+    * explicit-list read of the same files infers.
+    */
+  override def withFixture(test: NoArgTest): Outcome = {
+    dirs.synchronized(dirs.clear())
+    super.withFixture(test) match {
+      case Succeeded => OutcomeOf.outcomeOf(dirs.synchronized(dirs.toList).foreach(assertStockSchema))
+      case other => other
+    }
+  }
+
+  private def assertStockSchema(dir: String): Unit =
+    SnapTables.currentGeneration(spark, dir).foreach { gen =>
+      val hfs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val partCol = hfs.listStatus(new Path(dir)).map(_.getPath.getName)
+        .collectFirst { case n if n.matches("\\w+=-?\\d+") => n.takeWhile(_ != '=') }
+        .getOrElse(fail(s"$dir holds no partition directory"))
+      val files = SnapTables.manifestEntries(spark, dir, gen).toSeq
+        .flatMap { case (v, ns) => ns.map(n => s"$dir/$partCol=$v/$n") }
+      val stock = spark.read.option("basePath", dir).parquet(files: _*).schema
+      val served = SnapTables.resolve(spark, dir, partCol).schema
+      assert(served == stock, s"$dir generation $gen: resolved schema differs " +
+        s"from the stock read\n  served ${served.treeString}\n  stock  ${stock.treeString}")
+    }
+
+  /** The Spark jobs started while `body` runs. A marker job run after it
+    * proves the listener has seen every earlier start: the listener bus
+    * delivers events in order.
+    */
+  private def jobsDuring[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val marker = s"jobs-marker-${java.util.UUID.randomUUID()}"
+    val starts = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        starts.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse(""))
+    }
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      sc.setJobDescription(marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      val deadline = System.currentTimeMillis() + 10000
+      while (!starts.contains(marker) && System.currentTimeMillis() < deadline) Thread.sleep(20)
+      assert(starts.contains(marker), "the listener never saw the marker job")
+      (out, starts.size - 1)
+    } finally sc.removeSparkListener(listener)
+  }
 
   private def table = {
     import spark.implicits._
@@ -969,5 +1037,73 @@ class SnapTablesSpec extends AnyFunSuite with SparkSpec {
       SnapTables.appendedBetween(spark, dir, "pb", 3, 4)
     }
     assert(atCompact.getMessage.contains("not an append-only chain"))
+  }
+
+  test("resolve is job-free past 32 files, and a one-partition serve scans only that partition's files") {
+    import spark.implicits._
+    val dir = tmpDir("snap-jobfree")
+    def slice(from: Long) = (from until from + 64L).map(k => (k, s"v$k", (k % 16).toInt))
+      .toDF("key", "payload", "pb")
+    SnapTables.publishInitial(spark, dir, "pb", slice(0L))
+    SnapTables.appendPartitions(spark, dir, "pb", slice(64L))
+    SnapTables.appendPartitions(spark, dir, "pb", slice(128L))
+    val entries = SnapTables.manifestEntries(spark, dir, 2)
+    assert(entries.values.map(_.size).sum > 32,
+      "the table must pass Spark's 32-path parallel-listing threshold")
+    val (t, jobs) = jobsDuring(SnapTables.resolve(spark, dir, "pb"))
+    assert(jobs == 0, s"resolve must plan from the manifest alone, but ran $jobs Spark job(s)")
+    val served = t.where(col("pb") === 5).select(col("key"))
+    val qe = served.queryExecution
+    val keys = qe.executedPlan.executeCollect().map(_.getLong(0)).toSet
+    assert(keys == (0L until 192L).filter(_ % 16 == 5).toSet)
+    val scans = new AdaptiveSparkPlanHelper {}.collect(qe.executedPlan) {
+      case s: FileSourceScanExec => s
+    }
+    assert(scans.size == 1)
+    assert(scans.head.metrics("numFiles").value == entries(5).size,
+      "the scan must read exactly the served partition's manifest files")
+  }
+
+  test("index identity: one generation resolves to one relation, generations differ, expired ones fail loudly") {
+    import spark.implicits._
+    val dir = tmpDir("snap-identity")
+    SnapTables.publishInitial(spark, dir, "pb", table)
+    val (a, b) = (SnapTables.resolve(spark, dir, "pb"), SnapTables.resolve(spark, dir, "pb"))
+    assert(a.sameSemantics(b), "two resolves of one generation must be the same relation")
+    // both aggregates shuffle identically, so the second exchange is reused
+    val counts = (df: DataFrame) => df.groupBy("pb").agg(sum(col("key")).as("s"))
+    val joined = counts(a).join(counts(b).withColumnRenamed("s", "s2"), "pb")
+    assert(joined.collect().forall(r => r.getLong(1) == r.getLong(2)))
+    assert(joined.queryExecution.executedPlan.toString.contains("ReusedExchange"),
+      s"a self-join of one generation must reuse its exchange:\n${joined.queryExecution.executedPlan}")
+    SnapTables.deleteByKey(spark, dir, "pb", "key", Seq(4L, 8L).toDF("key"))
+    val (g0, g1) = (SnapTables.resolveAt(spark, dir, "pb", 0), SnapTables.resolveAt(spark, dir, "pb", 1))
+    assert(!g0.sameSemantics(g1), "two generations must never be the same relation")
+    assert(g0.sameSemantics(a))
+    // reclaim one file only generation 0 references: resolving it fails at
+    // resolve, naming the generation and the table
+    val only0 = SnapTables.manifestEntries(spark, dir, 0).toSeq
+      .flatMap { case (v, ns) => ns.map(v -> _) }
+      .filterNot { case (v, n) => SnapTables.manifestEntries(spark, dir, 1).getOrElse(v, Nil).contains(n) }
+    val (v, n) = only0.head
+    val hfs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(hfs.delete(new Path(dir, s"pb=$v/$n"), false))
+    val ex = intercept[IllegalStateException](SnapTables.resolveAt(spark, dir, "pb", 0))
+    assert(ex.getMessage.contains(s"generation 0 of $dir"), ex.getMessage)
+    assert(rows(SnapTables.resolve(spark, dir, "pb")) == allRows -- Set((4L, "v4"), (8L, "v8")))
+  }
+
+  test("schema parity with nested and nullable columns: resolve matches Spark's own read") {
+    import spark.implicits._
+    val dir = tmpDir("snap-schema")
+    val df = Seq((1L, Seq(1.5f, 2.5f), Map("a" -> 1), 0), (2L, Seq.empty[Float], Map.empty[String, Int], 1))
+      .toDF("key", "vec", "tags", "pb")
+      .withColumn("meta", struct(col("key").as("k"), array(col("key")).as("ks")))
+      .withColumn("at", timestamp_seconds(col("key")))
+      .withColumn("price", lit(BigDecimal("1.25")).cast("decimal(12,2)"))
+      .select("key", "meta", "vec", "tags", "at", "price", "pb")
+    SnapTables.publishInitial(spark, dir, "pb", df)
+    assert(SnapTables.resolve(spark, dir, "pb").columns.last == "pb")
+    // the withFixture pin compares the whole schema once this test passes
   }
 }
