@@ -20,12 +20,29 @@ import graft.ops.Articles
   *        deterministic stand-in for the reference's default microbatch loop);
   *  - S2/S4 parquet sink + checkpoint: exactly-once file output via the sink's
   *        commit log — restarting on the same checkpoint re-emits nothing.
+  *        [[articlesToParquet]] writes at most one file per trigger: the
+  *        log lists whatever files a batch wrote, so exactly-once does not
+  *        need one writer per state partition, and a trigger finalizes only
+  *        a few (window × author) rows.
   */
 object Pipelines {
 
   /** Run `Articles.pipeline` (parse → enrich → windowed avg per author) from
     * `source` to a parquet directory. Returns the started query; callers own
     * `awaitTermination`/`stop`.
+    *
+    * The finalized windows are coalesced to one partition before the sink.
+    * Without it every trigger runs `spark.sql.shuffle.partitions` tasks after
+    * the shuffle, and each opens, writes and commits its own parquet file
+    * for the handful of rows the watermark finalized. `coalesce` is narrow:
+    * the state operator's `Exchange` stays below it, so the map stage keeps
+    * its parallelism and the checkpoint keeps its N state partitions (each
+    * still commits its own store version, all inside the one task), and a
+    * checkpoint written without the coalesce resumes under it. One task is
+    * enough because an aggregate's output per trigger is bounded by the keys
+    * it finalizes, not by its input rows. The coalesce belongs here, not in
+    * [[toParquet]]: on an unaggregated stream it would run the whole
+    * pipeline in one task.
     */
   def articlesToParquet(
       spark: SparkSession,
@@ -33,7 +50,8 @@ object Pipelines {
       outPath: String,
       checkpointPath: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    toParquet(Articles.pipeline(source.load(spark)), outPath, checkpointPath, trigger)
+    toParquet(Articles.pipeline(source.load(spark)).coalesce(1),
+      outPath, checkpointPath, trigger)
 
   /** Generic append-mode parquet writer for any finalized streaming frame. */
   def toParquet(
@@ -119,9 +137,11 @@ object Pipelines {
     * batches' partitions fails fast at batch 0 — see the in-batch guard);
     * and the delta accretes one batch_id partition per micro-batch outside
     * the cluster layout, so its side of the union serve (q400) gets no
-    * partition pruning. A table that must stay cluster-pruned as it grows
-    * ingests through [[snapshotIngest]] instead (q420), whose per-batch
-    * files [[graft.ops.SnapTables.compactPartitions]] folds.
+    * partition pruning. Nothing in the engine folds the delta into the
+    * stored table or clears it: it grows until its owner deletes it
+    * together with the checkpoint. A table that must stay cluster-pruned
+    * as it grows ingests through [[snapshotIngest]] instead (q420), whose
+    * per-batch files [[graft.ops.SnapTables.compactPartitions]] folds.
     */
   def annIndexMaintenance(
       vectors: DataFrame,
@@ -138,13 +158,14 @@ object Pipelines {
       .trigger(trigger)
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         // The ownership marker is maintained on EVERY batch, not only batch
-        // 0: whatever consumes the delta (a fold into the stored table, or
-        // a clear) removes the directory WITH its marker, so when the
-        // stream resumes afterwards (batchId > 0) the rebuilt delta would
-        // otherwise carry no ownership, and the foreign-checkpoint guard
-        // below would silently never apply again. Any batch that finds the
-        // marker absent (or empty: crash between create and close under
-        // the old non-atomic write) re-stamps it.
+        // 0. No engine code folds or consumes the delta (q400 unions it with
+        // the stored codes at serve time), so it only shrinks when its owner
+        // deletes the directory, and the marker goes with it. If the stream
+        // then resumes (batchId > 0), the rebuilt delta would carry no
+        // ownership and the foreign-checkpoint guard below would silently
+        // never apply again. Any batch that finds the marker absent (or
+        // empty: crash between create and close under the old non-atomic
+        // write) re-stamps it.
         //
         // deltaPath and checkpointPath must still be created/cleared
         // TOGETHER: a fresh checkpoint (first batch ever) over a deltaPath
@@ -157,8 +178,8 @@ object Pipelines {
         // delta, fail (any batch). No marker but batch_id residue at batch
         // 0 ⇒ unowned leftovers (including a lone batch_id=0 from a
         // one-batch stream), fail; at batch > 0 residue is THIS stream's
-        // own accretion (or a rebuild after a consume), so only the re-stamp
-        // applies.
+        // own accretion (or a rebuild after a deletion), so only the
+        // re-stamp applies.
         {
           val dp = new org.apache.hadoop.fs.Path(deltaPath)
           val fs = dp.getFileSystem(batch.sparkSession.sessionState.newHadoopConf())

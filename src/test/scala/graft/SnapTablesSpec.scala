@@ -57,29 +57,13 @@ class SnapTablesSpec extends AnyFunSuite with SparkSpec {
         s"from the stock read\n  served ${served.treeString}\n  stock  ${stock.treeString}")
     }
 
-  /** The Spark jobs started while `body` runs. A marker job run after it
-    * proves the listener has seen every earlier start: the listener bus
-    * delivers events in order.
-    */
+  /** The Spark jobs started while `body` runs. */
   private def jobsDuring[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val marker = s"jobs-marker-${java.util.UUID.randomUUID()}"
-    val starts = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        starts.add(Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse(""))
-    }
-    sc.addSparkListener(listener)
-    try {
-      val out = body
-      sc.setJobDescription(marker)
-      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
-      val deadline = System.currentTimeMillis() + 10000
-      while (!starts.contains(marker) && System.currentTimeMillis() < deadline) Thread.sleep(20)
-      assert(starts.contains(marker), "the listener never saw the marker job")
-      (out, starts.size - 1)
-    } finally sc.removeSparkListener(listener)
+    val starts = new java.util.concurrent.atomic.AtomicInteger()
+    val out = withListener(new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = starts.incrementAndGet()
+    })(body)
+    (out, starts.get - 1) // less withListener's own marker job
   }
 
   private def table = {

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.Assertions.assert
 
@@ -24,6 +25,34 @@ trait SparkSpec {
     * when the test JVM exits ([[Scratch]]).
     */
   def tmpDir(prefix: String): String = Scratch.dir(prefix)
+
+  /** Runs `body` with `listener` registered, then runs a marker job and
+    * waits until the bus has delivered it: the bus delivers events in
+    * order, so `listener` has then seen every event posted during `body`.
+    */
+  def withListener[T](listener: SparkListener)(body: => T): T = {
+    val sc = spark.sparkContext
+    val marker = s"listener-marker-${java.util.UUID.randomUUID()}"
+    val seen = new java.util.concurrent.CountDownLatch(1)
+    val markerListener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.job.description") == marker))
+          seen.countDown()
+    }
+    sc.addSparkListener(listener)
+    sc.addSparkListener(markerListener)
+    try {
+      val out = body
+      sc.setJobDescription(marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      assert(seen.await(10, java.util.concurrent.TimeUnit.SECONDS),
+        "the listener bus never delivered the marker job")
+      out
+    } finally {
+      sc.removeSparkListener(markerListener)
+      sc.removeSparkListener(listener)
+    }
+  }
 
   /** Publish `df` as a [[graft.ops.SnapTables]] table partitioned by
     * `partCol` (the layout the catalog's stored-index serves read) and

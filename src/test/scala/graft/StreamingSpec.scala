@@ -1,12 +1,15 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.SparkPlanInfo
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.scalatest.funsuite.AnyFunSuite
 import java.sql.Timestamp
 
-import graft.ops.Articles
+import graft.ops.{Articles, DataGen}
 import graft.streaming.{KinesisEnvelope, Pipelines, StreamSource}
 
 /** The engine's streaming execution path, end to end — the semantics the
@@ -43,19 +46,86 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
   }
 
   private def collectWindows(df: DataFrame): Set[(Timestamp, Timestamp, String, Double)] =
+    windowRows(df).toSet
+
+  /** The window rows with their multiplicity, so a re-emitted row shows. */
+  private def windowRows(df: DataFrame): Seq[(Timestamp, Timestamp, String, Double)] =
     df.select("start", "end", "author", "average_word_count")
-      .collect()
+      .collect().toSeq
       .map(r => (r.getTimestamp(0), r.getTimestamp(1), r.getString(2), r.getDouble(3)))
-      .toSet
 
   private def readOut(path: String): Set[(Timestamp, Timestamp, String, Double)] =
-    collectWindows(spark.read.schema(
+    readOutRows(path).toSet
+
+  private def readOutRows(path: String): Seq[(Timestamp, Timestamp, String, Double)] =
+    windowRows(spark.read.schema(
       org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("start", org.apache.spark.sql.types.TimestampType),
         org.apache.spark.sql.types.StructField("end", org.apache.spark.sql.types.TimestampType),
         org.apache.spark.sql.types.StructField("author", org.apache.spark.sql.types.StringType),
         org.apache.spark.sql.types.StructField("average_word_count", org.apache.spark.sql.types.DoubleType)
       ))).parquet(path))
+
+  private def withShufflePartitions[T](n: Int)(body: => T): T = {
+    val key = "spark.sql.shuffle.partitions"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, n.toLong)
+    try body finally spark.conf.set(key, prev)
+  }
+
+  /** Generated articles as one-minute slices, one parquet file per slice, so
+    * a source capped at one file per trigger reads one minute per batch.
+    */
+  private def writeSlices(dir: String, slices: Range): Unit =
+    slices.foreach { i =>
+      DataGen.envelopeFor(spark.range(i * 200L, (i + 1) * 200L).toDF("id"),
+          startEpochSeconds = 1704067200L + i * 60L, spreadSeconds = 60L)
+        .coalesce(1).write.mode("append").parquet(dir)
+    }
+
+  /** Per batch id, the data files the parquet sink's `_spark_metadata` log
+    * lists and the rows they hold.
+    */
+  private def sinkLog(out: String): Map[Long, (Int, Long)] = {
+    val logs = new java.io.File(out, "_spark_metadata").listFiles().toSeq
+      .filterNot(f => f.getName.startsWith("."))
+    assert(logs.forall(_.getName.forall(_.isDigit)),
+      s"a compacted sink log hides per-batch files: ${logs.map(_.getName)}")
+    val pathField = "\"path\":\"([^\"]+)\"".r
+    logs.map { f =>
+      val src = scala.io.Source.fromFile(f, "UTF-8")
+      val paths = try src.getLines().drop(1).toList
+        .flatMap(l => pathField.findFirstMatchIn(l).map(_.group(1)))
+      finally src.close()
+      val rows = paths.map(p => spark.read.parquet(p).count()).sum
+      f.getName.toLong -> ((paths.size, rows))
+    }.toMap
+  }
+
+  /** The physical plans of the micro-batches of the query `start` starts,
+    * by batch id, read from the SQL execution events.
+    */
+  private def runWithBatchPlans(start: => StreamingQuery)
+      : (StreamingQuery, Map[Long, Seq[SparkPlanInfo]]) = {
+    import scala.jdk.CollectionConverters._
+    val starts = new java.util.concurrent.ConcurrentLinkedQueue[SparkListenerSQLExecutionStart]()
+    val q = withListener(new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => starts.add(s)
+        case _ =>
+      }
+    }) { val q = start; q.awaitTermination(); q }
+    // a micro-batch runs under the job description "… runId = <id> … batch = <n>"
+    val batchOf = "\\bbatch = (\\d+)".r
+    val plans = starts.asScala.toSeq.flatMap { e =>
+      Option(e.description).filter(_.contains(s"runId = ${q.runId}"))
+        .flatMap(batchOf.findFirstMatchIn(_))
+        .map(m => m.group(1).toLong -> e.sparkPlanInfo)
+    }
+    (q, plans.groupMap(_._1)(_._2))
+  }
+
+  private def planNodes(p: SparkPlanInfo): Seq[SparkPlanInfo] = p +: p.children.flatMap(planNodes)
 
   // -------------------------------------------------------------------------
 
@@ -177,6 +247,86 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     // whole retained stream from the horizon
     assert(drain(tmpDir("w7-out2"), tmpDir("w7-ckpt2")) == batchTwin(history ++ more),
       "a later fresh consumer replays the full retained history")
+  }
+
+  test("S2/S4: the flagship sink writes one file per finalizing trigger; the N state partitions stay below a CoalesceExec(1)") {
+    withShufflePartitions(8) {
+      val envDir = tmpDir("one-file-env")
+      val out = tmpDir("one-file-out")
+      writeSlices(envDir, 0 until 5)
+
+      val (q, plans) = runWithBatchPlans(Pipelines.articlesToParquet(spark,
+        StreamSource.FileEnvelopeSource(envDir, maxFilesPerTrigger = Some(1)),
+        out, s"$out-ckpt", Trigger.AvailableNow()))
+      assert(readOutRows(out).sorted ==
+        windowRows(Articles.pipeline(
+          spark.read.schema(Articles.envelopeSchema).parquet(envDir))).sorted,
+        "the sink must hold the batch twin's rows, each once")
+
+      val log = sinkLog(out)
+      val emitting = log.filter(_._2._2 > 0)
+      assert(emitting.size >= 3, s"too few batches finalized windows to tell: $log")
+      assert(emitting.values.forall(_._1 == 1),
+        s"each batch that emits rows must write one file (batch -> (files, rows)): $log")
+
+      val data = q.recentProgress.filter(_.numInputRows > 0)
+      assert(data.length == 5, "one data batch per one-minute slice")
+      data.foreach { p =>
+        assert(p.stateOperators.map(_.numStateStoreInstances).toSeq == Seq(8),
+          s"batch ${p.batchId} must keep the 8 state partitions")
+        val stateful = plans.getOrElse(p.batchId, Nil)
+          .filter(pl => planNodes(pl).exists(_.nodeName == "StateStoreSave"))
+        assert(stateful.nonEmpty, s"batch ${p.batchId}: no stateful plan among ${plans.keys}")
+        stateful.foreach { plan =>
+          val coalesce = planNodes(plan).filter(_.nodeName == "Coalesce")
+          assert(coalesce.map(_.simpleString) == Seq("Coalesce 1"), s"batch ${p.batchId}")
+          val save = planNodes(coalesce.head).filter(_.nodeName == "StateStoreSave")
+          assert(save.size == 1 && planNodes(plan).count(_.nodeName == "StateStoreSave") == 1,
+            "the state operator must run under the coalesce")
+          val exchanges = (n: SparkPlanInfo) => planNodes(n).filter(_.nodeName == "Exchange")
+          assert(exchanges(coalesce.head) == exchanges(save.head),
+            "no shuffle may sit between the coalesce and the state operator")
+          assert(exchanges(save.head).exists(e =>
+              e.simpleString.contains("hashpartitioning") && e.simpleString.contains(", 8)")),
+            "the stateful Exchange into 8 partitions must stay below the state operator")
+        }
+      }
+    }
+  }
+
+  test("S4/W5: a checkpoint written by the stock parquet sink resumes through articlesToParquet and re-emits nothing") {
+    val envDir = tmpDir("resume-env")
+    val out = tmpDir("resume-out")
+    val ckpt = tmpDir("resume-ckpt")
+    writeSlices(envDir, 0 until 4)
+    val source = StreamSource.FileEnvelopeSource(envDir, maxFilesPerTrigger = Some(1))
+    withShufflePartitions(8) {
+      Pipelines.toParquet(Articles.pipeline(source.load(spark)), out, ckpt,
+        Trigger.AvailableNow()).awaitTermination()
+    }
+    val before = readOutRows(out)
+    val beforeLog = sinkLog(out)
+    assert(before.nonEmpty && beforeLog.values.exists(_._1 > 1),
+      s"the stock sink writes one file per state partition: $beforeLog")
+
+    // the later slices finalize the windows that were open at shutdown; the
+    // session now runs another partition count, and the checkpoint's wins
+    writeSlices(envDir, 4 until 6)
+    val q = Pipelines.articlesToParquet(spark, source, out, ckpt, Trigger.AvailableNow())
+    q.awaitTermination()
+
+    val after = readOutRows(out)
+    assert(after.distinct.size == after.size, "a finalized window was emitted twice")
+    assert(after.toSet == windowRows(Articles.pipeline(
+          spark.read.schema(Articles.envelopeSchema).parquet(envDir))).toSet)
+    assert(before.forall(after.contains) && after.size > before.size,
+      "the windows open at shutdown must finalize after the resume")
+    val resumed = sinkLog(out) -- beforeLog.keys
+    assert(resumed.values.exists(_._2 > 0) && resumed.values.forall(_._1 <= 1),
+      s"the resumed batches write at most one file each: $resumed")
+    val data = q.recentProgress.filter(_.numInputRows > 0)
+    assert(data.nonEmpty && data.forall(_.stateOperators.map(_.numStateStoreInstances).toSeq == Seq(8)),
+      "the resumed query keeps the checkpoint's 8 state partitions")
   }
 
   test("dead-letter channel: malformed payloads quarantined with raw data; idempotent restart") {
