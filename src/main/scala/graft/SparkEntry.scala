@@ -25,20 +25,18 @@ object SparkEntry {
 
   /** Gate-economics slow tier (VERDICT r18 #7): the queries measured
     * heaviest in the sf0.01 correctness dump (engine-side wall >15 s under
-    * the gate's own 4-way concurrency — `verify_timings.json`, re-measured
-    * round 19; none reaches the 30 s quarantine bar, so all still verify
-    * every round). Verify enqueues them LAST: a driver wall-clock timeout
-    * kills this tail, not the broad fast body whose rows check.py has
-    * already flushed incrementally. Tagged centrally so the list is one
-    * measured, re-tunable ledger rather than flags scattered over 4k
-    * lines of catalog.
+    * the gate's own worker pool — `verify_timings.json` of the sf0.01
+    * Verify of 2026-10-19 on 4 CPUs, `SPARK_GRAFT_VERIFY_PAR` at its
+    * default of 6: q431 20.9 s, q366 17.1 s, then q405 at 14.5 s; none
+    * reaches the 30 s quarantine bar, so all still verify every round).
+    * Verify enqueues them LAST: a driver wall-clock timeout kills this
+    * tail, not the broad fast body whose rows check.py has already flushed
+    * incrementally. Tagged centrally so the list is one measured,
+    * re-tunable ledger rather than flags scattered over 4k lines of
+    * catalog.
     */
   private val gateSlowNames: Set[String] = Set(
-    "q431_curation_snapshot_capstone", "q291_heaps_exponent",
-    "q199_lm_table_serve", "q198_lm_table_append", "q278_lm_table_retract",
-    "q224_hybrid_batch_from_tables", "q217_hybrid_from_tables",
-    "q218_bm25_batch_from_tables", "q175_bm25_index_serve",
-    "q234_bpe_table_encode")
+    "q431_curation_snapshot_capstone", "q366_dbscan_embeddings")
 
   /** Full catalog, in stable order. */
   val catalog: Seq[QueryDef] = {

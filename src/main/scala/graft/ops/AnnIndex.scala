@@ -113,7 +113,7 @@ object AnnIndex {
     * before the union, so a RE-ingested vector (present in both stored base
     * and delta — possibly in a different cell after an embedding update)
     * serves exactly once, from its delta row, and the stored ∪ delta serve
-    * (q400) is correct with no fold step in between. The delta is the
+    * (q158, q394) is correct with no fold step in between. The delta is the
     * small side (one ingest cycle), so the anti join broadcasts under AQE;
     * for a fresh-ids-only delta the anti join removes nothing and the
     * result is the plain union (q394's append == re-encode hash proof is

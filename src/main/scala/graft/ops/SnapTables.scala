@@ -38,8 +38,8 @@ final class SnapConflict(msg: String, cause: Throwable = null)
   *  - `path/_manifests/gen-%06d.tsv` lists, per partition value, exactly
   *    the file names that generation serves;
   *  - `path/_generation` is a one-line pointer to the current generation,
-  *    written via write-then-RENAME (atomic on HDFS/local — the
-  *    [[graft.streaming.Pipelines]] ownership-marker pattern).
+  *    written via write-then-RENAME (atomic on HDFS/local), so a crash
+  *    leaves the old pointer or the new one, never a truncated one.
   *
   * A rewrite appends NEW files for the affected partitions only (bounded
   * I/O — the affected-partition shape of an in-place dynamic overwrite,

@@ -2162,33 +2162,19 @@ object PipelineQueries {
            |SELECT gate.*, drift.* FROM gate CROSS JOIN drift""".stripMargin
       }),
 
-    // The STREAMING leg of the ANN-index lifecycle as a hash-checked row —
-    // until now the maintenance loop's read side was only spec-pinned
-    // (StreamOpsSpec: streamed delta == batch twin); this promotes it to the
-    // same cross-engine proof the batch legs have. The delta (1/7 split) is
-    // ingested by the ACTUAL streaming path inside the query (memoized once
-    // per JVM per corpus, like the q393 index build): a Scratch-rooted file
-    // source capped at one file per trigger (so AvailableNow produces ≥2
-    // real micro-batches), Pipelines.annIndexMaintenance encoding each
-    // batch against the FROZEN stored base model into batch_id-partitioned
-    // delta parquet. The query then serves top-k over stored base ∪ re-read
-    // streamed delta. Oracle: base-trained full-candidate serve — the SAME
-    // SQL as q399/q420's streamed snapshot serve, which is the invariant:
-    // the streaming transport changes where the codes live, never what
-    // serves.
+    // The STREAMING leg of the ANN-index lifecycle as a hash-checked row:
+    // the 1/7 delta is ingested by the actual streaming path inside the
+    // query (memoized once per JVM per corpus), a file source capped at one
+    // file per trigger (so AvailableNow produces ≥2 real micro-batches)
+    // through Pipelines.snapshotIngest, each batch encoded against the
+    // FROZEN 6/7-trained model and published as one generation of the
+    // cluster-partitioned codes snapshot. It serves top-k over that
+    // snapshot, the function q399 and q420 run. Oracle: base-trained
+    // full-candidate serve, the same SQL as q399/q420: the streaming
+    // transport changes where the codes live, never what serves.
     QueryDef(
       "q400_ann_stream_union_serve",
-      (s, dir) => {
-        val emb = Tables.load(s, dir, "embeddings")
-        val idx = graft.ops.AnnIndex.read(s,
-          SimilarityQueries.sqrtnBaseIndexPath(s, dir))
-        val delta = s.read.parquet(streamedDeltaPath(s, dir))
-          .select(col("vid"), col("cluster"), col("codes"))
-        val served = graft.ops.AnnIndex.append(idx, delta)
-        val queries = emb.where(pmod(col("vec_id"), lit(10)) === 0)
-        graft.ops.AnnIndex.search(queries, col("vec_id"), col("embedding"), 3,
-          served, nprobe = 2)
-      },
+      SimilarityQueries.annStreamSnapServe,
       Some(SimilarityQueries.duckSqrtnServeOracle(trainOnBase = true))),
 
     // LIFECYCLE CAPSTONE — the whole operational story of a production
@@ -2535,36 +2521,6 @@ object PipelineQueries {
        |SELECT d.doc_id, d.text FROM decon d
        |WHERE NOT EXISTS (SELECT 1 FROM phit h WHERE h.doc_id = d.doc_id)""".stripMargin
   }
-
-  /** Once-per-JVM streamed codes delta per sfDir: the 1/7 split staged as
-    * a 2-file scratch parquet source, streamed back one file per
-    * micro-batch (AvailableNow ⇒ ≥2 real batches) through
-    * [[graft.streaming.Pipelines.annIndexMaintenance]] against the frozen
-    * q394 base model, landing batch_id-partitioned posting rows at the
-    * returned path. Deterministic (frozen model, per-row encode), so the
-    * memoization is correctness-neutral; warm runs of q400 measure the
-    * union-serve read side, the production shape.
-    */
-  private def streamedDeltaPath(s: org.apache.spark.sql.SparkSession,
-      dir: String): String =
-    SimilarityQueries.memoPath("streamdelta", dir) { deltaPath =>
-      val idx = graft.ops.AnnIndex.read(s,
-        SimilarityQueries.sqrtnBaseIndexPath(s, dir))
-      val srcDir = graft.Scratch.dir("graft-ann-stream-src")
-      Tables.load(s, dir, "embeddings")
-        .where(pmod(col("vec_id"), lit(7)) === 0)
-        .select(col("vec_id"), col("embedding"))
-        .repartition(2).write.mode("overwrite").parquet(srcDir)
-      val stream = s.readStream
-        .schema("vec_id BIGINT, embedding ARRAY<FLOAT>")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(srcDir)
-      graft.streaming.Pipelines.annIndexMaintenance(stream,
-        col("vec_id"), col("embedding"), idx, deltaPath,
-        checkpointPath = graft.Scratch.dir("graft-ann-stream-ckpt"),
-        trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .awaitTermination()
-    }
 
   /** The q403 snapshot index: the WHOLE lifecycle composed — q420's
     * streamed snapshot (frozen 6/7 base model, base codes as gen 0, the 1/7

@@ -2518,16 +2518,17 @@ object SimilarityQueries {
       annSnapDelete,
       Some(duckSqrtnServeOracle("\n    AND b.vec_id % 11 <> 0"))),
 
-    // SNAPSHOT STREAMED INGEST for the flagship family — the architectural
-    // alternative to q400's stored ∪ batch_id-delta serve: each
-    // micro-batch's frozen-model encode publishes DIRECTLY into the
-    // cluster-partitioned codes snapshot as one atomic generation
-    // (Pipelines.snapshotIngest → SnapTables.appendBatch), so the serve is
-    // always ONE resolve() over the cluster layout — no stored∪delta
-    // union, no partition-pruning loss on the delta side, no compaction
-    // PREREQUISITE for a correct serve (SnapTables.compactPartitions folds
-    // the per-batch file accretion afterwards as a content-invariant
-    // generation), and a reader holds its generation through every batch.
+    // SNAPSHOT STREAMED INGEST for the flagship family, the engine's one
+    // streaming ingest path for the IVF-PQ index (q399 and q400 serve the
+    // same table): each micro-batch's frozen-model encode publishes
+    // DIRECTLY into the cluster-partitioned codes snapshot as one atomic
+    // generation (Pipelines.snapshotIngest → SnapTables.appendBatch), so
+    // the serve is always ONE resolve() over the cluster layout: no
+    // stored ∪ delta union, no partition-pruning loss on a delta side, no
+    // compaction PREREQUISITE for a correct serve
+    // (SnapTables.compactPartitions folds the per-batch file accretion
+    // afterwards as a content-invariant generation), and a reader holds
+    // its generation through every batch.
     // Exactly-once rides the manifest's #batch high-water mark
     // (SnapTablesSpec). Oracle: the base-trained full-candidate chain —
     // streamed snapshot ingest must equal the batch rebuild through the
@@ -2544,9 +2545,9 @@ object SimilarityQueries {
     // delta = the 1/7 ingest, encoded frozen over two micro-batches, then
     // compacted. Served through q420's streamed snapshot ingest, which
     // compacts with SnapTables.compactPartitions. Oracle: the q391 serve
-    // chain with base-trained model over full candidates — identical to
-    // q400's, which is the point: compacted storage and stored ∪ delta
-    // must serve the same answers.
+    // chain with base-trained model over full candidates, identical to
+    // q400's and q420's: compacting the streamed files must not change
+    // what serves.
     QueryDef(
       "q399_ivfpq_compacted_serve",
       annStreamSnapServe,
@@ -2899,7 +2900,7 @@ object SimilarityQueries {
     * (vec_id % 7 != 0) at the same √N sizing — the frozen model the delta
     * ingest encodes against.
     */
-  private[queries] def sqrtnBaseIndexPath(s: org.apache.spark.sql.SparkSession,
+  private def sqrtnBaseIndexPath(s: org.apache.spark.sql.SparkSession,
       dir: String): String =
     persistedIndexPath("base", dir) {
       val emb = Tables.load(s, dir, "embeddings")
@@ -2930,7 +2931,7 @@ object SimilarityQueries {
       ()
     }
 
-  /** The q399/q401/q420 snapshot index. */
+  /** The q399/q400/q401/q420 snapshot index. */
   private def annStreamSnapPath(s: org.apache.spark.sql.SparkSession,
       dir: String): String =
     memoPath("annstreamsnap", dir)(publishStreamedAnnSnap(s, dir, _))
@@ -2941,8 +2942,9 @@ object SimilarityQueries {
     * through [[graft.streaming.Pipelines.snapshotIngest]] (2 source files →
     * 2 real micro-batches, each encoded frozen inside `foreachBatch` and
     * published as one generation), then the per-batch file accretion
-    * folded by [[graft.ops.SnapTables.compactPartitions]]. Shared by q420's
-    * table and the q403 lifecycle table, which deletes on top of it.
+    * folded by [[graft.ops.SnapTables.compactPartitions]]. Shared by the
+    * q399/q400/q401/q420 table and the q403 lifecycle table, which deletes
+    * on top of it.
     */
   private[queries] def publishStreamedAnnSnap(
       s: org.apache.spark.sql.SparkSession, dir: String, p: String): Unit = {
@@ -2955,9 +2957,9 @@ object SimilarityQueries {
       .where(pmod(col("vec_id"), lit(7)) === 0)
       .select(col("vec_id"), col("embedding"))
       .repartition(2).write.mode("overwrite").parquet(srcDir)
-    // the model rides FROZEN in the foreachBatch closure (the
-    // annIndexMaintenance stance — a mid-stream retrain is structurally
-    // impossible); codes=null: encode never touches them
+    // the model rides FROZEN in the foreachBatch closure, so a mid-stream
+    // retrain is structurally impossible (retrain = a new build and a new
+    // stream); codes=null: encode never touches them
     val frozen = base.copy(codes = null)
     graft.streaming.Pipelines.snapshotIngest(
       s.readStream.schema("vec_id BIGINT, embedding ARRAY<FLOAT>")
@@ -2998,16 +3000,19 @@ object SimilarityQueries {
       dir: String): org.apache.spark.sql.DataFrame =
     annSnapServe(s, dir, snapshotIndexPath(s, dir))
 
-  private def annStreamSnapServe(s: org.apache.spark.sql.SparkSession,
+  private[queries] def annStreamSnapServe(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
     annSnapServe(s, dir, annStreamSnapPath(s, dir))
 
-  /** The shared q391/q393/q396 oracle: unrolled k=22/2-iteration k-means
+  /** The shared √N serve oracle: unrolled k=22/2-iteration k-means
     * coarse quantizer, residual PQ, probe + LUT + ADC chain — identical
     * math for the in-plan build (q391) and the persisted serve (q393),
     * because the stored tables ARE the build's outputs. `candFilter` is an
     * extra predicate on the candidate (posting-list) side — the delete
-    * leg's survivors-only replay (q396).
+    * legs' survivors-only replay (q396, q398, q413, q403). `trainOnBase`
+    * selects the frozen-model training split of the streamed-ingest legs
+    * (q399, q400, q420, q403), which all serve a snapshot fed by
+    * [[graft.streaming.Pipelines.snapshotIngest]].
     */
   private[queries] def duckSqrtnServeOracle(candFilter: String = "",
       trainOnBase: Boolean = false, pqK: Int = 16): String =
@@ -3019,7 +3024,7 @@ object SimilarityQueries {
     * the k=22/2-iteration k-means quantizer, assignment of EVERY vector
     * (`sassign`/`sdist`), residuals, and the residual-PQ tables
     * (`pqcodes`/`pqlut`/`pq<sub>_cent1`). trainOnBase: the frozen-model
-    * lifecycle legs (q399 compacted serve, q400 streaming union serve)
+    * lifecycle legs (q399, q400, q420 streamed snapshot serve, q403)
     * train quantizer and codebooks on the 6/7 base split ONLY (q394's
     * recipe) while assignment/encoding/serving still cover every vector —
     * the oracle twin of "stored base index + ingested delta".

@@ -130,127 +130,16 @@ object Pipelines {
       .start()
   }
 
-  /** Streaming ANN-index maintenance — the daily-ingest encode+append path
-    * ([[graft.ops.AnnIndex.encode]]/[[graft.ops.AnnIndex.append]], q394) as
-    * an actual stream: each micro-batch of vectors encodes against the
-    * FROZEN stored model (per-row deterministic, zero training) and lands
-    * as posting-list rows in a codes-delta table partitioned by `batch_id`
-    * with dynamic partition overwrite — the [[articlesWithDeadLetter]]
-    * idempotence recipe, so a replayed batch overwrites itself instead of
-    * duplicating. The serving index is `stored codes ∪ delta codes`; since
-    * encode is per-row deterministic, that union equals a from-scratch
-    * re-encode (q394's hash proof; StreamOpsSpec pins the streaming
-    * transport == the batch twin row for row). The model frames ride frozen
-    * in the closure — a mid-stream retrain is structurally impossible,
-    * which is the point: retrain = new [[graft.ops.AnnIndex.build]] and a
-    * new query.
-    *
-    * Operational contract: `deltaPath` and `checkpointPath` are created and
-    * cleared TOGETHER (a fresh checkpoint over a deltaPath holding other
-    * batches' partitions fails fast at batch 0 — see the in-batch guard);
-    * and the delta accretes one batch_id partition per micro-batch outside
-    * the cluster layout, so its side of the union serve (q400) gets no
-    * partition pruning. Nothing in the engine folds the delta into the
-    * stored table or clears it: it grows until its owner deletes it
-    * together with the checkpoint. A table that must stay cluster-pruned
-    * as it grows ingests through [[snapshotIngest]] instead (q420), whose
-    * per-batch files [[graft.ops.SnapTables.compactPartitions]] folds.
-    */
-  def annIndexMaintenance(
-      vectors: DataFrame,
-      id: org.apache.spark.sql.Column,
-      vec: org.apache.spark.sql.Column,
-      idx: graft.ops.IvfPqIndex,
-      deltaPath: String,
-      checkpointPath: String,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    import org.apache.spark.sql.functions.lit
-    vectors.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointPath)
-      .trigger(trigger)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        // The ownership marker is maintained on EVERY batch, not only batch
-        // 0. No engine code folds or consumes the delta (q400 unions it with
-        // the stored codes at serve time), so it only shrinks when its owner
-        // deletes the directory, and the marker goes with it. If the stream
-        // then resumes (batchId > 0), the rebuilt delta would carry no
-        // ownership and the foreign-checkpoint guard below would silently
-        // never apply again. Any batch that finds the marker absent (or
-        // empty: crash between create and close under the old non-atomic
-        // write) re-stamps it.
-        //
-        // deltaPath and checkpointPath must still be created/cleared
-        // TOGETHER: a fresh checkpoint (first batch ever) over a deltaPath
-        // that already holds a previous stream's partitions would silently
-        // union — or dynamically overwrite — that stream's un-consumed
-        // rows. A replay of THIS stream's batch 0 (crash before the commit)
-        // must still pass, and batchId alone cannot tell the two apart, so
-        // the marker (`_`-prefixed: invisible to parquet readers) records
-        // the checkpoint path. Marker from a different checkpoint ⇒ foreign
-        // delta, fail (any batch). No marker but batch_id residue at batch
-        // 0 ⇒ unowned leftovers (including a lone batch_id=0 from a
-        // one-batch stream), fail; at batch > 0 residue is THIS stream's
-        // own accretion (or a rebuild after a deletion), so only the
-        // re-stamp applies.
-        {
-          val dp = new org.apache.hadoop.fs.Path(deltaPath)
-          val fs = dp.getFileSystem(batch.sparkSession.sessionState.newHadoopConf())
-          val marker = new org.apache.hadoop.fs.Path(dp, "_graft_delta_owner")
-          val existingOwner =
-            if (fs.exists(marker)) {
-              val in = fs.open(marker)
-              try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-              finally in.close()
-            } else ""
-          if (existingOwner.nonEmpty) {
-            require(existingOwner == checkpointPath,
-              s"annIndexMaintenance: deltaPath $deltaPath is owned by checkpoint " +
-                s"'$existingOwner' but this stream runs on '$checkpointPath' — " +
-                "create/clear deltaPath and checkpointPath together")
-          } else {
-            if (batchId == 0L) {
-              val stale =
-                if (fs.exists(dp)) fs.listStatus(dp).map(_.getPath.getName)
-                  .filter(_.startsWith("batch_id="))
-                else Array.empty[String]
-              require(stale.isEmpty,
-                s"annIndexMaintenance: fresh checkpoint (batch 0) but deltaPath $deltaPath " +
-                  s"already holds unowned ${stale.sorted.mkString(", ")} from a previous " +
-                  "stream — create/clear deltaPath and checkpointPath together")
-            }
-            if (!fs.exists(dp)) fs.mkdirs(dp)
-            // write-then-RENAME (atomic on HDFS/local): a crash mid-write
-            // leaves only a tmp file, never a truncated marker, so the
-            // legitimate batch-0 replay re-stamps cleanly
-            val tmp = new org.apache.hadoop.fs.Path(dp, "._graft_delta_owner.tmp")
-            val out = fs.create(tmp, true)
-            try out.write(checkpointPath.getBytes("UTF-8")) finally out.close()
-            if (fs.exists(marker)) fs.delete(marker, false) // empty residue
-            require(fs.rename(tmp, marker),
-              s"annIndexMaintenance: could not move ownership marker into place at $marker")
-          }
-        }
-        graft.ops.AnnIndex.encode(batch, id, vec, idx)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id").parquet(deltaPath)
-        ()
-      }
-      .start()
-  }
-
   /** Streaming ingest INTO a [[graft.ops.SnapTables]] snapshot table — each
     * micro-batch publishes as one atomic generation flip
     * ([[graft.ops.SnapTables.appendBatch]]), so downstream readers never see
     * a half-written batch: they serve generation N until N+1's pointer
-    * rename lands, and a reader mid-plan keeps its own generation (the
-    * serve-during-ingest guarantee [[annIndexMaintenance]]'s batch_id-delta
-    * layout cannot give). Exactly-once comes from the
-    * manifest's `#batch` high-water mark: the one crash window the
-    * checkpoint alone cannot close (publication flipped, checkpoint commit
-    * log not yet written) replays into a recognized no-op.
+    * rename lands, and a reader mid-plan keeps its own generation.
+    * Exactly-once comes from the manifest's `#batch` high-water mark,
+    * keyed by the stream's identity (its checkpoint path): the one crash
+    * window the checkpoint alone cannot close (publication flipped,
+    * checkpoint commit log not yet written) replays into a recognized
+    * no-op, and a reset or foreign checkpoint is refused.
     *
     * `xform` runs INSIDE `foreachBatch` on the materialized batch — full
     * batch API (windows, aggregations, joins), for per-batch derivations a
@@ -276,7 +165,7 @@ object Pipelines {
         // checkpointPath doubles as the stream identity: the manifest
         // records it, so a swapped/reset checkpoint is refused instead of
         // its batch ids being misread against another stream's high-water
-        // mark (the ownership-marker stance, in-manifest)
+        // mark
         graft.ops.SnapTables.appendBatch(batch.sparkSession, path, partCol,
           xform(batch.toDF()), batchId, streamId = Some(checkpointPath))
         ()

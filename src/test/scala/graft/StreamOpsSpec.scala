@@ -1281,11 +1281,11 @@ class StreamOpsSpec extends AnyFunSuite with SparkSpec {
     } finally q.stop()
   }
 
-  test("streaming ANN-index maintenance: per-micro-batch frozen-model encode == the batch twin, batch_id-idempotent") {
+  test("streamed ANN ingest: per-micro-batch frozen-model encode through snapshotIngest == the batch twin") {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    import graft.ops.{AnnIndex, Similarity}
+    import graft.ops.{AnnIndex, Similarity, SnapTables}
 
     val emb = Tables.load(spark, TestSpark.sf0001, "embeddings")
     val base = emb.where(pmod(col("vec_id"), lit(7)) =!= 0)
@@ -1296,8 +1296,10 @@ class StreamOpsSpec extends AnyFunSuite with SparkSpec {
     val idxDir = tmpDir("ann-stream-idx")
     AnnIndex.write(built, idxDir)
     val idx = AnnIndex.read(spark, idxDir) // the FROZEN stored model
-    val deltaPath = tmpDir("ann-stream-delta")
+    val frozen = idx.copy(codes = null)
+    val codesPath = tmpDir("ann-stream-codes")
     val ckpt = tmpDir("ann-stream-ckpt")
+    SnapTables.publishInitial(spark, codesPath, "cluster", idx.codes)
 
     val delta = emb.where(pmod(col("vec_id"), lit(7)) === 0)
       .select(col("vec_id"), col("embedding"))
@@ -1308,160 +1310,33 @@ class StreamOpsSpec extends AnyFunSuite with SparkSpec {
     val ms = MemoryStream[(Long, Seq[Float])]
     val stream = ms.toDF().toDF("vec_id", "embedding")
       .select(col("vec_id"), col("embedding").cast("array<float>").as("embedding"))
-    def drain(): Unit = {
-      val q = graft.streaming.Pipelines.annIndexMaintenance(stream,
-        col("vec_id"), col("embedding"), idx, deltaPath, ckpt,
-        trigger = Trigger.AvailableNow())
-      q.awaitTermination()
+    def drain(): Option[Int] = {
+      graft.streaming.Pipelines.snapshotIngest(stream, codesPath, "cluster",
+        ckpt, xform = b => AnnIndex.encode(b, col("vec_id"), col("embedding"), frozen))
+        .awaitTermination()
+      SnapTables.currentGeneration(spark, codesPath)
     }
-    ms.addData(b1.toSeq); drain() // batch 0
-    ms.addData(b2.toSeq); drain() // batch 1 (fresh query, same checkpoint)
+    ms.addData(b1.toSeq)
+    assert(drain().contains(1), "the first micro-batch publishes one generation")
+    ms.addData(b2.toSeq)
+    assert(drain().contains(2), "the second micro-batch publishes one more")
 
-    def codeRows(df: org.apache.spark.sql.DataFrame): Set[(Long, Int, String)] =
+    // with multiplicity: a replayed or doubled batch must show as a repeat
+    def codeRows(df: org.apache.spark.sql.DataFrame): Seq[(Long, Int, String)] =
       df.select(col("vid").cast("long"), col("cluster").cast("int"),
           concat_ws("-", col("codes")).as("c"))
-        .collect().map(r => (r.getLong(0), r.getInt(1), r.getString(2))).toSet
-
-    val streamed = spark.read.parquet(deltaPath)
-    assert(streamed.select("batch_id").distinct().count() == 2,
-      "two micro-batches, two batch_id partitions")
-    // the streaming transport must equal the batch twin row for row — the
-    // q394 append==rebuild proof rides on exactly this determinism
+        .collect().map(r => (r.getLong(0), r.getInt(1), r.getString(2))).toSeq.sorted
+    // the streaming transport must equal the batch twin row for row: the
+    // frozen model makes encode per-row deterministic, whatever the batching
     val batchTwin = AnnIndex.encode(
       emb.where(pmod(col("vec_id"), lit(7)) === 0),
       col("vec_id"), col("embedding"), idx)
-    assert(codeRows(streamed) == codeRows(batchTwin),
-      "streamed delta codes must equal the frozen-model batch encode")
-    // union with the stored base == a serving index whose search never
-    // misses the streamed vectors
-    val served = AnnIndex.append(idx,
-      streamed.select(col("vid"), col("cluster"), col("codes")))
-    assert(codeRows(served.codes) ==
-      (codeRows(idx.codes) ++ codeRows(batchTwin)))
-  }
+    val expect = (codeRows(idx.codes) ++ codeRows(batchTwin)).sorted
+    assert(codeRows(SnapTables.resolve(spark, codesPath, "cluster")) == expect,
+      "served codes must equal the base codes plus the frozen-model batch encode")
 
-  test("annIndexMaintenance: a reused deltaPath under a FRESH checkpoint fails fast instead of serving stale batches") {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-    import graft.ops.{AnnIndex, Similarity}
-
-    val emb = Tables.load(spark, TestSpark.sf0001, "embeddings")
-    val base = emb.where(pmod(col("vec_id"), lit(7)) =!= 0)
-    val coarse = Similarity.materializeCentroids(Similarity.centroidArrays(
-      Similarity.labelCentroidsFlat(base, col("embedding"), col("label"))))
-    val built = AnnIndex.build(base, col("vec_id"), col("embedding"),
-      coarse, dims = 64, m = 8, k = 16, iters = 1)
-    val idxDir = tmpDir("ann-guard-idx")
-    AnnIndex.write(built, idxDir)
-    val idx = AnnIndex.read(spark, idxDir)
-    val deltaPath = tmpDir("ann-guard-delta")
-
-    val delta = emb.where(pmod(col("vec_id"), lit(7)) === 0)
-      .select(col("vec_id"), col("embedding"))
-      .collect().map(r => (r.getLong(0), r.getSeq[Float](1)))
-    val (b1, b2) = delta.splitAt(delta.length / 2)
-
-    val ms = MemoryStream[(Long, Seq[Float])]
-    val stream = ms.toDF().toDF("vec_id", "embedding")
-      .select(col("vec_id"), col("embedding").cast("array<float>").as("embedding"))
-    def drain(ckpt: String): Unit = {
-      val q = graft.streaming.Pipelines.annIndexMaintenance(stream,
-        col("vec_id"), col("embedding"), idx, deltaPath, ckpt,
-        trigger = Trigger.AvailableNow())
-      q.awaitTermination()
-    }
-    // first stream: TWO micro-batches, so deltaPath ends up holding
-    // batch_id=0 AND batch_id=1 (residue a later batch-0 replay could not
-    // legitimately produce)
-    val ckpt1 = tmpDir("ann-guard-ckpt1")
-    ms.addData(b1.toSeq); drain(ckpt1)
-    ms.addData(b2.toSeq); drain(ckpt1)
-    assert(spark.read.parquet(deltaPath)
-      .select("batch_id").distinct().count() == 2)
-
-    def expectGuardFailure(streamDf: org.apache.spark.sql.DataFrame,
-        delta: String, ckpt: String, needle: String): Unit = {
-      val ex = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-        val q = graft.streaming.Pipelines.annIndexMaintenance(streamDf,
-          col("vec_id"), col("embedding"), idx, delta, ckpt,
-          trigger = Trigger.AvailableNow())
-        q.awaitTermination()
-      }
-      assert(ex.getMessage.contains(needle) ||
-        Option(ex.getCause).exists(_.getMessage.contains(needle)),
-        s"fresh-checkpoint guard must be the failure cause, got: ${ex.getMessage}")
-    }
-
-    // a FRESH checkpoint over the same deltaPath: the ownership marker
-    // (stamped by the first stream's batch 0) names ckpt1, so another
-    // checkpoint must fail fast — even a ONE-batch previous stream (only
-    // batch_id=0 residue) is caught this way, the case a bare
-    // batch_id-listing exemption would wave through
-    val ms2 = MemoryStream[(Long, Seq[Float])]
-    val stream2 = ms2.toDF().toDF("vec_id", "embedding")
-      .select(col("vec_id"), col("embedding").cast("array<float>").as("embedding"))
-    ms2.addData(b1.toSeq)
-    expectGuardFailure(stream2, deltaPath, tmpDir("ann-guard-ckpt2"),
-      "owned by checkpoint")
-    // unowned residue (a pre-marker or hand-built delta dir): also fails
-    val bareDelta = tmpDir("ann-guard-bare")
-    java.nio.file.Files.createDirectory(
-      java.nio.file.Paths.get(bareDelta, "batch_id=0"))
-    expectGuardFailure(stream2, bareDelta, tmpDir("ann-guard-ckpt3"),
-      "unowned")
-    // and the legitimate replay shape stays allowed: resuming with the
-    // ORIGINAL checkpoint (no new data) is a clean no-op
-    drain(ckpt1)
-  }
-
-  test("annIndexMaintenance: the ownership marker is RE-STAMPED after a compact consumes it (batchId > 0)") {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-    import graft.ops.{AnnIndex, Similarity}
-
-    val emb = Tables.load(spark, TestSpark.sf0001, "embeddings")
-    val base = emb.where(pmod(col("vec_id"), lit(7)) =!= 0)
-    val coarse = Similarity.materializeCentroids(Similarity.centroidArrays(
-      Similarity.labelCentroidsFlat(base, col("embedding"), col("label"))))
-    val built = AnnIndex.build(base, col("vec_id"), col("embedding"),
-      coarse, dims = 64, m = 8, k = 16, iters = 1)
-    val idxDir = tmpDir("ann-restamp-idx")
-    AnnIndex.write(built, idxDir)
-    val idx = AnnIndex.read(spark, idxDir)
-    val deltaPath = tmpDir("ann-restamp-delta")
-    val ckpt = tmpDir("ann-restamp-ckpt")
-
-    val delta = emb.where(pmod(col("vec_id"), lit(7)) === 0)
-      .select(col("vec_id"), col("embedding"))
-      .collect().map(r => (r.getLong(0), r.getSeq[Float](1)))
-    val (b1, b2) = delta.splitAt(delta.length / 2)
-
-    val ms = MemoryStream[(Long, Seq[Float])]
-    val stream = ms.toDF().toDF("vec_id", "embedding")
-      .select(col("vec_id"), col("embedding").cast("array<float>").as("embedding"))
-    def drain(): Unit = {
-      val q = graft.streaming.Pipelines.annIndexMaintenance(stream,
-        col("vec_id"), col("embedding"), idx, deltaPath, ckpt,
-        trigger = Trigger.AvailableNow())
-      q.awaitTermination()
-    }
-    val marker = java.nio.file.Paths.get(deltaPath, "_graft_delta_owner")
-
-    ms.addData(b1.toSeq); drain() // batch 0 stamps ownership
-    assert(java.nio.file.Files.exists(marker))
-    // the delta is consumed (folded elsewhere, or cleared): its directory
-    // goes, and the marker with it
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(deltaPath))
-    assert(!java.nio.file.Files.exists(marker))
-    // the stream resumes on the SAME checkpoint: batch 1 rebuilds the delta
-    // and must RE-STAMP the marker, or the foreign-checkpoint guard would
-    // silently never apply again after the first consume
-    ms.addData(b2.toSeq); drain() // batch 1
-    assert(java.nio.file.Files.exists(marker),
-      "a post-consume batch must re-stamp the ownership marker")
-    assert(new String(java.nio.file.Files.readAllBytes(marker), "UTF-8") == ckpt,
-      "the re-stamped marker must name the owning checkpoint")
+    // restart on the same checkpoint with no new data: nothing publishes
+    assert(drain().contains(2), "a drain with no new data must publish no generation")
+    assert(codeRows(SnapTables.resolve(spark, codesPath, "cluster")) == expect)
   }
 }
