@@ -92,8 +92,9 @@ final class SnapConflict(msg: String, cause: Throwable = null)
   * column pruning behave exactly as on a directory scan.
   *
   * Partition columns are INT-valued (every durable table here partitions
-  * by an int hash bucket / cluster id); a non-int partition column fails
-  * at the first `getInt` rather than corrupting a manifest.
+  * by an int hash bucket / cluster id); a write that leaves a directory
+  * whose value is not an INT (a null partition value, or a non-int column)
+  * is undone and refused rather than corrupting a manifest.
   */
 object SnapTables {
 
@@ -423,24 +424,78 @@ object SnapTables {
       s"SnapTables: manifest rename failed for gen $gen")
   }
 
-  /** Data-file names currently on disk per partition value. `only` scopes
-    * the sweep to the named partition values — a rewrite/append can only
-    * change its affected/touched partitions, so its before/after diff has
-    * no business statting every directory of a thousands-partition table
-    * (the ingest hot path runs this twice per micro-batch).
+  /** Data-file names on disk per partition directory, keyed by the value
+    * in its `partCol=<value>` name as written. One `listStatus` of the root
+    * and one per partition directory, all on the driver, so a publish's
+    * before/after pair on a P-partition table costs 2(P+1) listings. No
+    * table here has more than 64 partitions (the index families' default
+    * bucket count; CMS has 8, the ANN codes 22 cells), where that is less
+    * than one Spark job.
     */
   private def listPartitionFiles(hfs: FileSystem, root: Path,
-      partCol: String, only: Option[Set[Int]] = None): Map[Int, Seq[String]] = {
+      partCol: String): Map[String, Seq[String]] = {
     if (!hfs.exists(root)) return Map.empty
     hfs.listStatus(root).toSeq
       .filter(s => s.isDirectory && s.getPath.getName.startsWith(s"$partCol="))
-      .map(d => d.getPath.getName.stripPrefix(s"$partCol=").toInt -> d.getPath)
-      .filter { case (v, _) => only.forall(_.contains(v)) }
-      .map { case (v, p) =>
-        v -> hfs.listStatus(p).toSeq.map(_.getPath.getName)
-          .filter(n => !n.startsWith(".") && !n.startsWith("_"))
+      .map { d =>
+        d.getPath.getName.stripPrefix(s"$partCol=") ->
+          hfs.listStatus(d.getPath).toSeq.map(_.getPath.getName)
+            .filter(n => !n.startsWith(".") && !n.startsWith("_"))
       }.toMap
   }
+
+  /** Write `df` into its partition directories and return the data files
+    * the write added, per partition value. Sound only while the caller
+    * holds the claim: no other writer adds files then, so the diff of the
+    * listings of every partition directory just before and just after the
+    * write is exactly this write's output. That makes the write the one
+    * computation of `df`: the touched partitions, emptiness and a rewrite's
+    * stray check all read the diff, never a probe of the caller's frame.
+    * A row whose partition value is null lands in a directory whose value
+    * is not an INT (`__HIVE_DEFAULT_PARTITION__`); such a write is undone
+    * and refused.
+    */
+  private def writeAdded(hfs: FileSystem, path: String, partCol: String,
+      df: DataFrame): Map[String, Seq[String]] = {
+    val root = new Path(path)
+    val before = listPartitionFiles(hfs, root, partCol)
+    // one shuffle keyed on the partition column bounds the file count at
+    // ~one per partition (AQE coalesces small ones): resolve() stats every
+    // manifest file and the scan opens each one, so a 32-task ×
+    // 64-partition fan-out write would hand every later serve thousands
+    // of files (measured +2.5 s warm on the winnow serve) and bloat every
+    // manifest
+    df.repartition(col(partCol))
+      .write.mode("append").partitionBy(partCol).parquet(path)
+    val added = listPartitionFiles(hfs, root, partCol)
+      .map { case (v, names) => v -> names.diff(before.getOrElse(v, Nil)) }
+      .filter(_._2.nonEmpty)
+    val notInt = added.keys.filter(_.toIntOption.isEmpty)
+    if (notInt.nonEmpty) {
+      discard(hfs, root, partCol, added)
+      throw new IllegalArgumentException(
+        s"SnapTables: rows with a null or non-INT $partCol landed in " +
+          s"${notInt.toSeq.sorted.map(v => s"$partCol=$v").mkString(", ")} at " +
+          s"$path — partition values must be non-null INTs; the write was undone")
+    }
+    added
+  }
+
+  /** Delete `added`, the files a refused write just made, and every
+    * directory among theirs left without a data file, so the refusal
+    * leaves the partition directories as they were.
+    */
+  private def discard(hfs: FileSystem, root: Path, partCol: String,
+      added: Map[String, Seq[String]]): Unit =
+    added.foreach { case (v, names) =>
+      val dir = new Path(root, s"$partCol=$v")
+      names.foreach(n => hfs.delete(new Path(dir, n), false))
+      if (hfs.listStatus(dir).forall(_.getPath.getName.startsWith(".")))
+        hfs.delete(dir, true)
+    }
+
+  private def byValue(files: Map[String, Seq[String]]): Map[Int, Seq[String]] =
+    files.map { case (v, names) => v.toInt -> names }
 
   /** Per-file [min,max] of `statsCol` for exactly the given new files —
     * ONE scan of the delta, never of the table (zone maintenance must cost
@@ -501,15 +556,7 @@ object SnapTables {
       require(listPartitionFiles(hfs, root, partCol).isEmpty,
         s"SnapTables: $path already holds partition directories but no " +
           "generation pointer — clear the directory before publishInitial")
-      // one shuffle keyed on the partition column bounds the file count at
-      // ~one per partition (AQE coalesces small ones): resolve() stats every
-      // manifest file and the scan opens each one, so a 32-task ×
-      // 64-partition fan-out write would hand every later serve thousands
-      // of files (measured +2.5 s warm on the winnow serve) and bloat every
-      // manifest
-      df.repartition(col(partCol))
-        .write.mode("append").partitionBy(partCol).parquet(path)
-      val written = listPartitionFiles(hfs, root, partCol)
+      val written = byValue(writeAdded(hfs, path, partCol, df))
       val zones = statsCol.map(computeZones(spark, path, partCol, _, written))
         .getOrElse(Map.empty)
       writeManifest(hfs, root, 0, written, statsCol = statsCol, zones = zones)
@@ -689,7 +736,10 @@ object SnapTables {
     * the diff of before/after directory listings identifies them — sound
     * under the single-writer contract. Partitions whose survivors are
     * empty simply vanish from the new manifest (the emptied-directory-drop
-    * semantics without the drop). A crash ANYWHERE before the final
+    * semantics without the drop). `survivors` is computed once, by the
+    * write; the refusals read the diff after it (rows outside `affected`,
+    * or nothing left to serve anywhere), delete exactly the files the
+    * write added, and throw. A crash ANYWHERE before the final
     * pointer rename leaves the current generation fully intact — the
     * orphaned new files are invisible to manifest readers and reclaimed by
     * [[expire]]. Returns the published generation number.
@@ -724,36 +774,26 @@ object SnapTables {
         "re-resolve and retry the rewrite")
     val m = readManifestFull(hfs, root, gen)
     val cur = m.entries
-    // materialize FIRST: the emptiness probe and the append below must not
-    // recompute the caller's lineage, and the survivors plan reads the very
-    // files the append writes next to (same directories)
-    val surv = survivors.localCheckpoint()
-    require((cur.keySet -- affected).nonEmpty || !surv.isEmpty,
+    val added = writeAdded(hfs, path, partCol, survivors)
+    val newFiles = byValue(added)
+    // enforce, don't document, the survivors-cover-only-affected contract: a
+    // survivor row in an UNAFFECTED partition would leave a file the new
+    // manifest never references — the row looks written but no generation
+    // ever serves it, and expire() reclaims it silently
+    val stray = (newFiles.keySet -- affected).toSeq.sorted
+    if (stray.nonEmpty) {
+      discard(hfs, root, partCol, added)
+      throw new IllegalArgumentException(
+        s"SnapTables: survivors hold rows for partition(s) ${stray.mkString(",")} " +
+          s"outside the affected set at $path — those rows would be written but " +
+          "never referenced by any generation; fix the caller's affected list")
+    }
+    // partitions whose survivors are empty drop out; every new file lies in
+    // an affected partition, so an empty `next` means nothing was written
+    val next = (cur -- affected) ++ newFiles
+    require(next.nonEmpty,
       s"SnapTables: the rewrite empties the whole table at $path — an empty " +
         "generation has no readable parquet; drop the table instead")
-    // enforce, don't document, the survivors-cover-only-affected contract: a
-    // survivor row in an UNAFFECTED partition would append a file the new
-    // manifest never references — the row looks written but no generation
-    // ever serves it, and expire() reclaims it silently. Bounded transfer:
-    // distinct partition values, capped by the table's fan-out.
-    val stray = surv.select(col(partCol)).distinct()
-      .collect().map(_.getInt(0)).filterNot(affected.toSet)
-    require(stray.isEmpty,
-      s"SnapTables: survivors hold rows for partition(s) ${stray.sorted.mkString(",")} " +
-        s"outside the affected set at $path — those rows would be written but " +
-        "never referenced by any generation; fix the caller's affected list")
-    val scope = Some(affected.toSet)
-    val before = listPartitionFiles(hfs, root, partCol, scope)
-    // keyed repartition for the same file-count bound as publishInitial
-    surv.repartition(col(partCol))
-      .write.mode("append").partitionBy(partCol).parquet(path)
-    val after = listPartitionFiles(hfs, root, partCol, scope)
-    val newFiles: Map[Int, Seq[String]] = affected.map { v =>
-      v -> after.getOrElse(v, Nil).diff(before.getOrElse(v, Nil))
-    }.toMap
-    val next = (cur -- affected) ++ newFiles.filter(_._2.nonEmpty)
-    require(next.nonEmpty,
-      s"SnapTables: refusing to publish an empty generation at $path")
     // rewrites never change ingest history — carry both headers forward;
     // zone stats: carried-forward files keep their lines (writeManifest
     // drops superseded ones), the rewrite's new files get fresh ones
@@ -992,8 +1032,11 @@ object SnapTables {
     * [[compactPartitions]] exists to fold. Append-only contract on keys
     * (the [[MinHashIndex.append]] stance): re-appending an existing key
     * duplicates it; the repair is [[deleteByKey]] + append, each its own
-    * generation. Returns the published generation (unchanged on an empty
-    * delta).
+    * generation. `delta` is computed once, by the write, under the claim;
+    * the touched partitions come from the listing diff around it. So an
+    * empty delta also takes and releases the claim: it publishes nothing
+    * and returns the current generation, but like any publish it can lose a
+    * [[SnapConflict]] to a concurrent writer.
     */
   def appendPartitions(spark: SparkSession, path: String, partCol: String,
       delta: DataFrame): Int =
@@ -1021,7 +1064,9 @@ object SnapTables {
     * back — also refused (later batches would silently no-op). Without a
     * `streamId` the check degrades to id-only, which cannot tell a swapped
     * checkpoint's equal id from a true replay — pass it whenever the
-    * caller has one. Returns the serving generation either way.
+    * caller has one. Returns the serving generation either way. An empty
+    * batch takes and releases the claim like [[appendPartitions]] (so it
+    * can lose a [[SnapConflict]]), publishes nothing and records no mark.
     */
   def appendBatch(spark: SparkSession, path: String, partCol: String,
       delta: DataFrame, batchId: Long, streamId: Option[String] = None): Int = {
@@ -1061,13 +1106,6 @@ object SnapTables {
     // micro-batch, not once for the guards and again here
     val gen = pre.map(_._1).getOrElse(currentGeneration(spark, path).getOrElse(
       throw new IllegalStateException(s"SnapTables: $path has no published generation")))
-    // materialize first: the emptiness/touched probes and the write must not
-    // recompute the caller's lineage (it may read this very table's current
-    // generation — the self-referential append)
-    val d = delta.localCheckpoint()
-    val touched = d.select(col(partCol)).distinct()
-      .collect().map(_.getInt(0)).sorted.toSeq
-    if (touched.isEmpty) return gen
     claimGeneration(hfs, root, gen + 1, identity)
     try {
       if (!currentGeneration(spark, path).contains(gen)) throw new SnapConflict(
@@ -1075,17 +1113,14 @@ object SnapTables {
           "re-resolve and retry the append")
       val m = pre.map(_._2).getOrElse(readManifestFull(hfs, root, gen))
       val cur = m.entries
-      val scope = Some(touched.toSet)
-      val before = listPartitionFiles(hfs, root, partCol, scope)
-      d.repartition(col(partCol))
-        .write.mode("append").partitionBy(partCol).parquet(path)
-      val after = listPartitionFiles(hfs, root, partCol, scope)
-      val added: Map[Int, Seq[String]] = touched.map { v =>
-        v -> after.getOrElse(v, Nil).diff(before.getOrElse(v, Nil))
-      }.toMap
-      val next = cur ++ touched.map { v =>
-        v -> (cur.getOrElse(v, Nil) ++ added.getOrElse(v, Nil))
-      }.toMap
+      // a self-referential delta (one that reads this table's current
+      // generation) reads the manifest's fixed file list, so the files this
+      // write adds never enter its own scan
+      val added = byValue(writeAdded(hfs, path, partCol, delta))
+      if (added.isEmpty) return gen // an empty delta publishes nothing
+      val next = cur ++ added.map { case (v, names) =>
+        v -> (cur.getOrElse(v, Nil) ++ names)
+      }
       // an append keeps every existing zone line and adds the delta's
       val zones = m.statsCol.map(c =>
         m.zones ++ computeZones(spark, path, partCol, c, added))
@@ -1265,10 +1300,11 @@ object SnapTables {
     // (nothing can resurrect it), so reference only the manifests that
     // still exist. The CURRENT generation's manifest is never optional:
     // its absence means the table cannot serve, fail loudly via readManifest.
-    val referenced: Set[(Int, String)] = keep.flatMap { g =>
+    // keyed like the listing below: by the directory's value as written
+    val referenced: Set[(String, String)] = keep.flatMap { g =>
       if (g != gen && !hfs.exists(new Path(mdir0, genName(g)))) Nil
       else readManifest(hfs, root, g).toSeq.flatMap { case (v, names) =>
-        names.map(v -> _)
+        names.map(v.toString -> _)
       }
     }.toSet
     listPartitionFiles(hfs, root, partCol).foreach { case (v, names) =>

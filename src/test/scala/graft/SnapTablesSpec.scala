@@ -79,6 +79,39 @@ class SnapTablesSpec extends AnyFunSuite with SparkSpec {
   private def allRows = (1L to 12L).map(k => (k, s"v$k")).toSet
   private def survRows = allRows.filterNot { case (k, _) => k % 4 == 0 }
 
+  private def fsOf(dir: String) =
+    new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
+
+  /** The data files in `dir`'s `pb=` directories that the current
+    * generation's manifest does not reference, as `pb=<v>/<name>`.
+    */
+  private def unreferenced(dir: String): Seq[String] = {
+    val hfs = fsOf(dir)
+    val gen = SnapTables.currentGeneration(spark, dir).get
+    val live = SnapTables.manifestEntries(spark, dir, gen).toSeq
+      .flatMap { case (v, ns) => ns.map(n => s"pb=$v/$n") }.toSet
+    hfs.listStatus(new Path(dir)).toSeq
+      .filter(s => s.isDirectory && s.getPath.getName.startsWith("pb="))
+      .flatMap(d => hfs.listStatus(d.getPath).toSeq.map(_.getPath.getName)
+        .filterNot(_.startsWith(".")).map(n => s"${d.getPath.getName}/$n"))
+      .filterNot(live)
+  }
+
+  /** Every data file anywhere under `dir`, the root itself included: all
+    * files but the hidden ones, the `_`-prefixed markers and the manifests.
+    */
+  private def dataFiles(dir: String): Set[String] = {
+    val it = fsOf(dir).listFiles(new Path(dir), true)
+    Iterator.continually(it).takeWhile(_.hasNext).map(_.next().getPath)
+      .filterNot(p => p.getName.startsWith(".") || p.getName.startsWith("_") ||
+        p.getParent.getName == "_manifests")
+      .map(_.toString).toSet
+  }
+
+  private def claimMarkers(dir: String): Seq[String] =
+    fsOf(dir).listStatus(new Path(dir, "_manifests")).toSeq
+      .map(_.getPath.getName).filter(_.startsWith(".publish-"))
+
   test("publishInitial + resolve roundtrip; pointer at gen 0") {
     val dir = tmpDir("snap-pub")
     SnapTables.publishInitial(spark, dir, "pb", table)
@@ -229,16 +262,47 @@ class SnapTablesSpec extends AnyFunSuite with SparkSpec {
     import spark.implicits._
     val dir = tmpDir("snap-stray")
     SnapTables.publishInitial(spark, dir, "pb", table)
-    // survivors claim partition 1 rows while declaring only partition 0
-    // affected — those rows would be written but never manifest-referenced
+    // survivors claim partition 1 rows (and a row for the new partition 7)
+    // while declaring only partition 0 affected — those rows would be
+    // written but never manifest-referenced
     val ex = intercept[IllegalArgumentException] {
       SnapTables.rewritePartitions(spark, dir, "pb", Seq(0),
-        table.where(col("pb") === 1))
+        table.where(col("pb") =!= 2)
+          .union(Seq((99L, "v99", 7)).toDF("key", "payload", "pb")))
     }
     assert(ex.getMessage.contains("outside the affected set"))
+    assert(ex.getMessage.contains("1,7"), ex.getMessage)
     assert(SnapTables.currentGeneration(spark, dir).contains(0),
       "the refused rewrite must not advance the generation")
     assert(rows(SnapTables.resolve(spark, dir, "pb")) == allRows)
+    // the refusal comes after the write, which deleted what it had added:
+    // the affected partition's new file, the stray ones and the new directory
+    assert(unreferenced(dir).isEmpty,
+      s"the refused rewrite left files behind: ${unreferenced(dir)}")
+    assert(!fsOf(dir).exists(new Path(dir, "pb=7")),
+      "the directory the refused write created must be gone")
+    assert(claimMarkers(dir).isEmpty)
+  }
+
+  test("a null partition value is refused and its write undone") {
+    import spark.implicits._
+    val dir = tmpDir("snap-nullpart")
+    SnapTables.publishInitial(spark, dir, "pb", table)
+    val delta = Seq((13L, "v13", Some(1)), (14L, "v14", None))
+      .toDF("key", "payload", "pb")
+    val ex = intercept[IllegalArgumentException] {
+      SnapTables.appendPartitions(spark, dir, "pb", delta)
+    }
+    assert(ex.getMessage.contains("non-null INT"), ex.getMessage)
+    assert(SnapTables.currentGeneration(spark, dir).contains(0))
+    assert(unreferenced(dir).isEmpty,
+      s"the refused append left files behind: ${unreferenced(dir)}")
+    assert(!fsOf(dir).listStatus(new Path(dir)).exists(_.getPath.getName.contains("DEFAULT")),
+      "the null partition's directory must be gone")
+    // the table keeps working: the next append lists and publishes as before
+    assert(SnapTables.appendPartitions(spark, dir, "pb",
+      Seq((13L, "v13", 1)).toDF("key", "payload", "pb")) == 1)
+    assert(rows(SnapTables.resolve(spark, dir, "pb")) == allRows + ((13L, "v13")))
   }
 
   test("expire tolerates generations a tighter prior expire already dropped") {
@@ -277,6 +341,58 @@ class SnapTablesSpec extends AnyFunSuite with SparkSpec {
     // empty delta publishes nothing
     assert(SnapTables.appendPartitions(spark, dir, "pb",
       Seq.empty[(Long, String, Int)].toDF("key", "payload", "pb")) == 1)
+  }
+
+  test("a self-referential append publishes every derived row once; an empty one leaves nothing behind") {
+    import spark.implicits._
+    val dir = tmpDir("snap-selfref")
+    SnapTables.publishInitial(spark, dir, "pb", table)
+    val base = SnapTables.resolve(spark, dir, "pb")
+    // the delta reads the very table it is appended to: keys shifted,
+    // partitions kept, so every new file lands beside the files it reads
+    val derived = base.select((col("key") + 100L).as("key"),
+      concat(lit("d"), col("payload")).as("payload"), col("pb"))
+    assert(SnapTables.appendPartitions(spark, dir, "pb", derived) == 1)
+    def rowSeq(df: DataFrame): Seq[(Long, String)] =
+      df.select(col("key"), col("payload")).collect()
+        .map(r => (r.getLong(0), r.getString(1))).toSeq.sorted
+    val want = (allRows.toSeq ++ allRows.toSeq.map { case (k, p) => (k + 100L, s"d$p") }).sorted
+    assert(rowSeq(SnapTables.resolve(spark, dir, "pb")) == want,
+      "every derived row must be published exactly once")
+    assert(rowSeq(base) == allRows.toSeq.sorted,
+      "a reader resolved before the append must keep serving the base")
+    // empty deltas, one self-referential and one plain: no generation, no
+    // data file anywhere under the root, and the claim released
+    val files = dataFiles(dir)
+    assert(SnapTables.appendPartitions(spark, dir, "pb", derived.where(col("key") < 0)) == 1)
+    assert(SnapTables.appendPartitions(spark, dir, "pb",
+      Seq.empty[(Long, String, Int)].toDF("key", "payload", "pb")) == 1)
+    assert(SnapTables.currentGeneration(spark, dir).contains(1))
+    assert(dataFiles(dir) == files,
+      s"an empty append wrote ${dataFiles(dir) -- files}")
+    assert(claimMarkers(dir).isEmpty, s"claim markers left: ${claimMarkers(dir)}")
+  }
+
+  test("an append and a compaction each run two Spark jobs: the map stage and the write") {
+    import spark.implicits._
+    val dir = tmpDir("snap-jobs")
+    SnapTables.publishInitial(spark, dir, "pb", table)
+    // Before the write became the one computation of the caller's frame, an
+    // append ran 5 jobs (localCheckpoint, the touched-partition distinct as
+    // 2 jobs, the map stage, the write) and so did this compaction
+    // (localCheckpoint, the stray-partition distinct as 2 jobs, the map
+    // stage, the write; its isEmpty probe ran only when every partition was
+    // rewritten, as in perfbench, making 6). A probe that comes back fails
+    // here.
+    val (g, appendJobs) = jobsDuring(SnapTables.appendPartitions(spark, dir, "pb",
+      Seq((13L, "v13", 1), (14L, "v14", 2)).toDF("key", "payload", "pb")))
+    assert(g == 1)
+    assert(appendJobs == 2, s"an append ran $appendJobs Spark jobs")
+    val (c, compactJobs) = jobsDuring(SnapTables.compactPartitions(spark, dir, "pb"))
+    assert(c == 2)
+    assert(compactJobs == 2, s"a compaction ran $compactJobs Spark jobs")
+    assert(rows(SnapTables.resolve(spark, dir, "pb")) ==
+      allRows ++ Set((13L, "v13"), (14L, "v14")))
   }
 
   test("compactPartitions folds accreted files into ~one per partition, content-invariant") {
@@ -905,6 +1021,9 @@ class SnapTablesSpec extends AnyFunSuite with SparkSpec {
     assert(SnapTables.currentGeneration(spark, dir).contains(0))
     assert(rows(SnapTables.resolve(spark, dir, "pb")) == allRows,
       "the failed rewrite must leave the serving generation untouched")
+    assert(unreferenced(dir).isEmpty,
+      s"the refused rewrite left files behind: ${unreferenced(dir)}")
+    assert(claimMarkers(dir).isEmpty)
   }
 
   test("conflict losses are typed: claim, stale plannedBase, and pointer re-check all throw SnapConflict") {

@@ -198,6 +198,22 @@ class CteCache:
         kw = "WITH RECURSIVE " if rec else "WITH "
         return kw + ", ".join(prefix_sql) + " " + main
 
+def duckdb_memory_limit():
+    """DuckDB's memory cap: half of MemTotal in whole GiB, clamped to 2..8,
+    the rule the tier-1 command uses to size SPARK_DRIVER_MEM. Uncapped,
+    DuckDB may take 80 % of RAM, and an oracle whose inlined CTE chain
+    cannot fit (q396 at sf0.1) grows that far before its materialized
+    attempt runs; capped, that attempt fails at the cap instead."""
+    try:
+        with open("/proc/meminfo") as f:
+            kb = next(int(line.split()[1]) for line in f
+                      if line.startswith("MemTotal:"))
+        gib = kb // 2097152
+    except (OSError, StopIteration, ValueError):
+        gib = 2
+    return f"{min(max(gib, 2), 8)}GiB"
+
+
 def main():
     t_start = time.time()
     args = [a for a in sys.argv[1:] if not a.startswith("--")]
@@ -220,6 +236,7 @@ def main():
     spill = tempfile.TemporaryDirectory(prefix="duckdb_spill_")
     con.execute(f"SET temp_directory='{spill.name}'")
     con.execute("SET preserve_insertion_order=false")
+    con.execute(f"SET memory_limit='{duckdb_memory_limit()}'")
     tables = ["region", "nation", "customer", "supplier", "part", "orders",
               "lineitem", "events", "documents", "embeddings"]
     n_views = 0
