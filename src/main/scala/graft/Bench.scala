@@ -104,7 +104,7 @@ object Bench {
     * newly created by the caller.
     */
   private def streaming(spark: SparkSession, sfDir: String,
-      rowsOverride: Option[Long] = None): String = {
+      rowsOverride: Option[Long]): String = {
     import org.apache.spark.sql.functions.{length => blen, col, sum}
     val sf = "sf([0-9.]+)".r.findFirstMatchIn(sfDir).map(_.group(1).toDouble).getOrElse(0.1)
     // --rows=N / SPARK_GRAFT_STREAM_ROWS: the streaming scale-curve knob

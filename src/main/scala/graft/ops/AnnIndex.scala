@@ -210,28 +210,6 @@ object AnnIndex {
       .select(col("vid"), col("cluster"), tot.as("err"))
   }
 
-  /** Coverage contract of [[reconstructionError]], enforced by a return
-    * value instead of caller discipline: the audit silently EXCLUDES
-    * corrupt-coded vectors, vids duplicated in `df`, and indexed vids
-    * absent from `df` (each would otherwise underreport error — see the
-    * coverage note on [[reconstructionError]]), so an operator trending the
-    * metric must compare audited rows against indexed rows. This returns
-    * that comparison directly: one row
-    * (n_indexed, n_audited, n_excluded = n_indexed − n_audited);
-    * n_excluded > 0 IS the corruption signal (q401 surfaces the same
-    * quantity per cohort). Two single-row aggregates — no corpus transfer.
-    */
-  def reconstructionAudit(
-      df: DataFrame,
-      id: Column,
-      vec: Column,
-      idx: IvfPqIndex): DataFrame =
-    idx.codes.agg(count(lit(1)).as("n_indexed"))
-      .crossJoin(reconstructionError(df, id, vec, idx)
-        .agg(count(lit(1)).as("n_audited")))
-      .select(col("n_indexed"), col("n_audited"),
-        (col("n_indexed") - col("n_audited")).as("n_excluded"))
-
   /** Persist the index as parquet tables. `codes` is written partitioned by
     * `cluster` — the on-disk posting-list layout: a selective serve path
     * reading `nprobe` cells touches only those partitions (partition

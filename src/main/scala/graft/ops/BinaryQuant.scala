@@ -58,26 +58,6 @@ object BinaryQuant {
         element_at(mus, base + d + 1), lit(1L << d)).otherwise(lit(0L))
     }.reduce(_ + _)
 
-  /** Per-row packed words as COLUMNS — the stateless face of [[encode]] for
-    * streaming micro-batches, where the 1-row thresholds frame is already
-    * cross-joined in and no aggregation may run.
-    */
-  def loWord(vec: Column, mus: Column): Column = packWord(vec, mus, 0)
-  def hiWord(vec: Column, mus: Column): Column = packWord(vec, mus, 32)
-
-  /** Pigeonhole blocking keys for a packed code: 8 chunks of 8 bits (4 per
-    * word) as struct(ck, cv) — any pair within Hamming 7 shares at least
-    * one (ck, cv), so a Hamming-≤τ gate over chunk collisions is
-    * recall-exact for τ ≤ 7 (the [[graft.ops.Dedup.simhashComboKeys]]
-    * argument on the 64-bit two-word layout).
-    */
-  def chunkKeys(lo: Column, hi: Column): Column =
-    array((0 until 8).map { i =>
-      val word = if (i < 4) lo else hi
-      struct(lit(i).as("ck"),
-        shiftright(word, 8 * (i % 4)).bitwiseAND(lit(255L)).as("cv"))
-    }: _*)
-
   /** Attach the packed code words: (vid, lo, hi) with lo = bits 0..31 and
     * hi = bits 32..63. Per-row arithmetic over the broadcast 1-row
     * thresholds — the encode never shuffles.

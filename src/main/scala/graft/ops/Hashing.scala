@@ -42,23 +42,12 @@ object Hashing {
     java.lang.Long.parseLong(hex.substring(0, 15), 16)
   }
 
-  /** Seeded variant: rehash with a seed suffix (classic minhash family
-    * h_j(s) = H(s ++ "#" ++ j) — avoids 64-bit modular multiplication, which
-    * neither engine can express without overflow).
-    */
-  def hash60Seeded(c: Column, seed: Int): Column =
-    hash60(concat(c.cast("string"), lit("#" + seed)))
-
   /** DuckDB SQL fragment computing the same 60-bit hash of expression `e`.
     * `e` must be a SQL expression of type VARCHAR. Evaluates md5 once per
     * character via the inner alias to stay a single expression.
     */
   def duckHash60(e: String): String =
     s"""list_reduce(list_transform(range(1,16), hxi -> CAST(CASE WHEN substring(md5($e), hxi, 1) BETWEEN '0' AND '9' THEN ascii(substring(md5($e), hxi, 1)) - 48 ELSE ascii(substring(md5($e), hxi, 1)) - 87 END AS BIGINT)), (hxa, hxb) -> hxa * 16 + hxb)"""
-
-  /** DuckDB fragment for the seeded variant. */
-  def duckHash60Seeded(e: String, seed: Int): String =
-    duckHash60(s"($e || '#$seed')")
 
   /** DuckDB fragment folding an ALREADY-COMPUTED md5 hex column `m` (cheap
     * path for hot oracle queries: compute `md5(x) AS m` once in a CTE, then
@@ -168,10 +157,6 @@ object Hashing {
   /** Family member i applied to a base-hash column. */
   def familyHash(base: Column, i: Int): Column =
     (lit(familyA(i)) * base + lit(familyB(i))) % lit(FamilyP)
-
-  /** DuckDB twin of [[familyHash]] over an already-computed base expr. */
-  def duckFamilyHash(base: String, i: Int): String =
-    s"((${familyA(i)} * $base + ${familyB(i)}) % $FamilyP)"
 
   /** Seed-tagging constants for order-independent band signatures
     * (sum over band rows of (mh*C1 + (seed+1)*C2) mod P).

@@ -1,223 +1,21 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.Column
 
-/** Physical-layout helpers: bucketed tables for shuffle-free co-located
-  * joins — the third leg of the join-strategy triad beside broadcast (small
-  * dims) and repartition (one-shot co-location).
-  *
-  * At 100 TB, a fact-to-fact equi-join on a shared key shuffles both sides
-  * every run; writing both sides bucketed (+ sorted) by the key ONCE makes
-  * every later join on that key exchange-free — Catalyst matches the bucket
-  * spec on both sides and plans a sort-merge join directly on the bucket
-  * files (`PlanSpec` proves the plan has zero Exchange nodes). The write
-  * itself costs one shuffle — amortized across every subsequent join,
-  * aggregation, or dedup keyed on the same column.
-  */
+/** Space-filling-curve keys for two-dimensional layouts. */
 object Layout {
-
-  /** Write `df` as a bucketed, bucket-sorted EXTERNAL table (data at `path`,
-    * registered as `table` in the session catalog — bucketing metadata lives
-    * in the catalog, which is why this is `saveAsTable`, not plain parquet).
-    */
-  def writeBucketed(
-      df: DataFrame,
-      table: String,
-      path: String,
-      bucketCol: String,
-      numBuckets: Int): Unit =
-    df.write
-      .mode("overwrite")
-      .option("path", path)
-      .bucketBy(numBuckets, bucketCol)
-      .sortBy(bucketCol)
-      .format("parquet")
-      .saveAsTable(table)
-
-  /** Co-located equi-join of two tables bucketed on the same key with the
-    * same bucket count: no exchange on either side.
-    */
-  def bucketedJoin(
-      spark: SparkSession,
-      leftTable: String,
-      rightTable: String,
-      key: String): DataFrame =
-    spark.table(leftTable).join(spark.table(rightTable), key)
-
-  /** Hive-style partitioned layout: one directory per value of `partCol`
-    * (`path/partCol=value/...`). A filter on the partition column then never
-    * opens a non-matching file — the scan's PartitionFilters prune whole
-    * directories at PLANNING time, the coarse-grained pruning that makes
-    * lang/date/source filters free at 100 TB (PlanSpec proves the pruned
-    * scan). Choose partition columns with bounded cardinality (lang, date,
-    * source) — one directory per value; high-cardinality keys belong in
-    * [[writeBucketed]] buckets instead.
-    */
-  def writePartitioned(df: DataFrame, path: String, partCol: String): Unit =
-    df.write.mode("overwrite").partitionBy(partCol).parquet(path)
-
-  /** Weight-balanced shard assignment: shard k holds the rows whose
-    * cumulative weight lands in [k·target, (k+1)·target) — equal-MASS
-    * output files (tokens, bytes) rather than equal-COUNT, the layout that
-    * keeps downstream training readers and file-per-task consumers
-    * balanced when document sizes are skewed. Rides
-    * [[Sampling.packSequences]]'s distributed two-phase cumulative sum
-    * (range shuffle of (id, weight) pairs; offset table = #partitions
-    * rows), so no single-partition window ever sees corpus rows and the
-    * assignment is partitioning-independent. A row heavier than `target`
-    * gets its own shard(s) boundary-straddled — `shard` is the span's FIRST
-    * chunk, so every shard's overshoot is bounded by one document.
-    */
-  def balancedShards(df: DataFrame, id: String,
-      weight: org.apache.spark.sql.Column, target: Long): DataFrame = {
-    import org.apache.spark.sql.functions.{coalesce, col, greatest, lit, min}
-    // clamp to >= 1: packSequences drops non-positive weights, but a SHARD
-    // assignment must place every row — a zero/NULL-weight doc occupies one
-    // budget unit instead of silently vanishing from the written corpus
-    val w = greatest(lit(1L), coalesce(weight.cast("long"), lit(0L)))
-    val assign = Sampling.packSequences(
-        df.select(col(id).as("doc_id"), w.as("w")), col("doc_id"), col("w"), target)
-      .groupBy(col("doc_id"))
-      .agg(min(col("chunk_id")).as("shard"))
-      .withColumnRenamed("doc_id", "__bs_id")
-    df.join(assign, df(id) === assign("__bs_id")).drop("__bs_id")
-  }
-
-  /** Write equal-mass shards (see [[balancedShards]]), one directory per
-    * shard via dynamic partitioning.
-    */
-  def writeBalancedShards(df: DataFrame, path: String, id: String,
-      weight: org.apache.spark.sql.Column, target: Long): Unit =
-    writePartitioned(balancedShards(df, id, weight, target), path, "shard")
-
-  /** Range-partition + sort within partitions on `sortCol`: globally ordered
-    * output (file k's values all precede file k+1's) without a single-task
-    * global sort — the layout that makes downstream range scans, time-ordered
-    * reads, and min/max file pruning effective. The exchange samples the key
-    * distribution (RangePartitioning), so output files are balanced even on
-    * skewed keys.
-    */
-  def rangeSorted(df: DataFrame, sortCol: String, partitions: Int): DataFrame =
-    df.repartitionByRange(partitions, org.apache.spark.sql.functions.col(sortCol))
-      .sortWithinPartitions(sortCol)
-
-  /** Write `df` range-sorted on `sortCol` (see [[rangeSorted]]). */
-  def writeRangeSorted(df: DataFrame, path: String, sortCol: String, partitions: Int): Unit =
-    rangeSorted(df, sortCol, partitions).write.mode("overwrite").parquet(path)
-
-  /** Morton (Z-order) interleave of two already-scaled codes in [0, 2^bits):
-    * `a`'s bit k lands at position 2k, `b`'s at 2k+1 — a pure bitwise column
-    * expression (shift/and/or), fully codegen'd.
-    */
-  def mortonCode(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column,
-      bits: Int): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.functions.{lit, shiftleft, shiftright}
-    require(bits >= 1 && bits <= 31, s"bits must be in [1, 31], got $bits")
-    (0 until bits).map { k =>
-      shiftleft(shiftright(a, k).bitwiseAND(lit(1L)), 2 * k)
-        .bitwiseOR(shiftleft(shiftright(b, k).bitwiseAND(lit(1L)), 2 * k + 1))
-    }.reduce(_ bitwiseOR _)
-  }
-
-  /** Z-ORDER two-dimensional layout: scale each dimension to [0, 2^bits)
-    * by its own min/max (1-row stats broadcast), interleave the scaled
-    * codes ([[mortonCode]]), then range-partition + sort on the code —
-    * [[rangeSorted]] generalized from a line to a space-filling curve.
-    *
-    * Why it matters at 100 TB: a range sort on ONE column gives each file a
-    * tight min/max band on that column but the FULL value range on every
-    * other — predicates on the second column prune nothing. The Z-curve
-    * keeps locality in BOTH dimensions, so each file covers a small
-    * sub-rectangle of the (a, b) plane and parquet min/max (or Delta-style
-    * file-stats) pruning cuts file counts for predicates on either column
-    * or both. LayoutSpec measures exactly that: per-file spread of BOTH
-    * columns bounded far below the global range, vs the single-column sort
-    * where dimension b's per-file spread is the whole domain.
-    *
-    * The scaling is per-run min/max; for an append pipeline, fix the scale
-    * bounds per table (pass-through columns already in code space) so new
-    * files land on the same curve.
-    */
-  def zOrdered(df: DataFrame, colA: String, colB: String,
-      bits: Int, partitions: Int): DataFrame = {
-    import org.apache.spark.sql.functions._
-    require(!df.columns.contains("__zcode"),
-      "zOrdered: input frame already uses the reserved column name __zcode")
-    val stats = df.agg(
-      min(col(colA).cast("double")).as("__za_min"), max(col(colA).cast("double")).as("__za_max"),
-      min(col(colB).cast("double")).as("__zb_min"), max(col(colB).cast("double")).as("__zb_max"))
-    val top = (1L << bits) - 1
-    def scaled(c: String, mn: String, mx: String) = {
-      val span = col(mx) - col(mn)
-      when(span <= 0, lit(0L)).otherwise(
-        floor((col(c).cast("double") - col(mn)) / span * top).cast("long"))
-    }
-    df.crossJoin(broadcast(stats))
-      .withColumn("__zcode", mortonCode(
-        scaled(colA, "__za_min", "__za_max"),
-        scaled(colB, "__zb_min", "__zb_max"), bits))
-      .drop("__za_min", "__za_max", "__zb_min", "__zb_max")
-      .repartitionByRange(partitions, col("__zcode"))
-      .sortWithinPartitions("__zcode")
-  }
-
-  /** Write `df` Z-ordered on (colA, colB) (see [[zOrdered]]); the code
-    * column is dropped from the files (it is a layout key, not data).
-    */
-  def writeZOrdered(df: DataFrame, path: String, colA: String, colB: String,
-      bits: Int, partitions: Int): Unit =
-    zOrdered(df, colA, colB, bits, partitions)
-      .drop("__zcode").write.mode("overwrite").parquet(path)
 
   /** Hilbert distance of two already-scaled codes in [0, 2^bits) — the
     * native expression [[graft.plans.HilbertCode]]. Out-of-range → NULL.
+    * Consecutive distances are always Manhattan-adjacent cells (the curve
+    * never jumps, where the Morton interleave teleports across the plane at
+    * every power-of-two boundary), so a sort on this key keeps equal code
+    * ranges in compact rectangles.
     */
-  def hilbertCode(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column,
-      bits: Int): org.apache.spark.sql.Column =
+  def hilbertCode(a: Column, b: Column, bits: Int): Column =
     org.apache.spark.sql.graftbridge.ColumnBridge.column(
       graft.plans.HilbertCode(
         org.apache.spark.sql.graftbridge.ColumnBridge.expression(a.cast("long")),
         org.apache.spark.sql.graftbridge.ColumnBridge.expression(b.cast("long")),
         bits))
-
-  /** HILBERT-curve two-dimensional layout — [[zOrdered]] with the Morton
-    * interleave swapped for the Hilbert distance. Same scaling (per-run
-    * min/max, 1-row stats broadcast), same range-partition + sort on the
-    * code. Why offer both: consecutive Hilbert positions are always
-    * Manhattan-adjacent cells (the curve never jumps, where the Z-curve
-    * teleports across the plane at every power-of-two boundary), so equal
-    * code ranges cover more compact rectangles — tighter per-file min/max
-    * bands on both dimensions at the same file count (LayoutSpec measures
-    * both curves on the same data). Morton stays the cheaper key to
-    * compute (pure shift/or); Hilbert buys locality for one bits-step
-    * loop per row at write time.
-    */
-  def hilbertOrdered(df: DataFrame, colA: String, colB: String,
-      bits: Int, partitions: Int): DataFrame = {
-    import org.apache.spark.sql.functions._
-    require(!df.columns.contains("__hcode"),
-      "hilbertOrdered: input frame already uses the reserved column name __hcode")
-    val stats = df.agg(
-      min(col(colA).cast("double")).as("__ha_min"), max(col(colA).cast("double")).as("__ha_max"),
-      min(col(colB).cast("double")).as("__hb_min"), max(col(colB).cast("double")).as("__hb_max"))
-    val top = (1L << bits) - 1
-    def scaled(c: String, mn: String, mx: String) = {
-      val span = col(mx) - col(mn)
-      when(span <= 0, lit(0L)).otherwise(
-        floor((col(c).cast("double") - col(mn)) / span * top).cast("long"))
-    }
-    df.crossJoin(broadcast(stats))
-      .withColumn("__hcode", hilbertCode(
-        scaled(colA, "__ha_min", "__ha_max"),
-        scaled(colB, "__hb_min", "__hb_max"), bits))
-      .drop("__ha_min", "__ha_max", "__hb_min", "__hb_max")
-      .repartitionByRange(partitions, col("__hcode"))
-      .sortWithinPartitions("__hcode")
-  }
-
-  /** Write `df` Hilbert-ordered on (colA, colB) (see [[hilbertOrdered]]). */
-  def writeHilbertOrdered(df: DataFrame, path: String, colA: String, colB: String,
-      bits: Int, partitions: Int): Unit =
-    hilbertOrdered(df, colA, colB, bits, partitions)
-      .drop("__hcode").write.mode("overwrite").parquet(path)
 }

@@ -29,12 +29,12 @@ final case class DecodedMedia(
   *  - the STUB pipeline ([[decodeAll]]/[[resizeAll]]/...), whose per-asset
   *    math is a deterministic stand-in so the surrounding plumbing is
   *    DuckDB-oracle-verifiable over the synthetic payloads (q70-q75);
-  *  - the REAL pipeline ([[decodeImages]]/[[resizeImages]] via javax.imageio,
-  *    [[decodeAudio]] via javax.sound.sampled, [[decodeVideoFrames]] via a
-  *    RIFF walk + per-frame ImageIO for MJPEG-in-AVI), which runs actual
-  *    JDK codecs on pixels/PCM/frames — no external library needed,
-  *    round-trip-tested on generated fixtures. Non-MJPEG video codecs
-  *    (H.26x etc.) would need external libraries and keep the stub form.
+  *  - the REAL pipeline ([[decodeVideoFrames]] via a RIFF walk + per-frame
+  *    ImageIO for MJPEG-in-AVI, [[decodeGifFrames]] via ImageIO's GIF
+  *    reader), which runs actual JDK codecs on frames — no external
+  *    library needed, round-trip-tested on generated fixtures. Non-MJPEG
+  *    video codecs (H.26x etc.) would need external libraries and keep the
+  *    stub form.
   */
 object Media {
 
@@ -179,73 +179,17 @@ object Media {
   }
 
   // -------------------------------------------------------------------------
-  // REAL image decode/resize — the JDK's javax.imageio ships PNG/JPEG/GIF/
-  // BMP codecs, so no external library is needed even offline. The stub
-  // pipeline above remains the ORACLE-verified path over the synthetic
-  // payloads (q72-q75); these operators run actual pixel work in the same
-  // mapPartitions shape and are round-trip-tested on generated fixtures.
+  // REAL pixel work — the JDK's javax.imageio ships PNG/JPEG/GIF/BMP codecs,
+  // so no external library is needed even offline. The stub pipeline above
+  // remains the ORACLE-verified path over the synthetic payloads (q72-q75).
   // -------------------------------------------------------------------------
 
-  /** Real image decode via ImageIO. Emits one row per DECODABLE asset;
-    * payloads no codec accepts are dropped (keep them by routing through
-    * [[sniffMime]] to a dead-letter channel upstream if needed — same
-    * convention as the parse dead-letter split). `n_frames` is the image
-    * count ImageIO exposes for the container (1 for PNG/JPEG).
-    *
-    * Scale shape: identical to [[decodeAll]] — iterator-per-partition, codec
-    * init amortized at the closure head, rows never touch the driver.
-    */
   /** ImageIO returns null for unknown containers but THROWS for a known
     * magic prefix with a corrupt body — both are "undecodable" here.
     */
   private def tryDecode(payload: Array[Byte]): Option[java.awt.image.BufferedImage] =
     scala.util.Try(Option(javax.imageio.ImageIO.read(
       new java.io.ByteArrayInputStream(payload)))).toOption.flatten
-
-  def decodeImages(media: Dataset[MediaRecord]): Dataset[DecodedMedia] = {
-    import media.sparkSession.implicits._
-    media.mapPartitions { it =>
-      it.flatMap { m =>
-        tryDecode(m.payload).map { img =>
-          DecodedMedia(m.media_id, m.declared_mime, img.getWidth, img.getHeight, 1,
-            img.getWidth.toDouble * img.getHeight.toDouble / 1e6)
-        }
-      }
-    }
-  }
-
-  /** Real aspect-ratio-preserving downscale: decode, bilinear Graphics2D
-    * scale into a `maxDim` bounding box (same integer target-dimension rule
-    * as [[resizeAll]]), re-encode as PNG. 1→1 over decodable assets; the
-    * output payload is a valid PNG whose decoded dimensions equal
-    * (new_width, new_height) — round-trip-tested.
-    */
-  def resizeImages(media: Dataset[MediaRecord], maxDim: Int): Dataset[ResizedImage] = {
-    import media.sparkSession.implicits._
-    require(maxDim >= 1, "maxDim must be positive")
-    media.mapPartitions { it =>
-      it.flatMap { m =>
-        tryDecode(m.payload).map { src =>
-          val (w, h) = (src.getWidth, src.getHeight)
-          val mx = math.max(w, h)
-          val (nw, nh) =
-            if (mx <= maxDim) (w, h)
-            else (math.max(1, w * maxDim / mx), math.max(1, h * maxDim / mx))
-          val dst = new java.awt.image.BufferedImage(
-            nw, nh, java.awt.image.BufferedImage.TYPE_INT_RGB)
-          val g = dst.createGraphics()
-          try {
-            g.setRenderingHint(java.awt.RenderingHints.KEY_INTERPOLATION,
-              java.awt.RenderingHints.VALUE_INTERPOLATION_BILINEAR)
-            g.drawImage(src, 0, 0, nw, nh, null)
-          } finally g.dispose()
-          val bos = new java.io.ByteArrayOutputStream()
-          javax.imageio.ImageIO.write(dst, "png", bos)
-          ResizedImage(m.media_id, w, h, nw, nh, bos.toByteArray)
-        }
-      }
-    }
-  }
 
   // -------------------------------------------------------------------------
   // Perceptual hashing (dHash) — near-duplicate detection for media assets,
@@ -254,7 +198,7 @@ object Media {
   // metadata-stripped copies need a locality-sensitive code. Two paths with
   // ONE bit layout (11×6 brightness grid → 60 horizontal-gradient bits):
   // the content-region form below (oracle-verifiable over any payload) and
-  // the real pixel form [[dhashOf]]/[[dhashImages]] for decodable images.
+  // the real pixel form [[dhashOf]] for decoded frames.
   // -------------------------------------------------------------------------
 
   /** 60-bit content-region dHash of a binary payload — the native
@@ -272,7 +216,7 @@ object Media {
     * codes: delegates to the audited simhash pigeonhole blocking
     * ([[Dedup.simhashNearDupBlocked]]) — same C(b, b−d) combo keys, same
     * `maxBucket` whole-bucket drop guard, id+code-only shuffles. Input:
-    * (media_id, dhash) from [[dhash]] or [[dhashImages]].
+    * (media_id, dhash) from [[dhash]].
     */
   def dhashNearDupPairs(
       codes: DataFrame,
@@ -314,18 +258,6 @@ object Media {
       r += 1
     }
     out
-  }
-
-  /** Real-image dHash over a media table: decode via ImageIO (undecodable
-    * payloads dropped, the [[decodeImages]] convention) and hash actual
-    * pixels — mapPartitions, codec init amortized per partition. Output:
-    * (media_id, dhash).
-    */
-  def dhashImages(media: Dataset[MediaRecord]): DataFrame = {
-    import media.sparkSession.implicits._
-    media.mapPartitions { it =>
-      it.flatMap(m => tryDecode(m.payload).map(img => (m.media_id, dhashOf(img))))
-    }.toDF("media_id", "dhash")
   }
 
   /** CONTENT-derived frame fingerprints: the payload cut into fixed-width
@@ -400,13 +332,10 @@ object Media {
   }
 
   // -------------------------------------------------------------------------
-  // REAL audio decode — WAV/PCM ships in the JDK (javax.sound.sampled), so
-  // like ImageIO no external codec is needed offline. Same two-path
-  // discipline as images: [[decodeAudio]] runs the real codec in the
-  // mapPartitions shape (spec round-trip-tested against synthesized WAVs);
-  // [[audioEnvelope]] is the ORACLE-verifiable relational twin of the
-  // fingerprint over raw payload bytes. Video: MJPEG-in-AVI decodes for
-  // real (section below); other codecs remain honest stubs.
+  // Audio fingerprint — [[energyEnvelope60]] over PCM bytes, and
+  // [[audioEnvelope]], its ORACLE-verifiable relational twin over raw
+  // payload bytes. Video: MJPEG-in-AVI decodes for real (section below);
+  // other codecs remain honest stubs.
   // -------------------------------------------------------------------------
 
   /** Number of energy windows (61 → 60 adjacent-gradient bits, the dHash
@@ -445,55 +374,6 @@ object Media {
       b += 1
     }
     out
-  }
-
-  /** A real 8-bit-unsigned-PCM mono WAV file from raw samples — the fixture
-    * generator for the audio round-trip specs (and the shape a producer-side
-    * encoder would use).
-    */
-  def wavBytes(samples: Array[Byte], sampleRate: Float = 8000f): Array[Byte] = {
-    val fmt = new javax.sound.sampled.AudioFormat(sampleRate, 8, 1, false, false)
-    val ais = new javax.sound.sampled.AudioInputStream(
-      new java.io.ByteArrayInputStream(samples), fmt, samples.length.toLong)
-    val bos = new java.io.ByteArrayOutputStream()
-    try javax.sound.sampled.AudioSystem.write(
-      ais, javax.sound.sampled.AudioFileFormat.Type.WAVE, bos)
-    finally ais.close()
-    bos.toByteArray
-  }
-
-  /** WAV decode: (format, PCM bytes), None when no installed reader accepts
-    * the payload (the [[tryDecode]] convention).
-    */
-  private def tryDecodeWav(
-      payload: Array[Byte]): Option[(javax.sound.sampled.AudioFormat, Array[Byte])] =
-    scala.util.Try {
-      val ais = javax.sound.sampled.AudioSystem.getAudioInputStream(
-        new java.io.ByteArrayInputStream(payload))
-      try (ais.getFormat, ais.readAllBytes())
-      finally ais.close()
-    }.toOption
-
-  /** REAL audio decode via the JDK codec: format parameters, frame count,
-    * duration, and the [[energyEnvelope60]] fingerprint of the decoded PCM
-    * stream. One row per decodable asset, mapPartitions iterator shape,
-    * codec init amortized per partition — identical scale posture to
-    * [[decodeImages]].
-    */
-  def decodeAudio(media: Dataset[MediaRecord]): Dataset[DecodedAudio] = {
-    import media.sparkSession.implicits._
-    media.mapPartitions { it =>
-      it.flatMap { m =>
-        tryDecodeWav(m.payload).map { case (fmt, pcm) =>
-          val frames =
-            if (fmt.getFrameSize > 0) pcm.length.toLong / fmt.getFrameSize else 0L
-          DecodedAudio(m.media_id, fmt.getSampleRate.toDouble, fmt.getChannels,
-            fmt.getSampleSizeInBits, frames,
-            if (fmt.getFrameRate > 0) frames / fmt.getFrameRate.toDouble else 0.0,
-            energyEnvelope60(pcm))
-        }
-      }
-    }
   }
 
   /** The ORACLE-verifiable relational twin of [[energyEnvelope60]] over the
@@ -593,7 +473,7 @@ object Media {
     * Robust to truncation — a cut anywhere in the payload yields exactly
     * the frames whose chunks are COMPLETE before the cut (a partial
     * trailing chunk is dropped, never thrown on); non-RIFF payloads yield
-    * no frames (the [[decodeImages]] drop convention).
+    * no frames.
     */
   def aviFrames(payload: Array[Byte]): Seq[Array[Byte]] = {
     def fcc(off: Long): String =
@@ -635,7 +515,7 @@ object Media {
     * One row per decodABLE frame: (media_id, frame_idx, dhash); assets
     * that are not AVIs (or frames no codec accepts) contribute nothing.
     *
-    * Scale shape: identical to [[decodeImages]] — iterator-per-partition,
+    * Scale shape: identical to [[decodeAll]] — iterator-per-partition,
     * codec init amortized, one asset's frames in memory at a time; the
     * output rows carry two longs and an int, never pixels.
     */
@@ -837,31 +717,8 @@ final case class ResizedMedia(
     new_width: Int,
     new_height: Int)
 
-/** Output of [[Media.resizeImages]]: real dimensions plus the re-encoded
-  * PNG payload.
-  */
-final case class ResizedImage(
-    media_id: Long,
-    width: Int,
-    height: Int,
-    new_width: Int,
-    new_height: Int,
-    png: Array[Byte])
-
 /** One sampled frame from [[Media.sampleFrames]]. */
 final case class FrameSample(media_id: Long, frame_idx: Int, frame_hash: Long)
-
-/** Output of [[Media.decodeAudio]]: real format parameters + the PCM
-  * energy-envelope fingerprint.
-  */
-final case class DecodedAudio(
-    media_id: Long,
-    sample_rate: Double,
-    channels: Int,
-    sample_bits: Int,
-    n_frames: Long,
-    duration_sec: Double,
-    envelope60: Long)
 
 /** One feature-vector component from [[Media.extractFeatures]]. */
 final case class MediaFeature(media_id: Long, feat_idx: Int, feat_val: Double)

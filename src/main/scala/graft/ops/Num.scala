@@ -39,9 +39,6 @@ object Num {
     * would silently drop it. */
   def dsumWide(c: Column): Column = sum(c.cast("decimal(38,6)")).cast("double")
 
-  def duckDsumWide(e: String): String =
-    s"CAST(SUM(CAST($e AS DECIMAL(38,6))) AS DOUBLE)"
-
   def duckDavg(e: String, scale: Int = 2): String =
     s"(${duckDsum(e, scale)} / COUNT($e))"
 

@@ -149,7 +149,7 @@ object Sampling {
     * what the plain windowed-cumsum oracle checks.
     */
   /** Distributed two-phase GLOBAL running sum of `w` in id order — the
-    * shared engine under [[packSequences]], [[Layout.balancedShards]] and
+    * shared engine under [[packSequences]] and
     * [[systematicWeightedSample]]: range-partition by id, per-partition
     * window cumsum in parallel, then a #partitions-row offset table (the
     * only global step — one row per partition at any scale) broadcast

@@ -303,14 +303,6 @@ object Select {
         col("is_train"), (col("win.c") === col("label")).as("correct"))
   }
 
-  /** The trained NB model as DRIVER-SIDE maps for per-row (streaming)
-    * scoring — the [[Text.bigramLmModel]] stance: `maxVocab` is REQUIRED,
-    * it is what bounds the collect to a model-parameter transfer.
-    *
-    * Returns (classes sorted asc, priors ln(docs_c/docs_total) keyed by
-    * class, token counts keyed "class w", class token mass N_c, kept
-    * vocabulary as a set, V).
-    */
   /** Decision-stump feature ranking: for each candidate token (the
     * `maxCandidates` highest-document-frequency tokens), the information
     * gain of splitting the corpus on "document contains token" against a
@@ -360,47 +352,6 @@ object Select {
       .orderBy(col("gain").desc, col("tok").asc)
       .limit(topK)
   }
-
-  def nbModel(
-      train: DataFrame,
-      id: Column,
-      text: Column,
-      label: Column,
-      maxVocab: Int): NbModel = {
-    require(maxVocab >= 1 && maxVocab <= 200000,
-      s"maxVocab bounds the driver-side model transfer; got $maxVocab")
-    val base = Dedup.spreadBy(train, id)
-      .select(id.as("doc_id"), label.as("lbl"), cleanTokens(text).as("t"))
-    val cwcAll = base.select(col("lbl"), explode(col("t")).as("w"))
-      .groupBy(col("lbl"), col("w")).agg(count(lit(1)).as("cwc"))
-    val win = org.apache.spark.sql.expressions.Window
-      .orderBy(col("cw").desc, col("w").asc)
-    val vocab = cwcAll.groupBy(col("w")).agg(sum(col("cwc")).cast("long").as("cw"))
-      .withColumn("__r", rank().over(win)).where(col("__r") <= maxVocab)
-      .select(col("w")).localCheckpoint()
-    val cwc = cwcAll.join(vocab, Seq("w"), "left_semi")
-      .select(col("lbl"), col("w"), col("cwc")).collect()
-      .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
-    val clsDocs = base.groupBy(col("lbl")).agg(count(lit(1)).as("ndocs"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val total = clsDocs.values.sum
-    val classes = clsDocs.keys.toSeq.sorted
-    val priors = clsDocs.map { case (c, n) => c -> math.log(n.toDouble / total.toDouble) }
-    val counts = cwc.map { case (c, w, n) => s"$c $w" -> n }.toMap
-    val mass = cwc.groupBy(_._1).map { case (c, rows) => c -> rows.map(_._3).sum }
-    val vocabSet = cwc.map(_._2).toSet
-    NbModel(classes, priors, counts,
-      classes.map(c => c -> mass.getOrElse(c, 0L)).toMap, vocabSet, vocabSet.size.toLong)
-  }
-
-  /** Bounded NB model parameters (all vocabulary-/class-sized). */
-  final case class NbModel(
-      classes: Seq[String],
-      priors: Map[String, Double],
-      counts: Map[String, Long],
-      mass: Map[String, Long],
-      vocab: Set[String],
-      v: Long)
 
   /** One closed-form rank-2 ridge solve per entity — the alternating-least-
     * squares HALF STEP: given the opposite side's factors (g1, g2) on each

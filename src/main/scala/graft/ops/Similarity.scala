@@ -678,25 +678,6 @@ object Similarity {
         sort_array(collect_list(struct(col("dim"), col("c")))),
         s => s.getField("c")).as("carr"))
 
-  /** PRODUCT-QUANTIZATION codebooks: split the `dims`-dim space into `m`
-    * equal subspaces and train an independent deterministic k-means (k
-    * codewords, salted seeds `pq<sub>-<id>`, same Lloyd machinery and
-    * decimal-exact recomputation as [[kmeansCentroidsFlat]]) on each
-    * subvector slice. All m trainings run as ONE batched dataflow over the
-    * (vid, sub, subv) explode: per-subspace seed ranking is a windowed
-    * top-k on the sub key (WindowGroupLimit prunes map-side), each Lloyd
-    * iteration is one broadcast join + one min_by assignment + one
-    * (sub, cluster, dim) aggregation for every subspace together. Output:
-    * flat (sub, clabel, dim, c) — m·k·(dims/m) doubles of model
-    * parameters: the memory-compression half of a billion-vector index (a
-    * code is m small ints instead of dims floats — 8 bytes vs 256 here).
-    */
-  def pqCodebooksFlat(df: DataFrame, id: Column, vec: Column,
-      dims: Int, m: Int, k: Int, iters: Int): DataFrame = {
-    require(m >= 1 && dims % m == 0, s"m=$m must divide dims=$dims")
-    pqTrainFromSubRows(pqSubRows(df, id, vec, dims, m), k, iters)
-  }
-
   /** (vid, cluster, rv): every vector's coarse-quantizer cluster and its
     * RESIDUAL rv = v − centroid(cluster) — the input of residual product
     * quantization (Jégou et al., "Product Quantization for Nearest Neighbor
@@ -716,9 +697,21 @@ object Similarity {
       .select(col("vid"), col("cluster"),
         zip_with(col("vec"), col("carr"), (x, c) => x.cast("double") - c).as("rv"))
 
-  /** RESIDUAL-PQ codebooks: [[pqCodebooksFlat]] trained on coarse-quantizer
-    * residuals instead of raw subvectors (see [[ivfResiduals]]) — the
-    * production IVFADC layout, lifting recall at the same m·k budget.
+  /** RESIDUAL-PQ codebooks: product quantization trained on
+    * coarse-quantizer residuals instead of raw subvectors (see
+    * [[ivfResiduals]]) — the production IVFADC layout, lifting recall at
+    * the same m·k budget. The `dims`-dim residual space splits into `m`
+    * equal subspaces, each with an independent deterministic k-means (k
+    * codewords, salted seeds `pq<sub>-<id>`, same Lloyd machinery and
+    * decimal-exact recomputation as [[kmeansCentroidsFlat]]). All m
+    * trainings run as ONE batched dataflow over the (vid, sub, subv)
+    * explode: per-subspace seed ranking is a windowed top-k on the sub key
+    * (WindowGroupLimit prunes map-side), each Lloyd iteration is one
+    * broadcast join + one min_by assignment + one (sub, cluster, dim)
+    * aggregation for every subspace together. Output: flat
+    * (sub, clabel, dim, c) — m·k·(dims/m) doubles of model parameters: the
+    * memory-compression half of a billion-vector index (a code is m small
+    * ints instead of dims floats — 8 bytes vs 256 here).
     */
   def pqCodebooksFlatResidual(df: DataFrame, id: Column, vec: Column,
       coarseCentroids: DataFrame, dims: Int, m: Int, k: Int, iters: Int): DataFrame = {

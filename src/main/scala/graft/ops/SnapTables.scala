@@ -393,8 +393,8 @@ object SnapTables {
 
   private def writeManifest(hfs: FileSystem, root: Path, gen: Int,
       entries: Map[Int, Seq[String]], batchId: Option[Long] = None,
-      streamId: Option[String] = None, statsCol: Option[String] = None,
-      zones: Map[(Int, String), (Long, Long)] = Map.empty): Unit = {
+      streamId: Option[String] = None, statsCol: Option[String],
+      zones: Map[(Int, String), (Long, Long)]): Unit = {
     val dir = new Path(root, ManifestDir)
     if (!hfs.exists(dir)) hfs.mkdirs(dir)
     val tmp = new Path(dir, s".${genName(gen)}.tmp")

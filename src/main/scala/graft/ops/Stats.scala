@@ -23,7 +23,8 @@ object Stats {
   /** The raw STORED form: per-group exact decimal sums (scope, n, s1, s2).
     * This is what a shard writes durably; any union of such frames (more
     * days, more sources, per-micro-batch appends from a stream) re-merges
-    * through [[mergeMoments]] with bit-exact results.
+    * by summing n, s1 and s2 per scope with bit-exact results: decimal
+    * addition is associative.
     */
   def momentSums(df: DataFrame, value: Column, group: Column): DataFrame = {
     val v = value.cast("double")
@@ -34,15 +35,6 @@ object Stats {
         sum(col("v").cast("decimal(38,18)")).as("s1"),
         sum((col("v") * col("v")).cast("decimal(38,18)")).as("s2"))
   }
-
-  /** Merge a frame of stored (scope, n, s1, s2) rows — possibly many rows
-    * per scope, from different shards/days/micro-batches — back to one row
-    * per scope. Decimal addition is associative, so this is EXACT under any
-    * grouping of the inputs.
-    */
-  def mergeMoments(sums: DataFrame): DataFrame =
-    sums.groupBy(col("scope"))
-      .agg(sum(col("n")).as("n"), sum(col("s1")).as("s1"), sum(col("s2")).as("s2"))
 
   /** Finalize stored sums to reported statistics: (scope, n, sum_v, mean,
     * variance) with population variance (Σv² − (Σv)²/n)/n evaluated from
@@ -1266,16 +1258,13 @@ object Stats {
       .withColumn("chi2", when(col("var_lr") > 0, pow(col("z"), 2)))
   }
 
-  /** EPOCH DRIFT SCORES — the batch/oracle twin of
-    * [[graft.streaming.StreamOps.sliceDriftGate]]'s arithmetic: score a
-    * LIVE epoch's per-slice success counts against a REFERENCE epoch's
-    * rates. Per matched slice, the live successes are Binomial(n_live, p0)
-    * under no-drift, so z = (k_live − n_live·p0)/√(n_live·p0(1−p0)); the
-    * global row folds expected and variance across matched slices — the
-    * EXACT expression the streaming gate's observe() emits, so a
-    * hash-green run of this query IS the cross-engine proof of the gate's
-    * math. Slices with no reference row score NULL and are tallied in
-    * n_unknown (new slices are themselves a drift signal).
+  /** EPOCH DRIFT SCORES: score a LIVE epoch's per-slice success counts
+    * against a REFERENCE epoch's rates. Per matched slice, the live
+    * successes are Binomial(n_live, p0) under no-drift, so
+    * z = (k_live − n_live·p0)/√(n_live·p0(1−p0)); the global row folds
+    * expected and variance across matched slices. Slices with no reference
+    * row score NULL and are tallied in n_unknown (new slices are themselves
+    * a drift signal).
     *
     * Input: two (key, n, k) count frames. Both are slice-alphabet-bounded,
     * so every join/fold below runs on tiny frames; the corpus is only
@@ -1344,13 +1333,9 @@ object Stats {
        |  END AS drift_z
        |FROM j CROSS JOIN gtot""".stripMargin
 
-  /** The QUANTILE-DRIFT arithmetic shared BY CONSTRUCTION between the
-    * streaming gate ([[graft.streaming.StreamOps.quantileDriftGate]]'s
-    * observe()) and the batch twin [[quantileDriftScores]] — one list of
-    * aggregate column expressions, so the parity is an identity, not a
-    * re-derivation. Given reference thresholds (q, thr) — typically
-    * exact or KLL-served quantiles of a reference corpus
-    * ([[QuantileIndex]]) — a no-drift batch has
+  /** QUANTILE-DRIFT scores as ONE aggregation row. Given reference
+    * thresholds (q, thr) — typically exact or KLL-served quantiles of a
+    * reference corpus ([[QuantileIndex]]) — a no-drift batch has
     * P(value > thr_q) = 1 − q per row, so
     * n_above ~ Binomial(n_known, 1 − q) and
     * z_q = (n_above − n·(1−q)) / √(n·q·(1−q)) is the per-threshold
@@ -1358,9 +1343,10 @@ object Stats {
     * each on the driver, so the oracle can interpolate the identical
     * doubles and the z is bit-reproducible cross-engine. NULL values
     * carry no rank: tallied in n_null, excluded from every count.
+    * Output: (n_rows, n_null, and per q: n_above_pXX, z_pXX).
     */
-  def quantileDriftMetrics(value: Column,
-      refQuantiles: Seq[(Double, Double)]): Seq[Column] = {
+  def quantileDriftScores(df: DataFrame, value: Column,
+      refQuantiles: Seq[(Double, Double)]): DataFrame = {
     require(refQuantiles.nonEmpty, "need at least one reference quantile")
     require(refQuantiles.forall { case (q, _) => q > 0.0 && q < 1.0 },
       s"ranks must lie strictly inside (0, 1), got ${refQuantiles.map(_._1)}")
@@ -1370,7 +1356,7 @@ object Stats {
       s"duplicate reference ranks: ${refQuantiles.map(_._1)}")
     val v = value.cast("double")
     val nK = count(when(v.isNotNull, 1)).cast("double")
-    Seq(
+    val ms = Seq(
       count(lit(1)).as("n_rows"),
       count(when(v.isNull, 1)).as("n_null")) ++
       refQuantiles.flatMap { case (q, thr) =>
@@ -1386,16 +1372,6 @@ object Stats {
             (above.cast("double") - nK * lit(omq)) / sqrt(nK * lit(pq)))
             .as(s"z_p$pct"))
       }
-  }
-
-  /** Batch twin of the streaming quantile-drift gate: ONE aggregation row
-    * with the exact columns the gate's observe() emits (shared expression
-    * list — see [[quantileDriftMetrics]]). Output: (n_rows, n_null, and
-    * per q: n_above_pXX, z_pXX).
-    */
-  def quantileDriftScores(df: DataFrame, value: Column,
-      refQuantiles: Seq[(Double, Double)]): DataFrame = {
-    val ms = quantileDriftMetrics(value, refQuantiles)
     df.agg(ms.head, ms.tail: _*)
   }
 

@@ -264,17 +264,10 @@ object Text {
     "zh" -> Seq("de5", "shi4", "le5", "zai4", "he2", "you3", "wo3", "ta1")
   )
 
-  /** Count of tokens (occurrences, not distinct) that are in `markers`.
-    * Native codegen expression (graft.plans.TokenSetHits);
-    * [[markerHitsComposed]] is the built-in HOF twin kept for the test.
+  /** Count of tokens of lower(text) (occurrences, not distinct) that are in
+    * `markers`, from Spark built-ins only (interpreted filter lambda): the
+    * reference form [[profile]]'s per-set hit counts are pinned against.
     */
-  def markerHits(text: Column, markers: Seq[String]): Column =
-    org.apache.spark.sql.graftbridge.ColumnBridge.column(
-      graft.plans.TokenSetHits(
-        org.apache.spark.sql.graftbridge.ColumnBridge.expression(text.cast("string")),
-        markers))
-
-  /** The same count from Spark built-ins only (interpreted filter lambda). */
   def markerHitsComposed(text: Column, markers: Seq[String]): Column = {
     val t = tokens(lower(text))
     size(filter(t, tok => tok.isin(markers.map(lit(_)): _*)))
@@ -1111,8 +1104,7 @@ object Text {
   /** One greedy left-to-right application of merge (a, b) → a+b as a left
     * fold over a symbol array: the just-merged symbol becomes the new tail,
     * so it cannot re-merge as the left side of the same rule within one
-    * pass — classic BPE. Shared by training, the vocab encoder, and the
-    * per-row [[bpeTokenize]].
+    * pass — classic BPE. Shared by training and the vocab encoder.
     */
   private def mergeFold(syms: Column, a: String, b: String): Column =
     aggregate(syms, array().cast("array<string>"),
@@ -1123,8 +1115,7 @@ object Text {
 
   /** Full BPE training: the ordered merge list AND the final vocabulary
     * `(w, n, syms)` — each distinct corpus word with its post-merge symbol
-    * segmentation. The vocab is what [[bpeEncodeByVocab]] joins against;
-    * the merge list is what [[bpeTokenize]] replays on unseen text.
+    * segmentation. The vocab is what [[bpeEncodeByVocab]] joins against.
     */
   def bpeTrain(
       df: org.apache.spark.sql.DataFrame,
@@ -1199,22 +1190,6 @@ object Text {
     (merges.toSeq, vocab)
   }
 
-  /** Apply an ordered merge list to ONE word (per-row, no vocabulary
-    * lookup) — how a tokenizer handles text that was not in the training
-    * corpus. `split(w, "(?!^)")` explodes the word into characters (the
-    * lookahead split has no leading empty element); each merge then replays
-    * as the same left fold training used, so for any trained word
-    * `bpeTokenize(w, merges) == vocab.syms` exactly (property-tested).
-    * Empty/null words yield an empty array.
-    */
-  def bpeTokenize(word: Column, merges: Seq[(String, String)]): Column = {
-    // Spark's split keeps a trailing empty element under its limit=-1
-    // semantics — drop empties so the char list is exactly the word
-    val chars = coalesce(filter(split(word, "(?!^)"), s => length(s) > 0),
-      array().cast("array<string>"))
-    merges.foldLeft(chars) { case (acc, (a, b)) => mergeFold(acc, a, b) }
-  }
-
   /** Tokenizer APPLICATION at corpus scale: explode doc words, join the
     * trained vocabulary (`bpeTrain`._2), aggregate back per doc. Output:
     * (doc_id, n_tokens, n_chars, n_bpe_tokens).
@@ -1222,10 +1197,8 @@ object Text {
     * Scale shape: dictionary-encode-then-join — the (word → segmentation)
     * table is vocab-sized (Heaps' law: ≪ corpus), so the join is a
     * broadcast at any realistic vocabulary, and the only corpus-sized
-    * shuffle is the per-doc count aggregation of 3 small ints. This beats
-    * replaying the merge folds per occurrence ([[bpeTokenize]]) as soon as
-    * words repeat, i.e. always; the per-row form remains the right tool
-    * for out-of-corpus text.
+    * shuffle is the per-doc count aggregation of 3 small ints, instead of
+    * replaying the merge folds once per word occurrence.
     */
   def bpeEncodeByVocab(
       df: org.apache.spark.sql.DataFrame,
@@ -1501,44 +1474,6 @@ object Text {
         (-aggregate(transform(col("arr"), x => x.getField("lp")),
           lit(0.0), (a, x) => a + x) / col("n_bigrams").cast("double")).as("nll"),
         (col("nb").cast("double") / col("n_bigrams").cast("double")).as("backoff_frac"))
-  }
-
-  /** The trained LM as DRIVER-SIDE maps for per-row (streaming) scoring:
-    * (unigram counts, bigram counts keyed "w1 w2", N, V). `maxVocab` is
-    * REQUIRED here — it is what bounds the collect to a model-parameter
-    * transfer (the k-means-centroid stance: a capped vocabulary IS the
-    * model; an uncapped corpus vocabulary would not be collectable and
-    * should score through [[bigramLmScore]]'s join pipeline instead).
-    */
-  def bigramLmModel(
-      train: DataFrame,
-      id: Column,
-      text: Column,
-      maxVocab: Int): (Map[String, Long], Map[String, Long], Long, Long) = {
-    require(maxVocab >= 1 && maxVocab <= 200000,
-      s"maxVocab bounds the driver-side model transfer; got $maxVocab")
-    val toks = Dedup.spreadBy(train, id).select(tokens(text).as("t"))
-    val uniAll = toks.select(explode(col("t")).as("w"))
-      .groupBy(col("w")).agg(count(lit(1)).as("c1"))
-    val w = org.apache.spark.sql.expressions.Window
-      .orderBy(col("c1").desc, col("w").asc)
-    val uni = uniAll.withColumn("__r", rank().over(w))
-      .where(col("__r") <= maxVocab).drop("__r").localCheckpoint()
-    val big = toks.where(size(col("t")) >= 2)
-      .select(explode(transform(sequence(lit(1), size(col("t")) - 1), i =>
-        struct(element_at(col("t"), i).as("w1"),
-          element_at(col("t"), i + 1).as("w2")))).as("b"))
-      .groupBy(col("b.w1").as("w1"), col("b.w2").as("w2"))
-      .agg(count(lit(1)).as("c2"))
-      .join(uni.select(col("w").as("w1")), Seq("w1"), "left_semi")
-      .join(uni.select(col("w").as("w2")), Seq("w2"), "left_semi")
-    // explicit select: the USING-key semi joins move their key column to the
-    // FRONT, so positional collect without it would read (w2, w1)
-    val uniM = uni.select(col("w"), col("c1")).collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val bigM = big.select(col("w1"), col("w2"), col("c2")).collect()
-      .map(r => s"${r.getString(0)} ${r.getString(1)}" -> r.getLong(2)).toMap
-    (uniM, bigM, uniM.values.sum, uniM.size.toLong)
   }
 
   // -------------------------------------------------------------------------

@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.types.{DataType, LongType}
 
 /** Distance along the order-`bits` Hilbert curve of the cell (x, y), both in
-  * [0, 2^bits) — the space-filling-curve key behind `Layout.hilbertOrdered`.
+  * [0, 2^bits) — the space-filling-curve key behind `Layout.hilbertCode`.
   * Unlike the Morton interleave (a handful of shift/or column ops), the
   * Hilbert transform is an inherently sequential per-bit state machine
   * (each level's quadrant rotation depends on all higher levels), which as

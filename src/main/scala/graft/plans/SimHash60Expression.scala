@@ -11,10 +11,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * token-occurrence hash60s; bit set iff 2*ones > n), bit-identical to it
   * for any single document (SimHashSpec).
   *
-  * A per-row expression matters for the ingest path: a streaming micro-batch
-  * can fingerprint each arriving row without a stateful aggregation, so
-  * near-duplicate suppression against a history table stays a stateless
-  * join (see `StreamOps.suppressNearDuplicates`). One pass per row: regex
+  * A per-row expression fingerprints each row without an aggregation, so a
+  * probe against a stored fingerprint table (`SimHashIndex`) needs no
+  * shuffle of the probe's tokens. One pass per row: regex
   * split, per-token md5 via the shared thread-local digest, 60 counters —
   * no explode, no array materialization, no interpreted lambdas.
   */

@@ -11,10 +11,10 @@ import org.apache.spark.unsafe.types.UTF8String
 /** One-pass text profile: tokenize lower(input) ONCE and return
   * `[hits(set_0), ..., hits(set_{k-1}), n_tokens, n_alpha_chars]`.
   *
-  * This replaces the k independent [[TokenSetHits]] evaluations that the
-  * language-ID CASE tree and the quality score used to pay — each of which
-  * re-lowercased and re-split the whole document (round-2 verdict: ~6-11
-  * tokenizations per row in the curation pipeline). All downstream consumers
+  * The language-ID CASE tree and the quality score would otherwise count
+  * each set on its own, re-lowercasing and re-splitting the whole document
+  * every time (round-2 verdict: ~6-11 tokenizations per row in the curation
+  * pipeline). All downstream consumers
   * (langId argmax, stopword ratio, token count, alpha ratio) become cheap
   * arithmetic over ONE shared array; Catalyst's subexpression elimination
   * collapses the repeated references into a single evaluation per row.

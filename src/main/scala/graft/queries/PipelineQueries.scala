@@ -2019,15 +2019,16 @@ object PipelineQueries {
            |  CAST(b.pos AS DOUBLE) / b.n AS pos_rate, iso.iso_rate
            |FROM b JOIN iso ON iso.i = b.bin""".stripMargin)),
 
-    // The COMPOSED INGEST-GATE funnel as ONE hash-checked row — the batch
-    // twin of the three-gate streaming chain StreamOpsSpec pins (quality →
-    // near-dup → quantile drift on one stream): every column below is a
-    // metric the gates' observe() emits, computed with the gates' own
-    // predicates over one batch. The reference split (even doc_ids) plays
-    // the stored corpus — its minhash band table is the near-dup gate's
-    // index and its exact nearest-rank length quantiles are the drift
-    // gate's frozen thresholds (resolved once on the driver, the gate's own
-    // model-resolution step). The incoming batch is the odd half plus
+    // The COMPOSED INGEST-GATE funnel as ONE hash-checked row — quality →
+    // near-dup → quantile drift over one batch: the quality and near-dup
+    // columns are the metrics StreamOps.qualityGate and nearDupGate emit
+    // through observe(), computed with those gates' own predicates, and
+    // the drift columns are Stats.quantileDriftScores over the survivors.
+    // The reference split (even doc_ids) plays the stored corpus — its
+    // minhash band table is the near-dup gate's index and its exact
+    // nearest-rank length quantiles are the drift thresholds (resolved
+    // once on the driver, so they are frozen before the batch is scored).
+    // The incoming batch is the odd half plus
     // planted near-copies of every 10th indexed doc (new ids, two trailing
     // noise tokens — the q208 probe recipe), so every stage observably
     // drops rows. Near-dup here is the EXACT band-collision form (the
@@ -2079,7 +2080,7 @@ object PipelineQueries {
         // stage-3 thresholds: exact nearest-rank p50/p90 of the reference
         // split's text length, on the value-alphabet frame (one row per
         // distinct length — the q389/q390 bounded-window note), resolved
-        // as two driver-side doubles (the gate's frozen-model step)
+        // as two driver-side doubles
         val counts = ref.select(length(col("text")).cast("double").as("x"))
           .groupBy(col("x")).agg(count(lit(1)).as("cnt"))
         val cum = counts

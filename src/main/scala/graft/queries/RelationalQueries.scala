@@ -749,7 +749,7 @@ object RelationalQueries {
            |FROM r GROUP BY 1""".stripMargin)),
 
     // Hilbert-curve layout key (order-8, 256×256 grid) over part: the
-    // space-filling-curve code Layout.hilbertOrdered sorts on, verified
+    // space-filling-curve code Layout.hilbertCode computes, verified
     // cell by cell against a DuckDB twin that unrolls the xy2d state
     // machine one CTE per bit level (the k-means unrolling discipline) —
     // all-integer arithmetic, exact hash match.
@@ -5576,10 +5576,8 @@ object RelationalQueries {
 
     // EPOCH DRIFT SCORES: split the event stream at its time midpoint and
     // score the later epoch's per-slice purchase counts against the
-    // earlier epoch's rates — the batch/oracle face of
-    // StreamOps.sliceDriftGate, so this hash-green entry IS the
-    // cross-engine proof of the gate's expected/variance math. Per-slice
-    // binomial z + the gate's global drift_z; slices born after the
+    // earlier epoch's rates (Stats.sliceDriftScores). Per-slice
+    // binomial z + the global drift_z; slices born after the
     // cutoff land in n_unknown. Corpus touched twice (once per epoch's
     // counting agg over the checkpointed projection); every later frame
     // is the ~100-slice alphabet.
@@ -5767,7 +5765,7 @@ object RelationalQueries {
     // the drift monitor says WHEN something moved; THIS says WHICH slices
     // moved, with the false-discovery rate controlled. A four-epoch
     // history table of per-(slice, epoch) counts (the shape a scheduled
-    // sliceDriftGate run would persist) rolls epochs 0–2 into the
+    // per-epoch count job would persist) rolls epochs 0–2 into the
     // reference, epoch 3 is live; per-slice binomial drift z
     // (sliceDriftScores q380) feeds straight into the q374 BH step-up.
     // Two existing operators, ~15 lines of glue — the corpus is touched
@@ -5860,14 +5858,12 @@ object RelationalQueries {
            |FROM rc CROSS JOIN ist""".stripMargin
       }),
 
-    // QUANTILE-DRIFT SCORES — the batch/oracle face of
-    // StreamOps.quantileDriftGate (the gate and this twin share ONE
-    // expression list, so this hash-green entry IS the cross-engine proof
-    // of the gate's binomial arithmetic): reference = even doc_ids, live
-    // = odd; the p50/p90 thresholds are the reference split's exact
-    // INCLUSIVE nearest-rank doc lengths (computed on the value-alphabet
-    // frame, then a 2-row driver transfer — the gate's own frozen-model
-    // resolution step, k-bounded like the k-means seeds), and the live
+    // QUANTILE-DRIFT SCORES (Stats.quantileDriftScores): reference = even
+    // doc_ids, live = odd; the p50/p90 thresholds are the reference split's
+    // exact INCLUSIVE nearest-rank doc lengths (computed on the
+    // value-alphabet frame, then a 2-row driver transfer, k-bounded like
+    // the k-means seeds, so the reference distribution is frozen before
+    // the live epoch is scored), and the live
     // epoch's mass above each threshold scores against Binomial(n, 1−q).
     // On this null split the honest z is ~0.
     QueryDef(
@@ -5916,15 +5912,14 @@ object RelationalQueries {
            |  FROM w) t""".stripMargin,
         qs = Seq(0.5, 0.9)))),
 
-    // KLL-SERVED DRIFT THRESHOLDS — the composition StreamOps.
-    // quantileDriftGate's doc promises ("thresholds exact or KLL-served
-    // from a stored QuantileIndex table") proved end-to-end: the reference
-    // split's per-source KLL table is built, PERSISTED and re-read (the
-    // stored-bytes path), the corpus rollup is folded from the stored
-    // bytes alone (kll_union), and p50/p90 thresholds are served by
-    // kll_quantile — a 2-row driver transfer, the gate's own frozen-model
-    // resolution step. KLL estimates are randomized, so the q386 hash
-    // discipline applies: the HASHED z columns use the exact thresholds
+    // KLL-SERVED DRIFT THRESHOLDS — quantile drift scored against
+    // thresholds KLL-served from a stored QuantileIndex table, end to
+    // end: the reference split's per-source KLL table is built, PERSISTED
+    // and re-read (the stored-bytes path), the corpus rollup is folded
+    // from the stored bytes alone (kll_union), and p50/p90 thresholds are
+    // served by kll_quantile — a 2-row driver transfer. KLL estimates are
+    // randomized, so the q386 hash discipline applies: the HASHED z
+    // columns use the exact thresholds
     // (which the oracle replays), and each KLL-served threshold enters the
     // surface as a thr_within_bound_pXX verdict pinned against the exact
     // ±eps rank band — eps = 0.05 vs k=256's ε ≈ 1.33% (1σ) leaves > 3σ,

@@ -102,16 +102,17 @@ object SimilarityQueries {
     (init +: its).mkString(",\n")
   }
 
-  /** DuckDB twin of the PQ stack (`Similarity.pqCodebooksFlat` /
-    * `pqEncode`): per-subspace sliced embeddings, an unrolled deterministic
-    * k-means per subspace (salt `pq<sub>`), the unified flat codebook
-    * `pqcb(sub, clabel, dim, c)`, the per-(vector, subspace, codeword)
+  /** DuckDB twin of the PQ stack (`Similarity.pqCodebooksFlatResidual` /
+    * `pqEncode` over the rows of `src`): per-subspace sliced embeddings,
+    * an unrolled deterministic k-means per subspace (salt `pq<sub>`), the
+    * unified flat codebook `pqcb(sub, clabel, dim, c)`, the
+    * per-(vector, subspace, codeword)
     * distance tables unified as `pqlut(vec_id, sub, code, d2)` (the ADC
     * lookup rows), and the codes `pqcodes(vec_id, sub, code)` (argmin per
     * subspace, ties -> lowest codeword).
     */
   private def duckPqCtes(m: Int, k: Int, iters: Int, dims: Int,
-      src: String = "e", trainSrc: Option[String] = None): String = {
+      src: String, trainSrc: Option[String] = None): String = {
     val sd = dims / m
     val perSub = (0 until m).map { sub =>
       val lo = sub * sd + 1

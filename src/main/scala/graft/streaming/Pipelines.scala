@@ -80,56 +80,6 @@ object Pipelines {
       .trigger(trigger)
       .start()
 
-  /** Parse with a dead-letter side channel: parsed article rows stream to
-    * `goodPath`, rows whose payload failed to parse (null `article_id` after
-    * PERMISSIVE from_json — the reference's silent failure mode) stream to
-    * `badPath` with their raw payload, for replay after a parser fix.
-    *
-    * One source, two sinks = `foreachBatch`: each micro-batch writes BOTH
-    * outputs into `batch_id=<id>` partition directories with dynamic
-    * partition overwrite, so a replayed batch (restart after a crash between
-    * the two writes) overwrites its own partition instead of duplicating —
-    * idempotence comes from the (checkpoint batch id × overwrite) pair, the
-    * standard exactly-once recipe for multi-sink foreachBatch.
-    */
-  def articlesWithDeadLetter(
-      spark: SparkSession,
-      source: StreamSource,
-      goodPath: String,
-      badPath: String,
-      checkpointPath: String,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    import org.apache.spark.sql.functions.{col, from_json, lit, try_to_timestamp}
-    // Articles.parse drops the envelope payload; the dead-letter channel
-    // must keep it, so the parse steps run here with raw_data carried along.
-    val withRaw = source.load(spark)
-      .select(col("data").cast("string").as("raw_data"))
-      .select(col("raw_data"), from_json(col("raw_data"), Articles.payloadSchema).as("article"))
-      .select(col("raw_data"), col("article.*"))
-      .withColumn("publish_date", try_to_timestamp(col("publish_date")))
-    withRaw.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointPath)
-      .trigger(trigger)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        // Per-write option, NOT a session-conf toggle: a concurrent query on
-        // the same session must never observe a temporarily-dynamic mode.
-        val stamped = batch.withColumn("batch_id", lit(batchId))
-        stamped.where(col("article_id").isNotNull)
-          .drop("raw_data")
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id").parquet(goodPath)
-        stamped.where(col("article_id").isNull)
-          .select(col("raw_data"), col("batch_id"))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id").parquet(badPath)
-        ()
-      }
-      .start()
-  }
-
   /** Streaming ingest INTO a [[graft.ops.SnapTables]] snapshot table — each
     * micro-batch publishes as one atomic generation flip
     * ([[graft.ops.SnapTables.appendBatch]]), so downstream readers never see

@@ -11,9 +11,8 @@ import java.nio.charset.StandardCharsets
   * as HTTP 200/503 for a docker-compose healthcheck; offline, the same
   * predicate backs an atomically-written marker FILE, which a compose
   * healthcheck consumes as `test -f /path/ready` — the thinnest adapter
-  * that keeps the semantics (and the 503 message's progressive detail)
-  * intact. An HTTP wrapper in a real deployment is one route over
-  * [[Status.healthy]]/[[Status.message]].
+  * that keeps the semantics intact. An HTTP wrapper in a real deployment
+  * is one route over [[Status.healthy]].
   */
 object Readiness {
 
@@ -32,18 +31,6 @@ object Readiness {
       threshold: Long = DefaultPublishThreshold) {
     def publishingStarted: Boolean = published >= threshold
     def healthy: Boolean = bucketCreated && streamCreated && publishingStarted
-
-    /** The reference's response message shape: a fixed healthy string, or
-      * "Waiting for initial setup" plus one clause per gate already passed
-      * (`populate_stream.py:126-134`).
-      */
-    def message: String =
-      if (healthy) "Initial setup and publishing started"
-      else (Seq("Waiting for initial setup") ++ Seq(
-        bucketCreated -> "Bucket created",
-        streamCreated -> "Stream created",
-        publishingStarted -> "Initial publishing started")
-        .collect { case (true, m) => m }).mkString(", ")
   }
 
   /** Write the readiness marker atomically (tmp + ATOMIC_MOVE rename — a
@@ -62,7 +49,4 @@ object Readiness {
       StandardCopyOption.REPLACE_EXISTING)
     true
   }
-
-  /** The healthcheck's read side (`test -f` equivalent). */
-  def isReady(marker: Path): Boolean = Files.exists(marker)
 }

@@ -9,10 +9,6 @@ import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode, StatefulPr
   */
 final case class AuthorStats(author: String, n_articles: Long, total_words: Long)
 
-/** Completed session emitted by [[StreamOps.sessionizeByGap]]. */
-final case class SessionRow(user_id: Long, start_us: Long, end_us: Long,
-    n_events: Long)
-
 /** StatefulProcessor backing [[StreamOps.limitPerAuthor]]: one ValueState
   * counter per author; rows beyond the quota are dropped.
   */
@@ -86,88 +82,6 @@ object StreamOps {
       }
   }
 
-  /** Streaming MARKOV transition extraction with cross-batch state: per
-    * entity the last-seen (order, state) persists in keyed state, so the
-    * transition that STRADDLES a micro-batch boundary is emitted exactly
-    * once — the maintenance path of the q302 durable transition-count
-    * table (counts are additive, so per-batch transition deltas merge by
-    * plain summation into the stored table; a per-batch lag window would
-    * silently drop every boundary-crossing transition). Input rows are
-    * (entity, order1, order2, state); rows within a batch sort in memory
-    * per entity (bounded by per-entity batch volume), and the SOURCE must
-    * deliver each entity's rows in order across batches (the Kinesis
-    * per-partition-key ordering contract). State: one (long, long, string)
-    * per entity. Emits one (cur, nxt) row per transition.
-    */
-  def transitionDeltas(
-      steps: Dataset[(Long, Long, Long, String)]): Dataset[(String, String)] = {
-    val spark = steps.sparkSession
-    import spark.implicits._
-    steps.groupByKey(_._1)
-      .flatMapGroupsWithState[(Long, Long, String), (String, String)](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (_, rows, state) =>
-          val sorted = rows.toVector.sortBy(r => (r._2, r._3))
-          if (sorted.isEmpty) Iterator.empty
-          else {
-            val states = state.getOption.map(_._3).toVector ++ sorted.map(_._4)
-            val last = sorted.last
-            state.update((last._2, last._3, last._4))
-            states.iterator.sliding(2).withPartial(false)
-              .map(w => (w.head, w(1)))
-          }
-      }
-  }
-
-  /** Gap-based SESSIONIZATION with event-time TIMERS: a session closes
-    * either inline (a same-user event arrives more than `gapUs` later) or
-    * on the watermark timer (no event ever arrives — the case a pure lag
-    * window can never close). The stateful twin of the built-in
-    * `session_window` aggregation (q07), exposed because production
-    * sessionizers carry custom per-session payloads (counts, first/last,
-    * funnel flags) the built-in aggregate cannot. State: one
-    * (start, end, n) triple per user; the timeout timestamp re-arms at
-    * end + gap after every batch. Input: (user_id, ts) rows that ALREADY
-    * carry an event-time watermark on `ts` (required by
-    * EventTimeTimeout). Emits completed sessions only (append mode).
-    */
-  def sessionizeByGap(events: DataFrame, gapUs: Long): Dataset[SessionRow] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    events.select(col("user_id").cast("long"), col("ts"))
-      .as[(Long, java.sql.Timestamp)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[(Long, Long, Long), SessionRow](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (u, rows, state) =>
-          def us(t: java.sql.Timestamp): Long =
-            (t.getTime / 1000) * 1000000L + t.getNanos / 1000
-          if (state.hasTimedOut) {
-            val (st, en, n) = state.get
-            state.remove()
-            Iterator.single(SessionRow(u, st, en, n))
-          } else {
-            val sorted = rows.map(r => us(r._2)).toVector.sorted
-            var out = Vector.empty[SessionRow]
-            var cur = state.getOption
-            sorted.foreach { t =>
-              cur match {
-                case None => cur = Some((t, t, 1L))
-                case Some((st, en, n)) =>
-                  if (t - en <= gapUs) cur = Some((st, math.max(en, t), n + 1))
-                  else { out :+= SessionRow(u, st, en, n); cur = Some((t, t, 1L)) }
-              }
-            }
-            cur.foreach { c =>
-              state.update(c)
-              // timer in ms, strictly after the session's close boundary
-              state.setTimeoutTimestamp((c._2 + gapUs) / 1000 + 1)
-            }
-            out.iterator
-          }
-      }
-  }
-
   /** Streaming per-author quota on the Spark 4 `transformWithState` API
     * (arbitrary-state v2: explicit `ValueState` via the processor handle,
     * RocksDB-backed — the successor to mapGroupsWithState): emits only each
@@ -201,164 +115,6 @@ object StreamOps {
       keys: Seq[String],
       joinType: String = "left_outer"): DataFrame =
     stream.join(broadcast(dim), keys, joinType)
-
-  /** Incremental ingest dedup against HISTORY (the streaming face of the
-    * dedup story): fingerprint each incoming row's text
-    * (`Text.fingerprint` — the codegen'd rolling token hash) and anti-join
-    * against the table of fingerprints already in the corpus. Per
-    * micro-batch Catalyst plans a broadcast LEFT ANTI hash join, so the
-    * stream side never shuffles and arbitrarily-reordered redelivery is
-    * handled (unlike watermark dedup, history has no time horizon). The
-    * computed `fp` column rides along on the surviving rows so the sink can
-    * append them straight back into the fingerprint table — the ingest loop
-    * closes without a second pass.
-    *
-    * At 100 TB the fingerprint table exceeds broadcast size; then `known`
-    * arrives bucketed by fp ([[graft.ops.Layout.writeBucketed]]) and the
-    * same call with `broadcastKnown = false` shuffles only (fp, id) pairs.
-    */
-  def antiJoinKnownFingerprints(
-      stream: DataFrame,
-      textCol: String,
-      known: DataFrame,
-      broadcastKnown: Boolean = true): DataFrame = {
-    val fps = known.select(col("fp"))
-    val withFp = stream.withColumn("fp", graft.ops.Text.fingerprint(col(textCol)))
-    withFp.join(if (broadcastKnown) broadcast(fps) else fps, Seq("fp"), "left_anti")
-  }
-
-  /** NEAR-duplicate suppression against HISTORY — the simhash extension of
-    * [[antiJoinKnownFingerprints]]: rows whose per-row SimHash
-    * (`Dedup.simhash60`, stateless native — no aggregation, so the shape is
-    * micro-batch-legal) sits within `maxHamming` bits of any fingerprint in
-    * the history table are dropped; everything else passes with its
-    * `simhash` column attached so the sink can append it back into history.
-    *
-    * Matching uses the SAME pigeonhole blocking as the corpus-side
-    * `Dedup.simhashNearDupBlocked` (`simhashComboKeys`): candidate pairs
-    * meet on a shared block key (broadcast hash join — the batch side never
-    * shuffles), the Hamming verify rides the join, and the matched simhash
-    * set (small: matches only) broadcast-anti-joins back. Two passes over
-    * the micro-batch (fingerprint feeds both the probe and the anti side);
-    * the per-row native keeps that cheap.
-    *
-    * Use per micro-batch (inside `foreachBatch`, like the dead-letter
-    * channel) or on any batch frame. A pure streaming self-derived
-    * anti-join is not expressible in one continuous plan — Spark rejects
-    * stream-stream LEFT ANTI without watermark equality — and foreachBatch
-    * is also where the history append belongs, so the batch shape is the
-    * honest contract. At 100 TB pass `broadcastHistory = false`: history
-    * arrives bucketed on its block keys and the candidate join shuffles
-    * only (key, simhash) pairs.
-    */
-  def suppressNearDuplicates(
-      df: DataFrame,
-      textCol: String,
-      history: DataFrame,
-      maxHamming: Int,
-      numBlocks: Int = 6,
-      broadcastHistory: Boolean = true): DataFrame = {
-    import graft.ops.Dedup
-    suppressByHammingCode(
-      df.withColumn("simhash", Dedup.simhash60(col(textCol))),
-      "simhash", history, maxHamming, numBlocks, broadcastHistory)
-  }
-
-  /** The code-agnostic core of the near-dup ingest gate: drop every row of
-    * `df` whose 60-bit `codeCol` lands within Hamming `maxHamming` of any
-    * code in `history` (a frame with the same-named column). Shared by the
-    * text path ([[suppressNearDuplicates]], SimHash60 codes) and the media
-    * path ([[suppressNearDupMedia]], dHash codes) — one audited blocking
-    * join instead of two.
-    */
-  def suppressByHammingCode(
-      withCode: DataFrame,
-      codeCol: String,
-      history: DataFrame,
-      maxHamming: Int,
-      numBlocks: Int = 6,
-      broadcastHistory: Boolean = true): DataFrame = {
-    import graft.ops.Dedup
-    val hk = history
-      .select(col(codeCol).as("h_code"))
-      .select(col("h_code"),
-        explode(Dedup.simhashComboKeys(col("h_code"), maxHamming, numBlocks)).as("bk"))
-    val hside = if (broadcastHistory) broadcast(hk) else hk
-    val matched = withCode
-      .select(col(codeCol),
-        explode(Dedup.simhashComboKeys(col(codeCol), maxHamming, numBlocks)).as("bk"))
-      .join(hside, Seq("bk"))
-      .where(expr(s"bit_count($codeCol ^ h_code)") <= maxHamming)
-      .select(col(codeCol))
-      .distinct()
-    withCode.join(broadcast(matched), Seq(codeCol), "left_anti")
-  }
-
-  /** Media ingest near-dup suppression: the [[suppressNearDuplicates]]
-    * contract for BINARY payloads — each arriving asset gets its per-row
-    * perceptual dHash ([[graft.ops.Media.dhash]], a stateless codegen
-    * expression, so the micro-batch needs no aggregation) and is dropped
-    * when a history code sits within Hamming `maxHamming`. `history`
-    * carries (dhash) of previously accepted assets — append the surviving
-    * rows' codes in the same foreachBatch that runs this gate, exactly
-    * like the text path. Catches re-uploads and lightly edited copies that
-    * the exact content-hash anti-join misses.
-    */
-  def suppressNearDupMedia(
-      df: DataFrame,
-      payloadCol: String,
-      history: DataFrame,
-      maxHamming: Int,
-      numBlocks: Int = 6,
-      broadcastHistory: Boolean = true): DataFrame =
-    suppressByHammingCode(
-      df.withColumn("dhash", graft.ops.Media.dhash(col(payloadCol))),
-      "dhash", history, maxHamming, numBlocks, broadcastHistory)
-
-  /** Embedding ingest near-dup suppression: the [[suppressNearDuplicates]]
-    * contract for VECTOR payloads — each arriving embedding packs to its
-    * 64-bit binary code per row (sign vs the broadcast per-dimension
-    * thresholds, [[graft.ops.BinaryQuant]] — stateless arithmetic, no
-    * aggregation in the micro-batch) and is dropped when any history code
-    * sits within Hamming `maxHamming`. Blocking is the two-word 8×8-bit
-    * chunk pigeonhole ([[graft.ops.BinaryQuant.chunkKeys]]): recall-exact
-    * for maxHamming ≤ 7. `history` carries (lo, hi) of previously accepted
-    * embeddings — append the survivors' codes in the same foreachBatch
-    * that runs this gate. Catches re-embedded duplicates and
-    * trivially-perturbed vectors that an exact-id anti-join misses, at
-    * 16 bytes of history per vector.
-    */
-  def suppressNearDupEmbedding(
-      df: DataFrame,
-      vecCol: String,
-      thresholds: DataFrame,
-      history: DataFrame,
-      maxHamming: Int,
-      broadcastHistory: Boolean = true): DataFrame = {
-    import graft.ops.BinaryQuant
-    require(maxHamming <= 7,
-      "8-chunk pigeonhole guarantees recall only for maxHamming <= 7")
-    val withCode = df
-      .crossJoin(broadcast(thresholds))
-      .withColumn("__bq_lo", BinaryQuant.loWord(col(vecCol), col("mus")))
-      .withColumn("__bq_hi", BinaryQuant.hiWord(col(vecCol), col("mus")))
-      .drop("mus")
-    val hk = history
-      .select(col("lo").as("h_lo"), col("hi").as("h_hi"))
-      .select(col("h_lo"), col("h_hi"),
-        explode(BinaryQuant.chunkKeys(col("h_lo"), col("h_hi"))).as("bk"))
-    val hside = if (broadcastHistory) broadcast(hk) else hk
-    val matched = withCode
-      .select(col("__bq_lo"), col("__bq_hi"),
-        explode(BinaryQuant.chunkKeys(col("__bq_lo"), col("__bq_hi"))).as("bk"))
-      .join(hside, Seq("bk"))
-      .where(BinaryQuant.hamming(col("__bq_lo"), col("__bq_hi"),
-        col("h_lo"), col("h_hi")) <= maxHamming)
-      .select(col("__bq_lo"), col("__bq_hi"))
-      .distinct()
-    withCode.join(broadcast(matched), Seq("__bq_lo", "__bq_hi"), "left_anti")
-      .drop("__bq_lo", "__bq_hi")
-  }
 
   /** Stream-stream interval join: pair rows of two unbounded streams on an
     * equi-key within an event-time window of `maxDelay` (right side in
@@ -396,78 +152,6 @@ object StreamOps {
       count(lit(1)).as("n_rows"),
       count(when(col("publish_date").isNull, 1)).as("n_null_event_time"),
       count(when(col("article_id").isNull, 1)).as("n_unparsed_payload"))
-
-  /** Ingest-time quality gate: the batch catalog's per-row language-ID and
-    * quality-score expressions (q40/q41 semantics — ONE shared TextProfile
-    * evaluation via CSE) applied as a stateless streaming filter, with
-    * observe() metrics splitting the drop reason per micro-batch. Rows pass
-    * when the predicted language is in `langs` AND the composite quality
-    * score clears `minQuality`.
-    *
-    * Scale shape: pure per-row projection + filter — no state, no shuffle,
-    * no watermark interaction; the metrics ride the existing pass with zero
-    * extra reads (the W4 observability discipline).
-    */
-  /** Per-row stupid-backoff LM scoring against a BROADCAST trained model
-    * ([[graft.ops.Text.bigramLmModel]] — vocabulary capped, so the maps are
-    * bona-fide model parameters): the same arithmetic as the batch
-    * [[graft.ops.Text.bigramLmScore]] join pipeline, but as one stateless
-    * fold over the token array with map-literal lookups — no explode, no
-    * aggregation, no watermark, so it runs in any streaming output mode.
-    * Bit-parity with the batch scorer is spec-pinned (both fold lp in
-    * position order from 0.0).
-    *
-    * Returns the nll column (NULL for docs with < 2 tokens — too short to
-    * score, callers keep them, matching the quality-gate convention).
-    */
-  def lmNll(
-      text: Column,
-      uni: Map[String, Long],
-      big: Map[String, Long],
-      n: Long,
-      v: Long): Column = {
-    val t = graft.ops.Text.tokens(text)
-    val uniM = typedlit(uni)
-    val bigM = typedlit(big)
-    val folded = aggregate(
-      sequence(lit(1), size(t) - 1),
-      struct(lit(0.0).as("s"), lit(0L).as("b")),
-      (acc, i) => {
-        val w1 = element_at(t, i)
-        val w2 = element_at(t, i + 1)
-        val c2 = element_at(bigM, concat(w1, lit(" "), w2))
-        val c1 = element_at(uniM, w1)
-        val c1w2 = coalesce(element_at(uniM, w2), lit(0L))
-        val lp = when(c2.isNotNull && c1.isNotNull,
-          log(c2.cast("double") / c1.cast("double")))
-          .otherwise(log(lit(2.0) / lit(5.0)) +
-            log((c1w2 + lit(1L)).cast("double") / lit((n + v).toDouble)))
-        struct((acc.getField("s") + lp).as("s"),
-          (acc.getField("b") + when(c2.isNull, 1L).otherwise(0L)).as("b"))
-      })
-    when(size(t) >= 2,
-      -folded.getField("s") / (size(t) - 1).cast("double"))
-  }
-
-  /** Ingest-time perplexity gate: drop rows whose [[lmNll]] exceeds
-    * `maxNll` (gibberish tail); short docs (NULL nll) pass. observe()
-    * counts the drops per micro-batch.
-    */
-  def lmScoreGate(
-      stream: DataFrame,
-      text: Column,
-      uni: Map[String, Long],
-      big: Map[String, Long],
-      n: Long,
-      v: Long,
-      maxNll: Double): DataFrame = {
-    val keep = coalesce(lmNll(text, uni, big, n, v) <= maxNll, lit(true))
-    stream
-      .observe("lm_gate",
-        count(lit(1)).as("n_rows"),
-        count(when(!keep, 1)).as("n_nll_dropped"))
-      .where(keep)
-  }
 
   /** Ingest DECONTAMINATION gate — the streaming face of q87/q105: drop
     * every incoming document sharing at least `minShared` distinct n-gram
@@ -512,8 +196,8 @@ object StreamOps {
   /** Ingest PII scrub — the streaming face of q182: replace
     * email/IPv4/phone spans with their `<TYPE>` placeholders BEFORE the
     * document lands anywhere durable (scrubbing at ingest is the only
-    * placement that keeps raw PII out of checkpoints, dead-letter
-    * quarantines and the corpus itself). A pure per-row projection
+    * placement that keeps raw PII out of checkpoints and the corpus
+    * itself). A pure per-row projection
     * ([[graft.ops.Text.redactPii]]'s codegen'd regexp_replace chain + the
     * native match counters): no shuffle, no state, any output mode. The
     * observe() metrics surface rows-touched and per-class match counts per
@@ -544,8 +228,7 @@ object StreamOps {
     * verify-join): a false positive CUTS a novel paragraph (rate bounded
     * by numBits sizing), never keeps a duplicate. In-batch duplicate
     * paragraphs pass (electing a first occurrence needs cross-row state);
-    * the next table refresh catches them — the same division of labor as
-    * [[antiJoinKnownFingerprints]] history dedup.
+    * the next table refresh catches them.
     */
   def paraScrubGate(
       stream: DataFrame,
@@ -569,6 +252,17 @@ object StreamOps {
       .drop("bf")
   }
 
+  /** Ingest-time quality gate: the batch catalog's per-row language-ID and
+    * quality-score expressions (q40/q41 semantics — ONE shared TextProfile
+    * evaluation via CSE) applied as a stateless streaming filter, with
+    * observe() metrics splitting the drop reason per micro-batch. Rows pass
+    * when the predicted language is in `langs` AND the composite quality
+    * score clears `minQuality`.
+    *
+    * Scale shape: pure per-row projection + filter — no state, no shuffle,
+    * no watermark interaction; the metrics ride the existing pass with zero
+    * extra reads (the W4 observability discipline).
+    */
   def qualityGate(
       stream: DataFrame,
       text: Column,
@@ -686,148 +380,5 @@ object StreamOps {
         n = mhShingle, numHashes = mhHashes, rowsPerBand = mhRowsPerBand)
       case None => deboiled
     }
-  }
-
-  /** Per-row Naive Bayes class prediction against a BROADCAST trained model
-    * ([[graft.ops.Select.nbModel]] — vocabulary-capped, so the maps are
-    * bona-fide model parameters): the same arithmetic as the batch
-    * [[graft.ops.Select.nbTrainScore]] join pipeline, but as one stateless
-    * per-class fold over the row's sorted distinct kept tokens with
-    * map-literal lookups — no explode, no aggregation, no watermark, so it
-    * runs in any streaming output mode. Bit-parity with the batch scorer is
-    * spec-pinned: both fold n_w·ln((c(w,cls)+1)/(N_cls+V)) in token order
-    * starting from the class prior, and both break argmax ties toward the
-    * lexicographically smallest class.
-    *
-    * Returns a struct column (pred, score); pred is NULL for rows with no
-    * kept token (the batch scorer omits those rows — callers decide).
-    */
-  def nbPredict(text: Column, model: graft.ops.Select.NbModel): Column = {
-    require(model.classes.nonEmpty, "model must have at least one class")
-    val countsM = typedlit(model.counts)
-    val toks = graft.ops.Text.tokens(text)
-    val kept = array_sort(array_distinct(
-      filter(toks, w => length(w) > 0 && w.isInCollection(model.vocab))))
-    val scores: Seq[(String, Column)] = model.classes.map { cls =>
-      val denom = lit((model.mass(cls) + model.v).toDouble)
-      val s = aggregate(kept, lit(model.priors(cls)), (acc, w) => {
-        val n = size(filter(toks, x => x === w)).cast("double")
-        val cwc = coalesce(element_at(countsM, concat(lit(cls + " "), w)), lit(0L))
-        acc + n * log((cwc + lit(1L)).cast("double") / denom)
-      })
-      cls -> s
-    }
-    val win = scores.map { case (cls, s) =>
-      struct((-s).as("ns"), lit(cls).as("c"), s.as("s"))
-    }.reduce((a, b) => when(a <= b, a).otherwise(b))
-    when(size(kept) > 0,
-      struct(win.getField("c").as("pred"), win.getField("s").as("score")))
-  }
-
-  /** Ingest-time classifier gate: keep only rows the broadcast NB model
-    * predicts into `keepClasses`; rows with no kept token pass (too short
-    * to classify — the quality-gate convention). observe() counts drops
-    * per micro-batch.
-    */
-  def nbClassGate(
-      stream: DataFrame,
-      text: Column,
-      model: graft.ops.Select.NbModel,
-      keepClasses: Seq[String]): DataFrame = {
-    require(keepClasses.nonEmpty, "keep at least one class")
-    val pred = nbPredict(text, model).getField("pred")
-    val keep = pred.isNull || pred.isInCollection(keepClasses)
-    stream
-      .observe("nb_gate",
-        count(lit(1)).as("n_rows"),
-        count(when(!keep, 1)).as("n_class_dropped"))
-      .where(keep)
-  }
-
-  /** Ingest-time SLICE-DRIFT monitor — the streaming twin of q374's BH-FDR
-    * slice audit: score each micro-batch's success mass against a BROADCAST
-    * reference table of historical per-slice counts (key, n, k) and emit
-    * the exact one-number drift statistic per batch through observe().
-    * Under the reference rates p₀ = k/n, the batch's known-slice successes
-    * have mean Σ p₀(row) and variance Σ p₀(1−p₀) (independent Bernoulli),
-    * so drift_z = (actual − expected)/√variance is the normal-approximate
-    * batch drift score — the monitor that says WHEN to re-run the q374
-    * offline correction, not a per-slice verdict (per-slice BH needs the
-    * whole history; a micro-batch only has its own rows).
-    *
-    * Stateless per batch: one stream-static broadcast join attaches p₀
-    * per row; all metrics are aggregate expressions over that frame, and
-    * the decimal(38,18) folds make expected/variance order-independent —
-    * the batch twin on the same rows matches BIT FOR BIT. Rows pass
-    * through unchanged (a monitor, not a filter); keys absent from the
-    * reference are counted as `n_unknown_slice` (new slices are
-    * themselves a drift signal) and excluded from the z.
-    */
-  def sliceDriftGate(
-      stream: DataFrame,
-      key: Column,
-      success: Column,
-      reference: DataFrame): DataFrame = {
-    import graft.ops.Num
-    // The stream-static join must stay 1:1 on key or duplicated reference
-    // rows would fan stream rows out — breaking the "rows pass through
-    // unchanged" contract and inflating every metric. A history table can
-    // legitimately hold several rows per key (per-epoch shards), so roll
-    // the counts up per key HERE rather than demanding pre-aggregated
-    // input: summing n and k before p0 = k/n is exactly the pooled rate.
-    val ref = broadcast(reference
-      .groupBy(col("key").cast("string").as("__sd_key"))
-      .agg(sum(col("n")).as("__sd_n"), sum(col("k")).as("__sd_k"))
-      .select(col("__sd_key"),
-        (col("__sd_k").cast("double") / col("__sd_n").cast("double"))
-          .as("__sd_p0")))
-    val known = col("__sd_p0").isNotNull
-    val expected = Num.dsum38(when(known, col("__sd_p0")).otherwise(0.0))
-    val variance = Num.dsum38(
-      when(known, col("__sd_p0") * (lit(1.0) - col("__sd_p0"))).otherwise(0.0))
-    val actual = count(when(known && success, 1)).cast("double")
-    stream
-      .withColumn("__sd_k", key.cast("string"))
-      .join(ref, col("__sd_k") === col("__sd_key"), "left")
-      .observe("slice_drift",
-        count(lit(1)).as("n_rows"),
-        count(when(!known, 1)).as("n_unknown_slice"),
-        count(when(known && success, 1)).as("n_success_known"),
-        expected.as("expected_success"),
-        variance.as("variance_success"),
-        when(variance > 0.0, (actual - expected) / sqrt(variance))
-          .as("drift_z"))
-      .drop("__sd_key", "__sd_p0", "__sd_k")
-  }
-
-  /** Ingest-time QUANTILE-DRIFT monitor — the DISTRIBUTIONAL member of the
-    * gate family (quality, LM perplexity, near-dup text/media, NB class,
-    * decontam, para scrub, slice drift): given reference quantile
-    * thresholds (q, thr) — exact quantiles or KLL estimates served from a
-    * stored [[graft.ops.QuantileIndex]] table, resolved ONCE on the driver
-    * at stream construction (the frozen-model discipline: the reference
-    * distribution must not shift under the monitor mid-stream) — emit per
-    * micro-batch how far the batch's mass above each threshold deviates
-    * from its no-drift binomial expectation
-    * (z_q = (n_above − n(1−q))/√(n·q(1−q))). The slice gate watches a
-    * RATE per slice; this watches the VALUE DISTRIBUTION itself — doc
-    * lengths shrinking, scores collapsing — drift no per-slice rate can
-    * see.
-    *
-    * Stateless per batch, zero joins (thresholds are literals): rows pass
-    * through unchanged, and the arithmetic is the SAME expression list as
-    * the batch twin [[graft.ops.Stats.quantileDriftScores]]
-    * (q389's hash-green run is the cross-engine proof), so
-    * observe() == batch twin bit for bit. The KLL-served threshold path is
-    * proved end-to-end by q390 (stored table → kll_union rollup →
-    * kll_quantile, verdict-hashed) and the StreamOpsSpec scenario wiring
-    * this gate to table-served thresholds.
-    */
-  def quantileDriftGate(
-      stream: DataFrame,
-      value: Column,
-      refQuantiles: Seq[(Double, Double)]): DataFrame = {
-    val ms = graft.ops.Stats.quantileDriftMetrics(value, refQuantiles)
-    stream.observe("quantile_drift", ms.head, ms.tail: _*)
   }
 }

@@ -15,20 +15,6 @@ final case class KinesisEnvelope(
     sequenceNumber: String,
     kinesisShardId: String)
 
-object KinesisEnvelope {
-  /** Payload-only convenience: wrap a JSON article payload in an envelope the
-    * way the producer does (`populate_stream.py:96-101`: partition key =
-    * article_id, sequence numbers assigned by the stream).
-    */
-  def ofJson(json: String, seq: Long, arrival: java.sql.Timestamp): KinesisEnvelope =
-    KinesisEnvelope(
-      data = json.getBytes("UTF-8"),
-      approximateArrivalTimestamp = arrival,
-      partitionKey = s"pk-$seq",
-      sequenceNumber = seq.toString,
-      kinesisShardId = "shardId-000000000000")
-}
-
 /** A source of unbounded envelope rows — the abstraction the reference hides
   * inside `readStream.format("kinesis")` (`app/process_articles.py:53-61`).
   *

@@ -203,24 +203,6 @@ class AnnIndexSpec extends AnyFunSuite with SparkSpec {
       "total serve rows unchanged by a re-encode")
   }
 
-  test("reconstructionAudit: coverage shrinkage is returned, not left to caller discipline") {
-    val idx = buildOn(emb)
-    val clean = AnnIndex.reconstructionAudit(emb, col("vec_id"), col("embedding"), idx)
-      .head()
-    assert(clean.getAs[Long]("n_indexed") == idx.codes.count())
-    assert(clean.getAs[Long]("n_excluded") == 0L,
-      "a well-formed index audits every indexed vector")
-    val badVid = idx.codes.agg(min(col("vid"))).head().getLong(0)
-    val corrupted = idx.copy(codes = idx.codes.withColumn("codes",
-      when(col("vid") === badVid,
-        concat(array(lit(999)), slice(col("codes"), 2, idx.m - 1)))
-        .otherwise(col("codes"))))
-    val dirty = AnnIndex.reconstructionAudit(emb, col("vec_id"), col("embedding"),
-      corrupted).head()
-    assert(dirty.getAs[Long]("n_excluded") == 1L,
-      "the corrupt-coded vector must surface as an exclusion count")
-  }
-
   test("reconstructionError: an out-of-range code EXCLUDES the vector instead of underreporting") {
     val idx = buildOn(emb)
     val base = AnnIndex.reconstructionError(emb, col("vec_id"), col("embedding"), idx)

@@ -96,49 +96,6 @@ class MediaSpec extends AnyFunSuite with SparkSpec {
     assert(groups.forall { case (_, rep, _) => Seq(1L, 2L, 3L, 4L).contains(rep) })
   }
 
-  /** Deterministic fixture image encoded with the JDK's own writers. */
-  private def fixture(w: Int, h: Int, format: String): Array[Byte] = {
-    val img = new java.awt.image.BufferedImage(
-      w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
-    (0 until w).foreach(x => (0 until h).foreach(y =>
-      img.setRGB(x, y, (x * 31 + y * 7) & 0xFFFFFF)))
-    val bos = new java.io.ByteArrayOutputStream()
-    assert(javax.imageio.ImageIO.write(img, format, bos), s"JDK writer for $format")
-    bos.toByteArray
-  }
-
-  test("real ImageIO decode: PNG and JPEG fixture dimensions recovered; undecodable dropped") {
-    import spark.implicits._
-    val media = Seq(
-      MediaRecord(1L, "image/png", fixture(64, 32, "png")),
-      MediaRecord(2L, "image/jpeg", fixture(100, 300, "jpg")),
-      MediaRecord(3L, "image/png", Media.PngMagic ++ "not really pixels".getBytes("UTF-8")))
-      .toDS()
-    val got = Media.decodeImages(media)
-      .collect().map(d => d.media_id -> ((d.width, d.height))).toMap
-    assert(got == Map(1L -> ((64, 32)), 2L -> ((100, 300))),
-      "real codecs recover true dimensions; the synthetic fake payload is dropped")
-  }
-
-  test("real resize: bounding box respected and the emitted PNG round-trips to the new dimensions") {
-    import spark.implicits._
-    val media = Seq(
-      MediaRecord(1L, "image/png", fixture(64, 32, "png")),   // -> 50x25
-      MediaRecord(2L, "image/jpeg", fixture(100, 300, "jpg")), // -> 16x50
-      MediaRecord(3L, "image/png", fixture(20, 10, "png")))    // fits: no-op
-      .toDS()
-    val out = Media.resizeImages(media, maxDim = 50).collect()
-      .map(r => r.media_id -> r).toMap
-    assert(out(1L).new_width == 50 && out(1L).new_height == 25)
-    assert(out(2L).new_width == 16 && out(2L).new_height == 50)
-    assert(out(3L).new_width == 20 && out(3L).new_height == 10)
-    out.values.foreach { r =>
-      val back = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(r.png))
-      assert(back.getWidth == r.new_width && back.getHeight == r.new_height,
-        s"asset ${r.media_id}: emitted PNG must decode to the declared target size")
-    }
-  }
-
   test("dhash native expression == built-in composed twin (content-scaled grid)") {
     import spark.implicits._
     import graft.plans.DHash60.{Cols, Rows, Cells}
@@ -206,23 +163,6 @@ class MediaSpec extends AnyFunSuite with SparkSpec {
     val pairs = Media.dhashNearDupPairs(codes, maxHamming = 3)
       .select("id_a", "id_b", "hamming").as[(Long, Long, Int)].collect().toSet
     assert(pairs == Set((1L, 2L, 2)), s"got $pairs")
-  }
-
-  test("real WAV decode: format parameters, frame count and PCM envelope recovered; non-WAV dropped") {
-    import spark.implicits._
-    val samples = Array.tabulate(500)(i =>
-      (128 + 100 * math.sin(i * 2 * math.Pi / 50)).toByte)
-    val media = Seq(
-      MediaRecord(1L, "audio/wav", Media.wavBytes(samples)),
-      MediaRecord(2L, "audio/wav", Media.WavMagic ++ "not really audio".getBytes("UTF-8")))
-      .toDS()
-    val got = Media.decodeAudio(media).collect().map(d => d.media_id -> d).toMap
-    assert(got.keySet == Set(1L), "the fake RIFF payload has no parseable WAV header")
-    val d = got(1L)
-    assert(d.sample_rate == 8000.0 && d.channels == 1 && d.sample_bits == 8)
-    assert(d.n_frames == 500L && math.abs(d.duration_sec - 500.0 / 8000.0) < 1e-9)
-    assert(d.envelope60 == Media.energyEnvelope60(samples),
-      "the decoded PCM stream is the original sample array, bit for bit")
   }
 
   test("audio envelope: relational form == JVM energyEnvelope60 on the same bytes") {

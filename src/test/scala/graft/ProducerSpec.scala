@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.streaming.{Pipelines, ProducerMain, Readiness, StreamSource}
+import graft.streaming.{Pipelines, ProducerMain, StreamSource}
 
 /** The producer service loop: iteration accounting, fresh (non-repeating)
   * content per iteration, the readiness gate flipping at the threshold, and
@@ -22,11 +22,11 @@ class ProducerSpec extends AnyFunSuite with SparkSpec {
       sleeper = _ => {
         sleeps += 1
         if (sleeps == 1)
-          assert(!Readiness.isReady(marker), "marker must not exist below threshold")
+          assert(!java.nio.file.Files.exists(marker), "marker must not exist below threshold")
       })
     assert(published == 3 * 1024)
     assert(sleeps == 2, "no sleep after the final iteration (the reference's loop shape)")
-    assert(Readiness.isReady(marker))
+    assert(java.nio.file.Files.exists(marker))
     val env = spark.read.parquet(envDir)
     assert(env.count() == 3 * 1024)
     // fresh content per iteration: every envelope row is distinct

@@ -26,6 +26,19 @@ trait SparkSpec {
     */
   def tmpDir(prefix: String): String = Scratch.dir(prefix)
 
+  /** Wrap a JSON article payload in a one-shard envelope the way the
+    * producer does (`populate_stream.py:96-101`), with sequence number
+    * `seq` and the partition key derived from it.
+    */
+  def envelopeOf(json: String, seq: Long,
+      arrival: java.sql.Timestamp): graft.streaming.KinesisEnvelope =
+    graft.streaming.KinesisEnvelope(
+      data = json.getBytes("UTF-8"),
+      approximateArrivalTimestamp = arrival,
+      partitionKey = s"pk-$seq",
+      sequenceNumber = seq.toString,
+      kinesisShardId = "shardId-000000000000")
+
   /** Runs `body` with `listener` registered, then runs a marker job and
     * waits until the bus has delivered it: the bus delivers events in
     * order, so `listener` has then seen every event posted during `body`.

@@ -17,7 +17,7 @@ class StreamOpsSpec extends AnyFunSuite with SparkSpec {
   private var seq = 0L
   private def env(json: String): KinesisEnvelope = {
     seq += 1
-    KinesisEnvelope.ofJson(json, seq, Timestamp.valueOf("2024-01-01 00:00:00"))
+    envelopeOf(json, seq, Timestamp.valueOf("2024-01-01 00:00:00"))
   }
 
   test("W5: dropDuplicatesWithinWatermark drops re-delivered records, keeps distinct ones, evicts state") {
@@ -50,178 +50,10 @@ class StreamOpsSpec extends AnyFunSuite with SparkSpec {
     } finally q.stop()
   }
 
-  test("stream-static fingerprint anti-join: historical duplicates dropped, fresh articles pass with fp attached") {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    import spark.implicits._
-    import org.apache.spark.sql.functions.col
-
-    // historical corpus: two known article bodies → fingerprint table
-    val historyJson = Seq(
-      art("h1", "alice", "2024-01-01T09:00:00"),
-      art("h2", "bob", "2024-01-01T09:01:00")) // same body "a b c" — fp table dedups
-    val history = Articles.parse(
-      historyJson.toDF("json").select(col("json").cast("binary").as("data")))
-      .select(graft.ops.Text.fingerprint(col("content")).as("fp"))
-      .distinct()
-
-    val ms = MemoryStream[KinesisEnvelope]
-    val kept = StreamOps.antiJoinKnownFingerprints(
-      Articles.parse(ms.toDF()), "content", history)
-    val q = kept.select("article_id", "fp")
-      .writeStream.format("memory").queryName("fp_dedup_out")
-      .outputMode("append").trigger(Trigger.ProcessingTime(0)).start()
-
-    try {
-      // n1 re-delivers a historical BODY under a new id (content dedup must
-      // drop it); n2 is genuinely new.
-      val fresh =
-        s"""{"article_id":"n2","title":"t","author":"carol","publish_date":"2024-01-01T10:00:00","content":"x y z w"}"""
-      ms.addData(Seq(env(art("n1", "dave", "2024-01-01T10:00:01")), env(fresh)))
-      q.processAllAvailable()
-      // second batch: the fresh body again — history is static, so it passes
-      // again (history-table dedup, not stream self-dedup; composition with
-      // dedupWithinWatermark covers in-stream redelivery)
-      val freshAgain =
-        s"""{"article_id":"n3","title":"t","author":"erin","publish_date":"2024-01-01T10:00:02","content":"x y z w"}"""
-      ms.addData(Seq(env(freshAgain)))
-      q.processAllAvailable()
-
-      val got = spark.table("fp_dedup_out").select("article_id").as[String].collect().sorted.toSeq
-      assert(got == Seq("n2", "n3"), "historical bodies dropped; fresh bodies pass")
-      val fps = spark.table("fp_dedup_out").select("fp").as[Long].collect().toSet
-      val expectedFp = Seq(("x y z w", 0)).toDF("content", "i")
-        .select(graft.ops.Text.fingerprint(col("content"))).head().getLong(0)
-      assert(fps == Set(expectedFp), "surviving rows carry the computed fingerprint")
-    } finally q.stop()
-  }
-
-  test("streaming near-dup ingest: simhash-blocked history suppression drops near duplicates, keeps fresh rows") {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    import spark.implicits._
-    import org.apache.spark.sql.functions.{col, expr}
-    import graft.ops.Dedup
-
-    val baseText = "the quick brown fox jumps over the lazy dog while " +
-      "rain falls gently on the wide open plain near the old mill"
-    val nearText = baseText.replace("rain", "snow") // near-dup: one token differs
-    val freshText = "vectorized execution pipelines shuffle partitioned " +
-      "columnar batches through whole stage generated operators"
-    // fixture preconditions (deterministic hashes — loud failure on drift):
-    // near is within the Hamming budget but NOT exact; fresh is far outside
-    val dists = Seq((baseText, nearText), (baseText, freshText)).toDF("a", "b")
-      .select(Dedup.simhash60(col("a")).as("x"), Dedup.simhash60(col("b")).as("y"))
-      .select(expr("bit_count(x ^ y)")).as[Int].collect()
-    assert(dists(0) > 0 && dists(0) <= 3, s"fixture drift: near-dup Hamming ${dists(0)}")
-    assert(dists(1) > 3, s"fixture drift: fresh doc Hamming ${dists(1)} not far from history")
-
-    val history = Seq(baseText).toDF("t")
-      .select(Dedup.simhash60(col("t")).as("simhash"))
-
-    val artJson = (id: String, content: String) =>
-      s"""{"article_id":"$id","title":"t","author":"a","publish_date":"2024-01-01T10:00:00","content":"$content"}"""
-    val ms = MemoryStream[KinesisEnvelope]
-    val kept = scala.collection.mutable.ArrayBuffer[String]()
-    val q = Articles.parse(ms.toDF())
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        kept ++= StreamOps.suppressNearDuplicates(
-            batch, "content", history, maxHamming = 3, numBlocks = 6)
-          .select("article_id").collect().map(_.getString(0))
-        ()
-      }
-      .trigger(Trigger.ProcessingTime(0)).start()
-    try {
-      ms.addData(Seq(
-        env(artJson("near1", nearText)),   // near-but-not-exact -> dropped
-        env(artJson("exact1", baseText)),  // exact redelivery -> dropped (Hamming 0)
-        env(artJson("fresh1", freshText)))) // genuinely new -> kept
-      q.processAllAvailable()
-      assert(kept.toSet == Set("fresh1"),
-        "near and exact duplicates of history suppressed; unique row kept")
-    } finally q.stop()
-  }
-
-  test("media ingest near-dup gate: dhash-blocked history suppression drops edited re-uploads, keeps fresh assets") {
-    import spark.implicits._
-    import org.apache.spark.sql.functions.{col, expr}
-    import graft.ops.Media
-
-    val baseText = ("stable content region " * 40).trim // long enough for a full grid
-    val editedText = baseText.updated(100, 'X').updated(101, 'Y') // same-length local edit
-    val freshText = ("completely different material " * 40).trim
-    def payloadDf(rows: Seq[(Long, String)]) = rows.toDF("media_id", "t")
-      .select(col("media_id"),
-        org.apache.spark.sql.functions.concat(
-          org.apache.spark.sql.functions.lit(Media.PngMagic),
-          col("t").cast("binary")).as("payload"))
-    // fixture preconditions: edited within Hamming 3 of base, fresh far out
-    val codes = payloadDf(Seq((0L, baseText), (1L, editedText), (2L, freshText)))
-      .select(Media.dhash(col("payload")).as("c")).as[Long].collect()
-    val hamEdit = java.lang.Long.bitCount(codes(0) ^ codes(1))
-    val hamFresh = java.lang.Long.bitCount(codes(0) ^ codes(2))
-    assert(hamEdit > 0 && hamEdit <= 3, s"fixture drift: edited copy Hamming $hamEdit")
-    assert(hamFresh > 3, s"fixture drift: fresh asset Hamming $hamFresh")
-
-    val history = payloadDf(Seq((0L, baseText)))
-      .select(Media.dhash(col("payload")).as("dhash"))
-    val arriving = payloadDf(Seq((10L, editedText), (11L, baseText), (12L, freshText)))
-    val kept = StreamOps.suppressNearDupMedia(
-        arriving, "payload", history, maxHamming = 3)
-      .select("media_id").as[Long].collect().toSet
-    assert(kept == Set(12L),
-      "edited and exact re-uploads suppressed; the genuinely new asset kept")
-  }
-
-  test("embedding ingest near-dup gate: binary-code history suppression drops copies and near-vectors, keeps fresh ones") {
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-    import graft.ops.BinaryQuant
-
-    val emb = Tables.load(spark, TestSpark.sf0001, "embeddings")
-    val thr = BinaryQuant.thresholds(emb, col("embedding")).localCheckpoint()
-    val mus = thr.head().getSeq[Double](0)
-    // history: the code of ONE corpus vector — keeps every fixture distance
-    // exactly derivable (a full-corpus history could sit near the inverted
-    // fixture by accident)
-    val baseId = emb.agg(min(col("vec_id"))).head().getLong(0)
-    val history = BinaryQuant.encode(emb.where(col("vec_id") === baseId),
-        col("vec_id"), col("embedding"), thr)
-      .select(col("lo"), col("hi")).localCheckpoint()
-    // fixtures derived from a real corpus vector so determinism is total:
-    // exact = a redelivered copy (Hamming 0); near = the same vector with
-    // dims 0 and 1 forced to the OTHER side of their thresholds (Hamming
-    // exactly the number of flipped sign bits <= 2); fresh = sign-flipped
-    // everywhere it matters (far outside the budget)
-    val baseVec = emb.where(col("vec_id") === baseId).head()
-      .getSeq[Float](emb.columns.indexOf("embedding")).toArray
-    def flipped(dims: Set[Int], invert: Boolean): Array[Float] =
-      baseVec.indices.map { d =>
-        val above = baseVec(d) > mus(d)
-        val wantAbove = if (dims.contains(d) || invert) !above else above
-        (if (wantAbove) mus(d) + 1.0 else mus(d) - 1.0).toFloat
-      }.toArray
-    // re-derive base as threshold-offset values so bits match baseVec's code
-    val baseSigns = flipped(Set.empty, invert = false)
-    val nearVec = flipped(Set(0, 1), invert = false)
-    val freshVec = flipped(Set.empty, invert = true)
-    val arriving = Seq(
-      (100L, baseVec.toSeq), // exact corpus copy
-      (101L, baseSigns.toSeq), // same sign pattern -> Hamming 0
-      (102L, nearVec.toSeq), // two flipped bits -> Hamming 2
-      (103L, freshVec.toSeq)) // all bits flipped -> Hamming 64
-      .toDF("vec_id", "embedding")
-      .select(col("vec_id"), col("embedding").cast("array<float>").as("embedding"))
-    val kept = StreamOps.suppressNearDupEmbedding(
-        arriving, "embedding", thr, history, maxHamming = 3)
-      .select("vec_id").as[Long].collect().toSet
-    assert(kept == Set(103L),
-      s"exact copy, code-identical, and 2-bit-near vectors drop; fresh survives (kept=$kept)")
-  }
-
   test("incremental moment maintenance: per-micro-batch sum appends re-merge to the exact batch stats") {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
-    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.functions.{col, sum}
     import graft.ops.Stats
 
     val all = (1 to 500).map(i => (s"g${i % 3}", math.sin(i) * 100.0))
@@ -242,8 +74,10 @@ class StreamOpsSpec extends AnyFunSuite with SparkSpec {
       ms.addData(all.drop(350)); q.processAllAvailable()
     } finally q.stop()
     assert(stored.size == 3, "three micro-batches -> three stored sum frames")
-    val merged = Stats.finalizeMoments(
-        Stats.mergeMoments(stored.reduce(_ unionByName _)))
+    // re-merge: per-scope sums of the stored exact decimal columns
+    val merged = Stats.finalizeMoments(stored.reduce(_ unionByName _)
+        .groupBy(col("scope"))
+        .agg(sum(col("n")).as("n"), sum(col("s1")).as("s1"), sum(col("s2")).as("s2")))
       .collect().map(r => r.getString(0) -> ((r.getLong(1), r.getDouble(3), r.getDouble(4)))).toMap
     val direct = Stats.finalizeMoments(
         Stats.momentSums(all.toDF("g", "v"), col("v"), col("g")))
@@ -700,48 +534,6 @@ class StreamOpsSpec extends AnyFunSuite with SparkSpec {
     } finally q.stop()
   }
 
-  test("lm gate: per-row broadcast-model fold == batch join pipeline bit for bit; stream drops gibberish") {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    import spark.implicits._
-    import org.apache.spark.sql.functions.col
-    import graft.ops.Text
-
-    val train = Seq((1L, "the cat sat on the mat and the cat ran"),
-      (2L, "the dog sat on the rug and the dog slept")).toDF("id", "text")
-    val scoreDocs = Seq((10L, "the cat sat on the rug"),
-      (11L, "zz qq ww rr tt yy uu ii"), (12L, "solo")).toDF("id", "text")
-    val cap = 100
-    // batch pipeline (capped) vs per-row fold over the collected model
-    val batch = Text.bigramLmScore(train, scoreDocs, col("id"), col("text"), Some(cap))
-      .collect().map(r => r.getLong(0) -> r.getDouble(2)).toMap
-    val (uni, big, n, v) = Text.bigramLmModel(train, col("id"), col("text"), cap)
-    val perRow = scoreDocs
-      .select(col("id"), StreamOps.lmNll(col("text"), uni, big, n, v).as("nll"))
-      .collect().map(r => r.getLong(0) -> (if (r.isNullAt(1)) None else Some(r.getDouble(1))))
-      .toMap
-    assert(perRow(10L).contains(batch(10L)) && perRow(11L).contains(batch(11L)),
-      "stateless fold must reproduce the join pipeline bit for bit")
-    assert(perRow(12L).isEmpty, "single-token doc scores NULL (too short)")
-
-    // streaming: gibberish (all-backoff) doc dropped, in-domain + short kept
-    val cut = (batch(10L) + batch(11L)) / 2.0
-    val ms = MemoryStream[String]
-    val gated = StreamOps.lmScoreGate(ms.toDF().toDF("text"), col("text"),
-      uni, big, n, v, maxNll = cut)
-    val q = gated.writeStream.format("memory").queryName("lm_out")
-      .outputMode("append").trigger(Trigger.ProcessingTime(0)).start()
-    try {
-      ms.addData(Seq("the cat sat on the rug", "zz qq ww rr tt yy uu ii", "solo"))
-      q.processAllAvailable()
-      val out = spark.sql("SELECT text FROM lm_out").collect().map(_.getString(0)).toSet
-      assert(out == Set("the cat sat on the rug", "solo"),
-        "gibberish dropped; in-domain and too-short kept")
-      val m = q.recentProgress.flatMap(p =>
-        Option(p.observedMetrics.get("lm_gate"))).last
-      assert(m.getAs[Long]("n_rows") == 3L && m.getAs[Long]("n_nll_dropped") == 1L)
-    } finally q.stop()
-  }
-
   test("ingest quality gate: language + quality filters drop per-row, observe splits the reasons") {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
@@ -981,303 +773,6 @@ class StreamOpsSpec extends AnyFunSuite with SparkSpec {
       assert(metric("neardup_gate").getAs[Long]("n_neardup_dropped") == 1L,
         "the mojibake'd copy must collide with the index only AFTER repair")
       assert(metric("pii_scrub").getAs[Long]("n_email") == 1L)
-    } finally q.stop()
-  }
-
-  test("transitionDeltas: cross-batch transitions exact — stream deltas == batch one-shot counts") {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    import spark.implicits._
-    val ms = MemoryStream[(Long, Long, Long, String)]
-    val q = StreamOps.transitionDeltas(ms.toDS()).toDF("cur", "nxt")
-      .writeStream.format("memory").queryName("trans_out")
-      .outputMode("append").trigger(Trigger.ProcessingTime(0)).start()
-    // user 1: A B A B A; user 2: C A C A B — split MID-SEQUENCE across
-    // three batches, so 4 of the 8 transitions straddle batch boundaries
-    // (a per-batch lag window would silently drop them)
-    val all = Seq((1L, 1L, 1L, "A"), (1L, 2L, 2L, "B"), (2L, 1L, 1L, "C"),
-      (2L, 2L, 2L, "A"), (1L, 3L, 3L, "A"), (2L, 3L, 3L, "C"),
-      (1L, 4L, 4L, "B"), (1L, 5L, 5L, "A"), (2L, 4L, 4L, "A"),
-      (2L, 5L, 5L, "B"))
-    try {
-      ms.addData(all.take(4)); q.processAllAvailable()
-      ms.addData(all.slice(4, 6)); q.processAllAvailable()
-      ms.addData(all.drop(6)); q.processAllAvailable()
-      val streamed = spark.table("trans_out").groupBy("cur", "nxt").count()
-        .as[(String, String, Long)].collect().toSet
-      val batch = graft.ops.Stats.markovCountTable(
-          all.toDF("u", "o1", "o2", "cur"))
-        .as[(String, String, Long)].collect().toSet
-      assert(streamed.toSeq.map(_._3).sum == 8L,
-        "all 8 transitions emitted, including the 4 boundary-crossing ones")
-      assert(streamed == batch,
-        "stream-maintained deltas aggregate to exactly the batch counts")
-    } finally q.stop()
-  }
-
-  test("sessionizeByGap: inline close on a late gap, timer close on watermark silence") {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    import spark.implicits._
-    val ms = MemoryStream[(Long, Timestamp)]
-    def t(sec: Long) = new Timestamp(sec * 1000L)
-    val sess = graft.streaming.StreamOps.sessionizeByGap(
-      ms.toDF().toDF("user_id", "ts").withWatermark("ts", "1 second"),
-      gapUs = 10000000L) // 10 s gap
-    val q = sess.toDF().writeStream.format("memory").queryName("sess_out")
-      .outputMode("append").trigger(Trigger.ProcessingTime(0)).start()
-    try {
-      // user 1: events at 100 s and 105 s (one session), then 200 s (a
-      // new session — the arrival inline-closes [100, 105]); times sit
-      // well above the initial watermark (epoch 0 itself would be "late")
-      ms.addData(Seq((1L, t(100)), (1L, t(105)), (1L, t(200))))
-      q.processAllAvailable()
-      // silence: a different user far in the future advances the
-      // watermark past 210 s, so user 1's open [200, 200] session can
-      // only close via the EVENT-TIME TIMER
-      ms.addData(Seq((99L, t(1000))))
-      q.processAllAvailable()
-      ms.addData(Seq((99L, t(1001))))
-      q.processAllAvailable()
-      val rows = spark.table("sess_out")
-        .as[(Long, Long, Long, Long)]
-        .collect().toSet
-      assert(rows.contains((1L, 100000000L, 105000000L, 2L)),
-        s"inline close of the first session: $rows")
-      assert(rows.contains((1L, 200000000L, 200000000L, 1L)),
-        s"timer close of the silent session: $rows")
-    } finally q.stop()
-  }
-
-  test("sliceDriftGate: pass-through monitor; observe drift == batch twin bit for bit; unknown slices counted") {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-
-    // reference history: slice a converts 1/4, slice b converts 3/4
-    val ref = Seq(("a", 100L, 25L), ("b", 100L, 75L)).toDF("key", "n", "k")
-    // one micro-batch: a at its reference rate (1/4), b drifted up (4/4),
-    // plus 2 rows of a slice the reference has never seen
-    val batchRows = Seq(("a", true), ("a", false), ("a", false), ("a", false),
-      ("b", true), ("b", true), ("b", true), ("b", true),
-      ("c", true), ("c", false))
-    val ms = MemoryStream[(String, Boolean)]
-    val gated = StreamOps.sliceDriftGate(
-      ms.toDF().toDF("slice", "succ"), col("slice"), col("succ"), ref)
-    val q = gated.writeStream.format("memory").queryName("drift_out")
-      .outputMode("append").trigger(Trigger.ProcessingTime(0)).start()
-    try {
-      ms.addData(batchRows)
-      q.processAllAvailable()
-      // a monitor, not a filter: every row passes with its original schema
-      val out = spark.table("drift_out")
-      assert(out.columns.toSeq == Seq("slice", "succ"),
-        s"helper columns must not leak: ${out.columns.toSeq}")
-      assert(out.count() == 10L, "all rows pass through")
-      val m = q.recentProgress.flatMap(p =>
-        Option(p.observedMetrics.get("slice_drift"))).last
-      assert(m.getAs[Long]("n_rows") == 10L)
-      assert(m.getAs[Long]("n_unknown_slice") == 2L)
-      assert(m.getAs[Long]("n_success_known") == 5L)
-      // batch twin on the same rows through the same column expressions —
-      // the decimal fold makes this a bit-for-bit equality, not a tolerance
-      val twin = batchRows.toDF("slice", "succ")
-        .join(broadcast(ref.select(col("key"),
-          (col("k").cast("double") / col("n").cast("double")).as("p0"))),
-          col("slice") === col("key"), "left")
-        .agg(
-          graft.ops.Num.dsum38(coalesce(col("p0"), lit(0.0))).as("exp"),
-          graft.ops.Num.dsum38(coalesce(col("p0") * (lit(1.0) - col("p0")),
-            lit(0.0))).as("vr"),
-          count(when(col("p0").isNotNull && col("succ"), 1))
-            .cast("double").as("act"))
-        .collect().head
-      val (e, v, a) = (twin.getDouble(0), twin.getDouble(1), twin.getDouble(2))
-      assert(e == 4.0 && v == 1.5 && a == 5.0, s"hand-check: $twin")
-      assert(m.getAs[Double]("expected_success") == e)
-      assert(m.getAs[Double]("variance_success") == v)
-      assert(m.getAs[Double]("drift_z") == (a - e) / math.sqrt(v),
-        s"drift z must equal the batch formula: $m")
-    } finally q.stop()
-  }
-
-  test("sliceDriftGate: a per-epoch history table (duplicate keys) pools per key — no row fan-out") {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-
-    // two epochs of history for slice a: 20/100 and 30/100 → pooled p0 =
-    // 50/200 = 0.25, identical to the single-row reference above
-    val ref = Seq(("a", 100L, 20L), ("a", 100L, 30L), ("b", 100L, 75L))
-      .toDF("key", "n", "k")
-    val batchRows = Seq(("a", true), ("a", false), ("a", false), ("a", false),
-      ("b", true), ("b", true), ("b", true), ("b", true))
-    val ms = MemoryStream[(String, Boolean)]
-    val gated = StreamOps.sliceDriftGate(
-      ms.toDF().toDF("slice", "succ"), col("slice"), col("succ"), ref)
-    val q = gated.writeStream.format("memory").queryName("drift_hist_out")
-      .outputMode("append").trigger(Trigger.ProcessingTime(0)).start()
-    try {
-      ms.addData(batchRows)
-      q.processAllAvailable()
-      assert(spark.table("drift_hist_out").count() == 8L,
-        "duplicate reference keys must NOT fan stream rows out")
-      val m = q.recentProgress.flatMap(p =>
-        Option(p.observedMetrics.get("slice_drift"))).last
-      assert(m.getAs[Long]("n_rows") == 8L)
-      assert(m.getAs[Long]("n_unknown_slice") == 0L)
-      // pooled rates: a 0.25, b 0.75 → expected 4·0.25 + 4·0.75 = 4.0
-      assert(m.getAs[Double]("expected_success") == 4.0, s"pooled p0: $m")
-      assert(m.getAs[Double]("variance_success") == 1.5)
-    } finally q.stop()
-  }
-
-  test("quantileDriftGate: pass-through; observe == batch twin bit for bit; nulls tallied") {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-
-    // reference p50 = 10, p90 = 18 (frozen thresholds); the batch has 10
-    // known values of which 6 > 10 (drifted up) and 1 > 18, plus 2 nulls
-    val refQ = Seq(0.5 -> 10.0, 0.9 -> 18.0)
-    val batchRows: Seq[(String, java.lang.Double)] =
-      Seq(("a", 3.0), ("b", 8.0), ("c", 9.0), ("d", 10.0), ("e", 11.0),
-        ("f", 12.0), ("g", 14.0), ("h", 15.0), ("i", 17.0), ("j", 19.0),
-        ("k", null), ("l", null))
-    val ms = MemoryStream[(String, Option[Double])]
-    val gated = StreamOps.quantileDriftGate(
-      ms.toDF().toDF("id", "len"), col("len"), refQ)
-    val q = gated.writeStream.format("memory").queryName("qdrift_out")
-      .outputMode("append").trigger(Trigger.ProcessingTime(0)).start()
-    try {
-      ms.addData(batchRows.map { case (id, v) => (id, Option(v).map(_.doubleValue)) })
-      q.processAllAvailable()
-      val out = spark.table("qdrift_out")
-      assert(out.columns.toSeq == Seq("id", "len"), "a monitor, not a filter")
-      assert(out.count() == 12L, "all rows pass through")
-      val m = q.recentProgress.flatMap(p =>
-        Option(p.observedMetrics.get("quantile_drift"))).last
-      assert(m.getAs[Long]("n_rows") == 12L)
-      assert(m.getAs[Long]("n_null") == 2L)
-      assert(m.getAs[Long]("n_above_p50") == 6L)
-      assert(m.getAs[Long]("n_above_p90") == 1L)
-      // hand-check: z50 = (6 − 10·0.5)/√(10·0.25) = 1/√2.5·1 = 0.6325…
-      assert(math.abs(m.getAs[Double]("z_p50") -
-        (6.0 - 5.0) / math.sqrt(2.5)) < 1e-12)
-      // batch twin on the same rows — SAME expression list, so equality
-      // is bitwise, not a tolerance
-      val twin = graft.ops.Stats.quantileDriftScores(
-        batchRows.toDF("id", "len"), col("len"), refQ).collect().head
-      Seq("n_rows", "n_null", "n_above_p50", "n_above_p90").foreach(c =>
-        assert(m.getAs[Long](c) == twin.getAs[Long](c), s"$c diverges"))
-      Seq("z_p50", "z_p90").foreach(c =>
-        assert(m.getAs[Double](c) == twin.getAs[Double](c),
-          s"$c must match the twin bit for bit: $m vs $twin"))
-    } finally q.stop()
-  }
-
-  test("quantileDriftGate: thresholds KLL-served from a stored QuantileIndex table") {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-    import graft.ops.QuantileIndex
-
-    // The gate doc's "exact or KLL-served from a stored QuantileIndex
-    // table" promise, end to end: reference values 1..100 across two
-    // sources; n = 100 << k = 256 keeps every sketch in exact mode, so the
-    // served thresholds ARE the exact INCLUSIVE nearest-rank order
-    // statistics (p50 = 50, p90 = 90) — pinnable equality, no tolerance.
-    val ref = (1 to 100).map(i => (if (i % 2 == 0) "a" else "b", i.toDouble))
-      .toDF("source", "len")
-    val dir = tmpDir("kll-gate")
-    QuantileIndex.write(
-      QuantileIndex.build(ref, col("source"), col("len"), 256), dir)
-    val tbl = QuantileIndex.read(spark, dir)
-    val qs = Seq(0.5, 0.9)
-    val qdf = broadcast(spark.createDataFrame(qs.map(Tuple1.apply)).toDF("q"))
-    // frozen-model resolution: corpus rollup folded from STORED bytes, then
-    // a 2-row driver transfer — exactly what a stream constructor runs once
-    val served = tbl.agg(QuantileIndex.kllUnion(col("sk"), 256).as("sk"))
-      .crossJoin(qdf)
-      .select(col("q"), QuantileIndex.kllQuantile(col("sk"), col("q")).as("thr"))
-      .collect().map(r => r.getDouble(0) -> r.getDouble(1)).toMap
-    assert(served == Map(0.5 -> 50.0, 0.9 -> 90.0),
-      s"exact-mode KLL must serve the exact nearest-rank thresholds: $served")
-    val refQ = qs.map(q => q -> served(q))
-
-    val batchRows = Seq(("x", 10.0), ("y", 55.0), ("z", 95.0), ("w", 60.0))
-    val ms = MemoryStream[(String, Double)]
-    val gated = StreamOps.quantileDriftGate(
-      ms.toDF().toDF("id", "len"), col("len"), refQ)
-    val q = gated.writeStream.format("memory").queryName("kll_gate_out")
-      .outputMode("append").trigger(Trigger.ProcessingTime(0)).start()
-    try {
-      ms.addData(batchRows)
-      q.processAllAvailable()
-      assert(spark.table("kll_gate_out").count() == 4L, "monitor passes rows")
-      val m = q.recentProgress.flatMap(p =>
-        Option(p.observedMetrics.get("quantile_drift"))).last
-      assert(m.getAs[Long]("n_above_p50") == 3L, s"55, 60, 95 > 50: $m")
-      assert(m.getAs[Long]("n_above_p90") == 1L, s"95 > 90: $m")
-      val twin = graft.ops.Stats.quantileDriftScores(
-        batchRows.toDF("id", "len"), col("len"), refQ).collect().head
-      Seq("z_p50", "z_p90").foreach(c =>
-        assert(m.getAs[Double](c) == twin.getAs[Double](c),
-          s"$c: table-served gate must equal its batch twin bit for bit"))
-    } finally q.stop()
-  }
-
-  test("gate composition e2e: quality → near-dup → quantile drift on one stream; metrics independent, rows intact") {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-
-    // the "real user" shape: one streaming query, three chained gates, each
-    // with its own observe() — the funnel must read per stage and the
-    // survivors must flow through the drift monitor unchanged
-    val indexed = "we went to the store and then we came back home with " +
-      "the things that we had bought for the party that night"
-    val corpus = Seq((1L, indexed)).toDF("doc_id", "text")
-    val bands = graft.ops.MinHashIndex.bandTable(
-      graft.ops.MinHashIndex.build(corpus, col("doc_id"), col("text"), 3, 16), 4)
-
-    val good1 = "the quick brown fox and the lazy dog of a house with " +
-      "some more plain words in this line to cross twenty tokens"
-    val good2 = "she walked along the river in the morning and the light " +
-      "was soft on the water as the birds were singing there"
-    val es = "el perro de la casa que y en un con para los las del se"
-    val copy = indexed // passes quality, band-collides at the near-dup gate
-
-    val thr = good1.length.toDouble // one survivor above, one at the threshold
-    val ms = MemoryStream[String]
-    val staged = StreamOps.quantileDriftGate(
-      StreamOps.nearDupGate(
-        StreamOps.qualityGate(ms.toDF().toDF("text"), col("text"),
-          langs = Seq("en"), minQuality = 0.5),
-        "text", bands, n = 3, numHashes = 16, rowsPerBand = 4),
-      length(col("text")).cast("double"), Seq(0.5 -> thr))
-    val q = staged.writeStream.format("memory").queryName("funnel_out")
-      .outputMode("append").trigger(Trigger.ProcessingTime(0)).start()
-    try {
-      ms.addData(Seq(good1, es, copy, good2))
-      q.processAllAvailable()
-      val out = spark.sql("SELECT text FROM funnel_out").collect()
-        .map(_.getString(0)).toSet
-      assert(out == Set(good1, good2),
-        s"quality drops the spanish doc, near-dup drops the copy: $out")
-      val metrics = q.recentProgress.flatMap(p =>
-        Seq("quality_gate", "neardup_gate", "quantile_drift").flatMap(n =>
-          Option(p.observedMetrics.get(n)).map(n -> _))).toMap
-      assert(metrics.keySet == Set("quality_gate", "neardup_gate", "quantile_drift"),
-        s"each stage surfaces its own metrics: ${metrics.keySet}")
-      assert(metrics("quality_gate").getAs[Long]("n_rows") == 4L)
-      assert(metrics("quality_gate").getAs[Long]("n_lang_dropped") == 1L)
-      assert(metrics("neardup_gate").getAs[Long]("n_rows") == 3L,
-        "the near-dup gate sees only quality survivors")
-      assert(metrics("neardup_gate").getAs[Long]("n_neardup_dropped") == 1L)
-      assert(metrics("quantile_drift").getAs[Long]("n_rows") == 2L,
-        "the drift monitor sees only gate survivors")
-      // good1.length is NOT > its own threshold; good2 is iff longer
-      val expectAbove = Seq(good1, good2).count(_.length.toDouble > thr)
-      assert(metrics("quantile_drift").getAs[Long]("n_above_p50") == expectAbove.toLong)
     } finally q.stop()
   }
 

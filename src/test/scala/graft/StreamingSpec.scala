@@ -32,7 +32,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
   private var seq = 0L
   private def env(author: String, publishDate: String, words: Int): KinesisEnvelope = {
     seq += 1
-    KinesisEnvelope.ofJson(artJson(author, publishDate, words), seq, ts("2024-01-01 00:00:00"))
+    envelopeOf(artJson(author, publishDate, words), seq, ts("2024-01-01 00:00:00"))
   }
 
   /** The reference pipeline's batch twin on the same envelope rows — what the
@@ -329,48 +329,6 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
       "the resumed query keeps the checkpoint's 8 state partitions")
   }
 
-  test("dead-letter channel: malformed payloads quarantined with raw data; idempotent restart") {
-    import spark.implicits._
-    import org.apache.spark.sql.functions.col
-    val envDir = tmpDir("dl-env")
-    val good = tmpDir("dl-good")
-    val bad = tmpDir("dl-bad")
-    val ckpt = tmpDir("dl-ckpt")
-    seq += 1
-    val badEnv = KinesisEnvelope.ofJson("{definitely not json", seq, ts("2024-01-01 00:00:00"))
-    val rows = Seq(
-      env("alice", "2024-01-01T10:00:00", 3),
-      badEnv,
-      env("dave", "2024-01-01T10:02:00", 7))
-    spark.createDataset(rows).toDF().coalesce(1).write.mode("append").parquet(envDir)
-
-    def run(): Unit = {
-      val q = Pipelines.articlesWithDeadLetter(spark,
-        StreamSource.FileEnvelopeSource(envDir), good, bad, ckpt)
-      q.awaitTermination()
-    }
-
-    run()
-    val g = spark.read.parquet(good)
-    assert(g.count() == 2 && g.where(col("article_id").isNull).count() == 0,
-      "good sink holds exactly the parseable articles")
-    val b = spark.read.parquet(bad).collect()
-    assert(b.length == 1 && b.head.getAs[String]("raw_data").startsWith("{definitely"),
-      "quarantined row carries the raw payload for replay")
-
-    // restart with no new data: batch replay overwrites its own partition,
-    // nothing duplicates
-    run()
-    assert(spark.read.parquet(good).count() == 2 && spark.read.parquet(bad).count() == 1)
-
-    // new data lands under a new batch_id without touching old partitions
-    spark.createDataset(Seq(env("erin", "2024-01-01T10:40:00", 4))).toDF()
-      .coalesce(1).write.mode("append").parquet(envDir)
-    run()
-    assert(spark.read.parquet(good).count() == 3)
-    assert(spark.read.parquet(bad).count() == 1)
-  }
-
   test("S1: rate source synthesizes parseable producer-shaped articles") {
     val src = StreamSource.RateEnvelopeSource(rowsPerSecond = 500)
     val parsed = Articles.enrich(Articles.parse(src.load(spark)))
@@ -454,7 +412,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
       // batch 2: watermark-advancing flush + a malformed payload (visible
       // only in the parse metrics, never in the sink)
       seq += 1
-      val malformed = KinesisEnvelope.ofJson("{not json", seq, ts("2024-01-01 00:00:00"))
+      val malformed = envelopeOf("{not json", seq, ts("2024-01-01 00:00:00"))
       val flush1 = env("carol", "2024-01-01T10:30:00", 1)
       ms.addData(Seq(flush1, malformed))
       waitUntil(totalInput >= 5, "micro-batch 2 consumed")

@@ -124,24 +124,6 @@ class TextAndHashSpec extends AnyFunSuite with SparkSpec {
     assert(bv == sv, "batched final vocabulary must equal sequential exactly")
   }
 
-  test("bpeTokenize replays training folds exactly: per-row encoding == trained vocab, any word") {
-    import spark.implicits._
-    val docs = Seq("aaab aaab aaab ab ab banana band bandana").toDF("text")
-    val (merges, vocab) = Text.bpeTrain(docs, col("text"), numMerges = 3)
-    val pairs = merges.map(m => (m._2, m._3))
-    // every trained word: fold-applied segmentation == the vocab's
-    val diff = vocab.select(col("w"), col("syms"),
-        Text.bpeTokenize(col("w"), pairs).as("replayed"))
-      .where(not(col("syms") === col("replayed")))
-    assert(diff.count() == 0, "per-row fold diverged from the trained vocabulary")
-    // an UNSEEN word still merges learned pairs and leaves the rest as chars
-    val novel = Seq("aabx").toDF("w")
-      .select(Text.bpeTokenize(col("w"), pairs).as("s")).head().getSeq[String](0)
-    assert(novel.head == "aa" || novel.contains("ab") || novel.length < 4,
-      s"learned merges apply to unseen text (got $novel)")
-    assert(novel.mkString == "aabx", "segmentation concatenates back to the word")
-  }
-
   test("redact: emails, urls, digit runs -> typed placeholders; fixed order; clean text untouched") {
     import spark.implicits._
     val rows = Seq(
