@@ -38,9 +38,18 @@ import java.nio.file.{Files, Paths}
   * STREAMING in both modes runs in a FRESH SparkSession (round-12 fix):
   * the round-11 drain inversion (sec_runs [3.11, 15.24, 34.87], each run
   * ~2.3× slower) does NOT reproduce in an idle JVM — five isolated drains
-  * read [3.64, 3.08, 2.99, 3.04, 2.88] s with flat heap (BenchStream) —
-  * so it was end-of-session contamination of the measurement, and the
-  * fresh session removes exactly that term.
+  * read [3.64, 3.08, 2.99, 3.04, 2.88] s with flat heap — so it was
+  * end-of-session contamination of the measurement, and the fresh session
+  * removes exactly that term.
+  *
+  * NAMED SUBSET (`Bench <query…>`): arguments that do not start with `--`
+  * are catalog query names. Bench then times exactly those queries, in the
+  * order given and benched or not, in one session with the same warm-up and
+  * per-query protocol, and skips the streaming drain (`"streaming":null`).
+  * An unknown name fails before any session starts. The output keeps its
+  * shape, so a one-query run's compact line carries that query's cold
+  * (`value`) and warm (`total_warm`) seconds: the q207 era probe is
+  * `Bench q207_minhash_index_append`.
   */
 object Bench {
 
@@ -108,9 +117,9 @@ object Bench {
     import org.apache.spark.sql.functions.{length => blen, col, sum}
     val sf = "sf([0-9.]+)".r.findFirstMatchIn(sfDir).map(_.group(1).toDouble).getOrElse(0.1)
     // --rows=N / SPARK_GRAFT_STREAM_ROWS: the streaming scale-curve knob
-    // (round-14 measured 1× vs 10× volume as a one-off BenchStream run —
-    // 190 → 634.6 MB/s; this makes that datapoint reproducible through the
-    // driver's own harness). Default unchanged: ~reference volume at sf.
+    // (round 14 measured 1× vs 10× volume at 190 → 634.6 MB/s; this makes
+    // that datapoint reproducible through Bench itself). Default:
+    // ~reference volume at sf.
     val n = rowsOverride.getOrElse(math.max(10000L, (6000000 * sf).toLong))
     val envDir = Scratch.dir("graft-bench-env")
     val outDir = Scratch.dir("graft-bench-out")
@@ -186,6 +195,11 @@ object Bench {
       .orElse(sys.env.get("SPARK_GRAFT_STREAM_ROWS").map(_.toLong))
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = Sessions.envCpus()
+    val names = args.filterNot(_.startsWith("--")).toSeq.distinct
+    val byQuery = SparkEntry.catalog.map(q => q.name -> q).toMap
+    val unknown = names.filterNot(byQuery.contains)
+    require(unknown.isEmpty, s"unknown query names: ${unknown.mkString(", ")}")
+    require(names.isEmpty || !isolated, "--isolated takes no query names")
 
     val byName = SparkEntry.catalogGroups.flatMap { case (fam, qs) =>
       qs.map(q => q.name -> fam)
@@ -218,12 +232,13 @@ object Bench {
 
     val spark = Sessions.local(cpus)
     warmup(spark, sfDir)
-    val results = SparkEntry.benchQueries.map(q =>
+    val queries = if (names.isEmpty) SparkEntry.benchQueries else names.map(byQuery)
+    val results = queries.map(q =>
       runQuery(spark, q, byName.getOrElse(q.name, "?"), sfDir))
     // streaming measurement on a FRESH session — see the class doc
     spark.stop()
-    val streamSpark = Sessions.local(cpus)
-    val streamingJson = streaming(streamSpark, sfDir, streamRows)
+    val streamSpark = Option.when(names.isEmpty)(Sessions.local(cpus))
+    val streamingJson = streamSpark.fold("null")(streaming(_, sfDir, streamRows))
 
     val okRes = results.filter(_.ok)
     val qsCold = results.map(r => Json.str(r.name) + ":" + (if (r.ok) fmt(r.cold) else "-1"))
@@ -255,6 +270,6 @@ object Bench {
       .mkString("{", ",", "}")
     println(
       s"""{"metric":"total","value":${fmt(okRes.map(_.cold).sum)},"unit":"sec","queries":$famCold,"total_warm":${fmt(okRes.map(_.warm).sum)},"n_ok":${okRes.size},"n_failed":${results.size - okRes.size},"failed":$failed,"streaming":$streamingJson,"sf":${Json.str(sfDir)},"per_query_file":"bench_out.json"}""")
-    streamSpark.stop()
+    streamSpark.foreach(_.stop())
   }
 }

@@ -136,18 +136,6 @@ object Sampling {
     s"(${Hashing.duckHash60(s"('$salt-' || CAST($idExpr AS VARCHAR))")} % $den) < $rateExpr"
   }
 
-  /** SEQUENCE PACKING (concat-and-chunk): lay the corpus out as one token
-    * stream in id order and cut it into fixed-`budget` context windows — the
-    * packing LLM pretraining uses (documents concatenated, chunked at the
-    * context length; a document near a boundary spans two chunks). Output:
-    * one row per (doc, chunk) span with the token count the doc contributes
-    * to that chunk.
-    *
-    * The global running token total is [[globalCumsum]]'s distributed
-    * two-phase cumulative sum — no single-partition window ever sees corpus
-    * rows, and the offsets are partitioning-independent, which is exactly
-    * what the plain windowed-cumsum oracle checks.
-    */
   /** Distributed two-phase GLOBAL running sum of `w` in id order — the
     * shared engine under [[packSequences]] and
     * [[systematicWeightedSample]]: range-partition by id, per-partition
@@ -221,6 +209,18 @@ object Sampling {
           greatest(col("start_w"), col("chunk_id") * budget))
   }
 
+  /** SEQUENCE PACKING (concat-and-chunk): lay the corpus out as one token
+    * stream in id order and cut it into fixed-`budget` context windows — the
+    * packing LLM pretraining uses (documents concatenated, chunked at the
+    * context length; a document near a boundary spans two chunks). Output:
+    * one row per (doc, chunk) span with the token count the doc contributes
+    * to that chunk.
+    *
+    * The global running token total is [[globalCumsum]]'s distributed
+    * two-phase cumulative sum — no single-partition window ever sees corpus
+    * rows, and the offsets are partitioning-independent, which is exactly
+    * what the plain windowed-cumsum oracle checks.
+    */
   def packSequences(df: DataFrame, id: Column, tokens: Column, budget: Long): DataFrame =
     chunkSpans(globalCumsum(df, id, tokens)
         .select(col("doc_id"), col("w"), col("start_w")), budget)

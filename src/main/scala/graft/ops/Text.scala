@@ -618,23 +618,13 @@ object Text {
       df: org.apache.spark.sql.DataFrame,
       id: Column,
       text: Column,
-      k: Int,
-      materializeTf: Boolean = false): org.apache.spark.sql.DataFrame = {
+      k: Int): org.apache.spark.sql.DataFrame = {
     val toks = Dedup.spreadBy(df, id)
       .select(id.as("doc_id"), explode(tokens(text)).as("tok"))
-    // tf feeds BOTH dfreq and the score join; Catalyst reuses only identical
-    // exchanges, so the corpus tokenizes once per consumer. materializeTf
-    // checkpoints the compact (doc, tok, tf) table instead (the q68
-    // double-execution lesson): OFF by default because recomputing the
-    // tokenization is MEASURED cheaper at bench scale — re-measured round 9
-    // on the full 171-query catalog: warm-min 0.63 s (off) vs 0.86 s (on),
-    // isolated 5-rep TimeQuery at sf0.1 (the round-8 shared-session 11.9 s
-    // reading was bench-session noise; see BASELINE.md noise band). Flip it
-    // when tokenization dominates (the 100 TB regime, where the checkpoint
-    // is corpus-size-independent and the saved pass is the whole corpus
-    // scan).
-    val tf0 = toks.groupBy(col("doc_id"), col("tok")).agg(count(lit(1)).as("tf"))
-    val tf = if (materializeTf) tf0.localCheckpoint() else tf0
+    // tf feeds BOTH dfreq and the score join, so the corpus tokenizes once
+    // per consumer. Recomputing it measured cheaper than a localCheckpoint
+    // of tf at sf0.1 (round 9: warm-min 0.63 s against 0.86 s).
+    val tf = toks.groupBy(col("doc_id"), col("tok")).agg(count(lit(1)).as("tf"))
     val dfreq = tf.groupBy(col("tok")).agg(count(lit(1)).as("df"))
     val n = df.select(count(lit(1)).as("n"))
     val scored = tf.join(dfreq, "tok")
@@ -673,19 +663,14 @@ object Text {
       queryTerms: Seq[String],
       k: Int,
       k1: Double = 1.2,
-      b: Double = 0.75,
-      materializeTf: Boolean = false): org.apache.spark.sql.DataFrame = {
+      b: Double = 0.75): org.apache.spark.sql.DataFrame = {
     require(queryTerms.nonEmpty && queryTerms.distinct == queryTerms,
       "query terms must be non-empty and distinct")
     val toks = Dedup.spreadBy(df, id)
       .select(id.as("doc_id"), explode(tokens(text)).as("tok"))
     val dl = df.select(id.as("doc_id"), wordCount(text).cast("long").as("dl"))
-    // tf feeds both dfreq and the contrib join; materializeTf checkpoints
-    // the compact (doc, term, tf) frame so the corpus tokenizes ONCE at
-    // scale — default off per the measured bench-scale trade (tfidfTopTerms)
-    val tf0 = toks.where(col("tok").isin(queryTerms: _*))
+    val tf = toks.where(col("tok").isin(queryTerms: _*))
       .groupBy(col("doc_id"), col("tok")).agg(count(lit(1)).as("tf"))
-    val tf = if (materializeTf) tf0.localCheckpoint() else tf0
     bm25Rank(tf, dl, queryTerms, k, k1, b)
   }
 
@@ -822,20 +807,14 @@ object Text {
       queries: org.apache.spark.sql.DataFrame,
       k: Int,
       k1: Double = 1.2,
-      b: Double = 0.75,
-      materializeTf: Boolean = false): org.apache.spark.sql.DataFrame = {
+      b: Double = 0.75): org.apache.spark.sql.DataFrame = {
     val q = queries.select(col("qid"), posexplode(col("terms")).as(Seq("ti", "tok")))
     val termSet = q.select(col("tok")).distinct()
     val toks = Dedup.spreadBy(df, id)
       .select(id.as("doc_id"), explode(tokens(text)).as("tok"))
     val dl = df.select(id.as("doc_id"), wordCount(text).cast("long").as("dl"))
-    // tf feeds dfreq AND the per-query contrib fan-out; materializeTf trades
-    // a checkpoint of the compact tf frame for the second corpus
-    // tokenization — default off per the measured bench-scale trade (see
-    // tfidfTopTerms)
-    val tf0 = toks.join(broadcast(termSet), "tok")
+    val tf = toks.join(broadcast(termSet), "tok")
       .groupBy(col("doc_id"), col("tok")).agg(count(lit(1)).as("tf"))
-    val tf = if (materializeTf) tf0.localCheckpoint() else tf0
     bm25BatchRank(tf, dl, q, k, k1, b)
   }
 

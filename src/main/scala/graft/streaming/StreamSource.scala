@@ -4,17 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ops.Articles
 
-/** The Kinesis record envelope as a typed row — mirrors
-  * `Articles.envelopeSchema` (reference: `app/process_articles.py:21-27`).
-  * Used as the element type for MemoryStream-backed test sources.
-  */
-final case class KinesisEnvelope(
-    data: Array[Byte],
-    approximateArrivalTimestamp: java.sql.Timestamp,
-    partitionKey: String,
-    sequenceNumber: String,
-    kinesisShardId: String)
-
 /** A source of unbounded envelope rows — the abstraction the reference hides
   * inside `readStream.format("kinesis")` (`app/process_articles.py:53-61`).
   *

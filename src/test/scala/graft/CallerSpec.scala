@@ -6,9 +6,11 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Every public `def` under src/main has a caller: outside comments, its
-  * name appears in src/main or in perfbench's sources (which compile
-  * src/main) more often than it is defined. Specs do not count as callers,
+/** Every public `def`, `class`, `object` and `trait` under src/main has a
+  * caller: outside comments, its name appears in src/main or in perfbench's
+  * sources (which compile src/main) more often than it is defined. The
+  * program entry points are the only exception, and they are a closed list,
+  * so a new single-purpose main fails here. Specs do not count as callers,
   * because code that only its own spec runs is exercised by neither the
   * oracle gate nor the benchmark. Private code is the compiler's job
   * (`-Wunused:privates` in build.sbt).
@@ -20,8 +22,8 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class CallerSpec extends AnyFunSuite {
 
-  /** Public defs that nothing under src/main or perfbench calls, kept on
-    * purpose, each with the reason.
+  /** Public defs and types that nothing under src/main or perfbench calls,
+    * kept on purpose, each with the reason.
     */
   private val Allowed: Map[String, String] = Map(
     "hash60Composed" -> "built-in twin Hash60ExpressionSpec pins the native hash60 against",
@@ -39,9 +41,17 @@ class CallerSpec extends AnyFunSuite {
     "runningAuthorStats" -> "README reference-surface row W5 (stateful ops)",
     "limitPerAuthor" -> "README reference-surface row W5 (stateful ops)",
     "enrichWithStatic" -> "README reference-surface row §2.3+ (streaming joins)",
-    "intervalJoin" -> "README reference-surface row §2.3+ (streaming joins)")
+    "intervalJoin" -> "README reference-surface row §2.3+ (streaming joins)",
+    "RateEnvelopeSource" -> "README reference-surface row S1")
 
-  /** Program entry points: the JVM calls them, not the code. */
+  /** Program entry points, the objects that define `main` (and `main`
+    * itself): the JVM calls them, not the code.
+    */
+  private val EntryPoints: Map[String, String] = Map(
+    "Bench" -> "the catalog and streaming benchmark run",
+    "Verify" -> "the correctness dump the DuckDB oracle gate compares",
+    "AppMain" -> "the reference's spark-submit job",
+    "ProducerMain" -> "the reference's producer")
   private val EntryPoint = "main"
 
   private def sources(root: String): Seq[(String, String)] =
@@ -94,25 +104,43 @@ class CallerSpec extends AnyFunSuite {
   /** A `def` with its leading modifiers on the same line. */
   private val DefSite =
     """(?m)^[ \t]*((?:(?:private|protected)(?:\[\w+\])?|override|final|implicit|inline|@\w+(?:\([^)\n]*\))?)\s+)*def\s+([A-Za-z_]\w*)""".r
+  /** A `class`, `object` or `trait` with its leading modifiers. */
+  private val TypeSite =
+    """(?m)^[ \t]*((?:(?:private|protected)(?:\[\w+\])?|final|sealed|abstract|implicit|case|@\w+(?:\([^)\n]*\))?)\s+)*(?:class|object|trait)\s+([A-Za-z_]\w*)""".r
   private val Hidden = """\b(private|protected|override)\b""".r
   private val Word = """[A-Za-z_]\w*""".r
 
   private lazy val main = sources("src/main/scala")
   private lazy val callers = main ++ sources("perfbench/src/main/scala")
 
-  /** (name, file, public) for every def site under src/main. */
-  private lazy val defs: Seq[(String, String, Boolean)] = main.flatMap { case (file, src) =>
-    DefSite.findAllMatchIn(src).map { m =>
-      (m.group(2), file, Hidden.findFirstIn(Option(m.group(1)).getOrElse("")).isEmpty)
+  /** (name, file, public) for every match of `site` under src/main. */
+  private def sitesOf(site: scala.util.matching.Regex): Seq[(String, String, Boolean)] =
+    main.flatMap { case (file, src) =>
+      site.findAllMatchIn(src).map { m =>
+        (m.group(2), file, Hidden.findFirstIn(Option(m.group(1)).getOrElse("")).isEmpty)
+      }
     }
-  }
+  private lazy val defs = sitesOf(DefSite)
+  private lazy val types = sitesOf(TypeSite)
   private lazy val defCount: Map[String, Int] =
-    defs.groupBy(_._1).view.mapValues(_.size).toMap
+    (defs ++ types).groupBy(_._1).view.mapValues(_.size).toMap
   private lazy val nameCount: Map[String, Int] =
     callers.flatMap { case (_, src) => Word.findAllIn(src) }
       .groupBy(identity).view.mapValues(_.size).toMap
   private lazy val publicNames: Set[String] =
     defs.collect { case (n, _, true) if n != EntryPoint => n }.toSet
+  private lazy val publicTypes: Set[String] =
+    types.collect { case (n, _, true) if !EntryPoints.contains(n) => n }.toSet
+
+  /** The object around each `def main`: the nearest object defined above it
+    * in the same file.
+    */
+  private lazy val mainObjects: Seq[String] = main.flatMap { case (_, src) =>
+    val objects = """\bobject\s+([A-Za-z_]\w*)""".r.findAllMatchIn(src).toSeq
+    """\bdef\s+main\b""".r.findAllMatchIn(src).map { m =>
+      objects.takeWhile(_.start < m.start).lastOption.fold("?")(_.group(1))
+    }
+  }
 
   private def uncalled(name: String): Boolean =
     nameCount.getOrElse(name, 0) <= defCount.getOrElse(name, 0)
@@ -124,11 +152,26 @@ class CallerSpec extends AnyFunSuite {
       s"public defs with no caller (delete them, or allow one with a reason):${sites.mkString("\n  ", "\n  ", "")}")
   }
 
+  test("every public class, object and trait under src/main is named outside its definitions, or is an entry point") {
+    val dead = publicTypes.filter(n => uncalled(n) && !Allowed.contains(n))
+    val sites = types.collect { case (n, f, true) if dead(n) => s"$f: $n" }.sorted
+    assert(sites.isEmpty,
+      s"public types with no caller (delete them, or allow one with a reason):${sites.mkString("\n  ", "\n  ", "")}")
+  }
+
   test("every allowed name is still a public def under src/main and still has no caller") {
-    val gone = Allowed.keys.filterNot(publicNames).toSeq.sorted
-    val called = Allowed.keys.filter(n => publicNames(n) && !uncalled(n)).toSeq.sorted
+    val public = publicNames ++ publicTypes
+    val gone = Allowed.keys.filterNot(public).toSeq.sorted
+    val called = Allowed.keys.filter(n => public(n) && !uncalled(n)).toSeq.sorted
     assert(gone.isEmpty, s"allowed names no longer defined: $gone")
     assert(called.isEmpty, s"allowed names that gained a caller (drop them from Allowed): $called")
     assert(Allowed.values.forall(_.trim.nonEmpty), "every allowed name carries a reason")
+  }
+
+  test("the objects that define main are exactly the listed entry points") {
+    assert(mainObjects.sorted == EntryPoints.keys.toSeq.sorted,
+      s"objects with a main: ${mainObjects.sorted} (a new one is a new entry point: " +
+        "fold it into Bench or Verify, or list it with a reason)")
+    assert(EntryPoints.values.forall(_.trim.nonEmpty), "every entry point carries a reason")
   }
 }

@@ -85,11 +85,6 @@ class TextAndHashSpec extends AnyFunSuite with SparkSpec {
     // (0.0 + c0) + c1 + ... == c0 + c1 + ... exactly for nonzero finite
     // contributions, so the two reduction shapes agree bit for bit
     assert(batch == single)
-    // the scale knob (checkpointed tf) must not change a single bit
-    val mat = Text.bm25TopK(docs, col("doc_id"), col("text"), terms, k = 10,
-        materializeTf = true)
-      .collect().map(r => r.getLong(0) -> ((r.getDouble(1), r.getInt(2)))).toMap
-    assert(mat == single, "materializeTf is a physical-plan knob only")
   }
 
   test("bpeMerges: frequency argmax with lexicographic ties; greedy fold handles overlaps") {

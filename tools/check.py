@@ -229,8 +229,8 @@ def main():
                         f"runMain graft.Verify {sfdir} {outdir} {names}".strip()],
                        check=True, capture_output=True, text=True)
     con = duckdb.connect()
-    # big-shard oracles (e.g. the 10x ScaleShard correctness leg) need
-    # spill-to-disk and don't care about insertion order (canon() sorts).
+    # big-shard oracles (e.g. a 10x replicated sfdir) need spill-to-disk
+    # and don't care about insertion order (canon() sorts).
     # The spill dir is a managed tempdir (removed at interpreter exit) — a
     # fixed /tmp path would accrete spill files across runs forever.
     spill = tempfile.TemporaryDirectory(prefix="duckdb_spill_")
@@ -242,8 +242,8 @@ def main():
     n_views = 0
     for t in tables:
         # driver testdata ships single-file parquet; Spark-written dirs
-        # (e.g. a ScaleShard output) need the part-file glob, and a shard
-        # dir legitimately lacks the tables its queries never touch
+        # (a replicated shard) need the part-file glob, and a shard dir
+        # legitimately lacks the tables its queries never touch
         path = f"{sfdir}/{t}.parquet"
         if os.path.isdir(path):
             path = f"{path}/*.parquet"
