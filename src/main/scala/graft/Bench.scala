@@ -251,8 +251,8 @@ object Bench {
     // Stdout for the driver, plus a file copy in case log decoration mangles
     // the stream (round 1's BENCH parse failed on sbt's [info] prefix).
     println(json)
-    Files.writeString(Paths.get(
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")), json + "\n")
+    val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
+    Files.writeString(Paths.get(outFile), json + "\n")
     Files.writeString(Paths.get(
       sys.env.getOrElse("SPARK_GRAFT_BENCH_WARM_OUT", "bench_warm.json")),
       perQueryJson(sfDir, results, streamingJson, mode = "session") + "\n")
@@ -269,7 +269,7 @@ object Bench {
       .map { case (f, rs) => Json.str(f) + ":" + fmt(rs.map(_.cold).sum) }
       .mkString("{", ",", "}")
     println(
-      s"""{"metric":"total","value":${fmt(okRes.map(_.cold).sum)},"unit":"sec","queries":$famCold,"total_warm":${fmt(okRes.map(_.warm).sum)},"n_ok":${okRes.size},"n_failed":${results.size - okRes.size},"failed":$failed,"streaming":$streamingJson,"sf":${Json.str(sfDir)},"per_query_file":"bench_out.json"}""")
+      s"""{"metric":"total","value":${fmt(okRes.map(_.cold).sum)},"unit":"sec","queries":$famCold,"total_warm":${fmt(okRes.map(_.warm).sum)},"n_ok":${okRes.size},"n_failed":${results.size - okRes.size},"failed":$failed,"streaming":$streamingJson,"sf":${Json.str(sfDir)},"per_query_file":${Json.str(outFile)}}""")
     streamSpark.foreach(_.stop())
   }
 }

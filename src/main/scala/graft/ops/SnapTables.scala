@@ -53,22 +53,22 @@ final class SnapConflict(msg: String, cause: Throwable = null)
   * decision with its own timing, exactly the Iceberg/Delta
   * snapshot-expiry contract re-derived on plain parquet + JSON.
   *
-  * Single-writer ENFORCEMENT (round 18 — before this it was a documented
-  * contract, and a lost race was silent: both writers read generation N,
-  * both published N+1, and the loser's publication was orphaned with zero
-  * error): every publish verb first CLAIMS its target generation via a
-  * create-exclusive lock marker (`_manifests/.publish-%06d.lock`) and then
-  * re-checks the pointer is still at its base — the second writer of a
-  * race fails loudly at the claim (or at the base re-check in the claim/
-  * flip window), never silently. The marker is released in `finally`, so
-  * only a PROCESS CRASH mid-publication leaves one behind; a later writer
-  * then fails with instructions to run [[reclaimStale]] (the operator
-  * verb that deletes markers above the pointer once the crashed writer is
-  * known dead). [[appendBatch]] writes its stream identity + batch id into
-  * the marker, so ITS crash-replay recognizes its own leftover claim and
-  * proceeds — the streamed ingest path stays self-healing with no manual
-  * step. Markers at or below the pointer are dead by construction (every
-  * future claim targets pointer+1) and are swept by [[expire]].
+  * Single-writer ENFORCEMENT (`withClaim`; without it two writers that read
+  * generation N would both publish N+1 and the loser's publication would
+  * be orphaned silently): every publish verb first CLAIMS its target
+  * generation via a create-exclusive lock marker
+  * (`_manifests/.publish-%06d.lock`) and then re-checks the pointer is
+  * still at its base — the second writer of a race fails loudly at the
+  * claim or at the re-check, never silently. The marker is released in
+  * `finally`, so only a PROCESS CRASH mid-publication leaves one behind; a
+  * later writer then fails with instructions to run [[reclaimStale]] (the
+  * operator verb that deletes markers above the pointer once the crashed
+  * writer is known dead). [[appendBatch]] writes its stream identity +
+  * batch id into the marker, so ITS crash-replay recognizes its own
+  * leftover claim and proceeds — the streamed ingest path stays
+  * self-healing with no manual step. Markers at or below the pointer are
+  * dead by construction (every future claim targets pointer+1) and are
+  * swept by [[expire]].
   *
   * Manifests are plain tab-separated lines (`partValue TAB file TAB
   * file…`) — parquet task-file names contain no tabs or newlines, so no
@@ -209,6 +209,30 @@ object SnapTables {
     hfs.delete(markerPath(root, gen), false)
     ()
   }
+
+  /** Run `body` holding the claim on the generation after `base` (0 when
+    * None), the single-writer step of every publish verb and [[expire]]. A
+    * pointer that moved off `base` before the claim landed throws
+    * [[SnapConflict]] naming `who`; the claim is released however `body` ends.
+    */
+  private def withClaim[T](spark: SparkSession, hfs: FileSystem, path: String,
+      base: Option[Int], who: String, identity: String)(body: => T): T = {
+    val root = new Path(path)
+    val gen = base.fold(0)(_ + 1)
+    claimGeneration(hfs, root, gen, identity)
+    try {
+      if (currentGeneration(spark, path) != base) throw new SnapConflict(base.fold(
+        s"SnapTables: $path was published concurrently during $who's claim")(g =>
+        s"SnapTables: $path advanced past generation $g during $who's claim — " +
+          "re-resolve and retry"))
+      body
+    } finally releaseGeneration(hfs, root, gen)
+  }
+
+  /** The current generation of a table that must already be published. */
+  private def publishedGeneration(spark: SparkSession, path: String): Int =
+    currentGeneration(spark, path).getOrElse(
+      throw new IllegalStateException(s"SnapTables: $path has no published generation"))
 
   /** Operator recovery verb: delete publication claims ABOVE the pointer —
     * these belong to writers that crashed mid-publication (a live writer
@@ -375,11 +399,6 @@ object SnapTables {
       }.toMap)
   }
 
-  /** The (partition value → file names) listing of one generation. */
-  private def readManifest(hfs: FileSystem, root: Path,
-      gen: Int): Map[Int, Seq[String]] =
-    readManifestFull(hfs, root, gen).entries
-
   /** The highest [[appendBatch]] batch id published at or before `gen` —
     * the replay-detection record, stored in the manifest itself so the
     * exactly-once decision and the file list it protects are one atomic
@@ -535,7 +554,8 @@ object SnapTables {
     * skipping: gen-0 records per-file [min,max] of that integral column,
     * and EVERY later publish verb maintains the stats automatically (they
     * read the column name from the base manifest — callers never re-pass
-    * it). [[resolveRange]] then prunes whole FILES, not just partitions.
+    * it). A serve that filters the stats column then skips whole FILES,
+    * not just partitions (see [[ManifestFileIndex]]).
     */
   def publishInitial(spark: SparkSession, path: String, partCol: String,
       df: DataFrame, statsCol: Option[String] = None): Unit = {
@@ -543,10 +563,8 @@ object SnapTables {
     val hfs = fs(spark, path)
     require(currentGeneration(spark, path).isEmpty,
       s"SnapTables: $path is already published — use rewritePartitions")
-    claimGeneration(hfs, root, 0, java.util.UUID.randomUUID().toString)
-    try {
-      require(currentGeneration(spark, path).isEmpty,
-        s"SnapTables: $path was published concurrently during the claim")
+    withClaim(spark, hfs, path, None, "the initial publish",
+        java.util.UUID.randomUUID().toString) {
       // append into a REQUIRED-empty directory, not mode(overwrite): the
       // overwrite would delete the whole root including the claim marker
       // just taken, re-opening the two-initial-publishers race mid-write.
@@ -561,20 +579,22 @@ object SnapTables {
         .getOrElse(Map.empty)
       writeManifest(hfs, root, 0, written, statsCol = statsCol, zones = zones)
       writePointer(hfs, root, 0)
-    } finally releaseGeneration(hfs, root, 0)
+    }
   }
 
   /** The frame over exactly `files` (partition value → file names under
     * `path`), planned from that list alone: one `getFileStatus` per file
     * and one footer read, both on the driver, feed a [[ManifestFileIndex]]
     * behind a parquet `HadoopFsRelation`. Nothing is listed and no Spark
-    * job runs; partition filters (DPP's included) prune inside the index.
+    * job runs; partition filters (DPP's included) prune inside the index,
+    * and so do filters on `statsCol` by the files' `zones`.
     * The data schema is the one Spark wrote into the first file's footer,
     * made nullable as a file-source read makes it, with the INT partition
     * column last. A file that is gone fails here, naming `what`.
     */
   private def frameOf(spark: SparkSession, path: String, partCol: String,
-      files: Map[Int, Seq[String]], what: String): DataFrame = {
+      files: Map[Int, Seq[String]], what: String, statsCol: Option[String] = None,
+      zones: Map[(Int, String), (Long, Long)] = Map.empty): DataFrame = {
     val hfs = fs(spark, path)
     val root = hfs.makeQualified(new Path(path))
     val statuses = files.filter(_._2.nonEmpty).map { case (v, names) =>
@@ -588,7 +608,7 @@ object SnapTables {
         }
       }.toArray
     }
-    val index = new ManifestFileIndex(root, partCol, statuses)
+    val index = new ManifestFileIndex(root, partCol, statuses, statsCol, zones)
     val first = statuses.minBy(_._1)._2.head
     spark.baseRelationToDataFrame(HadoopFsRelation(index, index.partitionSchema,
       footerSchema(hfs, first), None, new ParquetFileFormat, Map.empty)(spark))
@@ -624,13 +644,12 @@ object SnapTables {
     * directories (a crashed writer's orphans) are equally invisible:
     * readers trust manifests, never directory listings. Two resolves of
     * one generation are the same relation (exchange reuse and the cache
-    * manager see one table); two generations are not.
+    * manager see one table); two generations are not. On a table published
+    * with a `statsCol`, a filter on that column also skips the files whose
+    * zones cannot match it ([[ManifestFileIndex]]).
     */
-  def resolve(spark: SparkSession, path: String, partCol: String): DataFrame = {
-    val gen = currentGeneration(spark, path).getOrElse(
-      throw new IllegalStateException(s"SnapTables: $path has no published generation"))
-    resolveAt(spark, path, partCol, gen)
-  }
+  def resolve(spark: SparkSession, path: String, partCol: String): DataFrame =
+    resolveAt(spark, path, partCol, publishedGeneration(spark, path))
 
   /** Time-travel read of a specific retained generation, planned like
     * [[resolve]] with no Spark job. An expired generation fails here: a
@@ -639,45 +658,11 @@ object SnapTables {
     */
   def resolveAt(spark: SparkSession, path: String, partCol: String,
       gen: Int): DataFrame = {
-    val files = readManifest(fs(spark, path), new Path(path), gen)
-    require(files.values.exists(_.nonEmpty),
-      s"SnapTables: generation $gen of $path is empty")
-    frameOf(spark, path, partCol, files, s"generation $gen of $path")
-  }
-
-  /** The file names generation `gen` would SCAN for keys in [lo, hi] —
-    * zone-map pruning (manifest-level data skipping): a file whose
-    * recorded [min,max] of the stats column excludes the range is dropped
-    * from the listing entirely; a file with no zone line (no stats column,
-    * all-null keys) is conservatively kept. The spec surface for the
-    * strict-subset invariant, and [[resolveRange]]'s planning core.
-    */
-  def zoneFiles(spark: SparkSession, path: String, partCol: String, gen: Int,
-      lo: Long, hi: Long): Map[Int, Seq[String]] = {
     val m = readManifestFull(fs(spark, path), new Path(path), gen)
-    m.entries.map { case (v, names) =>
-      v -> names.filter { n =>
-        m.zones.get((v, n)).forall { case (mn, mx) => mx >= lo && mn <= hi }
-      }
-    }.filter(_._2.nonEmpty)
-  }
-
-  /** [[resolve]] restricted to key range [lo, hi] of the table's stats
-    * column: the manifest index over only the files whose zones overlap
-    * the range ([[zoneFiles]]' kept map) — a point lookup on a many-file
-    * partition reads fewer FILES, not just fewer partitions. Returns a
-    * SUPERSET of the matching rows (surviving files hold other keys too;
-    * the caller applies its row predicate as usual — same contract as
-    * partition pruning). A range excluding every file yields an empty
-    * frame with the table's schema.
-    */
-  def resolveRange(spark: SparkSession, path: String, partCol: String,
-      lo: Long, hi: Long): DataFrame = {
-    val gen = currentGeneration(spark, path).getOrElse(
-      throw new IllegalStateException(s"SnapTables: $path has no published generation"))
-    val kept = zoneFiles(spark, path, partCol, gen, lo, hi)
-    if (kept.isEmpty) resolveAt(spark, path, partCol, gen).where(lit(false))
-    else frameOf(spark, path, partCol, kept, s"generation $gen of $path")
+    require(m.entries.values.exists(_.nonEmpty),
+      s"SnapTables: generation $gen of $path is empty")
+    frameOf(spark, path, partCol, m.entries, s"generation $gen of $path",
+      m.statsCol, m.zones)
   }
 
   /** Incremental (CDC-style) read: the rows ADDED between `fromGen`
@@ -707,10 +692,12 @@ object SnapTables {
     // step's parse — KBs each, driver-side.
     def fileSet(m: Map[Int, Seq[String]]): Set[(Int, String)] =
       m.toSeq.flatMap { case (v, ns) => ns.map(v -> _) }.toSet
-    val fromSet = fileSet(readManifest(hfs, root, fromGen))
+    var last = readManifestFull(hfs, root, fromGen)
+    val fromSet = fileSet(last.entries)
     var prevSet = fromSet
     (fromGen + 1 to toGen).foreach { g =>
-      val curSet = fileSet(readManifest(hfs, root, g))
+      last = readManifestFull(hfs, root, g)
+      val curSet = fileSet(last.entries)
       val dropped = prevSet -- curSet
       if (dropped.nonEmpty) throw new IllegalArgumentException(
         s"SnapTables: generation $g of $path removed or replaced " +
@@ -724,7 +711,7 @@ object SnapTables {
     val added = (prevSet -- fromSet).groupMap(_._1)(_._2).map { case (v, ns) => v -> ns.toSeq }
     if (added.isEmpty) resolveAt(spark, path, partCol, toGen).where(lit(false))
     else frameOf(spark, path, partCol, added,
-      s"generations ($fromGen, $toGen] of $path")
+      s"generations ($fromGen, $toGen] of $path", last.statsCol, last.zones)
   }
 
   /** Bounded-I/O partition rewrite with snapshot-isolated publication: the
@@ -749,8 +736,7 @@ object SnapTables {
       plannedBase: Option[Int] = None): Int = {
     val root = new Path(path)
     val hfs = fs(spark, path)
-    val gen = currentGeneration(spark, path).getOrElse(
-      throw new IllegalStateException(s"SnapTables: $path has no published generation"))
+    val gen = publishedGeneration(spark, path)
     // `plannedBase` closes the STALE-PLAN lost update the claim alone
     // cannot (the two-concurrent-writers spec's second failure mode): a
     // verb that resolved generation N, computed survivors against N, then
@@ -763,48 +749,41 @@ object SnapTables {
       s"SnapTables: $path advanced from generation $pb to $gen since the " +
         "caller's plan was derived — its survivors no longer describe the " +
         "current state; re-resolve and retry")
-    claimGeneration(hfs, root, gen + 1, java.util.UUID.randomUUID().toString)
-    try {
-    // the claim/re-check pair closes the read-claim window: once the claim
-    // is held nobody else can advance to gen+1, and a pointer that moved
-    // BEFORE the claim landed is caught here — the caller's survivors were
-    // computed against a generation that is no longer current
-    if (!currentGeneration(spark, path).contains(gen)) throw new SnapConflict(
-      s"SnapTables: $path advanced past generation $gen during the claim — " +
-        "re-resolve and retry the rewrite")
-    val m = readManifestFull(hfs, root, gen)
-    val cur = m.entries
-    val added = writeAdded(hfs, path, partCol, survivors)
-    val newFiles = byValue(added)
-    // enforce, don't document, the survivors-cover-only-affected contract: a
-    // survivor row in an UNAFFECTED partition would leave a file the new
-    // manifest never references — the row looks written but no generation
-    // ever serves it, and expire() reclaims it silently
-    val stray = (newFiles.keySet -- affected).toSeq.sorted
-    if (stray.nonEmpty) {
-      discard(hfs, root, partCol, added)
-      throw new IllegalArgumentException(
-        s"SnapTables: survivors hold rows for partition(s) ${stray.mkString(",")} " +
-          s"outside the affected set at $path — those rows would be written but " +
-          "never referenced by any generation; fix the caller's affected list")
+    withClaim(spark, hfs, path, Some(gen), "the rewrite",
+        java.util.UUID.randomUUID().toString) {
+      val m = readManifestFull(hfs, root, gen)
+      val cur = m.entries
+      val added = writeAdded(hfs, path, partCol, survivors)
+      val newFiles = byValue(added)
+      // enforce, don't document, the survivors-cover-only-affected contract: a
+      // survivor row in an UNAFFECTED partition would leave a file the new
+      // manifest never references — the row looks written but no generation
+      // ever serves it, and expire() reclaims it silently
+      val stray = (newFiles.keySet -- affected).toSeq.sorted
+      if (stray.nonEmpty) {
+        discard(hfs, root, partCol, added)
+        throw new IllegalArgumentException(
+          s"SnapTables: survivors hold rows for partition(s) ${stray.mkString(",")} " +
+            s"outside the affected set at $path — those rows would be written but " +
+            "never referenced by any generation; fix the caller's affected list")
+      }
+      // partitions whose survivors are empty drop out; every new file lies in
+      // an affected partition, so an empty `next` means nothing was written
+      val next = (cur -- affected) ++ newFiles
+      require(next.nonEmpty,
+        s"SnapTables: the rewrite empties the whole table at $path — an empty " +
+          "generation has no readable parquet; drop the table instead")
+      // rewrites never change ingest history — carry both headers forward;
+      // zone stats: carried-forward files keep their lines (writeManifest
+      // drops superseded ones), the rewrite's new files get fresh ones
+      val zones = m.statsCol.map(c =>
+        m.zones ++ computeZones(spark, path, partCol, c, newFiles))
+        .getOrElse(Map.empty)
+      writeManifest(hfs, root, gen + 1, next, m.batchId, m.streamId,
+        m.statsCol, zones)
+      writePointer(hfs, root, gen + 1)
+      gen + 1
     }
-    // partitions whose survivors are empty drop out; every new file lies in
-    // an affected partition, so an empty `next` means nothing was written
-    val next = (cur -- affected) ++ newFiles
-    require(next.nonEmpty,
-      s"SnapTables: the rewrite empties the whole table at $path — an empty " +
-        "generation has no readable parquet; drop the table instead")
-    // rewrites never change ingest history — carry both headers forward;
-    // zone stats: carried-forward files keep their lines (writeManifest
-    // drops superseded ones), the rewrite's new files get fresh ones
-    val zones = m.statsCol.map(c =>
-      m.zones ++ computeZones(spark, path, partCol, c, newFiles))
-      .getOrElse(Map.empty)
-    writeManifest(hfs, root, gen + 1, next, m.batchId, m.streamId,
-      m.statsCol, zones)
-    writePointer(hfs, root, gen + 1)
-    gen + 1
-    } finally releaseGeneration(hfs, root, gen + 1)
   }
 
   /** Storage-truth key-filter delete for a PER-KEY-LOCAL table (every row
@@ -822,8 +801,7 @@ object SnapTables {
     // capture the PLANNED base first: the plan below derives survivors from
     // this generation, and rewritePartitions refuses to publish them onto
     // any other (the stale-plan guard)
-    val base = currentGeneration(spark, path).getOrElse(
-      throw new IllegalStateException(s"SnapTables: $path has no published generation"))
+    val base = publishedGeneration(spark, path)
     deleteByKeyPlan(resolveAt(spark, path, partCol, base),
         partCol, keyCol, removedKeys)
       .map { case (affected, survivors) =>
@@ -849,8 +827,7 @@ object SnapTables {
     */
   def decrementCounts(spark: SparkSession, path: String, partCol: String,
       keyCols: Seq[String], countCol: String, deltas: DataFrame): Int = {
-    val base = currentGeneration(spark, path).getOrElse(
-      throw new IllegalStateException(s"SnapTables: $path has no published generation"))
+    val base = publishedGeneration(spark, path)
     // refused batches throw in the plan, BEFORE any file is written, so the
     // generation never advances
     decrementPlan(resolveAt(spark, path, partCol, base), partCol,
@@ -976,8 +953,7 @@ object SnapTables {
     // two increment rows for one key must add their SUM once
     val inc = deltas.groupBy((partCol +: keyCols).map(col): _*)
       .agg(sum(col(countCol)).as(countCol)).select(cols: _*).localCheckpoint()
-    val base = currentGeneration(spark, path).getOrElse(
-      throw new IllegalStateException(s"SnapTables: $path has no published generation"))
+    val base = publishedGeneration(spark, path)
     val affected = inc.select(col(partCol)).distinct()
       .collect().map(_.getInt(0)).sorted.toSeq
     if (affected.isEmpty) return base
@@ -1015,7 +991,7 @@ object SnapTables {
     */
   def manifestEntries(spark: SparkSession, path: String,
       gen: Int): Map[Int, Seq[String]] =
-    readManifest(fs(spark, path), new Path(path), gen)
+    readManifestFull(fs(spark, path), new Path(path), gen).entries
 
   /** Ingest APPEND as a generation — the verb that makes the layer a full
     * lifecycle rather than a delete facility: `delta`'s rows land as new
@@ -1072,8 +1048,7 @@ object SnapTables {
       delta: DataFrame, batchId: Long, streamId: Option[String] = None): Int = {
     val root = new Path(path)
     val hfs = fs(spark, path)
-    val gen = currentGeneration(spark, path).getOrElse(
-      throw new IllegalStateException(s"SnapTables: $path has no published generation"))
+    val gen = publishedGeneration(spark, path)
     val m = readManifestFull(hfs, root, gen)
     for (sid <- streamId; prev <- m.streamId)
       require(prev == sid,
@@ -1104,33 +1079,30 @@ object SnapTables {
     // `pre` threads appendBatch's already-read (generation, manifest)
     // through — the ingest hot path reads each manifest ONCE per
     // micro-batch, not once for the guards and again here
-    val gen = pre.map(_._1).getOrElse(currentGeneration(spark, path).getOrElse(
-      throw new IllegalStateException(s"SnapTables: $path has no published generation")))
-    claimGeneration(hfs, root, gen + 1, identity)
-    try {
-      if (!currentGeneration(spark, path).contains(gen)) throw new SnapConflict(
-        s"SnapTables: $path advanced past generation $gen during the claim — " +
-          "re-resolve and retry the append")
+    val gen = pre.map(_._1).getOrElse(publishedGeneration(spark, path))
+    withClaim(spark, hfs, path, Some(gen), "the append", identity) {
       val m = pre.map(_._2).getOrElse(readManifestFull(hfs, root, gen))
       val cur = m.entries
       // a self-referential delta (one that reads this table's current
       // generation) reads the manifest's fixed file list, so the files this
       // write adds never enter its own scan
       val added = byValue(writeAdded(hfs, path, partCol, delta))
-      if (added.isEmpty) return gen // an empty delta publishes nothing
-      val next = cur ++ added.map { case (v, names) =>
-        v -> (cur.getOrElse(v, Nil) ++ names)
+      if (added.isEmpty) gen // an empty delta publishes nothing
+      else {
+        val next = cur ++ added.map { case (v, names) =>
+          v -> (cur.getOrElse(v, Nil) ++ names)
+        }
+        // an append keeps every existing zone line and adds the delta's
+        val zones = m.statsCol.map(c =>
+          m.zones ++ computeZones(spark, path, partCol, c, added))
+          .getOrElse(Map.empty)
+        writeManifest(hfs, root, gen + 1, next,
+          batchId.orElse(m.batchId), streamId.orElse(m.streamId),
+          m.statsCol, zones)
+        writePointer(hfs, root, gen + 1)
+        gen + 1
       }
-      // an append keeps every existing zone line and adds the delta's
-      val zones = m.statsCol.map(c =>
-        m.zones ++ computeZones(spark, path, partCol, c, added))
-        .getOrElse(Map.empty)
-      writeManifest(hfs, root, gen + 1, next,
-        batchId.orElse(m.batchId), streamId.orElse(m.streamId),
-        m.statsCol, zones)
-      writePointer(hfs, root, gen + 1)
-      gen + 1
-    } finally releaseGeneration(hfs, root, gen + 1)
+    }
   }
 
   /** Small-file compaction as a content-invariant generation — the
@@ -1153,10 +1125,9 @@ object SnapTables {
     require(minFiles >= 2,
       s"SnapTables: minFiles=$minFiles would rewrite single-file partitions for nothing")
     require(targetBytes > 0, s"SnapTables: targetBytes=$targetBytes")
-    val gen = currentGeneration(spark, path).getOrElse(
-      throw new IllegalStateException(s"SnapTables: $path has no published generation"))
+    val gen = publishedGeneration(spark, path)
     val hfs = fs(spark, path)
-    val cur = readManifest(hfs, new Path(path), gen)
+    val cur = readManifestFull(hfs, new Path(path), gen).entries
     // binpack criterion (Iceberg rewrite_data_files semantics): rewrite a
     // partition only when at least two of its files are BELOW targetBytes —
     // those would actually fold together. A partition holding minFiles
@@ -1208,17 +1179,12 @@ object SnapTables {
       toGen: Int): Int = {
     val root = new Path(path)
     val hfs = fs(spark, path)
-    val gen = currentGeneration(spark, path).getOrElse(
-      throw new IllegalStateException(s"SnapTables: $path has no published generation"))
+    val gen = publishedGeneration(spark, path)
     require(toGen >= 0 && toGen <= gen,
       s"SnapTables: cannot roll $path back to generation $toGen from $gen")
     if (toGen == gen) return gen
-    claimGeneration(hfs, root, gen + 1,
-      s"rollback:${java.util.UUID.randomUUID()}")
-    try {
-      if (!currentGeneration(spark, path).contains(gen)) throw new SnapConflict(
-        s"SnapTables: $path advanced past generation $gen during the claim — " +
-          "re-resolve and retry the rollback")
+    withClaim(spark, hfs, path, Some(gen), "the rollback",
+        s"rollback:${java.util.UUID.randomUUID()}") {
       require(hfs.exists(new Path(new Path(root, ManifestDir), genName(toGen))),
         s"SnapTables: rollback target generation $toGen of $path was expired " +
           "(its manifest is gone) — only retained generations can serve again")
@@ -1235,7 +1201,7 @@ object SnapTables {
         cur.batchId, cur.streamId, target.statsCol, target.zones)
       writePointer(hfs, root, gen + 1)
       gen + 1
-    } finally releaseGeneration(hfs, root, gen + 1)
+    }
   }
 
   /** Reclaim space: delete every data file not referenced by the newest
@@ -1262,74 +1228,59 @@ object SnapTables {
     val root = new Path(path)
     val hfs = fs(spark, path)
     val gen = currentGeneration(spark, path).getOrElse(return)
-    // Expire serializes with publishers through the SAME claim protocol it
-    // cleans up after (round 19 — before this, expire was the one verb
-    // OUTSIDE the single-writer enforcement it advertises: it computed the
-    // referenced-file set from the kept manifests, so a publisher running
-    // concurrently — having already claimed gen+1 and written its new data
-    // files, which no kept manifest references YET — would have those
-    // files swept mid-publication and then flip the pointer to a manifest
-    // of deleted files: a corrupted CURRENT generation). Holding the gen+1
-    // claim for the sweep's duration means no publisher can be mid-flight:
-    // a racing one fails loudly at ITS claim, exactly as a racing
-    // publisher already does, and a racing expire fails at THIS claim. A
-    // crash mid-sweep leaves a marker above the pointer → reclaimStale,
-    // the same recovery as any crashed publisher.
-    claimGeneration(hfs, root, gen + 1,
-      s"expire:${java.util.UUID.randomUUID()}")
-    try {
-    // a publisher that flipped the pointer BETWEEN our read and our claim
-    // would make the kept-window arithmetic stale — re-check, like every
-    // publish verb does
-    if (!currentGeneration(spark, path).contains(gen)) throw new SnapConflict(
-      s"SnapTables: $path advanced past generation $gen during expire's " +
-        "claim — re-run expire against the new current generation")
-    val mdir0 = new Path(root, ManifestDir)
-    val youngFloor = System.currentTimeMillis() - minAgeMs
-    val young: Seq[Int] =
-      if (minAgeMs <= 0 || !hfs.exists(mdir0)) Nil
-      else hfs.listStatus(mdir0).toSeq
-        .filter(s => s.getPath.getName.startsWith("gen-")
-          && s.getPath.getName.endsWith(".tsv")
-          && s.getModificationTime >= youngFloor)
-        .map(_.getPath.getName.stripPrefix("gen-").stripSuffix(".tsv").toInt)
-    val keep = ((((gen - keepGens + 1) max 0) min
-      (if (young.isEmpty) Int.MaxValue else young.min)) to gen)
-    // a generation inside the keep window may already be GONE — a prior
-    // expire with a tighter keepGens dropped it; that is not corruption
-    // (nothing can resurrect it), so reference only the manifests that
-    // still exist. The CURRENT generation's manifest is never optional:
-    // its absence means the table cannot serve, fail loudly via readManifest.
-    // keyed like the listing below: by the directory's value as written
-    val referenced: Set[(String, String)] = keep.flatMap { g =>
-      if (g != gen && !hfs.exists(new Path(mdir0, genName(g)))) Nil
-      else readManifest(hfs, root, g).toSeq.flatMap { case (v, names) =>
-        names.map(v.toString -> _)
+    // Expire holds the gen+1 claim for the whole sweep: a publisher that has
+    // claimed gen+1 and written data files no kept manifest references yet
+    // would otherwise have them swept, then flip the pointer to a manifest
+    // of deleted files. A racing publisher or expire fails at its claim; a
+    // crash mid-sweep leaves a marker above the pointer → reclaimStale.
+    withClaim(spark, hfs, path, Some(gen), "expire",
+        s"expire:${java.util.UUID.randomUUID()}") {
+      val mdir0 = new Path(root, ManifestDir)
+      val youngFloor = System.currentTimeMillis() - minAgeMs
+      val young: Seq[Int] =
+        if (minAgeMs <= 0 || !hfs.exists(mdir0)) Nil
+        else hfs.listStatus(mdir0).toSeq
+          .filter(s => s.getPath.getName.startsWith("gen-")
+            && s.getPath.getName.endsWith(".tsv")
+            && s.getModificationTime >= youngFloor)
+          .map(_.getPath.getName.stripPrefix("gen-").stripSuffix(".tsv").toInt)
+      val keep = ((((gen - keepGens + 1) max 0) min
+        (if (young.isEmpty) Int.MaxValue else young.min)) to gen)
+      // a generation inside the keep window may already be GONE — a prior
+      // expire with a tighter keepGens dropped it; that is not corruption
+      // (nothing can resurrect it), so reference only the manifests that
+      // still exist. The CURRENT generation's manifest is never optional:
+      // its absence means the table cannot serve, fail loudly via readManifestFull.
+      // keyed like the listing below: by the directory's value as written
+      val referenced: Set[(String, String)] = keep.flatMap { g =>
+        if (g != gen && !hfs.exists(new Path(mdir0, genName(g)))) Nil
+        else readManifestFull(hfs, root, g).entries.toSeq.flatMap { case (v, names) =>
+          names.map(v.toString -> _)
+        }
+      }.toSet
+      listPartitionFiles(hfs, root, partCol).foreach { case (v, names) =>
+        names.filterNot(n => referenced.contains(v -> n)).foreach { n =>
+          hfs.delete(new Path(root, s"$partCol=$v/$n"), false)
+        }
+        val dir = new Path(root, s"$partCol=$v")
+        if (hfs.listStatus(dir).forall(s => s.getPath.getName.startsWith(".")))
+          hfs.delete(dir, true)
       }
-    }.toSet
-    listPartitionFiles(hfs, root, partCol).foreach { case (v, names) =>
-      names.filterNot(n => referenced.contains(v -> n)).foreach { n =>
-        hfs.delete(new Path(root, s"$partCol=$v/$n"), false)
+      val mdir = new Path(root, ManifestDir)
+      hfs.listStatus(mdir).foreach { s =>
+        val n = s.getPath.getName
+        if (n.startsWith("gen-") && n.endsWith(".tsv")
+            && !keep.map(genName).contains(n))
+          hfs.delete(s.getPath, false)
+        // dead publication claims: a marker at or below the pointer can never
+        // conflict again (every future claim targets pointer+1) — it is the
+        // leftover of a crash between the pointer flip and the marker release.
+        // Expire's OWN claim sits at gen+1, above the pointer: never swept
+        // here, released when `withClaim` returns.
+        if (n.startsWith(".publish-") && n.endsWith(".lock")
+            && n.stripPrefix(".publish-").stripSuffix(".lock").toInt <= gen)
+          hfs.delete(s.getPath, false)
       }
-      val dir = new Path(root, s"$partCol=$v")
-      if (hfs.listStatus(dir).forall(s => s.getPath.getName.startsWith(".")))
-        hfs.delete(dir, true)
     }
-    val mdir = new Path(root, ManifestDir)
-    hfs.listStatus(mdir).foreach { s =>
-      val n = s.getPath.getName
-      if (n.startsWith("gen-") && n.endsWith(".tsv")
-          && !keep.map(genName).contains(n))
-        hfs.delete(s.getPath, false)
-      // dead publication claims: a marker at or below the pointer can never
-      // conflict again (every future claim targets pointer+1) — it is the
-      // leftover of a crash between the pointer flip and the marker release.
-      // Expire's OWN claim sits at gen+1, above the pointer: never swept
-      // here, released in the finally below.
-      if (n.startsWith(".publish-") && n.endsWith(".lock")
-          && n.stripPrefix(".publish-").stripSuffix(".lock").toInt <= gen)
-        hfs.delete(s.getPath, false)
-    }
-    } finally releaseGeneration(hfs, root, gen + 1)
   }
 }

@@ -2229,25 +2229,20 @@ object PipelineQueries {
 
     // MANIFEST ZONE MAPS (round 19) — manifest-level data skipping, the
     // Iceberg per-file-stats shape re-derived on the TSV manifest: the
-    // snapshot table records per-file [min,max] of a key column at every
-    // publish (stats ride each verb automatically once publishInitial
-    // opts in), and a key-ranged serve (SnapTables.resolveRange) plans
-    // over only the files whose range overlaps — a point lookup on a
-    // many-file partition reads fewer FILES, not just fewer partitions.
-    // The table here splits each of 8 partitions into two files with
-    // disjoint doc_id halves (publish low, append high), so the low-half
-    // lookup provably scans half the files (SnapTablesSpec pins the
-    // strict-subset file listing; this leg hash-certifies the served
-    // answers through the pruned plan). At 100 TB this is the difference
-    // between a key-filtered serve opening every file of its hash bucket
-    // and opening only the generation slices that can hold the key.
+    // table records per-file [min,max] of doc_id at every publish, and a
+    // plain resolve filtered on doc_id reads only the files whose range can
+    // match (the manifest index prunes by Spark's pushed data filters). Each
+    // of 8 partitions holds two files with disjoint doc_id halves (publish
+    // low, append high), so the low-half lookup scans half the files
+    // (SnapTablesSpec pins that through the scan's numFiles; this leg
+    // hash-certifies the answers served through the pruned plan).
     QueryDef(
       "q434_snapshot_zone_lookup",
       (s, dir) => {
         val p = zoneLookupPath(s, dir)
         val k = zoneLookupSplit(s, dir)
-        graft.ops.SnapTables.resolveRange(s, p, "db", 0L, k - 1)
-          .where(col("doc_id") < k) // zone pruning returns a file-level superset
+        graft.ops.SnapTables.resolve(s, p, "db")
+          .where(col("doc_id") < k)
           .groupBy(col("lang"))
           .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("chars"))
       },

@@ -78,6 +78,37 @@ class SnapTablesSpec extends AnyFunSuite with SparkSpec {
 
   private def allRows = (1L to 12L).map(k => (k, s"v$k")).toSet
   private def survRows = allRows.filterNot { case (k, _) => k % 4 == 0 }
+  private def highRows = (101L to 112L).map(k => (k, s"v$k")).toSet
+
+  /** The rows `df` serves and the number of files its one parquet scan
+    * reads (the scan's `numFiles`, which counts what the index listed).
+    */
+  private def served(df: DataFrame): (Set[(Long, String)], Long) = {
+    val qe = df.select(col("key"), col("payload")).queryExecution
+    val got = qe.executedPlan.executeCollect().map(r => (r.getLong(0), r.getString(1))).toSet
+    val scans = new AdaptiveSparkPlanHelper {}.collect(qe.executedPlan) {
+      case s: FileSourceScanExec => s
+    }
+    assert(scans.size == 1)
+    (got, scans.head.metrics("numFiles").value)
+  }
+
+  /** `served` for the keys in [lo, hi] of the table at `dir`. */
+  private def keyRange(dir: String, lo: Long, hi: Long): (Set[(Long, String)], Long) =
+    served(SnapTables.resolve(spark, dir, "pb").where(col("key").between(lo, hi)))
+
+  /** The zoned two-files-per-partition layout: keys 1..12 published with
+    * zones on `key`, then 101..112 appended, so each of the 3 partitions
+    * holds a low file and a high file.
+    */
+  private def twoFileTable(dir: String): Unit = {
+    import spark.implicits._
+    SnapTables.publishInitial(spark, dir, "pb", table, statsCol = Some("key"))
+    SnapTables.appendPartitions(spark, dir, "pb",
+      (101L to 112L).map(k => (k, s"v$k", (k % 3).toInt))
+        .toDF("key", "payload", "pb"))
+    ()
+  }
 
   private def fsOf(dir: String) =
     new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
@@ -832,50 +863,63 @@ class SnapTablesSpec extends AnyFunSuite with SparkSpec {
   test("zone maps: per-file key stats prune FILES within a partition; every verb maintains them") {
     import spark.implicits._
     val dir = tmpDir("snap-zones")
-    SnapTables.publishInitial(spark, dir, "pb", table, statsCol = Some("key"))
-    // second file per partition with a disjoint key range
-    SnapTables.appendPartitions(spark, dir, "pb",
-      (101L to 112L).map(k => (k, s"v$k", (k % 3).toInt))
-        .toDF("key", "payload", "pb"))
-    val full = SnapTables.manifestEntries(spark, dir, 1)
-    assert(full.values.forall(_.size == 2), "each partition must hold 2 files")
-    // THE done-condition: a key predicate lists a STRICT subset of files
-    val low = SnapTables.zoneFiles(spark, dir, "pb", 1, 1L, 12L)
-    assert(low.values.forall(_.size == 1),
-      s"the low range must keep exactly the low file per partition, got $low")
-    assert(low.forall { case (v, names) => names.toSet.subsetOf(full(v).toSet) })
-    // pruned resolves stay CORRECT (superset-of-matching contract)
-    assert(rows(SnapTables.resolveRange(spark, dir, "pb", 1L, 12L)) == allRows)
-    assert(rows(SnapTables.resolveRange(spark, dir, "pb", 101L, 112L)) ==
-      (101L to 112L).map(k => (k, s"v$k")).toSet)
-    // a range beyond every zone: empty frame, schema intact
-    val none = SnapTables.resolveRange(spark, dir, "pb", 500L, 600L)
-    assert(none.isEmpty && none.columns.toSet == Set("key", "payload", "pb"))
+    twoFileTable(dir)
+    assert(SnapTables.manifestEntries(spark, dir, 1).values.forall(_.size == 2),
+      "each partition must hold 2 files")
+    // THE done-condition: a key predicate reads a STRICT subset of files,
+    // exactly the low file of each partition
+    assert(keyRange(dir, 1L, 12L) == ((allRows, 3L)))
+    assert(keyRange(dir, 101L, 112L) == ((highRows, 3L)))
+    // a range beyond every zone reads no file at all
+    assert(keyRange(dir, 500L, 600L) == ((Set.empty, 0L)))
+    // the incremental read prunes by the same zones: the appended files
+    // hold only the high range
+    val appended = SnapTables.appendedBetween(spark, dir, "pb", 0, 1)
+    assert(served(appended.where(col("key") <= 12L)) == ((Set.empty, 0L)))
+    assert(served(appended.where(col("key") > 100L)) == ((highRows, 3L)))
     // a rewrite maintains stats WITHOUT the caller re-passing the column:
     // delete from the low range. The rewritten partitions (1, 2) fold both
-    // ranges into one file whose fresh zone spans 1..112 — resolveRange is
-    // a SUPERSET (the partition-pruning contract), so assert through the
-    // caller's row predicate; file-level pruning stays visible on the
-    // untouched partition 0, still split low/high
+    // ranges into one file whose fresh zone spans 1..112; the untouched
+    // partition 0 keeps its low/high split, so the low lookup still skips
+    // its high file: 3 of 4 files
     SnapTables.deleteByKey(spark, dir, "pb", "key", Seq(4L, 8L).toDF("key"))
-    assert(rows(SnapTables.resolveRange(spark, dir, "pb", 1L, 12L)
-      .where(col("key") <= 12L)) == allRows -- Set((4L, "v4"), (8L, "v8")))
-    assert(SnapTables.zoneFiles(spark, dir, "pb", 2, 1L, 12L)(0).size == 1,
-      "partition 0 kept its low/high split — the low lookup must still " +
-        "prune its high file")
+    assert(SnapTables.manifestEntries(spark, dir, 2).values.map(_.size).sum == 4)
+    assert(keyRange(dir, 1L, 12L) == ((allRows -- Set((4L, "v4"), (8L, "v8")), 3L)))
     // compaction folds files and re-derives zones spanning both ranges
     assert(SnapTables.compactPartitions(spark, dir, "pb") == 3)
-    assert(SnapTables.zoneFiles(spark, dir, "pb", 3, 1L, 12L)
-      .values.forall(_.size == 1))
-    assert(rows(SnapTables.resolveRange(spark, dir, "pb", 101L, 112L)
-      .where(col("key") >= 101L)) ==
-      (101L to 112L).map(k => (k, s"v$k")).toSet)
+    assert(keyRange(dir, 101L, 112L) == ((highRows, 3L)))
+    assert(keyRange(dir, 500L, 600L) == ((Set.empty, 0L)),
+      "the compacted files must carry fresh zones")
     // a stats-free table prunes nothing and resolves identically
     val plain = tmpDir("snap-nozones")
     SnapTables.publishInitial(spark, plain, "pb", table)
-    assert(SnapTables.zoneFiles(spark, plain, "pb", 0, 1L, 1L) ==
-      SnapTables.manifestEntries(spark, plain, 0))
-    assert(rows(SnapTables.resolveRange(spark, plain, "pb", 1L, 12L)) == allRows)
+    assert(keyRange(plain, 1L, 1L) == ((Set((1L, "v1")), 3L)))
+  }
+
+  test("zone pruning through resolve: refutable conjuncts skip files, every other predicate reads them all") {
+    val dir = tmpDir("snap-zone-predicates")
+    twoFileTable(dir)
+    val t = SnapTables.resolve(spark, dir, "pb")
+    val all = rows(t)
+    assert(all == allRows ++ highRows)
+    // (predicate, its row test, the files the scan must read of 6)
+    val cases: Seq[(org.apache.spark.sql.Column, Long => Boolean, Long)] = Seq(
+      (col("key") <= 12L, _ <= 12L, 3L),
+      (lit(12L) >= col("key"), _ <= 12L, 3L),
+      (col("key") > 100L, _ > 100L, 3L),
+      (col("key") === 1, _ == 1L, 1L), // only partition 1's low zone [1, 10] holds 1
+      (col("key").isin(1L, 112L), k => k == 1L || k == 112L, 2L),
+      (col("key").isin((101L to 112L): _*), _ > 100L, 3L), // planned as InSet
+      (col("key") >= 200L, _ >= 200L, 0L),
+      (col("key") <= 12L || col("key") >= 112L, k => k <= 12L || k >= 112L, 6L),
+      (col("key").isNull, _ => false, 6L),
+      (col("key").cast("string") === "5", _ == 5L, 6L),
+      (col("payload") === "v5", _ == 5L, 6L))
+    cases.foreach { case (p, keep, files) =>
+      val (got, read) = served(t.where(p))
+      assert(got == all.filter(r => keep(r._1)), s"$p served the wrong rows")
+      assert(read == files, s"$p read $read files, expected $files")
+    }
   }
 
   test("TRUE race, rollback vs append: one loud loser or a clean stack — never a half-undone state") {
@@ -964,14 +1008,11 @@ class SnapTablesSpec extends AnyFunSuite with SparkSpec {
     // and zone stats ride a rollback: the zoned table's gen-0 stats serve
     // again after rolling back over an appended generation
     val zdir = tmpDir("snap-rollback-zones")
-    SnapTables.publishInitial(spark, zdir, "pb", table, statsCol = Some("key"))
-    SnapTables.appendPartitions(spark, zdir, "pb",
-      (101L to 112L).map(k => (k, s"v$k", (k % 3).toInt))
-        .toDF("key", "payload", "pb"))
+    twoFileTable(zdir)
     assert(SnapTables.rollback(spark, zdir, "pb", toGen = 0) == 2)
-    assert(SnapTables.zoneFiles(spark, zdir, "pb", 2, 101L, 112L).isEmpty,
+    assert(keyRange(zdir, 101L, 112L) == ((Set.empty, 0L)),
       "after rolling back over the append, no file can hold the high range")
-    assert(rows(SnapTables.resolveRange(spark, zdir, "pb", 1L, 12L)) == allRows)
+    assert(keyRange(zdir, 1L, 12L) == ((allRows, 3L)))
   }
 
   test("zone maps stay truthful through a mixed verb history: pruned == unpruned under the row predicate") {
@@ -995,19 +1036,24 @@ class SnapTablesSpec extends AnyFunSuite with SparkSpec {
         Seq(205L).toDF("key")); () })
     val probes = Seq((1L, 12L), (101L, 112L), (200L, 210L), (1L, 400L),
       (150L, 180L), (301L, 303L))
+    var skipped = 0L
     history.zipWithIndex.foreach { case (verb, step) =>
       verb()
-      val full = SnapTables.resolve(spark, dir, "pb")
+      // the unpruned read: every row, filtered here rather than in the scan
+      val full = rows(SnapTables.resolve(spark, dir, "pb"))
+      val files = SnapTables.manifestEntries(spark, dir,
+        SnapTables.currentGeneration(spark, dir).get).values.map(_.size).sum
       probes.foreach { case (lo, hi) =>
-        val pruned = rows(SnapTables.resolveRange(spark, dir, "pb", lo, hi)
-          .where(col("key").between(lo, hi)))
-        val truth = rows(full.where(col("key").between(lo, hi)))
+        val (pruned, read) = keyRange(dir, lo, hi)
+        val truth = full.filter { case (k, _) => lo <= k && k <= hi }
         assert(pruned == truth,
           s"step $step range [$lo,$hi]: pruned serve lost/invented rows " +
             s"(pruned ${pruned.size} vs truth ${truth.size}) — a zone line " +
             "went stale through this verb history")
+        skipped += files - read
       }
     }
+    assert(skipped > 0, "no probe of the history skipped a file")
   }
 
   test("a rewrite that would empty the table fails before publishing") {
@@ -1155,15 +1201,9 @@ class SnapTablesSpec extends AnyFunSuite with SparkSpec {
       "the table must pass Spark's 32-path parallel-listing threshold")
     val (t, jobs) = jobsDuring(SnapTables.resolve(spark, dir, "pb"))
     assert(jobs == 0, s"resolve must plan from the manifest alone, but ran $jobs Spark job(s)")
-    val served = t.where(col("pb") === 5).select(col("key"))
-    val qe = served.queryExecution
-    val keys = qe.executedPlan.executeCollect().map(_.getLong(0)).toSet
-    assert(keys == (0L until 192L).filter(_ % 16 == 5).toSet)
-    val scans = new AdaptiveSparkPlanHelper {}.collect(qe.executedPlan) {
-      case s: FileSourceScanExec => s
-    }
-    assert(scans.size == 1)
-    assert(scans.head.metrics("numFiles").value == entries(5).size,
+    val (got, read) = served(t.where(col("pb") === 5))
+    assert(got.map(_._1) == (0L until 192L).filter(_ % 16 == 5).toSet)
+    assert(read == entries(5).size,
       "the scan must read exactly the served partition's manifest files")
   }
 
