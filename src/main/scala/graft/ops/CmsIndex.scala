@@ -64,20 +64,18 @@ object CmsIndex {
     * prune at partition grain, so even a modest fan-out bounds a
     * retraction's I/O to the removed keys' buckets.
     */
-  val DefaultKeyBuckets = 8
+  private val KeyBuckets = 8L
 
-  private def kbOf(keyBuckets: Int): Column =
-    pmod(Hashing.hash60(col("key")), lit(keyBuckets.toLong)).cast("int")
+  /** A sketch row's key-hash partition, `kb`. */
+  private def kb: Column = pmod(Hashing.hash60(col("key")), lit(KeyBuckets)).cast("int")
 
   /** Publish the sketch table under the [[SnapTables]] generation layer —
     * the serve-during-maintenance guarantee for the one register family
     * that CAN maintain exactly (CMS counters are linear; HLL/theta
     * max-folds cannot unabsorb and stay rebuild-only by design).
     */
-  def publishSnapshot(spark: SparkSession, path: String, sk: DataFrame,
-      keyBuckets: Int = DefaultKeyBuckets): Unit =
-    SnapTables.publishInitial(spark, path, "kb",
-      sk.withColumn("kb", kbOf(keyBuckets)))
+  def publishSnapshot(spark: SparkSession, path: String, sk: DataFrame): Unit =
+    SnapTables.publishInitial(spark, path, "kb", sk.withColumn("kb", kb))
 
   /** The current generation's sketch table (logical columns only). */
   def readSnapshot(spark: SparkSession, path: String): DataFrame =
@@ -89,20 +87,8 @@ object CmsIndex {
     * their counters until they re-resolve (the [[SnapTables]] contract).
     * All-zero keys drop. Returns the generation now serving.
     */
-  def retractSnapshot(spark: SparkSession, path: String, removedSk: DataFrame,
-      keyBuckets: Int = DefaultKeyBuckets): Int = {
-    val rm = removedSk.localCheckpoint()
-    val base = SnapTables.currentGeneration(spark, path).getOrElse(
-      throw new IllegalStateException(s"CmsIndex: $path has no published generation"))
-    val affected = rm.select(kbOf(keyBuckets).as("kb")).distinct()
-      .collect().map(_.getInt(0)).sorted.toSeq
-    if (affected.isEmpty) return base
-    val cur = SnapTables.resolveAt(spark, path, "kb", base)
-      .where(col("kb").isin(affected: _*)).select(col("key"), col("sk"))
-    SnapTables.rewritePartitions(spark, path, "kb", affected,
-      retract(cur, rm).withColumn("kb", kbOf(keyBuckets)),
-      plannedBase = Some(base))
-  }
+  def retractSnapshot(spark: SparkSession, path: String, removedSk: DataFrame): Int =
+    rewriteBuckets(spark, path, removedSk.localCheckpoint())(retract)
 
   /** [[merge]] published as a generation — the ingest verb: the delta
     * sketch's keys rewrite their buckets as (current + delta) elementwise
@@ -110,20 +96,22 @@ object CmsIndex {
     * manifest-only. Linearity makes the published table equal a rebuild on
     * the unioned rows. Returns the generation now serving.
     */
-  def mergeSnapshot(spark: SparkSession, path: String, deltaSk: DataFrame,
-      keyBuckets: Int = DefaultKeyBuckets): Int = {
-    val d = deltaSk.localCheckpoint()
-    val base = SnapTables.currentGeneration(spark, path).getOrElse(
-      throw new IllegalStateException(s"CmsIndex: $path has no published generation"))
-    val affected = d.select(kbOf(keyBuckets).as("kb")).distinct()
-      .collect().map(_.getInt(0)).sorted.toSeq
-    if (affected.isEmpty) return base
-    val cur = SnapTables.resolveAt(spark, path, "kb", base)
-      .where(col("kb").isin(affected: _*)).select(col("key"), col("sk"))
-    SnapTables.rewritePartitions(spark, path, "kb", affected,
-      merge(cur, d).withColumn("kb", kbOf(keyBuckets)),
-      plannedBase = Some(base))
-  }
+  def mergeSnapshot(spark: SparkSession, path: String, deltaSk: DataFrame): Int =
+    rewriteBuckets(spark, path, deltaSk.localCheckpoint())(merge)
+
+  /** Rewrite the `kb` buckets `d`'s keys fall in as `f(current, d)`, planned
+    * and published by [[SnapTables.rewritePartitions]] against one
+    * generation. A `d` with no rows publishes nothing.
+    */
+  private def rewriteBuckets(spark: SparkSession, path: String, d: DataFrame)
+      (f: (DataFrame, DataFrame) => DataFrame): Int =
+    SnapTables.rewritePartitions(spark, path, "kb") { tbl =>
+      val affected = d.select(kb).distinct()
+        .collect().map(_.getInt(0)).sorted.toSeq
+      Option.when(affected.nonEmpty)((affected,
+        f(tbl.where(col("kb").isin(affected: _*)).select(col("key"), col("sk")), d)
+          .withColumn("kb", kb)))
+    }
 
   /** Point estimates for `probes` against every stored key group: the
     * q103 estimate surface ((key, probe, est)) from stored counters alone —

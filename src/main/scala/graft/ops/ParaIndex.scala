@@ -109,9 +109,10 @@ object ParaIndex {
     * ([[SnapTables.decrementCounts]]), re-election (here). Returns the
     * generation now serving (unchanged when no stored winner is removed).
     *
-    * The plan reads the generation current at the call and publishes only
-    * onto it: a writer that published in between makes this call throw
-    * [[SnapConflict]] instead of being silently undone.
+    * The election is a [[SnapTables.rewritePartitions]] plan, so it reads
+    * one generation and publishes only onto it: a writer that published in
+    * between makes this call throw [[SnapConflict]] instead of being
+    * silently undone.
     */
   def deleteSnapshot(
       spark: SparkSession,
@@ -120,40 +121,37 @@ object ParaIndex {
       survivors: DataFrame,
       id: Column,
       text: Column,
-      sep: String = "\n"): Int = {
-    val gen = SnapTables.currentGeneration(spark, path).getOrElse(
-      throw new IllegalStateException(s"ParaIndex: $path has no published generation"))
-    val tbl = SnapTables.resolveAt(spark, path, "hb", gen)
-    val rm = removedIds.select(col("doc_id"))
-    // one row per orphaned hash (the table holds one row per h), carrying
-    // the hb its replacement must land back into — bucket-scheme-agnostic
-    val orphaned = tbl.join(rm, Seq("doc_id"), "left_semi")
-      .select(col("h"), col("hb")).localCheckpoint()
-    val affected = orphaned.select(col("hb")).distinct()
-      .collect().map(_.getInt(0)).sorted.toSeq
-    if (affected.isEmpty) return gen
-    val contested = paraRows(survivors, id, text, sep)
-      .select(Hashing.hash60(col("para")).as("h"), col("doc_id"), col("pos"))
-      .join(orphaned.select(col("h")), Seq("h"), "left_semi")
-      // robustness, not semantics: `survivors` must not contain the removed
-      // docs, but if a caller passes the full corpus (the natural slip), an
-      // election won by a REMOVED doc would resurrect the very row the
-      // delete exists to purge — exclude them from candidacy outright, so
-      // the result equals the correct survivors rebuild either way
-      .join(rm, Seq("doc_id"), "left_anti")
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("h")).orderBy(col("doc_id"), col("pos"))
-    val reElected = contested.withColumn("__pi_rn", row_number().over(w))
-      .where(col("__pi_rn") === 1)
-      .select(col("h"), col("doc_id"), col("pos"))
-      .join(orphaned.select(col("h"), col("hb")), Seq("h"))
-    val rewritten = tbl.where(col("hb").isin(affected: _*))
-      .join(rm, Seq("doc_id"), "left_anti")
-      .select(col("h"), col("doc_id"), col("pos"), col("hb"))
-      .unionByName(reElected.select(col("h"), col("doc_id"), col("pos"), col("hb")))
-    SnapTables.rewritePartitions(spark, path, "hb", affected, rewritten,
-      plannedBase = Some(gen))
-  }
+      sep: String = "\n"): Int =
+    SnapTables.rewritePartitions(spark, path, "hb") { tbl =>
+      val rm = removedIds.select(col("doc_id"))
+      // one row per orphaned hash (the table holds one row per h), carrying
+      // the hb its replacement must land back into — bucket-scheme-agnostic
+      val orphaned = tbl.join(rm, Seq("doc_id"), "left_semi")
+        .select(col("h"), col("hb")).localCheckpoint()
+      val affected = orphaned.select(col("hb")).distinct()
+        .collect().map(_.getInt(0)).sorted.toSeq
+      Option.when(affected.nonEmpty) {
+        val contested = paraRows(survivors, id, text, sep)
+          .select(Hashing.hash60(col("para")).as("h"), col("doc_id"), col("pos"))
+          .join(orphaned.select(col("h")), Seq("h"), "left_semi")
+          // robustness, not semantics: `survivors` must not contain the removed
+          // docs, but if a caller passes the full corpus (the natural slip), an
+          // election won by a REMOVED doc would resurrect the very row the
+          // delete exists to purge — exclude them from candidacy outright, so
+          // the result equals the correct survivors rebuild either way
+          .join(rm, Seq("doc_id"), "left_anti")
+        val w = org.apache.spark.sql.expressions.Window
+          .partitionBy(col("h")).orderBy(col("doc_id"), col("pos"))
+        val reElected = contested.withColumn("__pi_rn", row_number().over(w))
+          .where(col("__pi_rn") === 1)
+          .select(col("h"), col("doc_id"), col("pos"))
+          .join(orphaned.select(col("h"), col("hb")), Seq("h"))
+        (affected, tbl.where(col("hb").isin(affected: _*))
+          .join(rm, Seq("doc_id"), "left_anti")
+          .select(col("h"), col("doc_id"), col("pos"), col("hb"))
+          .unionByName(reElected.select(col("h"), col("doc_id"), col("pos"), col("hb"))))
+      }
+    }
 
   /** Scrub an INGEST batch against the stored table — the serve path:
     * every batch paragraph whose hash is in the table is cut; among the

@@ -11,7 +11,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 /** A publication lost to concurrency under the single-writer protocol:
   * another writer holds (or just released) the claim, or the pointer
-  * advanced past the generation the caller planned against. Every such
+  * advanced past the generation the verb planned against. Every such
   * loss is TRANSIENT BY CONSTRUCTION — the table is in a consistent
   * state, nothing of the loser's was published, and re-resolving and
   * re-running the verb can succeed — which is exactly what
@@ -257,15 +257,15 @@ object SnapTables {
 
   /** Run a publish verb, retrying on [[SnapConflict]] with doubling
     * backoff — the multi-writer convenience the enforcement layer makes
-    * safe: every verb re-resolves its base internally (or re-checks via
-    * `plannedBase`), so a lost race leaves the table consistent and a
-    * plain re-run is the correct response. Wrap the WHOLE verb call
-    * (`retryingPublish() { deleteByKey(...) }`), never a body holding a
-    * pre-resolved frame — a stale plan is exactly what the conflict
-    * rejected. After `attempts` losses the last conflict propagates with
-    * its operator instruction intact (a crashed writer's orphaned claim
-    * never self-resolves — retry exhaustion is how it surfaces to the
-    * operator, who then runs [[reclaimStale]]). Deterministic backoff, no
+    * safe: every verb reads its base generation internally, plans against
+    * it and publishes only onto it, so a lost race leaves the table
+    * consistent and a plain re-run is the correct response. Wrap the WHOLE
+    * verb call (`retryingPublish() { deleteByKey(...) }`), never a body
+    * holding a pre-resolved frame — a stale plan is exactly what the
+    * conflict rejected. After `attempts` losses the last conflict
+    * propagates with its operator instruction intact (a crashed writer's
+    * orphaned claim never self-resolves — retry exhaustion is how it
+    * surfaces to the operator, who then runs [[reclaimStale]]). Deterministic backoff, no
     * jitter: two retrying writers cannot lockstep-collide here because
     * the claim itself serializes them — whoever arrives second loses
     * THAT round and succeeds on a later one.
@@ -714,41 +714,47 @@ object SnapTables {
       s"generations ($fromGen, $toGen] of $path", last.statsCol, last.zones)
   }
 
-  /** Bounded-I/O partition rewrite with snapshot-isolated publication: the
-    * `affected` partitions' content becomes `survivors` (which must cover
-    * ONLY those partitions) in generation N+1, every other partition
-    * carries generation N's file list forward untouched. New files are
-    * APPENDED into the affected partition directories (parquet task files
-    * have unique UUID names, so nothing collides and nothing is deleted);
-    * the diff of before/after directory listings identifies them — sound
-    * under the single-writer contract. Partitions whose survivors are
-    * empty simply vanish from the new manifest (the emptied-directory-drop
-    * semantics without the drop). `survivors` is computed once, by the
-    * write; the refusals read the diff after it (rows outside `affected`,
-    * or nothing left to serve anywhere), delete exactly the files the
-    * write added, and throw. A crash ANYWHERE before the final
-    * pointer rename leaves the current generation fully intact — the
-    * orphaned new files are invisible to manifest readers and reclaimed by
-    * [[expire]]. Returns the published generation number.
+  /** Bounded-I/O partition rewrite with snapshot-isolated publication,
+    * planned and published against ONE generation: the verb reads the
+    * current generation N and hands `plan` its frame (`resolveAt(N)`).
+    * `None` publishes nothing and returns N. `Some((affected, survivors))`
+    * makes the `affected` partitions' content `survivors` (which must cover
+    * ONLY those partitions) in generation N+1, and every other partition
+    * carries generation N's file list forward untouched. The publication
+    * claims N+1 and re-checks that the pointer is still at N, so a plan that
+    * another writer's publication outran throws [[SnapConflict]] instead of
+    * silently undoing that writer's change (the epoch discipline: planned
+    * against a recorded input version, committed only onto it). A `plan`
+    * that throws takes no claim and writes nothing. Returns the generation
+    * now serving.
     */
-  def rewritePartitions(spark: SparkSession, path: String, partCol: String,
-      affected: Seq[Int], survivors: DataFrame,
-      plannedBase: Option[Int] = None): Int = {
+  def rewritePartitions(spark: SparkSession, path: String, partCol: String)
+      (plan: DataFrame => Option[(Seq[Int], DataFrame)]): Int = {
+    val gen = publishedGeneration(spark, path)
+    plan(resolveAt(spark, path, partCol, gen)).fold(gen) {
+      case (affected, survivors) =>
+        rewriteAt(spark, path, partCol, gen, affected, survivors)
+    }
+  }
+
+  /** Publish `survivors` as the `affected` partitions of generation
+    * `gen`+1 under the claim on it. New files are APPENDED into the affected
+    * partition directories (parquet task files have unique UUID names, so
+    * nothing collides and nothing is deleted); the diff of before/after
+    * directory listings identifies them — sound under the single-writer
+    * contract. Partitions whose survivors are empty simply vanish from the
+    * new manifest (the emptied-directory-drop semantics without the drop).
+    * `survivors` is computed once, by the write; the refusals read the diff
+    * after it (rows outside `affected`, or nothing left to serve anywhere),
+    * delete exactly the files the write added, and throw. A crash ANYWHERE
+    * before the final pointer rename leaves generation `gen` fully intact —
+    * the orphaned new files are invisible to manifest readers and reclaimed
+    * by [[expire]].
+    */
+  private def rewriteAt(spark: SparkSession, path: String, partCol: String,
+      gen: Int, affected: Seq[Int], survivors: DataFrame): Int = {
     val root = new Path(path)
     val hfs = fs(spark, path)
-    val gen = publishedGeneration(spark, path)
-    // `plannedBase` closes the STALE-PLAN lost update the claim alone
-    // cannot (the two-concurrent-writers spec's second failure mode): a
-    // verb that resolved generation N, computed survivors against N, then
-    // arrived here AFTER another writer published N+1 would re-read gen =
-    // N+1, claim N+2 cleanly, and publish survivors that silently UNDO the
-    // other writer's changes. Callers that derive survivors from the
-    // current generation pass the generation they planned against; a
-    // mismatch fails loudly with a re-resolve instruction.
-    for (pb <- plannedBase) if (pb != gen) throw new SnapConflict(
-      s"SnapTables: $path advanced from generation $pb to $gen since the " +
-        "caller's plan was derived — its survivors no longer describe the " +
-        "current state; re-resolve and retry")
     withClaim(spark, hfs, path, Some(gen), "the rewrite",
         java.util.UUID.randomUUID().toString) {
       val m = readManifestFull(hfs, root, gen)
@@ -797,19 +803,9 @@ object SnapTables {
     * generation now serving (unchanged when no stored row matched).
     */
   def deleteByKey(spark: SparkSession, path: String, partCol: String,
-      keyCol: String, removedKeys: DataFrame): Int = {
-    // capture the PLANNED base first: the plan below derives survivors from
-    // this generation, and rewritePartitions refuses to publish them onto
-    // any other (the stale-plan guard)
-    val base = publishedGeneration(spark, path)
-    deleteByKeyPlan(resolveAt(spark, path, partCol, base),
-        partCol, keyCol, removedKeys)
-      .map { case (affected, survivors) =>
-        rewritePartitions(spark, path, partCol, affected, survivors,
-          plannedBase = Some(base))
-      }
-      .getOrElse(base)
-  }
+      keyCol: String, removedKeys: DataFrame): Int =
+    rewritePartitions(spark, path, partCol)(
+      deleteByKeyPlan(_, partCol, keyCol, removedKeys))
 
   /** Exact count RETRACTION on an additive side table (the q282
     * NB-retract precedent): `deltas` carries per-key counts to subtract
@@ -826,18 +822,11 @@ object SnapTables {
     * generation now serving.
     */
   def decrementCounts(spark: SparkSession, path: String, partCol: String,
-      keyCols: Seq[String], countCol: String, deltas: DataFrame): Int = {
-    val base = publishedGeneration(spark, path)
+      keyCols: Seq[String], countCol: String, deltas: DataFrame): Int =
     // refused batches throw in the plan, BEFORE any file is written, so the
     // generation never advances
-    decrementPlan(resolveAt(spark, path, partCol, base), partCol,
-        keyCols, countCol, deltas, at = s"$path (generation $base)")
-      .map { case (affected, survivors) =>
-        rewritePartitions(spark, path, partCol, affected, survivors,
-          plannedBase = Some(base))
-      }
-      .getOrElse(base)
-  }
+    rewritePartitions(spark, path, partCol)(
+      decrementPlan(_, partCol, keyCols, countCol, deltas, at = path))
 
   /** The key-filter delete PLAN behind [[deleteByKey]] — one semi-join to
     * find the affected partitions, one anti-join for their survivors. None
@@ -953,35 +942,34 @@ object SnapTables {
     // two increment rows for one key must add their SUM once
     val inc = deltas.groupBy((partCol +: keyCols).map(col): _*)
       .agg(sum(col(countCol)).as(countCol)).select(cols: _*).localCheckpoint()
-    val base = publishedGeneration(spark, path)
     val affected = inc.select(col(partCol)).distinct()
       .collect().map(_.getInt(0)).sorted.toSeq
-    if (affected.isEmpty) return base
-    val stored = resolveAt(spark, path, partCol, base)
-    // the touched-partition rewrite below re-selects EXACTLY (partCol,
-    // keyCols, countCol) — any extra stored column would be silently
-    // dropped from rewritten partitions while untouched partitions carry
-    // it forward manifest-only, a mixed-schema generation. Enforce, don't
-    // document (the bucketing-mismatch guard's discipline).
-    val expectCols = (partCol +: keyCols :+ countCol).sorted
-    require(stored.columns.sorted.toSeq == expectCols,
-      s"SnapTables.mergeCounts: stored table at $path has columns " +
-        s"[${stored.columns.sorted.mkString(",")}] but the merge carries " +
-        s"only [${expectCols.mkString(",")}] — the extra columns would be " +
-        "dropped from rewritten partitions, a mixed-schema generation")
-    val mismatched = stored.select((col(partCol).as("__sp") +: keyCols.map(col)): _*)
-      .join(inc.select((col(partCol).as("__dp") +: keyCols.map(col)): _*), keyCols)
-      .where(col("__sp") =!= col("__dp")).limit(1).collect()
-    require(mismatched.isEmpty,
-      s"SnapTables.mergeCounts: delta key ${mismatched.headOption.getOrElse("")} is " +
-        s"stored under a different $partCol at $path — the caller's bucketing " +
-        "disagrees with the publisher's and would split the key across partitions")
-    val survivors = stored.where(col(partCol).isin(affected: _*))
-      .select(cols: _*).unionByName(inc)
-      .groupBy((partCol +: keyCols).map(col): _*)
-      .agg(sum(col(countCol)).as(countCol))
-    rewritePartitions(spark, path, partCol, affected, survivors,
-      plannedBase = Some(base))
+    rewritePartitions(spark, path, partCol) { stored =>
+      Option.when(affected.nonEmpty) {
+        // the touched-partition rewrite below re-selects EXACTLY (partCol,
+        // keyCols, countCol) — any extra stored column would be silently
+        // dropped from rewritten partitions while untouched partitions carry
+        // it forward manifest-only, a mixed-schema generation. Enforce, don't
+        // document (the bucketing-mismatch guard's discipline).
+        val expectCols = (partCol +: keyCols :+ countCol).sorted
+        require(stored.columns.sorted.toSeq == expectCols,
+          s"SnapTables.mergeCounts: stored table at $path has columns " +
+            s"[${stored.columns.sorted.mkString(",")}] but the merge carries " +
+            s"only [${expectCols.mkString(",")}] — the extra columns would be " +
+            "dropped from rewritten partitions, a mixed-schema generation")
+        val mismatched = stored.select((col(partCol).as("__sp") +: keyCols.map(col)): _*)
+          .join(inc.select((col(partCol).as("__dp") +: keyCols.map(col)): _*), keyCols)
+          .where(col("__sp") =!= col("__dp")).limit(1).collect()
+        require(mismatched.isEmpty,
+          s"SnapTables.mergeCounts: delta key ${mismatched.headOption.getOrElse("")} is " +
+            s"stored under a different $partCol at $path — the caller's bucketing " +
+            "disagrees with the publisher's and would split the key across partitions")
+        (affected, stored.where(col(partCol).isin(affected: _*))
+          .select(cols: _*).unionByName(inc)
+          .groupBy((partCol +: keyCols).map(col): _*)
+          .agg(sum(col(countCol)).as(countCol)))
+      }
+    }
   }
 
   /** The (partition value → file names) listing a generation serves — the
@@ -1111,42 +1099,22 @@ object SnapTables {
     * a partition touched by many successive rewrites accretes a file chain
     * whose per-file open cost eventually dominates its scan (the classic
     * small-file problem; Iceberg's `rewrite_data_files` re-derived on plain
-    * parquet). Partitions whose CURRENT manifest references at least
-    * `minFiles` files are rewritten into ~one file each and published as
-    * generation N+1 with byte-identical logical content; partitions already
-    * at a single file carry their manifest entries forward untouched (zero
+    * parquet). Partitions whose CURRENT manifest references two or more
+    * files are rewritten into ~one file each and published as generation
+    * N+1 with byte-identical logical content; partitions already at a
+    * single file carry their manifest entries forward untouched (zero
     * I/O). Readers of generation N keep serving its files (nothing is
     * deleted until [[expire]]); a crash anywhere leaves generation N
     * serving. Returns the published generation (unchanged when nothing
     * needed compaction).
     */
-  def compactPartitions(spark: SparkSession, path: String, partCol: String,
-      minFiles: Int = 2, targetBytes: Long = Long.MaxValue): Int = {
-    require(minFiles >= 2,
-      s"SnapTables: minFiles=$minFiles would rewrite single-file partitions for nothing")
-    require(targetBytes > 0, s"SnapTables: targetBytes=$targetBytes")
+  def compactPartitions(spark: SparkSession, path: String, partCol: String): Int = {
     val gen = publishedGeneration(spark, path)
-    val hfs = fs(spark, path)
-    val cur = readManifestFull(hfs, new Path(path), gen).entries
-    // binpack criterion (Iceberg rewrite_data_files semantics): rewrite a
-    // partition only when at least two of its files are BELOW targetBytes —
-    // those would actually fold together. A partition holding minFiles
-    // already-target-sized files gains nothing from a rewrite and is
-    // skipped; the default targetBytes=MaxValue makes every file "small"
-    // and preserves the historical count-only behavior. Size lookups are
-    // manifest-bounded (one getFileStatus per candidate file, driver-side).
-    val affected = cur.collect {
-      case (v, files) if files.size >= minFiles &&
-        files.count { n =>
-          val p = new Path(new Path(path), s"$partCol=$v/$n")
-          targetBytes == Long.MaxValue || hfs.getFileStatus(p).getLen < targetBytes
-        } >= 2 => v
-    }.toSeq.sorted
-    if (affected.isEmpty) return gen
-    val survivors = resolveAt(spark, path, partCol, gen)
-      .where(col(partCol).isin(affected: _*))
-    rewritePartitions(spark, path, partCol, affected, survivors,
-      plannedBase = Some(gen))
+    val affected = readManifestFull(fs(spark, path), new Path(path), gen).entries
+      .collect { case (v, files) if files.size >= 2 => v }.toSeq.sorted
+    if (affected.isEmpty) gen
+    else rewriteAt(spark, path, partCol, gen, affected,
+      resolveAt(spark, path, partCol, gen).where(col(partCol).isin(affected: _*)))
   }
 
   /** Publish a RETAINED prior generation's content as the new CURRENT
@@ -1170,10 +1138,9 @@ object SnapTables {
     * Fails loudly when `toGen`'s manifest was dropped or any file it
     * references was reclaimed (an expire already ran past it) — a
     * rollback target must be inside the retention window, the exact
-    * timing decision [[expire]]'s `keepGens`/`minAgeMs` dials exist to
-    * control. Serializes with every other verb through the claim
-    * protocol. Returns the published generation (no-op at the current
-    * generation).
+    * timing decision [[expire]]'s `keepGens` exists to control.
+    * Serializes with every other verb through the claim protocol. Returns
+    * the published generation (no-op at the current generation).
     */
   def rollback(spark: SparkSession, path: String, partCol: String,
       toGen: Int): Int = {
@@ -1211,19 +1178,12 @@ object SnapTables {
     * drained (the operator timing decision snapshot expiry exists to
     * isolate).
     *
-    * `minAgeMs` is the AGE floor (Iceberg's `older_than` alongside
-    * retain-last-N, re-derived): a generation whose manifest mtime is
-    * younger than `minAgeMs` survives even outside the `keepGens` window.
-    * Without it, a fast maintenance loop — streamed ingest flips a
-    * generation per micro-batch — expires a generation SECONDS after it
-    * stops being current, while a long-running reader's resolved plan
-    * still holds its file list; count-based retention alone cannot bound
-    * reader lifetime. Default 0 keeps the historical count-only behavior
-    * (specs that pin exact reclamation set it explicitly or rely on the
-    * default).
+    * Retention is by count alone: an operator whose readers can outlive
+    * `keepGens` publications (a streamed ingest flips a generation per
+    * micro-batch) runs expire less often or keeps more generations.
     */
   def expire(spark: SparkSession, path: String, partCol: String,
-      keepGens: Int = 2, minAgeMs: Long = 0L): Unit = {
+      keepGens: Int = 2): Unit = {
     require(keepGens >= 1, "SnapTables: must keep at least the current generation")
     val root = new Path(path)
     val hfs = fs(spark, path)
@@ -1235,17 +1195,8 @@ object SnapTables {
     // crash mid-sweep leaves a marker above the pointer → reclaimStale.
     withClaim(spark, hfs, path, Some(gen), "expire",
         s"expire:${java.util.UUID.randomUUID()}") {
-      val mdir0 = new Path(root, ManifestDir)
-      val youngFloor = System.currentTimeMillis() - minAgeMs
-      val young: Seq[Int] =
-        if (minAgeMs <= 0 || !hfs.exists(mdir0)) Nil
-        else hfs.listStatus(mdir0).toSeq
-          .filter(s => s.getPath.getName.startsWith("gen-")
-            && s.getPath.getName.endsWith(".tsv")
-            && s.getModificationTime >= youngFloor)
-          .map(_.getPath.getName.stripPrefix("gen-").stripSuffix(".tsv").toInt)
-      val keep = ((((gen - keepGens + 1) max 0) min
-        (if (young.isEmpty) Int.MaxValue else young.min)) to gen)
+      val mdir = new Path(root, ManifestDir)
+      val keep = ((gen - keepGens + 1) max 0) to gen
       // a generation inside the keep window may already be GONE — a prior
       // expire with a tighter keepGens dropped it; that is not corruption
       // (nothing can resurrect it), so reference only the manifests that
@@ -1253,7 +1204,7 @@ object SnapTables {
       // its absence means the table cannot serve, fail loudly via readManifestFull.
       // keyed like the listing below: by the directory's value as written
       val referenced: Set[(String, String)] = keep.flatMap { g =>
-        if (g != gen && !hfs.exists(new Path(mdir0, genName(g)))) Nil
+        if (g != gen && !hfs.exists(new Path(mdir, genName(g)))) Nil
         else readManifestFull(hfs, root, g).entries.toSeq.flatMap { case (v, names) =>
           names.map(v.toString -> _)
         }
@@ -1266,7 +1217,6 @@ object SnapTables {
         if (hfs.listStatus(dir).forall(s => s.getPath.getName.startsWith(".")))
           hfs.delete(dir, true)
       }
-      val mdir = new Path(root, ManifestDir)
       hfs.listStatus(mdir).foreach { s =>
         val n = s.getPath.getName
         if (n.startsWith("gen-") && n.endsWith(".tsv")

@@ -2438,15 +2438,9 @@ object DedupQueries {
     graft.ops.SnapTables.resolve(s, paraSnapshotPath(s, dir), "hb")
       .select(col("h"), col("doc_id"), col("pos"))
 
-  /** The q415/q416/q417 lifecycle table: winnow fingerprints of the 6/7
-    * base corpus published as gen 0, the 1/7 remainder APPENDED as gen 1
-    * ([[graft.ops.SnapTables.appendPartitions]] — delta-only I/O), the
-    * accreted partitions folded by [[graft.ops.SnapTables.compactPartitions]]
-    * as gen 2. One deterministic setup, three serveable generations.
-    */
-  /** The 6/7-base winnow fingerprint frame every lifecycle leg (q415–q417,
-    * q418, q419) publishes as generation 0 — one shared materialized build
-    * instead of three (memoFrame).
+  /** The 6/7-base winnow fingerprint frame, with its `hb` partition, that
+    * every lifecycle leg (q415–q417, q418, q419) publishes as generation 0
+    * — one shared materialized build instead of three (memoFrame).
     */
   private def winnowFpBase(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
@@ -2455,7 +2449,15 @@ object DedupQueries {
         Tables.load(s, dir, "documents")
           .where(pmod(col("doc_id"), lit(7)) =!= 3),
         col("doc_id"), col("text"), k = 3, w = 4)
-    }
+    }.withColumn("hb", winnowHb(col("h")))
+
+  /** A delta's winnow fingerprints with their `hb` partition: what the
+    * lifecycle legs append (q415–q417) or ingest per micro-batch (q418,
+    * q419).
+    */
+  private def winnowFpOf(src: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    graft.ops.WinnowIndex.build(src, col("doc_id"), col("text"),
+      k = 3, w = 4).withColumn("hb", winnowHb(col("h")))
 
   private def winnowHb(c: org.apache.spark.sql.Column) = pmod(c,
     lit(graft.ops.WinnowIndex.DefaultHashBuckets.toLong)).cast("int")
@@ -2473,17 +2475,19 @@ object DedupQueries {
         .repartition(2).write.mode("overwrite").parquet(p)
     }
 
+  /** The q415/q416/q417 lifecycle table: winnow fingerprints of the 6/7
+    * base corpus published as gen 0, the 1/7 remainder APPENDED as gen 1
+    * ([[graft.ops.SnapTables.appendPartitions]] — delta-only I/O), the
+    * accreted partitions folded by [[graft.ops.SnapTables.compactPartitions]]
+    * as gen 2. One deterministic setup, three serveable generations.
+    */
   private def winnowLifecyclePath(s: org.apache.spark.sql.SparkSession,
       dir: String): String =
     SimilarityQueries.memoPath("winnowlife", dir) { p =>
       val docs = Tables.load(s, dir, "documents")
-      def fpOf(src: org.apache.spark.sql.DataFrame) =
-        graft.ops.WinnowIndex.build(src, col("doc_id"), col("text"),
-          k = 3, w = 4).withColumn("hb", winnowHb(col("h")))
-      graft.ops.SnapTables.publishInitial(s, p, "hb",
-        winnowFpBase(s, dir).withColumn("hb", winnowHb(col("h"))))
+      graft.ops.SnapTables.publishInitial(s, p, "hb", winnowFpBase(s, dir))
       graft.ops.SnapTables.appendPartitions(s, p, "hb",
-        fpOf(docs.where(pmod(col("doc_id"), lit(7)) === 3)))
+        winnowFpOf(docs.where(pmod(col("doc_id"), lit(7)) === 3)))
       graft.ops.SnapTables.compactPartitions(s, p, "hb")
       ()
     }
@@ -2496,18 +2500,14 @@ object DedupQueries {
   private def winnowStreamSnapPath(s: org.apache.spark.sql.SparkSession,
       dir: String): String =
     SimilarityQueries.memoPath("winnowstreamsnap", dir) { p =>
-      def fpOf(src: org.apache.spark.sql.DataFrame) =
-        graft.ops.WinnowIndex.build(src, col("doc_id"), col("text"),
-          k = 3, w = 4).withColumn("hb", winnowHb(col("h")))
-      graft.ops.SnapTables.publishInitial(s, p, "hb",
-        winnowFpBase(s, dir).withColumn("hb", winnowHb(col("h"))))
+      graft.ops.SnapTables.publishInitial(s, p, "hb", winnowFpBase(s, dir))
       val q = graft.streaming.Pipelines.snapshotIngest(
         s.readStream.schema("doc_id BIGINT, text STRING")
           .option("maxFilesPerTrigger", 1)
           .parquet(winnowStreamSrcDir(s, dir)),
         p, "hb",
         checkpointPath = graft.Scratch.dir("graft-winnow-snap-ckpt"),
-        xform = fpOf)
+        xform = winnowFpOf)
       q.awaitTermination()
     }
 
@@ -2521,18 +2521,14 @@ object DedupQueries {
       dir: String): String =
     SimilarityQueries.memoPath("winnowlifee2e", dir) { p =>
       val docs = Tables.load(s, dir, "documents")
-      def fpOf(src: org.apache.spark.sql.DataFrame) =
-        graft.ops.WinnowIndex.build(src, col("doc_id"), col("text"),
-          k = 3, w = 4).withColumn("hb", winnowHb(col("h")))
-      graft.ops.SnapTables.publishInitial(s, p, "hb",
-        winnowFpBase(s, dir).withColumn("hb", winnowHb(col("h"))))
+      graft.ops.SnapTables.publishInitial(s, p, "hb", winnowFpBase(s, dir))
       graft.streaming.Pipelines.snapshotIngest(
         s.readStream.schema("doc_id BIGINT, text STRING")
           .option("maxFilesPerTrigger", 1)
           .parquet(winnowStreamSrcDir(s, dir)),
         p, "hb",
         checkpointPath = graft.Scratch.dir("graft-winnow-life-ckpt"),
-        xform = fpOf).awaitTermination()
+        xform = winnowFpOf).awaitTermination()
       graft.ops.SnapTables.deleteByKey(s, p, "hb", "doc_id",
         docs.where(pmod(col("doc_id"), lit(11)) === 0).select(col("doc_id")))
       graft.ops.SnapTables.compactPartitions(s, p, "hb")

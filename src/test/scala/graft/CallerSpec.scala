@@ -145,6 +145,42 @@ class CallerSpec extends AnyFunSuite {
   private def uncalled(name: String): Boolean =
     nameCount.getOrElse(name, 0) <= defCount.getOrElse(name, 0)
 
+  /** (def, parameter) for each parameter with a default value of a public
+    * def in `src`. A def's parameter lists run from its name to the first
+    * `{` or `=` (not `=>`) outside brackets; a parameter has a default when
+    * an `=` that is not part of `=>` sits outside its own brackets.
+    */
+  private def defaultedParams(src: String): Seq[(String, String)] =
+    DefSite.findAllMatchIn(src).toSeq
+      .filter(m => Hidden.findFirstIn(Option(m.group(1)).getOrElse("")).isEmpty)
+      .flatMap { m =>
+        val params = Seq.newBuilder[String]
+        val param = new StringBuilder
+        def assignAt(t: String, i: Int) = t(i) == '=' && !t.startsWith("=>", i)
+        var depth = 0
+        var i = m.end
+        while (i < src.length && !(depth == 0 && (src(i) == '{' || assignAt(src, i)))) {
+          val c = src(i)
+          if (c == ')' || c == ']') depth -= 1
+          if (depth == 0 || (depth == 1 && c == ',')) {
+            if (param.nonEmpty) params += param.toString
+            param.clear()
+          } else param += c
+          if (c == '(' || c == '[') depth += 1
+          i += 1
+        }
+        params.result().flatMap { p =>
+          var d = 0
+          val hasDefault = p.indices.exists { j =>
+            if ("([".contains(p(j))) d += 1
+            if (")]".contains(p(j))) d -= 1
+            d == 0 && assignAt(p, j)
+          }
+          if (hasDefault) Some(m.group(2) -> p.takeWhile(_ != ':').trim.split("\\s+").last)
+          else None
+        }
+      }
+
   test("every public def under src/main is named outside its definitions in src/main or perfbench") {
     val dead = publicNames.filter(n => uncalled(n) && !Allowed.contains(n))
     val sites = defs.collect { case (n, f, true) if dead(n) => s"$f: $n" }.sorted
@@ -166,6 +202,21 @@ class CallerSpec extends AnyFunSuite {
     assert(gone.isEmpty, s"allowed names no longer defined: $gone")
     assert(called.isEmpty, s"allowed names that gained a caller (drop them from Allowed): $called")
     assert(Allowed.values.forall(_.trim.nonEmpty), "every allowed name carries a reason")
+  }
+
+  test("every default parameter of a public SnapTables def is passed by name in src/main or perfbench") {
+    val (file, src) = main.find(_._1.endsWith("ops/SnapTables.scala"))
+      .getOrElse(fail("no SnapTables.scala under src/main"))
+    val defaulted = defaultedParams(src)
+    assert(defaulted.map(_._2).contains("keepGens"), s"the scan found only $defaulted")
+    val others = callers.filterNot(_._1 == file).map(_._2)
+    val unset = defaulted.filterNot { case (d, p) =>
+      Allowed.contains(d) ||
+        others.exists(s => raw"\b$p\s*=(?![=>])".r.findFirstIn(s).isDefined)
+    }
+    assert(unset.isEmpty,
+      s"defaults no caller sets (drop the parameter, or pass it by name where a caller varies it):" +
+        unset.map { case (d, p) => s"$d($p)" }.mkString("\n  ", "\n  ", ""))
   }
 
   test("the objects that define main are exactly the listed entry points") {

@@ -297,9 +297,10 @@ class SnapTablesSpec extends AnyFunSuite with SparkSpec {
     // while declaring only partition 0 affected — those rows would be
     // written but never manifest-referenced
     val ex = intercept[IllegalArgumentException] {
-      SnapTables.rewritePartitions(spark, dir, "pb", Seq(0),
-        table.where(col("pb") =!= 2)
-          .union(Seq((99L, "v99", 7)).toDF("key", "payload", "pb")))
+      SnapTables.rewritePartitions(spark, dir, "pb") { tbl =>
+        Some((Seq(0), tbl.where(col("pb") =!= 2)
+          .union(Seq((99L, "v99", 7)).toDF("key", "payload", "pb"))))
+      }
     }
     assert(ex.getMessage.contains("outside the affected set"))
     assert(ex.getMessage.contains("1,7"), ex.getMessage)
@@ -313,6 +314,23 @@ class SnapTablesSpec extends AnyFunSuite with SparkSpec {
     assert(!fsOf(dir).exists(new Path(dir, "pb=7")),
       "the directory the refused write created must be gone")
     assert(claimMarkers(dir).isEmpty)
+  }
+
+  test("rewritePartitions: a plan that throws or returns None publishes nothing, claims nothing, writes nothing") {
+    val dir = tmpDir("snap-noplan")
+    SnapTables.publishInitial(spark, dir, "pb", table)
+    val files = dataFiles(dir)
+    val ex = intercept[IllegalStateException] {
+      SnapTables.rewritePartitions(spark, dir, "pb") { _ =>
+        throw new IllegalStateException("plan refused")
+      }
+    }
+    assert(ex.getMessage == "plan refused")
+    assert(SnapTables.rewritePartitions(spark, dir, "pb")(_ => None) == 0)
+    assert(SnapTables.currentGeneration(spark, dir).contains(0))
+    assert(claimMarkers(dir).isEmpty, s"claim markers left: ${claimMarkers(dir)}")
+    assert(dataFiles(dir) == files, s"a plan-only call wrote ${dataFiles(dir) -- files}")
+    assert(rows(SnapTables.resolve(spark, dir, "pb")) == allRows)
   }
 
   test("a null partition value is refused and its write undone") {
@@ -641,46 +659,6 @@ class SnapTablesSpec extends AnyFunSuite with SparkSpec {
     assert(ex.getMessage.contains("claimed by another writer"))
   }
 
-  test("expire minAgeMs: a young generation outside keepGens survives; age 0 reclaims it") {
-    import spark.implicits._
-    val dir = tmpDir("snap-age")
-    SnapTables.publishInitial(spark, dir, "pb", table)
-    SnapTables.deleteByKey(spark, dir, "pb", "key", Seq(4L).toDF("key"))
-    SnapTables.deleteByKey(spark, dir, "pb", "key", Seq(8L).toDF("key"))
-    // gen 0 and 1 are outside keepGens=1 but seconds old — a long-running
-    // reader may still hold their file lists; the age floor keeps them
-    SnapTables.expire(spark, dir, "pb", keepGens = 1, minAgeMs = 3600L * 1000)
-    assert(rows(SnapTables.resolveAt(spark, dir, "pb", 0)) == allRows,
-      "a young expired-by-count generation must stay readable")
-    assert(rows(SnapTables.resolveAt(spark, dir, "pb", 1)) == allRows - ((4L, "v4")))
-    // operator decision: readers drained → count-only retention reclaims
-    SnapTables.expire(spark, dir, "pb", keepGens = 1)
-    intercept[IllegalArgumentException] {
-      SnapTables.resolveAt(spark, dir, "pb", 0)
-    }
-    assert(rows(SnapTables.resolve(spark, dir, "pb")) ==
-      allRows -- Set((4L, "v4"), (8L, "v8")))
-  }
-
-  test("compactPartitions targetBytes binpack: partitions of already-large files are left alone") {
-    import spark.implicits._
-    val dir = tmpDir("snap-binpack")
-    SnapTables.publishInitial(spark, dir, "pb", table)
-    SnapTables.appendPartitions(spark, dir, "pb",
-      Seq((13L, "v13", 1)).toDF("key", "payload", "pb"))
-    assert(SnapTables.manifestEntries(spark, dir, 1)(1).size == 2)
-    // every parquet file here is >1 byte → none is "small" under
-    // targetBytes=1 → nothing would fold → no-op at the same generation
-    assert(SnapTables.compactPartitions(spark, dir, "pb", minFiles = 2,
-      targetBytes = 1L) == 1)
-    // with an honest target the two small files fold; content-invariant
-    val expect = rows(SnapTables.resolve(spark, dir, "pb"))
-    assert(SnapTables.compactPartitions(spark, dir, "pb", minFiles = 2,
-      targetBytes = 64L * 1024 * 1024) == 2)
-    assert(SnapTables.manifestEntries(spark, dir, 2)(1).size == 1)
-    assert(rows(SnapTables.resolve(spark, dir, "pb")) == expect)
-  }
-
   test("mergeCounts: additive increment as a generation; bucketing mismatch refused before publishing") {
     import spark.implicits._
     val dir = tmpDir("snap-merge")
@@ -740,7 +718,7 @@ class SnapTablesSpec extends AnyFunSuite with SparkSpec {
       s"$ctx: loser must fail loudly at the claim/re-check, got: $e")
     val m = e.getMessage
     assert(m.contains("claimed by another writer") ||
-      m.contains("advanced past") || m.contains("advanced from") ||
+      m.contains("advanced past") ||
       m.contains("empty claim marker") || m.contains("lost the claim race"),
       s"$ctx: unexpected loser error: $m")
   }
@@ -1072,7 +1050,7 @@ class SnapTablesSpec extends AnyFunSuite with SparkSpec {
     assert(claimMarkers(dir).isEmpty)
   }
 
-  test("conflict losses are typed: claim, stale plannedBase, and pointer re-check all throw SnapConflict") {
+  test("conflict losses are typed: a held claim and a stale plan both throw SnapConflict") {
     import spark.implicits._
     val dir = tmpDir("snap-conflict-type")
     SnapTables.publishInitial(spark, dir, "pb", table)
@@ -1084,18 +1062,21 @@ class SnapTablesSpec extends AnyFunSuite with SparkSpec {
     }
     assert(atClaim.getMessage.contains("claimed by another writer"))
     SnapTables.reclaimStale(spark, dir)
-    // a plan derived against a generation the table has left loses at the
-    // plannedBase re-check
-    SnapTables.appendPartitions(spark, dir, "pb",
-      Seq((13L, "v13", 1)).toDF("key", "payload", "pb"))
-    val atBase = intercept[graft.ops.SnapConflict] {
-      SnapTables.rewritePartitions(spark, dir, "pb", Seq(1),
-        Seq((14L, "v14", 1)).toDF("key", "payload", "pb"),
-        plannedBase = Some(0))
+    // a plan outrun by another writer's publication loses at the pointer
+    // re-check under the rewrite's claim: it planned against generation 0
+    val stale = intercept[graft.ops.SnapConflict] {
+      SnapTables.rewritePartitions(spark, dir, "pb") { _ =>
+        SnapTables.appendPartitions(spark, dir, "pb",
+          Seq((13L, "v13", 1)).toDF("key", "payload", "pb"))
+        Some((Seq(1), Seq((14L, "v14", 1)).toDF("key", "payload", "pb")))
+      }
     }
-    assert(atBase.getMessage.contains("advanced from"))
+    assert(stale.getMessage.contains(
+      "advanced past generation 0 during the rewrite's claim"), stale.getMessage)
+    assert(SnapTables.currentGeneration(spark, dir).contains(1))
     assert(rows(SnapTables.resolve(spark, dir, "pb")) == allRows + ((13L, "v13")),
-      "both losses must leave the serving generation untouched")
+      "the table must serve the append alone, never the stale plan")
+    assert(claimMarkers(dir).isEmpty)
   }
 
   test("TRUE race, two retryingPublish appenders: BOTH land — the retry turns loud losses into serialized wins") {
